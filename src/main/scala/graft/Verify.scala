@@ -1,15 +1,23 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (`tools/selfcheck.py`).
+  *
+  * Usage: sbt "runMain graft.Verify <sf dir> <out dir> [query names...]"
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
-    // optional: query names after the two dirs restrict the dump (local
-    // inner loop); the driver passes exactly two args and runs everything
+    // optional: query names after the two dirs restrict the dump and its
+    // oracle_sql.json to those queries (local inner loop); with exactly
+    // two args everything runs
     val only = args.drop(2).toSet
+    val unknown = only.diff(SparkEntry.queries.keySet)
+    require(unknown.isEmpty,
+      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")} — " +
+        s"known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -45,6 +53,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
+      .filter { case (k, _) => only.isEmpty || only(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     graft.queries.QueryCaches.clear(spark)

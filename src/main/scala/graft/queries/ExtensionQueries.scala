@@ -39,12 +39,7 @@ object ExtensionQueries {
   private[queries] def docsSpread(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir).repartition(s.sparkContext.defaultParallelism)
 
-  /** Persisted minhash-signature frame, memoized LRU-1 per session: bench
-    * reps and the warm-up pass reuse one entry per data dir, and switching
-    * dir (warm-up sf0.01 → timed sf0.1) unpersists the stale frame instead
-    * of pinning it for the session's lifetime. [[QueryCaches.clear]] drops
-    * the entry entirely — call it before `spark.stop()`.
-    */
+  /** The shared persisted minhash-signature frame ([[QueryCaches.sigFor]]). */
   private[queries] def sigCacheFor(s: SparkSession, dir: String): DataFrame =
     QueryCaches.sigFor(s, dir)
 

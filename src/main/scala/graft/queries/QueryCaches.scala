@@ -7,87 +7,130 @@ import java.util.concurrent.ConcurrentHashMap
 
 /** Session-scoped memoization for query-suite inputs that are expensive to
   * rebuild per invocation (bench warm-up + reps would otherwise rebuild —
-  * and, worse, leak — one per call):
+  * and, worse, leak — one per call): minhash signatures, duplicate-cluster
+  * labels, graph edge lists, vector indexes, trained vocabularies and
+  * weights, curated metadata, and the on-disk demo tables.
   *
-  *   - the persisted minhash-signature frame (q22/q23/q24 share it);
-  *   - the persisted duplicate-cluster label frame (q60/q75 share it —
-  *     the iterative CC fixpoint is the single most expensive input in
-  *     the suite, and a real pipeline labels clusters once for all
-  *     downstream stages);
-  *   - q59's day-partitioned events layout on local disk.
+  * Every input lives in one [[Slot]]: an LRU-1 cache per session keyed on
+  * the data dir, holding the latest dir's entry. The suites run one data
+  * dir at a time (warm-up at sf0.01, then timed reps at sf0.1), so that
+  * gives full reuse within a phase, while a dir switch releases the stale
+  * entry — before the new build runs, and for good even if that build
+  * throws — instead of pinning it until the JVM exits. A slot's release
+  * unpersists its frame(s), deletes its temp directory tree, or does
+  * nothing for driver-local values (localized frames, rows, weights). An
+  * entry is registered only once its build returns. [[clear]] releases
+  * every slot's entry for a session — the Bench/Verify mains call it
+  * before `spark.stop()` — and a shutdown hook sweeps any directory slot
+  * entry that survives an abnormal exit.
   *
-  * All caches are LRU-1 per session: the suites run one data dir at a
-  * time (warm-up at sf0.01, then timed reps at sf0.1), so keeping exactly
-  * the latest dir's artifact gives full reuse within a phase while a dir
-  * switch releases the stale artifact instead of pinning it until the JVM
-  * exits. [[clear]] releases everything owned by a session — the
-  * Bench/Verify mains call it before `spark.stop()` — and a shutdown hook
-  * sweeps any layout directory that survives an abnormal exit.
-  *
-  * GROWTH POLICY: the steady-state footprint is bounded by the SLOT
-  * count — one statically-declared slot per shared input family below,
-  * LRU-1 each — times the largest entry. Slots are added only when a new
-  * query family shares an expensive input (code-reviewed, not
-  * data-driven), entries are cluster/pair/vocab-grained (never
-  * corpus-grained: the largest is the co-purchase edge list), and the
-  * measured total is ~17 MB across all 19 resident RDDs at sf0.1
-  * (BENCH_r13 `cache_footprint`). [[footprint]] emits per-RDD sizes each
-  * bench run, so growth shows up in the artifact the round it happens;
-  * if the total ever approaches executor-storage relevance, the
-  * `per_rdd` list names the slot to convert to consumer-tracked
-  * unpersist first.
+  * GROWTH POLICY: the steady-state footprint is bounded by the slot count
+  * — one statically declared slot per shared input family below, LRU-1
+  * each — times the largest entry. Slots are added only when a new query
+  * family shares an expensive input (code-reviewed, not data-driven), and
+  * entries are cluster/pair/vocab-grained, never corpus-grained (the
+  * largest is the co-purchase edge list). [[footprint]] names the held
+  * slots and emits per-RDD sizes each bench run, so growth shows up in the
+  * artifact the round it happens; if the total ever approaches
+  * executor-storage relevance, the `per_rdd` list names the slot to
+  * convert to consumer-tracked unpersist first.
   */
 private[graft] object QueryCaches {
 
-  private val sigCache    = new ConcurrentHashMap[SparkSession, (String, DataFrame)]()
-  private val ccCache     = new ConcurrentHashMap[SparkSession, (String, DataFrame)]()
-  private val pqCache     = new ConcurrentHashMap[SparkSession, (String, (DataFrame, DataFrame))]()
-  private val pqCsCache   = new ConcurrentHashMap[SparkSession, (String, (DataFrame, DataFrame))]()
-  private val ivfCache    = new ConcurrentHashMap[SparkSession, (String, DataFrame)]()
-  private val semCache    = new ConcurrentHashMap[SparkSession, (String, DataFrame)]()
-  private val curationCache = new ConcurrentHashMap[SparkSession, (String, DataFrame)]()
-  private val curationV2Cache = new ConcurrentHashMap[SparkSession, (String, DataFrame)]()
-  private val fullCentCache = new ConcurrentHashMap[SparkSession, (String, DataFrame)]()
-  private val gannCache   = new ConcurrentHashMap[SparkSession, (String, (DataFrame, DataFrame))]()
-  private val bpeCache    = new ConcurrentHashMap[SparkSession, (String, Seq[(Long, String, String, Long)])]()
-  private val wpCache     = new ConcurrentHashMap[SparkSession, (String, Seq[(Long, String, String, Long, Long)])]()
-  private val uniVocabCache = new ConcurrentHashMap[SparkSession, (String, DataFrame)]()
-  private val lpaCache    = new ConcurrentHashMap[SparkSession, (String, DataFrame)]()
-  private val lrCache     = new ConcurrentHashMap[SparkSession, (String, Seq[Long])]()
-  private val layoutCache = new ConcurrentHashMap[SparkSession, (String, Path)]()
-  private val snapCache   = new ConcurrentHashMap[SparkSession, (String, Path)]()
-  private val copurchaseCache = new ConcurrentHashMap[SparkSession, (String, DataFrame)]()
-  private val hanfEdgesCache  = new ConcurrentHashMap[SparkSession, (String, DataFrame)]()
-  private val prEdgesCache    = new ConcurrentHashMap[SparkSession, (String, DataFrame)]()
-  private val copurchaseDistinctCache = new ConcurrentHashMap[SparkSession, (String, DataFrame)]()
-  private val videoPairsCache = new ConcurrentHashMap[SparkSession, (String, DataFrame)]()
-  private val audioPairsCache = new ConcurrentHashMap[SparkSession, (String, DataFrame)]()
-
-  /** The canonical part co-purchase edge list (src < dst, one row per
-    * co-occurrence — MULTI-EDGES PRESERVED) for (s, dir), persisted
-    * once — its lineitem self-join is the dominant shared cost at sf0.1.
-    * q256's basket-lift counts co-baskets from the multiplicities, so
-    * this slot must stay raw; structure-only consumers take
-    * [[copurchaseDistinctFor]].
+  /** One lock per slot: a build may look up another slot
+    * (copurchaseDistinct → copurchase, lpaLabels → prEdges).
     */
-  def copurchaseFor(s: SparkSession, dir: String): DataFrame =
-    copurchaseCache.synchronized {
-      copurchaseCache.get(s) match {
-        case (d, df) if d == dir => df
-        case prev =>
-          if (prev != null) prev._2.unpersist()
-          import org.apache.spark.sql.functions.col
-          val li = graft.Tables.lineitem(s, dir)
-            .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-          val df = li.as("x")
-            .join(li.as("y"), col("x.o") === col("y.o") && col("x.p") < col("y.p"))
-            .select(col("x.p").as("src"), col("y.p").as("dst"))
-            .persist()
-          df.count()
-          copurchaseCache.put(s, (dir, df))
-          df
+  private final class Slot[A](val name: String, release: A => Unit, val sweepAtExit: Boolean) {
+    private val held = new ConcurrentHashMap[SparkSession, (String, A)]()
+
+    def apply(s: SparkSession, dir: String)(build: => A): A = synchronized {
+      held.get(s) match {
+        case (d, a) if d == dir => a
+        case _ =>
+          drop(s)
+          val a = build
+          held.put(s, (dir, a))
+          a
       }
     }
+
+    def holds(s: SparkSession): Boolean = held.containsKey(s)
+
+    def drop(s: SparkSession): Unit = synchronized {
+      Option(held.remove(s)).foreach(e => release(e._2))
+    }
+
+    def dropAll(): Unit = synchronized {
+      held.values().forEach(e => release(e._2))
+      held.clear()
+    }
+  }
+
+  private val slots = scala.collection.mutable.ArrayBuffer[Slot[_]]()
+
+  private def slot[A](name: String, sweepAtExit: Boolean = false)(release: A => Unit): Slot[A] = {
+    val sl = new Slot(name, release, sweepAtExit)
+    slots += sl
+    sl
+  }
+  private def frameSlot(name: String) = slot[DataFrame](name)(_.unpersist())
+  private def pairSlot(name: String) =
+    slot[(DataFrame, DataFrame)](name) { case (a, b) => a.unpersist(); b.unpersist() }
+  private def localSlot[A](name: String) = slot[A](name)(_ => ())
+  private def treeSlot(name: String) = slot[Path](name, sweepAtExit = true)(deleteTree)
+
+  /** `df` persisted and materialized by count(), which keeps AQE in the
+    * build (a localCheckpoint materializes the NON-adaptive plan).
+    */
+  private def persisted(df: DataFrame): DataFrame = {
+    val p = df.persist()
+    p.count()
+    p
+  }
+
+  /** A fresh temp directory filled by `fill`, deleted again if `fill` throws. */
+  private def tempTree(prefix: String)(fill: Path => Unit): Path = {
+    val root = Files.createTempDirectory(prefix)
+    try fill(root)
+    catch { case e: Throwable => deleteTree(root); throw e }
+    root
+  }
+
+  // Slots are declared in footprint order.
+
+  /** The minhash-signature frame that the LSH queries (q22/q23/q24) share. */
+  private val sig = frameSlot("sig")
+  def sigFor(s: SparkSession, dir: String): DataFrame = sig(s, dir) {
+    graft.ext.TextDedup
+      .minhashSignatures(ExtensionQueries.docsSpread(s, dir), "doc_id", "text", 8, 2)
+      .persist()
+  }
+
+  /** Duplicate-cluster labels (doc_id, cluster_id), shared by q60/q75 — the
+    * iterative CC fixpoint behind them is the single most expensive input
+    * in the suite, and a real pipeline labels clusters once for all
+    * downstream stages, not once per query invocation.
+    */
+  private val cc = frameSlot("cc")
+  def labelsFor(s: SparkSession, dir: String): DataFrame = cc(s, dir) {
+    ExtensionQueries.clusterLabels(s, dir).persist()
+  }
+
+  /** The canonical part co-purchase edge list (src < dst, one row per
+    * co-occurrence — MULTI-EDGES PRESERVED) — its lineitem self-join is the
+    * dominant shared cost at sf0.1. q256's basket-lift counts co-baskets
+    * from the multiplicities, so this slot must stay raw; structure-only
+    * consumers take [[copurchaseDistinctFor]].
+    */
+  private val copurchase = frameSlot("copurchase")
+  def copurchaseFor(s: SparkSession, dir: String): DataFrame = copurchase(s, dir) {
+    import org.apache.spark.sql.functions.col
+    val li = graft.Tables.lineitem(s, dir)
+      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
+    persisted(li.as("x")
+      .join(li.as("y"), col("x.o") === col("y.o") && col("x.p") < col("y.p"))
+      .select(col("x.p").as("src"), col("y.p").as("dst")))
+  }
 
   /** The DISTINCT canonical co-purchase edge list, derived from
     * [[copurchaseFor]] and persisted separately (r14): every
@@ -99,583 +142,288 @@ private[graft] object QueryCaches {
     * the r14 sweep caught exactly that (q256 went 0-row when the raw
     * slot briefly distinct'd itself).
     */
+  private val copurchaseDistinct = frameSlot("copurchaseDistinct")
   def copurchaseDistinctFor(s: SparkSession, dir: String): DataFrame =
-    copurchaseDistinctCache.synchronized {
-      copurchaseDistinctCache.get(s) match {
-        case (d, df) if d == dir => df
-        case prev =>
-          if (prev != null) prev._2.unpersist()
-          val df = copurchaseFor(s, dir).distinct().persist()
-          df.count()
-          copurchaseDistinctCache.put(s, (dir, df))
-          df
-      }
-    }
+    copurchaseDistinct(s, dir)(persisted(copurchaseFor(s, dir).distinct()))
 
   /** The canonical DISTINCT edge list of the l_partkey % 7 == 0 sampled
-    * co-purchase subgraph for (s, dir), persisted once — the shared input
-    * of the three sketch/BFS centrality queries (q297 HyperANF, q323
-    * harmonic, q325 betweenness), exactly the [[copurchaseFor]] contract
-    * on the sampled subgraph: a real pipeline projects the graph once and
-    * runs every centrality pass over it, rather than re-running the fact
-    * self-join per measure. Canonical (src < dst, non-null, distinct) by
-    * construction, so consumers pass `assumeCanonical = true`.
+    * co-purchase subgraph — the shared input of the three sketch/BFS
+    * centrality queries (q297 HyperANF, q323 harmonic, q325 betweenness):
+    * a real pipeline projects the graph once and runs every centrality
+    * pass over it, rather than re-running the fact self-join per measure.
+    * Canonical (src < dst, non-null, distinct) by construction, so
+    * consumers pass `assumeCanonical = true`.
     */
-  def hyperanfEdgesFor(s: SparkSession, dir: String): DataFrame =
-    hanfEdgesCache.synchronized {
-      hanfEdgesCache.get(s) match {
-        case (d, df) if d == dir => df
-        case prev =>
-          if (prev != null) prev._2.unpersist()
-          import org.apache.spark.sql.functions.col
-          val li = graft.Tables.lineitem(s, dir)
-            .filter(col("l_partkey") % 7 === 0)
-            .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-          val df = li.as("x")
-            .join(li.as("y"), col("x.o") === col("y.o") && col("x.p") < col("y.p"))
-            .select(col("x.p").as("src"), col("y.p").as("dst"))
-            .distinct()
-            .persist()
-          df.count()
-          hanfEdgesCache.put(s, (dir, df))
-          df
-      }
-    }
+  private val hanfEdges = frameSlot("hanfEdges")
+  def hyperanfEdgesFor(s: SparkSession, dir: String): DataFrame = hanfEdges(s, dir) {
+    import org.apache.spark.sql.functions.col
+    val li = graft.Tables.lineitem(s, dir)
+      .filter(col("l_partkey") % 7 === 0)
+      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
+    persisted(li.as("x")
+      .join(li.as("y"), col("x.o") === col("y.o") && col("x.p") < col("y.p"))
+      .select(col("x.p").as("src"), col("y.p").as("dst"))
+      .distinct())
+  }
 
   /** The planted citation edge list (src, dst domains: direct cites ∪
-    * co-cites) for (s, dir), persisted once — the shared input of the
-    * whole link-graph family (q87/q96/q111/q130/q246/q248/q307/q314 and
-    * the LPA label slot): each invocation otherwise re-runs the regexp
-    * URL extraction over every document plus the co-citation self-join.
-    * Raw union (multi-edges preserved) — every consumer applies its own
-    * normalization, exactly as before; only the extraction is shared.
+    * co-cites) — the shared input of the whole link-graph family
+    * (q87/q96/q111/q130/q246/q248/q307/q314 and the LPA label slot): each
+    * invocation otherwise re-runs the regexp URL extraction over every
+    * document plus the co-citation self-join. Raw union (multi-edges
+    * preserved) — every consumer applies its own normalization; only the
+    * extraction is shared.
     */
+  private val prEdges = frameSlot("prEdges")
   def pagerankEdgesFor(s: SparkSession, dir: String): DataFrame =
-    prEdgesCache.synchronized {
-      prEdgesCache.get(s) match {
-        case (d, df) if d == dir => df
-        case prev =>
-          if (prev != null) prev._2.unpersist()
-          val df = ExtensionQueries.pagerankEdges(s, dir).persist()
-          df.count()
-          prEdgesCache.put(s, (dir, df))
-          df
-      }
-    }
+    prEdges(s, dir)(persisted(ExtensionQueries.pagerankEdges(s, dir)))
 
-  /** q302's container-level dHash verdict pairs — the q303 remediation
-    * input: q302 and q303 share the frame-fingerprint + banded-join
-    * build (the most expensive multimodal input in the suite), exactly
-    * the [[copurchaseFor]] contract one tier over. The persisted frame
-    * is verdict-sized (pairs), never corpus-sized.
+  /** PQ index — (codebooks, codes-with-dist) over the FULL embeddings table.
+    * q90/q91/q93 all consume it, and an un-memoized plan recomputes the
+    * codebook aggregation and the encode inside every branch that
+    * references them (measured 8.2 s vs 1.4 s for the ADC query at sf0.1):
+    * an index is built once per corpus, not once per plan branch.
     */
-  def videoPairsFor(s: SparkSession, dir: String): DataFrame =
-    videoPairsCache.synchronized {
-      videoPairsCache.get(s) match {
-        case (d, df) if d == dir => df
-        case prev =>
-          if (prev != null) prev._2.unpersist()
-          val df = graft.ext.Multimodal.videoDhashNearDups(
-              ExtensionQueries.videoCorpus(s, dir), "doc_id", "text",
-              n = 4, frameBytes = 96, maxHamming = 3, minShared = 3)
-            .persist()
-          df.count()
-          videoPairsCache.put(s, (dir, df))
-          df
-      }
-    }
-
-  /** q310's container-level audio-chroma verdict pairs — the q322
-    * remediation input: q310 and q322 share the window-fingerprint +
-    * banded-join build, the [[videoPairsFor]] contract on the second
-    * perceptual modality. The persisted frame is verdict-sized (pairs),
-    * never corpus-sized.
-    */
-  def audioPairsFor(s: SparkSession, dir: String): DataFrame =
-    audioPairsCache.synchronized {
-      audioPairsCache.get(s) match {
-        case (d, df) if d == dir => df
-        case prev =>
-          if (prev != null) prev._2.unpersist()
-          val df = graft.ext.Multimodal.audioChromaNearDups(
-              ExtensionQueries.audioCorpus(s, dir), "doc_id", "text",
-              n = 6, windowChars = 128, maxHamming = 3, minShared = 3,
-              maxBlockSize = 64)
-            .persist()
-          df.count()
-          audioPairsCache.put(s, (dir, df))
-          df
-      }
-    }
-
-  def sigFor(s: SparkSession, dir: String): DataFrame = sigCache.synchronized {
-    sigCache.get(s) match {
-      case (d, df) if d == dir => df
-      case prev =>
-        if (prev != null) prev._2.unpersist()
-        val df = graft.ext.TextDedup
-          .minhashSignatures(ExtensionQueries.docsSpread(s, dir), "doc_id", "text", 8, 2)
-          .persist()
-        sigCache.put(s, (dir, df))
-        df
-    }
+  private val pq = pairSlot("pq")
+  def pqIndexFor(s: SparkSession, dir: String): (DataFrame, DataFrame) = pq(s, dir) {
+    val emb = graft.Tables.embeddings(s, dir)
+    // trained codebooks (2 Lloyd's rounds, K = 256, PQ16): the training
+    // loop runs once per (session, dir), so bench reps and the three
+    // consuming queries never retrain
+    val cb = graft.ext.VectorSearch
+      .pqCodebooksKmeans(emb, "vec_id", "embedding", m = 16, dims = 64, k = 256, iters = 2)
+      .persist()
+    val codes = graft.ext.VectorSearch
+      .pqEncode(emb, "vec_id", "embedding", cb, m = 16, dims = 64)
+      .persist()
+    (cb, codes)
   }
-
-  /** Duplicate-cluster labels (doc_id, cluster_id) for (s, dir), built on
-    * first request and persisted — the CC fixpoint behind them is an
-    * iterative RDD job worth running once per data dir, not once per
-    * query invocation.
-    */
-  def labelsFor(s: SparkSession, dir: String): DataFrame = ccCache.synchronized {
-    ccCache.get(s) match {
-      case (d, df) if d == dir => df
-      case prev =>
-        if (prev != null) prev._2.unpersist()
-        val df = ExtensionQueries.clusterLabels(s, dir).persist()
-        ccCache.put(s, (dir, df))
-        df
-    }
-  }
-
-  /** Persisted PQ index — (codebooks, codes-with-dist) over the FULL
-    * embeddings table — for (s, dir). q90/q91/q93 all consume it, and an
-    * un-memoized plan recomputes the codebook aggregation and the encode
-    * inside every branch that references them (measured 8.2 s vs 1.4 s
-    * for the ADC query at sf0.1): an index is built once per corpus, not
-    * once per plan branch.
-    */
-  def pqIndexFor(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    pqCache.synchronized {
-      pqCache.get(s) match {
-        case (d, pair) if d == dir => pair
-        case prev =>
-          if (prev != null) { prev._2._1.unpersist(); prev._2._2.unpersist() }
-          val emb = graft.Tables.embeddings(s, dir)
-          // trained codebooks (2 Lloyd's rounds, K = 256, PQ16): the
-          // training loop runs HERE, once per (session, dir), so bench
-          // reps and the three consuming queries never retrain
-          val cb = graft.ext.VectorSearch
-            .pqCodebooksKmeans(emb, "vec_id", "embedding",
-              m = 16, dims = 64, k = 256, iters = 2)
-            .persist()
-          val codes = graft.ext.VectorSearch
-            .pqEncode(emb, "vec_id", "embedding", cb, m = 16, dims = 64)
-            .persist()
-          pqCache.put(s, (dir, (cb, codes)))
-          (cb, codes)
-      }
-    }
 
   /** q93's corpus-subset PQ index — (codebooks, codes) trained and encoded
-    * over vec_id >= 10 ONLY (the recall eval must not train on its own
-    * queries), memoized for the same reason as [[pqIndexFor]]: the Lloyd's
-    * training loop runs once per (session, dir), never once per bench rep.
+    * over vec_id >= 10 ONLY: the recall eval must not train on its own
+    * queries. Cached for the same reason as [[pqIndexFor]]: the Lloyd's
+    * training loop runs once per corpus, never once per bench rep.
     */
-  def pqRecallIndexFor(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    pqCsCache.synchronized {
-      pqCsCache.get(s) match {
-        case (d, pair) if d == dir => pair
-        case prev =>
-          if (prev != null) { prev._2._1.unpersist(); prev._2._2.unpersist() }
-          val cs = graft.Tables.embeddings(s, dir)
-            .filter(org.apache.spark.sql.functions.col("vec_id") >= 10)
-          val cb = graft.ext.VectorSearch
-            .pqCodebooksKmeans(cs, "vec_id", "embedding",
-              m = 16, dims = 64, k = 256, iters = 2)
-            .persist()
-          val codes = graft.ext.VectorSearch
-            .pqEncode(cs, "vec_id", "embedding", cb, m = 16, dims = 64)
-            .persist()
-          pqCsCache.put(s, (dir, (cb, codes)))
-          (cb, codes)
-      }
-    }
+  private val pqCs = pairSlot("pqCs")
+  def pqRecallIndexFor(s: SparkSession, dir: String): (DataFrame, DataFrame) = pqCs(s, dir) {
+    val cs = graft.Tables.embeddings(s, dir)
+      .filter(org.apache.spark.sql.functions.col("vec_id") >= 10)
+    val cb = graft.ext.VectorSearch
+      .pqCodebooksKmeans(cs, "vec_id", "embedding", m = 16, dims = 64, k = 256, iters = 2)
+      .persist()
+    val codes = graft.ext.VectorSearch
+      .pqEncode(cs, "vec_id", "embedding", cb, m = 16, dims = 64)
+      .persist()
+    (cb, codes)
+  }
 
-  /** q69's curated-document metadata frame (doc_id, source, n_tokens,
-    * is_dup, low_quality, contaminated) for (s, dir), built by the caller
-    * and persisted+materialized on first request — the curated-metadata
-    * table a production pipeline materializes once and queries repeatedly.
-    * Persisting here (not inside the query) keeps it LRU-1 per session
-    * instead of leaking one cache entry per invocation; materializing via
-    * count() keeps AQE in the build (a localCheckpoint materializes the
-    * NON-adaptive plan, which demoted the contamination join from
-    * broadcast to sort-merge — measured 6-9 s vs 2.2 s for the same
-    * chain).
+  /** Trained IVF coarse-quantizer centroids (label, dim, c_bp) over the
+    * corpus embeddings (vec_id >= 10) — kmeansFit already localizes its
+    * bounded result, so the cache only avoids re-TRAINING (two shuffles per
+    * Lloyd's round) on every query invocation.
     */
-  def curationMetaFor(s: SparkSession, dir: String)(build: => DataFrame): DataFrame =
-    curationCache.synchronized {
-      curationCache.get(s) match {
-        case (d, df) if d == dir => df
-        case prev =>
-          if (prev != null) prev._2.unpersist()
-          val df = build.persist()
-          df.count()
-          curationCache.put(s, (dir, df))
-          df
-      }
-    }
-
-  /** q112's curated-metadata frame (doc_id, source, n_tokens, para_dup,
-    * low_quality, contaminated, semantic_dup) for (s, dir). Unlike
-    * [[curationMetaFor]], the builder returns an ALREADY
-    * persisted+materialized frame — the v2 chain has an internal branch
-    * point (the semantic stage self-joins the stage-3 survivors), so the
-    * builder persists its own intermediate, materializes the final frame,
-    * and releases the intermediate before returning.
-    */
-  def curationV2MetaFor(s: SparkSession, dir: String)(build: => DataFrame): DataFrame =
-    curationV2Cache.synchronized {
-      curationV2Cache.get(s) match {
-        case (d, df) if d == dir => df
-        case prev =>
-          if (prev != null) prev._2.unpersist()
-          val df = build
-          curationV2Cache.put(s, (dir, df))
-          df
-      }
-    }
-
-  /** Coarse k-means centroids over the FULL embeddings table (k = 10, two
-    * Lloyd's rounds) for (s, dir) — the train-once router the v2 curation
-    * pipeline's semantic stage reuses across invocations. kmeansFit
-    * localizes its bounded (k × dims) result, so like [[ivfCentFor]] the
-    * cache only avoids re-TRAINING per invocation.
-    */
-  def fullCentFor(s: SparkSession, dir: String): DataFrame =
-    fullCentCache.synchronized {
-      fullCentCache.get(s) match {
-        case (d, df) if d == dir => df
-        case _ =>
-          val df = graft.ext.VectorSearch.kmeansFit(
-            graft.Tables.embeddings(s, dir), "vec_id", "embedding", k = 10, iters = 2)
-          fullCentCache.put(s, (dir, df))
-          df
-      }
-    }
+  private val ivf = localSlot[DataFrame]("ivf")
+  def ivfCentFor(s: SparkSession, dir: String): DataFrame = ivf(s, dir) {
+    val corpus = graft.Tables.embeddings(s, dir)
+      .filter(org.apache.spark.sql.functions.col("vec_id") >= 10)
+    graft.ext.VectorSearch.kmeansFit(corpus, "vec_id", "embedding", k = 10, iters = 2)
+  }
 
   /** q97's semantic-dedup cluster centroids over the caller-built planted
     * corpus — kmeansFit localizes its bounded result, so like
     * [[ivfCentFor]] the cache only avoids re-TRAINING per invocation.
     */
+  private val sem = localSlot[DataFrame]("sem")
   def semDedupCentFor(s: SparkSession, dir: String)(build: => DataFrame): DataFrame =
-    semCache.synchronized {
-      semCache.get(s) match {
-        case (d, df) if d == dir => df
-        case _ =>
-          val df = build
-          semCache.put(s, (dir, df))
-          df
-      }
-    }
+    sem(s, dir)(build)
 
-  /** The q223-q225 graph-ANN index state for (s, dir): the SYMMETRIZED
-    * adjacency of the corpus-half kNN graph (k=3, bits=6,
-    * maxBucketSize=64) and the per-bucket entry points, both persisted
-    * and materialized — production keeps exactly this pair as persisted
-    * index state, and the three gann queries plus bench reps should
-    * probe one build, not rebuild the bucket self-join (or re-shuffle
-    * the symmetrize-distinct) per walk.
+  /** q69's curated-document metadata frame (doc_id, source, n_tokens,
+    * is_dup, low_quality, contaminated), built by the caller — the
+    * curated-metadata table a production pipeline materializes once and
+    * queries repeatedly. Persisting here (not inside the query) keeps it
+    * LRU-1 per session instead of leaking one cache entry per invocation;
+    * materializing via count() keeps AQE in the build (a localCheckpoint
+    * demoted the contamination join from broadcast to sort-merge — measured
+    * 6-9 s vs 2.2 s for the same chain).
     */
-  def gannIndexFor(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    gannCache.synchronized {
-      gannCache.get(s) match {
-        case (d, pair) if d == dir => pair
-        case prev =>
-          if (prev != null) { prev._2._1.unpersist(); prev._2._2.unpersist() }
-          import org.apache.spark.sql.functions.col
-          val cs = graft.Tables.embeddings(s, dir).filter(col("vec_id") >= 10)
-          val g = graft.ext.VectorSearch.knnGraph(cs, "vec_id", "embedding",
-            k = 3, bits = 6, maxBucketSize = 64)
-          val adj = g.select(col("id"), col("nbr_id"))
-            .unionByName(g.select(col("nbr_id").as("id"), col("id").as("nbr_id")))
-            .distinct()
-            .persist()
-          adj.count()
-          val entries = graft.ext.VectorSearch.bucketEntryPoints(
-            cs, "vec_id", "embedding", bits = 6).persist()
-          entries.count()
-          gannCache.put(s, (dir, (adj, entries)))
-          (adj, entries)
-      }
-    }
+  private val curation = frameSlot("curation")
+  def curationMetaFor(s: SparkSession, dir: String)(build: => DataFrame): DataFrame =
+    curation(s, dir)(persisted(build))
 
-  /** Trained IVF coarse-quantizer centroids (label, dim, c_bp) over the
-    * corpus embeddings (vec_id >= 10) for (s, dir) — kmeansFit already
-    * localizes its bounded result, so the cache only avoids re-TRAINING
-    * (two shuffles per Lloyd's round) on every query invocation.
+  /** q112's curated-metadata frame (doc_id, source, n_tokens, para_dup,
+    * low_quality, contaminated, semantic_dup). Unlike [[curationMetaFor]],
+    * the builder returns an ALREADY persisted+materialized frame — the v2
+    * chain has an internal branch point (the semantic stage self-joins the
+    * stage-3 survivors), so the builder persists its own intermediate,
+    * materializes the final frame, and releases the intermediate before
+    * returning.
     */
-  def ivfCentFor(s: SparkSession, dir: String): DataFrame =
-    ivfCache.synchronized {
-      ivfCache.get(s) match {
-        case (d, df) if d == dir => df
-        case _ =>
-          val corpus = graft.Tables.embeddings(s, dir)
-            .filter(org.apache.spark.sql.functions.col("vec_id") >= 10)
-          val df = graft.ext.VectorSearch
-            .kmeansFit(corpus, "vec_id", "embedding", k = 10, iters = 2)
-          ivfCache.put(s, (dir, df))
-          df
-      }
-    }
+  private val curationV2 = frameSlot("curationV2")
+  def curationV2MetaFor(s: SparkSession, dir: String)(build: => DataFrame): DataFrame =
+    curationV2(s, dir)(build)
 
-  /** Path of the day-partitioned `events` layout for (s, dir), written on
-    * first request. The write is the demo's setup, not its subject — the
-    * pruned READ is what q59 measures — so it must happen once, not once
-    * per bench rep.
+  /** Coarse k-means centroids over the FULL embeddings table (k = 10, two
+    * Lloyd's rounds) — the train-once router the v2 curation pipeline's
+    * semantic stage reuses across invocations. kmeansFit localizes its
+    * bounded (k × dims) result, so like [[ivfCentFor]] the cache only
+    * avoids re-TRAINING per invocation.
     */
-  def layoutFor(s: SparkSession, dir: String)(write: String => Unit): String =
-    layoutCache.synchronized {
-      layoutCache.get(s) match {
-        case (d, root) if d == dir => s"$root/events_daily"
-        case prev =>
-          if (prev != null) deleteTree(prev._2)
-          val root = Files.createTempDirectory("graft-layout")
-          val path = s"$root/events_daily"
-          write(path)
-          layoutCache.put(s, (dir, root))
-          path
-      }
-    }
+  private val fullCent = localSlot[DataFrame]("fullCent")
+  def fullCentFor(s: SparkSession, dir: String): DataFrame = fullCent(s, dir) {
+    graft.ext.VectorSearch.kmeansFit(
+      graft.Tables.embeddings(s, dir), "vec_id", "embedding", k = 10, iters = 2)
+  }
 
-  /** Committed demo snapshot table (SnapshotLog root) for (s, dir), built
-    * on first request — the version commits are q85's SETUP; the
-    * time-travel diff is what the query measures, so the table is written
-    * once per (session, dir), not once per invocation.
+  /** The q223-q225 graph-ANN index state: the SYMMETRIZED adjacency of the
+    * corpus-half kNN graph (k=3, bits=6, maxBucketSize=64) and the
+    * per-bucket entry points, both materialized — production keeps exactly
+    * this pair as persisted index state, and the three gann queries plus
+    * bench reps should probe one build, not rebuild the bucket self-join
+    * (or re-shuffle the symmetrize-distinct) per walk.
     */
-  def snapshotTableFor(s: SparkSession, dir: String)(build: String => Unit): String =
-    snapCache.synchronized {
-      snapCache.get(s) match {
-        case (d, root) if d == dir => s"$root/table"
-        case prev =>
-          if (prev != null) deleteTree(prev._2)
-          val root = Files.createTempDirectory("graft-snap")
-          val path = s"$root/table"
-          build(path)
-          snapCache.put(s, (dir, root))
-          path
-      }
-    }
+  private val gann = pairSlot("gann")
+  def gannIndexFor(s: SparkSession, dir: String): (DataFrame, DataFrame) = gann(s, dir) {
+    import org.apache.spark.sql.functions.col
+    val cs = graft.Tables.embeddings(s, dir).filter(col("vec_id") >= 10)
+    val g = graft.ext.VectorSearch.knnGraph(cs, "vec_id", "embedding",
+      k = 3, bits = 6, maxBucketSize = 64)
+    val adj = persisted(g.select(col("id"), col("nbr_id"))
+      .unionByName(g.select(col("nbr_id").as("id"), col("id").as("nbr_id")))
+      .distinct())
+    val entries = persisted(graft.ext.VectorSearch.bucketEntryPoints(
+      cs, "vec_id", "embedding", bits = 6))
+    (adj, entries)
+  }
 
-  /** Release everything cached for `s`: unpersist the signature frame and
-    * delete the layout/snapshot directories. Call before stopping the
-    * session.
+  /** Learned BPE merge table (6 trainer rounds) — the trainer is an
+    * iterative job worth running once per corpus (q94 measures it live,
+    * deliberately uncached); the table itself is a driver-local handful of
+    * rows.
     */
-  /** Learned BPE merge table (6 trainer rounds) for (s, dir) — the trainer
-    * is an iterative job worth running once per corpus (q94 measures it
-    * live, deliberately uncached); the table itself is a driver-local
-    * handful of rows, so nothing is persisted.
-    */
+  private val bpe = localSlot[Seq[(Long, String, String, Long)]]("bpe")
   def bpeMergesFor(s: SparkSession, dir: String): Seq[(Long, String, String, Long)] =
-    bpeCache.synchronized {
-      bpeCache.get(s) match {
-        case (d, m) if d == dir => m
-        case _ =>
-          val m = graft.ext.TextStats.bpeTrain(
-            ExtensionQueries.docsSpread(s, dir), "text", rounds = 6)
-          bpeCache.put(s, (dir, m))
-          m
-      }
-    }
+    bpe(s, dir)(graft.ext.TextStats.bpeTrain(ExtensionQueries.docsSpread(s, dir), "text", rounds = 6))
 
-  /** Trained WordPiece merge table for (s, dir) — [[bpeMergesFor]]'s
-    * contract at the likelihood-trained tier: q304 measures the trainer
-    * LIVE (deliberately uncached, like q94); q305's family comparison
-    * consumes the shipped table. Driver-local rows, nothing persisted.
+  /** Trained quality-classifier ppm weight vector (6 GD iterations over the
+    * reference-vs-degraded weak-label corpus) — like the BPE merge table,
+    * an iterative training job worth running once per corpus (q124
+    * measures it live, deliberately uncached); the vector is 6
+    * driver-local longs.
     */
+  private val lr = localSlot[Seq[Long]]("lr")
+  def lrWeightsFor(s: SparkSession, dir: String): Seq[Long] = lr(s, dir) {
+    val corpus = graft.ext.Classifier.weakLabelCorpus(
+      ExtensionQueries.docsSpread(s, dir), "doc_id", "text")
+    val feats = graft.ext.Classifier.lrFeatures(
+      corpus, "doc_id", "text", org.apache.spark.sql.functions.col("y") === 1L).persist()
+    try graft.ext.Classifier.lrTrain(feats, iters = 6)
+    finally feats.unpersist()
+  }
+
+  /** Trained WordPiece merge table — [[bpeMergesFor]]'s contract at the
+    * likelihood-trained tier: q304 measures the trainer LIVE (deliberately
+    * uncached, like q94); q305's family comparison consumes the shipped
+    * table.
+    */
+  private val wordpiece = localSlot[Seq[(Long, String, String, Long, Long)]]("wordpiece")
   def wordpieceMergesFor(s: SparkSession, dir: String): Seq[(Long, String, String, Long, Long)] =
-    wpCache.synchronized {
-      wpCache.get(s) match {
-        case (d, m) if d == dir => m
-        case _ =>
-          val m = graft.ext.TextStats.wordpieceTrain(
-            ExtensionQueries.docsSpread(s, dir), "text", rounds = 6)
-          wpCache.put(s, (dir, m))
-          m
-      }
+    wordpiece(s, dir) {
+      graft.ext.TextStats.wordpieceTrain(ExtensionQueries.docsSpread(s, dir), "text", rounds = 6)
     }
 
-  /** Trained unigram-LM vocabulary for (s, dir), LOCALIZED to a
-    * vocab-sized in-memory frame: the trainer output is a lazy composed
-    * plan, so every consumer ACTION would re-run the 3-round EM without
-    * this (q285/q286/q305 each pay ~2.3 s per rep; the artifact is ~40
-    * rows). q284 measures the trainer live, deliberately uncached.
+  /** Trained unigram-LM vocabulary, LOCALIZED to a vocab-sized in-memory
+    * frame: the trainer output is a lazy composed plan, so every consumer
+    * ACTION would re-run the 3-round EM without this (q285/q286/q305 each
+    * pay ~2.3 s per rep; the artifact is ~40 rows). q284 measures the
+    * trainer live, deliberately uncached.
     */
-  def unigramVocabFor(s: SparkSession, dir: String): DataFrame =
-    uniVocabCache.synchronized {
-      uniVocabCache.get(s) match {
-        case (d, df) if d == dir => df
-        case _ =>
-          val trained = graft.ext.TextStats.unigramTrain(
-            ExtensionQueries.docsSpread(s, dir), "text")
-          val rows = trained.collect()
-          val df = s.createDataFrame(
-            s.sparkContext.parallelize(rows.toIndexedSeq, 1), trained.schema)
-          uniVocabCache.put(s, (dir, df))
-          df
-      }
-    }
+  private val unigramVocab = localSlot[DataFrame]("unigramVocab")
+  def unigramVocabFor(s: SparkSession, dir: String): DataFrame = unigramVocab(s, dir) {
+    val trained = graft.ext.TextStats.unigramTrain(ExtensionQueries.docsSpread(s, dir), "text")
+    val rows = trained.collect()
+    s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq, 1), trained.schema)
+  }
 
-  /** Converged 2-round label-propagation communities over the q87
-    * citation graph for (s, dir) — the upstream artifact the modularity
-    * queries (q307 score, q314 refine) consume; q130 measures the LPA
-    * operator itself live. `labelPropagation` localCheckpoints its
-    * output, so the cached frame is already short-lineage; the cache
-    * only avoids re-running the rounds per consumer invocation.
+  /** Converged 2-round label-propagation communities over the q87 citation
+    * graph — the upstream artifact the modularity queries (q307 score,
+    * q314 refine) consume; q130 measures the LPA operator itself live.
+    * `labelPropagation` localCheckpoints its output, so the cached frame is
+    * already short-lineage (GC reclaims it); the cache only avoids
+    * re-running the rounds per consumer invocation.
     */
-  def lpaLabelsFor(s: SparkSession, dir: String): DataFrame =
-    lpaCache.synchronized {
-      lpaCache.get(s) match {
-        case (d, df) if d == dir => df
-        case _ =>
-          val df = graft.ext.Graphs.labelPropagation(
-            pagerankEdgesFor(s, dir), "src", "dst", iters = 2)
-          lpaCache.put(s, (dir, df))
-          df
-      }
-    }
+  private val lpaLabels = localSlot[DataFrame]("lpaLabels")
+  def lpaLabelsFor(s: SparkSession, dir: String): DataFrame = lpaLabels(s, dir) {
+    graft.ext.Graphs.labelPropagation(pagerankEdgesFor(s, dir), "src", "dst", iters = 2)
+  }
 
-  /** Trained quality-classifier ppm weight vector (6 GD iterations over
-    * the reference-vs-degraded weak-label corpus) for (s, dir) — like the
-    * BPE merge table, an iterative training job worth running once per
-    * corpus (q124 measures it live, deliberately uncached); the vector is
-    * 6 driver-local longs, so nothing is persisted.
+  /** Path of the day-partitioned `events` layout, written on first request.
+    * The write is the demo's setup, not its subject — the pruned READ is
+    * what q59 measures — so it must happen once, not once per bench rep.
     */
-  def lrWeightsFor(s: SparkSession, dir: String): Seq[Long] =
-    lrCache.synchronized {
-      lrCache.get(s) match {
-        case (d, w) if d == dir => w
-        case _ =>
-          val corpus = graft.ext.Classifier.weakLabelCorpus(
-            ExtensionQueries.docsSpread(s, dir), "doc_id", "text")
-          val feats = graft.ext.Classifier.lrFeatures(
-            corpus, "doc_id", "text",
-            org.apache.spark.sql.functions.col("y") === 1L).persist()
-          val w = try graft.ext.Classifier.lrTrain(feats, iters = 6)
-                  finally feats.unpersist()
-          lrCache.put(s, (dir, w))
-          w
-      }
-    }
+  private val layout = treeSlot("layout")
+  def layoutFor(s: SparkSession, dir: String)(write: String => Unit): String = {
+    val root = layout(s, dir)(tempTree("graft-layout")(r => write(s"$r/events_daily")))
+    s"$root/events_daily"
+  }
 
-  /** One-line JSON footprint of everything cached for `s`: which caches
-    * hold an entry, plus the session's persisted-RDD storage totals (the
+  /** Committed demo snapshot table (SnapshotLog root) — the version commits
+    * are q85's SETUP; the time-travel diff is what the query measures, so
+    * the table is written once per (session, dir), not once per invocation.
+    */
+  private val snapshot = treeSlot("snapshot")
+  def snapshotTableFor(s: SparkSession, dir: String)(build: String => Unit): String = {
+    val root = snapshot(s, dir)(tempTree("graft-snap")(r => build(s"$r/table")))
+    s"$root/table"
+  }
+
+  /** q302's container-level dHash verdict pairs — the q303 remediation
+    * input: q302 and q303 share the frame-fingerprint + banded-join build
+    * (the most expensive multimodal input in the suite). The frame is
+    * verdict-sized (pairs), never corpus-sized.
+    */
+  private val videoPairs = frameSlot("videoPairs")
+  def videoPairsFor(s: SparkSession, dir: String): DataFrame = videoPairs(s, dir) {
+    persisted(graft.ext.Multimodal.videoDhashNearDups(
+      ExtensionQueries.videoCorpus(s, dir), "doc_id", "text",
+      n = 4, frameBytes = 96, maxHamming = 3, minShared = 3))
+  }
+
+  /** q310's container-level audio-chroma verdict pairs — the q322
+    * remediation input: q310 and q322 share the window-fingerprint +
+    * banded-join build, the [[videoPairsFor]] contract on the second
+    * perceptual modality.
+    */
+  private val audioPairs = frameSlot("audioPairs")
+  def audioPairsFor(s: SparkSession, dir: String): DataFrame = audioPairs(s, dir) {
+    persisted(graft.ext.Multimodal.audioChromaNearDups(
+      ExtensionQueries.audioCorpus(s, dir), "doc_id", "text",
+      n = 6, windowChars = 128, maxHamming = 3, minShared = 3, maxBlockSize = 64))
+  }
+
+  /** One-line JSON footprint of everything cached for `s`: which slots hold
+    * an entry, plus the session's persisted-RDD storage totals (the
     * persisted frames dominate; the localized centroid/BPE tables are
     * driver-local handfuls of rows). Printed at bench end so cache growth
     * stays observable as the suite grows.
     */
   def footprint(s: SparkSession): String = {
-    val held = Seq(
-      "sig" -> sigCache.containsKey(s), "cc" -> ccCache.containsKey(s),
-      "copurchase" -> copurchaseCache.containsKey(s),
-      "copurchaseDistinct" -> copurchaseDistinctCache.containsKey(s),
-      "hanfEdges" -> hanfEdgesCache.containsKey(s),
-      "prEdges" -> prEdgesCache.containsKey(s),
-      "pq" -> pqCache.containsKey(s), "pqCs" -> pqCsCache.containsKey(s),
-      "ivf" -> ivfCache.containsKey(s), "sem" -> semCache.containsKey(s),
-      "curation" -> curationCache.containsKey(s),
-      "curationV2" -> curationV2Cache.containsKey(s),
-      "fullCent" -> fullCentCache.containsKey(s),
-      "gann" -> gannCache.containsKey(s),
-      "bpe" -> bpeCache.containsKey(s), "lr" -> lrCache.containsKey(s),
-      "wordpiece" -> wpCache.containsKey(s),
-      "unigramVocab" -> uniVocabCache.containsKey(s),
-      "lpaLabels" -> lpaCache.containsKey(s),
-      "layout" -> layoutCache.containsKey(s),
-      "snapshot" -> snapCache.containsKey(s),
-      "videoPairs" -> videoPairsCache.containsKey(s),
-      "audioPairs" -> audioPairsCache.containsKey(s)
-    ).collect { case (n, true) => "\"" + n + "\"" }
+    val held = slots.filter(_.holds(s)).map("\"" + _.name + "\"")
     val info = s.sparkContext.getRDDStorageInfo
     val memMB = info.map(_.memSize).sum / 1e6
     val diskMB = info.map(_.diskSize).sum / 1e6
-    // per-entry sizes, largest first — the growth-policy audit trail:
-    // the slot COUNT is statically bounded (one slot per shared input
-    // family above, LRU-1 each), so the only way this list grows is a
-    // new family landing in code review; the sizes show which slot to
-    // evict first if the total ever matters
+    // per-entry sizes, largest first — the growth-policy audit trail: the
+    // sizes show which slot to evict first if the total ever matters
     val perRdd = info.sortBy(-_.memSize).take(12)
       .map(i => f"""{"id":${i.id},"mem_mb":${i.memSize / 1e6}%.2f}""")
       .mkString("[", ",", "]")
     f"""{"metric":"cache_footprint","caches":[${held.mkString(",")}],"n_cached_rdds":${info.length},"cached_mem_mb":$memMB%.1f,"cached_disk_mb":$diskMB%.1f,"per_rdd":$perRdd}"""
   }
 
-  def clear(s: SparkSession): Unit = {
-    sigCache.synchronized {
-      Option(sigCache.remove(s)).foreach(_._2.unpersist())
-    }
-    ccCache.synchronized {
-      Option(ccCache.remove(s)).foreach(_._2.unpersist())
-    }
-    copurchaseCache.synchronized {
-      Option(copurchaseCache.remove(s)).foreach(_._2.unpersist())
-    }
-    copurchaseDistinctCache.synchronized {
-      Option(copurchaseDistinctCache.remove(s)).foreach(_._2.unpersist())
-    }
-    hanfEdgesCache.synchronized {
-      Option(hanfEdgesCache.remove(s)).foreach(_._2.unpersist())
-    }
-    prEdgesCache.synchronized {
-      Option(prEdgesCache.remove(s)).foreach(_._2.unpersist())
-    }
-    videoPairsCache.synchronized {
-      Option(videoPairsCache.remove(s)).foreach(_._2.unpersist())
-    }
-    audioPairsCache.synchronized {
-      Option(audioPairsCache.remove(s)).foreach(_._2.unpersist())
-    }
-    pqCache.synchronized {
-      Option(pqCache.remove(s)).foreach { e =>
-        e._2._1.unpersist(); e._2._2.unpersist()
-      }
-    }
-    pqCsCache.synchronized {
-      Option(pqCsCache.remove(s)).foreach { e =>
-        e._2._1.unpersist(); e._2._2.unpersist()
-      }
-    }
-    ivfCache.synchronized {
-      ivfCache.remove(s) // localized frame — nothing persisted to release
-    }
-    semCache.synchronized {
-      semCache.remove(s) // localized frame — nothing persisted to release
-    }
-    curationCache.synchronized {
-      Option(curationCache.remove(s)).foreach(_._2.unpersist())
-    }
-    curationV2Cache.synchronized {
-      Option(curationV2Cache.remove(s)).foreach(_._2.unpersist())
-    }
-    fullCentCache.synchronized {
-      fullCentCache.remove(s) // localized frame — nothing persisted to release
-    }
-    gannCache.synchronized {
-      Option(gannCache.remove(s)).foreach { e =>
-        e._2._1.unpersist(); e._2._2.unpersist()
-      }
-    }
-    bpeCache.synchronized {
-      bpeCache.remove(s) // driver-local rows — nothing persisted to release
-    }
-    wpCache.synchronized {
-      wpCache.remove(s) // driver-local rows — nothing persisted to release
-    }
-    uniVocabCache.synchronized {
-      uniVocabCache.remove(s) // localized frame — nothing persisted to release
-    }
-    lpaCache.synchronized {
-      lpaCache.remove(s) // localCheckpointed by the operator; GC reclaims
-    }
-    lrCache.synchronized {
-      lrCache.remove(s) // driver-local longs — nothing persisted to release
-    }
-    layoutCache.synchronized {
-      Option(layoutCache.remove(s)).foreach(e => deleteTree(e._2))
-    }
-    snapCache.synchronized {
-      Option(snapCache.remove(s)).foreach(e => deleteTree(e._2))
-    }
-  }
+  /** Release everything cached for `s`: every slot's entry is dropped and
+    * released (frames unpersisted, layout/snapshot directories deleted).
+    * Call before stopping the session.
+    */
+  def clear(s: SparkSession): Unit = slots.foreach(_.drop(s))
 
   private def deleteTree(root: Path): Unit =
     if (Files.exists(root)) {
@@ -686,16 +434,8 @@ private[graft] object QueryCaches {
       }
     }
 
-  // abnormal-exit sweep: whatever layout dirs are still registered when the
-  // JVM goes down get removed (persisted frames die with the JVM anyway)
-  sys.addShutdownHook {
-    layoutCache.synchronized {
-      layoutCache.values().forEach(e => deleteTree(e._2))
-      layoutCache.clear()
-    }
-    snapCache.synchronized {
-      snapCache.values().forEach(e => deleteTree(e._2))
-      snapCache.clear()
-    }
-  }
+  // abnormal-exit sweep: directory slots delete whatever is still registered
+  // when the JVM goes down; nothing here calls into Spark, which may already
+  // be stopped (persisted frames die with the JVM anyway)
+  sys.addShutdownHook(slots.filter(_.sweepAtExit).foreach(_.dropAll()))
 }

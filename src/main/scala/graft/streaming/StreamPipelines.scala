@@ -83,20 +83,6 @@ object StreamPipelines {
   ): DataFrame =
     kafkaReader(spark, brokers, topic, startingOffsets, maxOffsetsPerTrigger).load()
 
-  /** S3 — a CDC topic source: Kafka envelope → typed columns in one call
-    * (reference stream_dims.py:162-170's read+from_json+select chain).
-    */
-  def kafkaJsonSource(
-      spark: SparkSession,
-      brokers: String,
-      topic: String,
-      schema: StructType,
-      startingOffsets: String = "earliest",
-      maxOffsetsPerTrigger: Option[Long] = None
-  ): DataFrame =
-    parseJsonEnvelope(
-      kafkaSource(spark, brokers, topic, startingOffsets, maxOffsetsPerTrigger), schema)
-
   /** P1/P2 envelope parse: a raw `value` string column (Kafka-shaped) into
     * typed columns via an explicit schema — no inference, PERMISSIVE nulls
     * (reference streaming_job.py:200-202).
@@ -2267,76 +2253,6 @@ object StreamPipelines {
       batch.unpersist()
       ()
     }
-  }
-
-  /** [[mixtureWeightsRefreshIngestBatch]] behind a per-window per-domain
-    * loss-moment close, as a foreachBatch sink: per tumbling window each
-    * domain's (count, loss sum) aggregate closes at the watermark and
-    * folds into the versioned moment matrix.
-    */
-  def mixtureWeightsSink(
-      events: DataFrame,
-      tsCol: String,
-      domainCol: String,
-      lossCol: String,
-      statePath: String,
-      checkpointDir: String,
-      rounds: Int = 8,
-      etaMilli: Long = 400L,
-      watermark: String = "10 seconds",
-      windowLength: String = "1 minute",
-      trigger: Trigger = Trigger.ProcessingTime("1 minute")
-  ): DataStreamWriter[org.apache.spark.sql.Row] = {
-    val closed = events
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), windowLength), col(domainCol).as("domain"))
-      .agg(count(lit(1)).as("n_docs"), sum(col(lossCol)).as("loss_sum"))
-      .select(col("window.start").as("window_start"), col("domain"),
-        col("n_docs"), col("loss_sum"))
-    closed.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mixtureWeightsRefreshIngestBatch(batch, statePath, batchId, rounds,
-          etaMilli, incarnation = streamIncarnation(batch.sparkSession))
-      }
-  }
-
-  /** [[attributionModelRefreshIngestBatch]] behind the
-    * [[attributionTelemetrySink]] windowed journey close, as a
-    * foreachBatch sink.
-    */
-  def attributionModelRefreshSink(
-      events: DataFrame,
-      tsCol: String,
-      userCol: String,
-      idCol: String,
-      typeCol: String,
-      statePath: String,
-      checkpointDir: String,
-      channels: Seq[String],
-      convType: String = "purchase",
-      steps: Int = 12,
-      watermark: String = "10 seconds",
-      windowLength: String = "1 minute",
-      trigger: Trigger = Trigger.ProcessingTime("1 minute")
-  ): DataStreamWriter[org.apache.spark.sql.Row] = {
-    val closed = events
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), windowLength), col(userCol).as("user"))
-      .agg(sort_array(collect_list(struct(
-        col(tsCol).as("ts"), col(idCol).as("id"), col(typeCol).as("t")))).as("evs"))
-      .select(col("window.start").as("window_start"), col("evs"))
-    closed.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        attributionModelRefreshIngestBatch(
-          batch, statePath, batchId, channels, convType, steps,
-          incarnation = streamIncarnation(batch.sparkSession))
-      }
   }
 
   def dhashDedupSink(
