@@ -1,7 +1,12 @@
 package graft.table
 
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** A minimal table-format commit log over plain parquet — the engine-native
   * analog of Iceberg's snapshot machinery that the reference relies on
@@ -13,6 +18,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   <table>/data/<segment>/part-*.parquet   immutable data segments
   *   <table>/_log/v000000001.json            one manifest per version
   * }}}
+  *
+  * A manifest is one JSON object, written and parsed with Jackson:
+  * {{{
+  *   version, committedAtMs, op      replace | append | delta
+  *   tag                             optional replay / maintenance marker
+  *   mergeKey, carryCols,            delta versions only: the MergeSpec
+  *   deleteCol, orderCol
+  *   segments                        segment dirs, oldest first; each once
+  *   schemas                         each segment's schema, aligned with
+  *                                   segments (Spark's DataType JSON)
+  * }}}
+  * Like Iceberg's table metadata, the recorded schemas let a reader plan
+  * without opening a data file: every scan is built with
+  * `spark.read.schema(..)`, so [[read]] starts no Spark job before the
+  * caller's action (as long as a version spans at most
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` segments, past
+  * which Spark lists the dirs with a job). A manifest written before
+  * schemas were recorded has no `schemas` field; its versions still read,
+  * by footer inference, and appends on top of one stay schema-less until a
+  * replace or [[compactLatest]] records a schema again.
   *
   * A commit writes a NEW segment dir, then publishes the manifest with an
   * ATOMIC CLAIM on the final manifest path, per filesystem:
@@ -60,9 +85,23 @@ object SnapshotLog {
   final case class MergeSpec(key: Seq[String], carryCols: Seq[String] = Nil,
                              deleteCol: Option[String] = None, orderCol: Option[String] = None)
 
+  /** One version's manifest. `schemas` is None for a manifest in the
+    * earlier schema-less format and for appends on top of one; its scans
+    * infer from the footers.
+    */
   private final case class Manifest(op: String, segments: Seq[String],
                                     committedAtMs: Long, tag: Option[String],
-                                    merge: Option[MergeSpec] = None)
+                                    merge: Option[MergeSpec] = None,
+                                    schemas: Option[Seq[StructType]] = None) {
+    /** The version's columns: every segment's, in first-seen order. A
+      * segment that lacks a column reads it as null.
+      */
+    def schema: Option[StructType] = schemas.map(_.foldLeft(new StructType()) { (acc, s) =>
+      StructType(acc.fields ++ s.fields.filterNot(f => acc.fieldNames.contains(f.name)))
+    })
+  }
+
+  private val Json = new ObjectMapper()
 
   private def fs(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -105,7 +144,10 @@ object SnapshotLog {
     commit(df, path, "replace", tag)
 
   /** Commit `df` as an append: the new version references the previous
-    * version's segments plus the new one.
+    * version's segments plus the new one. `df` may add columns or omit
+    * some (a segment reads a column it lacks as null), but a column it
+    * shares with the table must keep its type: a conflict throws
+    * IllegalArgumentException before any segment is written.
     */
   def commitAppend(df: DataFrame, path: String, tag: Option[String] = None): Int =
     commit(df, path, "append", tag)
@@ -134,19 +176,45 @@ object SnapshotLog {
     commit(df, path, "delta", tag, Some(spec))
   }
 
+  // Jackson would escape any string, but tags and merge-spec columns stay
+  // plain identifiers: tools match tags and segment names in a manifest's
+  // text without a JSON parser, and the fold resolves merge columns with
+  // col(), which would parse a dot or a backtick
   private val TagPattern = "[A-Za-z0-9._-]+".r
   private val ColPattern = "[A-Za-z0-9_]+".r
 
+  /** `t` in the form a parquet read returns it: every field, element and
+    * map value nullable.
+    */
+  private def readForm(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = readForm(f.dataType), nullable = true)))
+    case a: ArrayType  => ArrayType(readForm(a.elementType), containsNull = true)
+    case m: MapType    => MapType(readForm(m.keyType), readForm(m.valueType), valueContainsNull = true)
+    case other         => other
+  }
+
+  /** An append must keep the type of every column it shares with `table`:
+    * the segments of one version are read with one schema.
+    */
+  private def requireSameTypes(table: Manifest, schema: StructType): Unit =
+    table.schema.foreach { cur =>
+      val clash = schema.fields.flatMap(f => cur.find(_.name == f.name)
+        .filter(_.dataType != f.dataType)
+        .map(c => s"${f.name}: ${c.dataType.simpleString} -> ${f.dataType.simpleString}"))
+      require(clash.isEmpty, s"commitAppend: column types conflict with the table: ${clash.mkString(", ")}")
+    }
+
   private def commit(df: DataFrame, path: String, op: String, tag: Option[String],
                      merge: Option[MergeSpec] = None): Int = {
-    // the manifest is interpolated JSON parsed by regex: an unescaped
-    // quote/backslash/']' in a tag would corrupt it silently, so the public
-    // tag parameter is restricted to a safe charset instead of escaped
     tag.foreach(t => require(TagPattern.matches(t),
       s"tag must match [A-Za-z0-9._-]+, got: '$t'"))
-    val spark = df.sparkSession
-    val f     = fs(spark, path)
-    val seg   = s"$DataDir/seg-${java.util.UUID.randomUUID().toString.take(8)}"
+    val spark  = df.sparkSession
+    val f      = fs(spark, path)
+    val schema = readForm(df.schema).asInstanceOf[StructType]
+    if (op == "append")
+      latestVersion(spark, path).foreach(v => requireSameTypes(readManifest(spark, path, v), schema))
+    val seg    = s"$DataDir/seg-${java.util.UUID.randomUUID().toString.take(8)}"
     df.write.mode("overwrite").parquet(s"$path/$seg")
     f.mkdirs(new Path(path, LogDir))
     var attempts = 0
@@ -154,19 +222,18 @@ object SnapshotLog {
       attempts += 1
       val base = latestVersion(spark, path)
       val prev =
-        if (op == "append" || op == "delta")
-          base.map(readManifest(spark, path, _).segments).getOrElse(Nil)
-        else Nil
+        if (op == "append" || op == "delta") base.map(readManifest(spark, path, _))
+        else None
       val v    = base.getOrElse(0) + 1
-      val tagField = tag.map(t => s""","tag":"$t"""").getOrElse("")
-      def strArr(xs: Seq[String]) = xs.map(s => "\"" + s + "\"").mkString(",")
-      val mergeField = merge.map { m =>
-        s""","mergeKey":[${strArr(m.key)}],"carryCols":[${strArr(m.carryCols)}]""" +
-          m.deleteCol.map(c => s""","deleteCol":"$c"""").getOrElse("") +
-          m.orderCol.map(c => s""","orderCol":"$c"""").getOrElse("")
-      }.getOrElse("")
-      val body =
-        s"""{"version":$v,"committedAtMs":${System.currentTimeMillis()},"op":"$op"$tagField$mergeField,"segments":[${strArr(prev :+ seg)}]}"""
+      // a racer may have published a conflicting type since the check above
+      if (op == "append") prev.foreach { p =>
+        try requireSameTypes(p, schema)
+        catch { case e: IllegalArgumentException => f.delete(new Path(path, seg), true); throw e }
+      }
+      val m = Manifest(op, prev.map(_.segments).getOrElse(Nil) :+ seg,
+        System.currentTimeMillis(), tag, merge,
+        prev.fold(Option(Seq(schema)))(_.schemas.map(_ :+ schema)))
+      val body = toJson(v, m)
       // create-exclusive IS the atomic publish: exactly one committer can
       // create vN.json; anyone else lands in the catch and retries on vN+1.
       // ONLY already-exists retries — a create that succeeded but whose
@@ -225,6 +292,38 @@ object SnapshotLog {
     throw new IllegalStateException(s"snapshot commit lost the race $attempts times: $path")
   }
 
+  private def toJson(v: Int, m: Manifest): String = {
+    val o = Json.createObjectNode()
+      .put("version", v).put("committedAtMs", m.committedAtMs).put("op", m.op)
+    def strs(field: String, xs: Seq[String]): Unit = {
+      val a = o.putArray(field); xs.foreach(a.add)
+    }
+    m.tag.foreach(o.put("tag", _))
+    m.merge.foreach { spec =>
+      strs("mergeKey", spec.key); strs("carryCols", spec.carryCols)
+      spec.deleteCol.foreach(o.put("deleteCol", _)); spec.orderCol.foreach(o.put("orderCol", _))
+    }
+    strs("segments", m.segments)
+    m.schemas.foreach { ss =>
+      val a = o.putArray("schemas"); ss.foreach(s => a.add(Json.readTree(s.json)))
+    }
+    Json.writeValueAsString(o)
+  }
+
+  /** The manifest in `body`, or None while it is not complete JSON yet. */
+  private def parseManifest(body: String): Option[Manifest] =
+    Try(Json.readTree(body)).toOption.filter(_.has("version")).map { n =>
+      def str(field: String) = Option(n.get(field)).map(_.asText)
+      def strs(field: String) = n.path(field).asScala.map(_.asText).toSeq
+      val op = str("op").getOrElse("replace")
+      Manifest(op, strs("segments"), n.path("committedAtMs").asLong(0L), str("tag"),
+        if (op == "delta") Some(MergeSpec(strs("mergeKey"), strs("carryCols"),
+          str("deleteCol"), str("orderCol")))
+        else None,
+        Option(n.get("schemas")).map(_.asScala.map(s =>
+          DataType.fromJson(s.toString).asInstanceOf[StructType]).toSeq))
+    }
+
   /** Parse a version's manifest; a just-created manifest whose bytes are
     * not flushed yet is retried briefly (see commit protocol note above).
     */
@@ -235,22 +334,9 @@ object SnapshotLog {
       attempts += 1
       val in   = fs(spark, path).open(p)
       val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      val verOk = body.contains("\"version\":") && body.trim.endsWith("}")
-      if (verOk) {
-        val op   = "\"op\":\"([a-z]+)\"".r.findFirstMatchIn(body).map(_.group(1)).getOrElse("replace")
-        val ts   = "\"committedAtMs\":(\\d+)".r.findFirstMatchIn(body).map(_.group(1).toLong).getOrElse(0L)
-        val tag  = "\"tag\":\"([^\"]*)\"".r.findFirstMatchIn(body).map(_.group(1))
-        def arr(field: String): Seq[String] =
-          s""""$field":\\[([^\\]]*)\\]""".r.findFirstMatchIn(body).map(_.group(1)).getOrElse("")
-            .split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty)
-        val segs = arr("segments")
-        val merge =
-          if (op == "delta") Some(MergeSpec(
-            arr("mergeKey"), arr("carryCols"),
-            "\"deleteCol\":\"([^\"]*)\"".r.findFirstMatchIn(body).map(_.group(1)),
-            "\"orderCol\":\"([^\"]*)\"".r.findFirstMatchIn(body).map(_.group(1))))
-          else None
-        return Manifest(op, segs, ts, tag, merge)
+      parseManifest(body) match {
+        case Some(m) => return m
+        case None    =>
       }
       // 80 × 25 ms = 2 s of patience: a manifest that exists but is empty
       // is usually a LIVE writer between create() and write() — a loser
@@ -264,17 +350,26 @@ object SnapshotLog {
     throw new IllegalStateException("unreachable")
   }
 
+  /** A parquet scan of `dirs`. With the recorded schema Spark opens no
+    * footer to build it; only a schema-less legacy manifest infers.
+    */
+  private def scan(spark: SparkSession, dirs: Seq[String], schema: Option[StructType]): DataFrame =
+    schema.fold(spark.read)(spark.read.schema).parquet(dirs: _*)
+
   /** Read the table at `version` (time travel), or at the latest version.
     * A merge-on-read version folds its delta segments over the base at
     * scan time (see [[commitDelta]]); readers always see merged state.
+    * A plain version is one scan over all its segments with their merged
+    * schema. The frame is built from the manifest alone: no Spark job runs
+    * before the caller's action.
     */
   def read(spark: SparkSession, path: String, version: Option[Int] = None): DataFrame = {
     val v = version.orElse(latestVersion(spark, path))
       .getOrElse(throw new IllegalArgumentException(s"no committed version at $path"))
     val m = readManifest(spark, path, v)
     m.merge match {
-      case None       => spark.read.parquet(m.segments.map(s => s"$path/$s"): _*)
-      case Some(spec) => foldDeltas(spark, path, m.segments, spec)
+      case None       => scan(spark, m.segments.map(s => s"$path/$s"), m.schema)
+      case Some(spec) => foldDeltas(spark, path, m, spec)
     }
   }
 
@@ -291,11 +386,11 @@ object SnapshotLog {
     * which [[compactLatest]] resets by folding into a plain base.
     */
   private def foldDeltas(spark: SparkSession, path: String,
-                         segments: Seq[String], spec: MergeSpec): DataFrame = {
+                         m: Manifest, spec: MergeSpec): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    val parts = segments.zipWithIndex.map { case (s, i) =>
-      spark.read.parquet(s"$path/$s").withColumn("__seq", lit(i))
+    val parts = m.segments.zipWithIndex.map { case (s, i) =>
+      scan(spark, Seq(s"$path/$s"), m.schemas.map(_(i))).withColumn("__seq", lit(i))
     }
     val all = parts.reduce(_.unionByName(_, allowMissingColumns = true))
     val keyCols = spec.key.map(col)

@@ -1,12 +1,72 @@
 package graft.table
 
 import graft.SparkFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
+
+/** Reads what a SnapshotLog manifest records, straight from its JSON. */
+object Manifests {
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  def text(path: String, v: Int): String =
+    Files.readString(Paths.get(path, "_log", f"v$v%09d.json"))
+
+  /** (segment, recorded schema) per segment of version `v`; the schema is
+    * None for a manifest that records none.
+    */
+  def segmentSchemas(path: String, v: Int): Seq[(String, Option[StructType])] = {
+    import scala.jdk.CollectionConverters._
+    val n = Json.readTree(text(path, v))
+    val segs = n.path("segments").asScala.map(_.asText).toSeq
+    val schemas = Option(n.get("schemas")).map(_.asScala.map(s =>
+      DataType.fromJson(s.toString).asInstanceOf[StructType]).toSeq)
+    schemas.foreach(ss => assert(ss.size == segs.size, s"schemas misaligned in v$v"))
+    segs.zipWithIndex.map { case (seg, i) => seg -> schemas.map(_(i)) }
+  }
+
+  /** Every retained version records, for each of its segments, exactly the
+    * schema a parquet read of that segment infers.
+    */
+  def assertSchemasMatchFooters(spark: SparkSession, path: String): Unit =
+    graft.table.SnapshotLog.versions(spark, path).foreach { v =>
+      segmentSchemas(path, v).foreach { case (seg, recorded) =>
+        val inferred = spark.read.parquet(s"$path/$seg").schema
+        assert(recorded.contains(inferred), s"v$v $seg: recorded $recorded, footer $inferred")
+      }
+    }
+}
 
 class SnapshotLogSpec extends SparkFunSuite {
   import spark.implicits._
 
   private def tmp(): String = graft.TestTmp.dir("snaplog") + "/t"
+
+  /** The result of `body` and the number of Spark jobs it started. */
+  private def jobsStartedBy[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val id = java.util.UUID.randomUUID().toString
+    def jobs(group: String) = sc.statusTracker.getJobIdsForGroup(group).length
+    sc.setJobGroup(s"build-$id", "frame build")
+    val a = try body finally sc.clearJobGroup()
+    // job events reach the status store in order: once the fence job is
+    // there, every job the build started is too
+    sc.setJobGroup(s"fence-$id", "fence")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (jobs(s"fence-$id") == 0 && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(jobs(s"fence-$id") == 1, "the fence job never reached the status store")
+    (a, jobs(s"build-$id"))
+  }
+
+  /** `SnapshotLog.read` starts no job while it builds its frame. */
+  private def readNoJobs(path: String, version: Option[Int] = None): DataFrame = {
+    val (df, jobs) = jobsStartedBy(SnapshotLog.read(spark, path, version))
+    assert(jobs == 0, s"building the read of $path at $version started $jobs jobs")
+    df
+  }
+
+  private def rows(df: DataFrame): Set[Row] = df.collect().toSet
 
   test("commit/read round-trip with replace and append semantics") {
     val path = tmp()
@@ -214,5 +274,119 @@ class SnapshotLogSpec extends SparkFunSuite {
     assert(got.sorted == Seq(2, 3, 4, 5))
     // every append survived into the final state
     assert(SnapshotLog.read(spark, path).count() == 5)
+  }
+
+  test("a plain version reads every segment's columns, whichever footer Spark would pick") {
+    // the table keeps `extra` on every read; inference from one footer
+    // dropped it on some tables and kept it on others
+    (1 to 6).foreach { _ =>
+      val path = tmp()
+      SnapshotLog.commitReplace(Seq((1, "a"), (2, "b")).toDF("id", "v"), path)
+      SnapshotLog.commitAppend(Seq((3, "c", 7)).toDF("id", "v", "extra"), path)
+      val df = SnapshotLog.read(spark, path)
+      assert(df.columns.toSeq == Seq("id", "v", "extra"))
+      assert(rows(df) == Set(Row(1, "a", null), Row(2, "b", null), Row(3, "c", 7)))
+    }
+  }
+
+  test("commitAppend rejects a column-type conflict before writing a segment") {
+    val path = tmp()
+    SnapshotLog.commitReplace(Seq((1, "a"), (2, "b")).toDF("id", "v"), path)
+    def segments = { val l = Files.list(Paths.get(path, "data")); try l.count() finally l.close() }
+    val segsBefore = segments
+    val e = intercept[IllegalArgumentException](
+      SnapshotLog.commitAppend(Seq((3L, "c")).toDF("id", "v"), path))
+    assert(e.getMessage.contains("id: int -> bigint"), e.getMessage)
+    assert(segments == segsBefore)
+    assert(SnapshotLog.versions(spark, path) == Seq(1))
+    assert(rows(SnapshotLog.read(spark, path)) == Set(Row(1, "a"), Row(2, "b")))
+    // a replace may change types: it starts a new table state
+    SnapshotLog.commitReplace(Seq((3L, "c")).toDF("id", "v"), path)
+    assert(rows(SnapshotLog.read(spark, path)) == Set(Row(3L, "c")))
+  }
+
+  test("no Spark job runs while read builds its frame; results unchanged") {
+    val spec = SnapshotLog.MergeSpec(Seq("id"), orderCol = Some("ts"))
+    val mor = tmp()
+    SnapshotLog.commitReplace((1 to 20).map(i => (i, 0L, s"b$i")).toDF("id", "ts", "v"), mor)
+    (1L to 3L).foreach { d =>
+      SnapshotLog.commitDelta((1 to 5).map(i => (i, d, s"d$d-$i")).toDF("id", "ts", "v"), mor, spec)
+    }
+    val folded = (1 to 20).map(i => Row(i, if (i <= 5) 3L else 0L, if (i <= 5) s"d3-$i" else s"b$i")).toSet
+    assert(rows(readNoJobs(mor)) == folded)
+    // time travel to an older version: base + 1 delta
+    val v2 = (1 to 20).map(i => Row(i, if (i <= 5) 1L else 0L, if (i <= 5) s"d1-$i" else s"b$i")).toSet
+    assert(rows(readNoJobs(mor, Some(2))) == v2)
+    assert(rows(readNoJobs(mor, Some(1))) == (1 to 20).map(i => Row(i, 0L, s"b$i")).toSet)
+    // after compaction the latest version is one plain segment
+    SnapshotLog.compactLatest(spark, mor)
+    assert(rows(readNoJobs(mor)) == folded)
+    // a 3-segment append table
+    val app = tmp()
+    SnapshotLog.commitReplace(Seq((1, "a")).toDF("id", "v"), app)
+    SnapshotLog.commitAppend(Seq((2, "b")).toDF("id", "v"), app)
+    SnapshotLog.commitAppend(Seq((3, "c")).toDF("id", "v"), app)
+    assert(rows(readNoJobs(app)) == Set(Row(1, "a"), Row(2, "b"), Row(3, "c")))
+    assert(rows(readNoJobs(app, Some(2))) == Set(Row(1, "a"), Row(2, "b")))
+  }
+
+  test("each recorded schema equals the schema a parquet read of its segment infers") {
+    val path = tmp()
+    val df = spark.sql("""SELECT id AS l, CAST(id AS INT) AS i, CAST(id AS STRING) AS s,
+        id % 2 = 0 AS b, id / 3.0D AS d, TIMESTAMP '2024-01-01 10:00:00' AS ts,
+        DATE '2024-01-02' AS dt, CAST(id AS DECIMAL(12, 2)) AS dec,
+        CAST(id AS DECIMAL(38, 18)) AS wide,
+        array(named_struct('a', CAST(id AS INT), 'b', 'x')) AS arr,
+        map('k', id) AS m, named_struct('n', id, 'o', CAST(NULL AS STRING)) AS st
+      FROM range(3)""")
+    assert(df.schema.exists(!_.nullable)) // the commit must record the read form
+    SnapshotLog.commitReplace(df, path)
+    SnapshotLog.commitAppend(df.drop("wide"), path)
+    SnapshotLog.commitDelta(df.drop("arr"), path, SnapshotLog.MergeSpec(Seq("l")))
+    Manifests.assertSchemasMatchFooters(spark, path)
+    assert(Manifests.segmentSchemas(path, 3).size == 3)
+    // the delta fold sees the same rows as a footer-inferred read would
+    assert(SnapshotLog.read(spark, path).count() == 3)
+  }
+
+  test("the manifest is real JSON: any column name embeds, each segment appears once") {
+    val path = tmp()
+    val odd = "we\"ird],{name}\\"
+    SnapshotLog.commitReplace(Seq((1, "a")).toDF("id", odd), path)
+    SnapshotLog.commitAppend(Seq((2, "b")).toDF("id", odd), path, Some("t-1"))
+    val df = readNoJobs(path)
+    assert(df.columns.toSeq == Seq("id", odd))
+    assert(rows(df) == Set(Row(1, "a"), Row(2, "b")))
+    assert(SnapshotLog.latestTag(spark, path).contains("t-1"))
+    val segs = Manifests.segmentSchemas(path, 2).map(_._1)
+    assert(segs.size == 2)
+    assert("\"data/seg-".r.findAllMatchIn(Manifests.text(path, 2)).size == segs.size)
+  }
+
+  test("a manifest without schemas still reads, and compactLatest records them") {
+    // versions in the format written before manifests carried schemas
+    def legacy(path: String, v: Int, body: String): Unit = {
+      Files.createDirectories(Paths.get(path, "_log"))
+      Files.writeString(Paths.get(path, "_log", f"v$v%09d.json"), body)
+    }
+    val path = tmp()
+    Seq((1, "a", false), (2, "b", false)).toDF("id", "v", "del").write.parquet(s"$path/data/seg-base0001")
+    Seq((2, "B", false), (1, null, true)).toDF("id", "v", "del").write.parquet(s"$path/data/seg-delt0002")
+    legacy(path, 1, """{"version":1,"committedAtMs":1,"op":"replace","segments":["data/seg-base0001"]}""")
+    legacy(path, 2, """{"version":2,"committedAtMs":2,"op":"delta","mergeKey":["id"],"carryCols":[],""" +
+      """"deleteCol":"del","segments":["data/seg-base0001","data/seg-delt0002"]}""")
+    assert(rows(SnapshotLog.read(spark, path, Some(1))) == Set(Row(1, "a", false), Row(2, "b", false)))
+    assert(rows(SnapshotLog.read(spark, path)) == Set(Row(2, "B")))
+    val cv = SnapshotLog.compactLatest(spark, path)
+    assert(Manifests.segmentSchemas(path, cv).map(_._2) == Seq(Some(StructType.fromDDL("id INT, v STRING"))))
+    assert(rows(readNoJobs(path)) == Set(Row(2, "B")))
+    // an append on a legacy version reads, and stays schema-less: the
+    // earlier segments record none
+    val app = tmp()
+    Seq((1, "a")).toDF("id", "v").write.parquet(s"$app/data/seg-base0001")
+    legacy(app, 1, """{"version":1,"committedAtMs":1,"op":"replace","segments":["data/seg-base0001"]}""")
+    val v2 = SnapshotLog.commitAppend(Seq((2, "b")).toDF("id", "v"), app)
+    assert(Manifests.segmentSchemas(app, v2).map(_._2) == Seq(None, None))
+    assert(rows(SnapshotLog.read(spark, app)) == Set(Row(1, "a"), Row(2, "b")))
   }
 }
