@@ -3,7 +3,7 @@ package graft.table
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
@@ -26,18 +26,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   *   mergeKey, carryCols,            delta versions only: the MergeSpec
   *   deleteCol, orderCol
   *   segments                        segment dirs, oldest first; each once
-  *   schemas                         each segment's schema, aligned with
+  *   schema                          the version's columns over all its
   *                                   segments (Spark's DataType JSON)
   * }}}
-  * Like Iceberg's table metadata, the recorded schemas let a reader plan
+  * Like Iceberg's table metadata, the recorded schema lets a reader plan
   * without opening a data file: every scan is built with
   * `spark.read.schema(..)`, so [[read]] starts no Spark job before the
   * caller's action (as long as a version spans at most
   * `spark.sql.sources.parallelPartitionDiscovery.threshold` segments, past
-  * which Spark lists the dirs with a job). A manifest written before
-  * schemas were recorded has no `schemas` field; its versions still read,
-  * by footer inference, and appends on top of one stay schema-less until a
-  * replace or [[compactLatest]] records a schema again.
+  * which Spark lists the dirs with a job).
   *
   * A commit writes a NEW segment dir, then publishes the manifest with an
   * ATOMIC CLAIM on the final manifest path, per filesystem:
@@ -85,21 +82,13 @@ object SnapshotLog {
   final case class MergeSpec(key: Seq[String], carryCols: Seq[String] = Nil,
                              deleteCol: Option[String] = None, orderCol: Option[String] = None)
 
-  /** One version's manifest. `schemas` is None for a manifest in the
-    * earlier schema-less format and for appends on top of one; its scans
-    * infer from the footers.
+  /** One version's manifest. `schema` holds every segment's columns, in
+    * first-seen order and in the form a parquet read returns; a segment
+    * that lacks a column reads it as null.
     */
   private final case class Manifest(op: String, segments: Seq[String],
                                     committedAtMs: Long, tag: Option[String],
-                                    merge: Option[MergeSpec] = None,
-                                    schemas: Option[Seq[StructType]] = None) {
-    /** The version's columns: every segment's, in first-seen order. A
-      * segment that lacks a column reads it as null.
-      */
-    def schema: Option[StructType] = schemas.map(_.foldLeft(new StructType()) { (acc, s) =>
-      StructType(acc.fields ++ s.fields.filterNot(f => acc.fieldNames.contains(f.name)))
-    })
-  }
+                                    merge: Option[MergeSpec], schema: StructType)
 
   private val Json = new ObjectMapper()
 
@@ -164,6 +153,8 @@ object SnapshotLog {
     *
     * Precondition: each delta segment holds at most one row per key
     * (reduce the batch first — [[graft.ops.LatestWins.latestState]]).
+    * As with [[commitAppend]], a column shared with the table must keep its
+    * type, or the commit throws IllegalArgumentException before writing.
     */
   def commitDelta(df: DataFrame, path: String, spec: MergeSpec,
                   tag: Option[String] = None): Int = {
@@ -176,10 +167,11 @@ object SnapshotLog {
     commit(df, path, "delta", tag, Some(spec))
   }
 
-  // Jackson would escape any string, but tags and merge-spec columns stay
-  // plain identifiers: tools match tags and segment names in a manifest's
-  // text without a JSON parser, and the fold resolves merge columns with
-  // col(), which would parse a dot or a backtick
+  // Jackson would escape any string. Merge-spec columns stay plain
+  // identifiers because the fold resolves them with col(), which would
+  // parse a dot or a backtick. Tags keep the [A-Za-z0-9._-] contract they
+  // were published with (SnapshotLogSpec pins it); loosening it is a
+  // separate API change, not a consequence of the JSON format
   private val TagPattern = "[A-Za-z0-9._-]+".r
   private val ColPattern = "[A-Za-z0-9_]+".r
 
@@ -194,16 +186,29 @@ object SnapshotLog {
     case other         => other
   }
 
-  /** An append must keep the type of every column it shares with `table`:
-    * the segments of one version are read with one schema.
+  /** Column-name equality under the session's `spark.sql.caseSensitive`,
+    * the rule parquet uses to match a read schema to a file's columns.
     */
-  private def requireSameTypes(table: Manifest, schema: StructType): Unit =
-    table.schema.foreach { cur =>
-      val clash = schema.fields.flatMap(f => cur.find(_.name == f.name)
-        .filter(_.dataType != f.dataType)
-        .map(c => s"${f.name}: ${c.dataType.simpleString} -> ${f.dataType.simpleString}"))
-      require(clash.isEmpty, s"commitAppend: column types conflict with the table: ${clash.mkString(", ")}")
-    }
+  private def sameName(spark: SparkSession): (String, String) => Boolean =
+    if (spark.conf.get("spark.sql.caseSensitive", "false").toBoolean) _ == _
+    else _.equalsIgnoreCase(_)
+
+  /** `table` followed by the columns of `next` it lacks. */
+  private def mergeSchemas(table: StructType, next: StructType,
+                           same: (String, String) => Boolean): StructType =
+    StructType(table.fields ++ next.fields.filterNot(f => table.exists(c => same(c.name, f.name))))
+
+  /** An append or delta must keep the type of every column it shares with
+    * `table`: the segments of one version are read with one schema.
+    */
+  private def requireSameTypes(op: String, table: StructType, next: StructType,
+                               same: (String, String) => Boolean): Unit = {
+    val clash = next.fields.flatMap(f => table.find(c => same(c.name, f.name))
+      .filter(_.dataType != f.dataType)
+      .map(c => s"${f.name}: ${c.dataType.simpleString} -> ${f.dataType.simpleString}"))
+    require(clash.isEmpty,
+      s"commit${op.capitalize}: column types conflict with the table: ${clash.mkString(", ")}")
+  }
 
   private def commit(df: DataFrame, path: String, op: String, tag: Option[String],
                      merge: Option[MergeSpec] = None): Int = {
@@ -212,8 +217,11 @@ object SnapshotLog {
     val spark  = df.sparkSession
     val f      = fs(spark, path)
     val schema = readForm(df.schema).asInstanceOf[StructType]
-    if (op == "append")
-      latestVersion(spark, path).foreach(v => requireSameTypes(readManifest(spark, path, v), schema))
+    val same   = sameName(spark)
+    val extend = op == "append" || op == "delta"
+    if (extend)
+      latestVersion(spark, path).foreach(v =>
+        requireSameTypes(op, readManifest(spark, path, v).schema, schema, same))
     val seg    = s"$DataDir/seg-${java.util.UUID.randomUUID().toString.take(8)}"
     df.write.mode("overwrite").parquet(s"$path/$seg")
     f.mkdirs(new Path(path, LogDir))
@@ -221,18 +229,16 @@ object SnapshotLog {
     while (attempts < 20) {
       attempts += 1
       val base = latestVersion(spark, path)
-      val prev =
-        if (op == "append" || op == "delta") base.map(readManifest(spark, path, _))
-        else None
+      val prev = if (extend) base.map(readManifest(spark, path, _)) else None
       val v    = base.getOrElse(0) + 1
       // a racer may have published a conflicting type since the check above
-      if (op == "append") prev.foreach { p =>
-        try requireSameTypes(p, schema)
+      prev.foreach { p =>
+        try requireSameTypes(op, p.schema, schema, same)
         catch { case e: IllegalArgumentException => f.delete(new Path(path, seg), true); throw e }
       }
       val m = Manifest(op, prev.map(_.segments).getOrElse(Nil) :+ seg,
         System.currentTimeMillis(), tag, merge,
-        prev.fold(Option(Seq(schema)))(_.schemas.map(_ :+ schema)))
+        prev.fold(schema)(p => mergeSchemas(p.schema, schema, same)))
       val body = toJson(v, m)
       // create-exclusive IS the atomic publish: exactly one committer can
       // create vN.json; anyone else lands in the catch and retries on vN+1.
@@ -304,24 +310,25 @@ object SnapshotLog {
       spec.deleteCol.foreach(o.put("deleteCol", _)); spec.orderCol.foreach(o.put("orderCol", _))
     }
     strs("segments", m.segments)
-    m.schemas.foreach { ss =>
-      val a = o.putArray("schemas"); ss.foreach(s => a.add(Json.readTree(s.json)))
-    }
+    o.set[JsonNode]("schema", Json.readTree(m.schema.json))
     Json.writeValueAsString(o)
   }
 
-  /** The manifest in `body`, or None while it is not complete JSON yet. */
-  private def parseManifest(body: String): Option[Manifest] =
+  /** The manifest at `p` from its `body`, or None while it is not complete
+    * JSON yet.
+    */
+  private def parseManifest(p: Path, body: String): Option[Manifest] =
     Try(Json.readTree(body)).toOption.filter(_.has("version")).map { n =>
       def str(field: String) = Option(n.get(field)).map(_.asText)
       def strs(field: String) = n.path(field).asScala.map(_.asText).toSeq
       val op = str("op").getOrElse("replace")
+      val schema = Option(n.get("schema"))
+        .getOrElse(throw new IllegalStateException(s"manifest $p records no schema"))
       Manifest(op, strs("segments"), n.path("committedAtMs").asLong(0L), str("tag"),
         if (op == "delta") Some(MergeSpec(strs("mergeKey"), strs("carryCols"),
           str("deleteCol"), str("orderCol")))
         else None,
-        Option(n.get("schemas")).map(_.asScala.map(s =>
-          DataType.fromJson(s.toString).asInstanceOf[StructType]).toSeq))
+        DataType.fromJson(schema.toString).asInstanceOf[StructType])
     }
 
   /** Parse a version's manifest; a just-created manifest whose bytes are
@@ -334,7 +341,7 @@ object SnapshotLog {
       attempts += 1
       val in   = fs(spark, path).open(p)
       val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      parseManifest(body) match {
+      parseManifest(p, body) match {
         case Some(m) => return m
         case None    =>
       }
@@ -350,16 +357,16 @@ object SnapshotLog {
     throw new IllegalStateException("unreachable")
   }
 
-  /** A parquet scan of `dirs`. With the recorded schema Spark opens no
-    * footer to build it; only a schema-less legacy manifest infers.
+  /** A parquet scan of `dirs` with the recorded schema: Spark opens no
+    * footer to build it.
     */
-  private def scan(spark: SparkSession, dirs: Seq[String], schema: Option[StructType]): DataFrame =
-    schema.fold(spark.read)(spark.read.schema).parquet(dirs: _*)
+  private def scan(spark: SparkSession, dirs: Seq[String], schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(dirs: _*)
 
   /** Read the table at `version` (time travel), or at the latest version.
     * A merge-on-read version folds its delta segments over the base at
     * scan time (see [[commitDelta]]); readers always see merged state.
-    * A plain version is one scan over all its segments with their merged
+    * A plain version is one scan over all its segments with the recorded
     * schema. The frame is built from the manifest alone: no Spark job runs
     * before the caller's action.
     */
@@ -390,9 +397,9 @@ object SnapshotLog {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     val parts = m.segments.zipWithIndex.map { case (s, i) =>
-      scan(spark, Seq(s"$path/$s"), m.schemas.map(_(i))).withColumn("__seq", lit(i))
+      scan(spark, Seq(s"$path/$s"), m.schema).withColumn("__seq", lit(i))
     }
-    val all = parts.reduce(_.unionByName(_, allowMissingColumns = true))
+    val all = parts.reduce(_ union _)
     val keyCols = spec.key.map(col)
     val ord  = struct(spec.orderCol.map(col).getOrElse(lit(0)).as("o"), col("__seq").as("s"))
     val del  = spec.deleteCol.map(c => coalesce(col(c).cast("boolean"), lit(false))).getOrElse(lit(false))

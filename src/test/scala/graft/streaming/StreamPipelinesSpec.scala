@@ -443,8 +443,8 @@ class StreamPipelinesSpec extends SparkFunSuite {
       val v2 = SnapshotLog.read(spark, s"$dir/gold", Some(2)).collect()
         .map(r => r.getString(0) -> (r.getString(1), r.get(2))).toMap
       assert(v2 == Map("u1" -> ("paid", 10.0), "u2" -> ("created", 20.0)))
-      // each segment's recorded schema is the one its footer gives
-      graft.table.Manifests.assertSchemasMatchFooters(spark, s"$dir/gold")
+      // the recorded schema is the one the segments' footers give
+      graft.table.Manifests.assertSchemaMatchesFooters(spark, s"$dir/gold")
       // merge-on-read: batch 2 committed ONLY a delta segment, so v2's
       // manifest still references v1's base — expiring v1 GCs nothing
       val (expired, deleted) = SnapshotLog.expireSnapshots(spark, s"$dir/gold", 1, orphanOlderThanMs = 0L)
@@ -456,7 +456,7 @@ class StreamPipelinesSpec extends SparkFunSuite {
       val (expired2, deleted2) = SnapshotLog.expireSnapshots(spark, s"$dir/gold", 1, orphanOlderThanMs = 0L)
       assert(expired2 == Seq(2) && deleted2.size == 2)
       assert(SnapshotLog.read(spark, s"$dir/gold").count() == 2)
-      graft.table.Manifests.assertSchemasMatchFooters(spark, s"$dir/gold")
+      graft.table.Manifests.assertSchemaMatchesFooters(spark, s"$dir/gold")
     } finally q.stop()
   }
 
@@ -480,14 +480,14 @@ class StreamPipelinesSpec extends SparkFunSuite {
       val v2 = SnapshotLog.read(spark, s"$dir/dim", Some(2)).collect()
         .map(r => r.getAs[String]("user_id") -> r.getAs[String]("segment")).toMap
       assert(v2 == Map("u1" -> "gold"))
-      graft.table.Manifests.assertSchemasMatchFooters(spark, s"$dir/dim")
+      graft.table.Manifests.assertSchemaMatchesFooters(spark, s"$dir/dim")
       // compaction publishes version 3 with identical data
       val v3 = SnapshotLog.compactLatest(spark, s"$dir/dim")
       assert(v3 == 3)
       val after = SnapshotLog.read(spark, s"$dir/dim").collect()
         .map(r => r.getAs[String]("user_id") -> r.getAs[String]("segment")).toMap
       assert(after == v2)
-      graft.table.Manifests.assertSchemasMatchFooters(spark, s"$dir/dim")
+      graft.table.Manifests.assertSchemaMatchesFooters(spark, s"$dir/dim")
     } finally q.stop()
   }
 

@@ -12,28 +12,26 @@ object Manifests {
   def text(path: String, v: Int): String =
     Files.readString(Paths.get(path, "_log", f"v$v%09d.json"))
 
-  /** (segment, recorded schema) per segment of version `v`; the schema is
-    * None for a manifest that records none.
-    */
-  def segmentSchemas(path: String, v: Int): Seq[(String, Option[StructType])] = {
+  /** The segment dirs version `v` references, oldest first. */
+  def segments(path: String, v: Int): Seq[String] = {
     import scala.jdk.CollectionConverters._
-    val n = Json.readTree(text(path, v))
-    val segs = n.path("segments").asScala.map(_.asText).toSeq
-    val schemas = Option(n.get("schemas")).map(_.asScala.map(s =>
-      DataType.fromJson(s.toString).asInstanceOf[StructType]).toSeq)
-    schemas.foreach(ss => assert(ss.size == segs.size, s"schemas misaligned in v$v"))
-    segs.zipWithIndex.map { case (seg, i) => seg -> schemas.map(_(i)) }
+    Json.readTree(text(path, v)).path("segments").asScala.map(_.asText).toSeq
   }
 
-  /** Every retained version records, for each of its segments, exactly the
-    * schema a parquet read of that segment infers.
+  /** The schema version `v` records. */
+  def schema(path: String, v: Int): StructType =
+    DataType.fromJson(Json.readTree(text(path, v)).get("schema").toString).asInstanceOf[StructType]
+
+  /** Every retained version records exactly the schemas parquet reads of
+    * its segments infer, merged in segment order: each footer's columns
+    * the earlier footers lack (by case-insensitive name) go at the end.
     */
-  def assertSchemasMatchFooters(spark: SparkSession, path: String): Unit =
+  def assertSchemaMatchesFooters(spark: SparkSession, path: String): Unit =
     graft.table.SnapshotLog.versions(spark, path).foreach { v =>
-      segmentSchemas(path, v).foreach { case (seg, recorded) =>
-        val inferred = spark.read.parquet(s"$path/$seg").schema
-        assert(recorded.contains(inferred), s"v$v $seg: recorded $recorded, footer $inferred")
-      }
+      val footers = segments(path, v).map(seg => spark.read.parquet(s"$path/$seg").schema)
+      val merged = footers.reduce((acc, s) => StructType(acc.fields ++
+        s.fields.filterNot(f => acc.fieldNames.exists(_.equalsIgnoreCase(f.name)))))
+      assert(schema(path, v) == merged, s"v$v: recorded ${schema(path, v)}, footers $merged")
     }
 }
 
@@ -289,7 +287,7 @@ class SnapshotLogSpec extends SparkFunSuite {
     }
   }
 
-  test("commitAppend rejects a column-type conflict before writing a segment") {
+  test("commitAppend and commitDelta reject a column-type conflict before writing a segment") {
     val path = tmp()
     SnapshotLog.commitReplace(Seq((1, "a"), (2, "b")).toDF("id", "v"), path)
     def segments = { val l = Files.list(Paths.get(path, "data")); try l.count() finally l.close() }
@@ -297,6 +295,10 @@ class SnapshotLogSpec extends SparkFunSuite {
     val e = intercept[IllegalArgumentException](
       SnapshotLog.commitAppend(Seq((3L, "c")).toDF("id", "v"), path))
     assert(e.getMessage.contains("id: int -> bigint"), e.getMessage)
+    val d = intercept[IllegalArgumentException](SnapshotLog.commitDelta(
+      Seq((1, 5.0)).toDF("id", "v"), path, SnapshotLog.MergeSpec(Seq("id"))))
+    assert(d.getMessage.contains("commitDelta: column types conflict"), d.getMessage)
+    assert(d.getMessage.contains("v: string -> double"), d.getMessage)
     assert(segments == segsBefore)
     assert(SnapshotLog.versions(spark, path) == Seq(1))
     assert(rows(SnapshotLog.read(spark, path)) == Set(Row(1, "a"), Row(2, "b")))
@@ -330,7 +332,7 @@ class SnapshotLogSpec extends SparkFunSuite {
     assert(rows(readNoJobs(app, Some(2))) == Set(Row(1, "a"), Row(2, "b")))
   }
 
-  test("each recorded schema equals the schema a parquet read of its segment infers") {
+  test("the recorded schema equals what parquet reads of the segments infer") {
     val path = tmp()
     val df = spark.sql("""SELECT id AS l, CAST(id AS INT) AS i, CAST(id AS STRING) AS s,
         id % 2 = 0 AS b, id / 3.0D AS d, TIMESTAMP '2024-01-01 10:00:00' AS ts,
@@ -343,8 +345,10 @@ class SnapshotLogSpec extends SparkFunSuite {
     SnapshotLog.commitReplace(df, path)
     SnapshotLog.commitAppend(df.drop("wide"), path)
     SnapshotLog.commitDelta(df.drop("arr"), path, SnapshotLog.MergeSpec(Seq("l")))
-    Manifests.assertSchemasMatchFooters(spark, path)
-    assert(Manifests.segmentSchemas(path, 3).size == 3)
+    Manifests.assertSchemaMatchesFooters(spark, path)
+    assert(Manifests.segments(path, 3).size == 3)
+    assert(Manifests.schema(path, 1) == spark.read.parquet(s"$path/${Manifests.segments(path, 1).head}").schema)
+    assert(Manifests.schema(path, 3) == Manifests.schema(path, 1))
     // the delta fold sees the same rows as a footer-inferred read would
     assert(SnapshotLog.read(spark, path).count() == 3)
   }
@@ -358,35 +362,26 @@ class SnapshotLogSpec extends SparkFunSuite {
     assert(df.columns.toSeq == Seq("id", odd))
     assert(rows(df) == Set(Row(1, "a"), Row(2, "b")))
     assert(SnapshotLog.latestTag(spark, path).contains("t-1"))
-    val segs = Manifests.segmentSchemas(path, 2).map(_._1)
+    val segs = Manifests.segments(path, 2)
     assert(segs.size == 2)
     assert("\"data/seg-".r.findAllMatchIn(Manifests.text(path, 2)).size == segs.size)
   }
 
-  test("a manifest without schemas still reads, and compactLatest records them") {
-    // versions in the format written before manifests carried schemas
-    def legacy(path: String, v: Int, body: String): Unit = {
-      Files.createDirectories(Paths.get(path, "_log"))
-      Files.writeString(Paths.get(path, "_log", f"v$v%09d.json"), body)
-    }
+  test("column names match case-insensitively, as parquet matches them") {
     val path = tmp()
-    Seq((1, "a", false), (2, "b", false)).toDF("id", "v", "del").write.parquet(s"$path/data/seg-base0001")
-    Seq((2, "B", false), (1, null, true)).toDF("id", "v", "del").write.parquet(s"$path/data/seg-delt0002")
-    legacy(path, 1, """{"version":1,"committedAtMs":1,"op":"replace","segments":["data/seg-base0001"]}""")
-    legacy(path, 2, """{"version":2,"committedAtMs":2,"op":"delta","mergeKey":["id"],"carryCols":[],""" +
-      """"deleteCol":"del","segments":["data/seg-base0001","data/seg-delt0002"]}""")
-    assert(rows(SnapshotLog.read(spark, path, Some(1))) == Set(Row(1, "a", false), Row(2, "b", false)))
-    assert(rows(SnapshotLog.read(spark, path)) == Set(Row(2, "B")))
-    val cv = SnapshotLog.compactLatest(spark, path)
-    assert(Manifests.segmentSchemas(path, cv).map(_._2) == Seq(Some(StructType.fromDDL("id INT, v STRING"))))
-    assert(rows(readNoJobs(path)) == Set(Row(2, "B")))
-    // an append on a legacy version reads, and stays schema-less: the
-    // earlier segments record none
-    val app = tmp()
-    Seq((1, "a")).toDF("id", "v").write.parquet(s"$app/data/seg-base0001")
-    legacy(app, 1, """{"version":1,"committedAtMs":1,"op":"replace","segments":["data/seg-base0001"]}""")
-    val v2 = SnapshotLog.commitAppend(Seq((2, "b")).toDF("id", "v"), app)
-    assert(Manifests.segmentSchemas(app, v2).map(_._2) == Seq(None, None))
-    assert(rows(SnapshotLog.read(spark, app)) == Set(Row(1, "a"), Row(2, "b")))
+    SnapshotLog.commitReplace(Seq((1, "a"), (2, "b")).toDF("id", "v"), path)
+    // `ID` is the table's `id`, not a new column
+    SnapshotLog.commitAppend(Seq((3, "c")).toDF("ID", "v"), path)
+    val df = readNoJobs(path)
+    assert(df.columns.toSeq == Seq("id", "v"))
+    assert(rows(df) == Set(Row(1, "a"), Row(2, "b"), Row(3, "c")))
+    // and a type change under another spelling is still a conflict
+    val e = intercept[IllegalArgumentException](
+      SnapshotLog.commitAppend(Seq((4L, "d")).toDF("Id", "v"), path))
+    assert(e.getMessage.contains("Id: int -> bigint"), e.getMessage)
+    // a delta keyed on the other spelling folds onto the same rows
+    SnapshotLog.commitDelta(Seq((2, "B")).toDF("ID", "v"), path, SnapshotLog.MergeSpec(Seq("ID")))
+    assert(rows(readNoJobs(path)) == Set(Row(1, "a"), Row(2, "B"), Row(3, "c")))
+    Manifests.assertSchemaMatchesFooters(spark, path)
   }
 }
