@@ -478,10 +478,10 @@ object StreamBench {
 
     // -------------------------------------------------------------------
     // Pipeline 7f: LIVE conformal gate (r14) — docs route keep/drop/review
-    // on prediction sets whose q̂ resolves from the latest COMMITTED
+    // on prediction sets whose q̂ resolves from the latest committed
     // calibration version each micro-batch; a mid-run recalibration
     // exercises the refresh on the hot path. Reported as DOCS/sec
-    // including the per-batch committed-segment verdict write.
+    // including the per-batch SnapshotLog verdict append.
     var cgate_eps = 0L
     locally {
       import org.apache.spark.sql.functions.{col, lit}

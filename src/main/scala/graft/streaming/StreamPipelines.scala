@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.ops.LatestWins
+import graft.table.SnapshotLog
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
@@ -571,16 +572,16 @@ object StreamPipelines {
     * labels, e.g. review outcomes flowing back) folds its per-score
     * nonconformity counts (s = 10⁶ − p_true, the
     * [[graft.ext.Classifier.splitConformal]] score) into the persisted
-    * DISTINCT-SCORE spine as a new version (batch-id tagged,
-    * incarnation-bound — a re-delivered batch is an exact no-op) and
-    * re-emits the per-α quantile table beside it (`qhat_<name>`):
-    * q̂ = the ⌈(n_cal+1)(1−α)⌉-th smallest score via the cumulative
-    * count over the folded spine. Counts are sums, so the fold across k
-    * batches equals the batch order statistic over their union EXACTLY
-    * (spec-pinned); state is spine-bounded (≤ the 10⁶+1-value ppm
-    * domain), never calibration-volume-sized. When k > n_cal the
-    * emitted q̂ is conformal infinity (1000001) — the gate then routes
-    * everything to review, the safe cold-start regime.
+    * DISTINCT-SCORE spine as a new version ([[refreshFold]] — tagged
+    * with the incarnation-bound batch tag, so a re-delivered batch is an
+    * exact no-op) and commits the per-α quantile table to the SnapshotLog
+    * table `<statePath>/qhat`: q̂ = the ⌈(n_cal+1)(1−α)⌉-th smallest
+    * score via the cumulative count over the folded spine. Counts are
+    * sums, so the fold across k batches equals the batch order statistic
+    * over their union EXACTLY (spec-pinned); state is spine-bounded (≤ the
+    * 10⁶+1-value ppm domain), never calibration-volume-sized. When
+    * k > n_cal the emitted q̂ is conformal infinity (1000001) — the gate
+    * then routes everything to review, the safe cold-start regime.
     */
   def conformalRefreshIngestBatch(
       batch: DataFrame,
@@ -590,87 +591,36 @@ object StreamPipelines {
       incarnation: Option[String] = None): Unit = {
     require(alphaPcts.nonEmpty && alphaPcts.forall(a => a >= 1 && a <= 50),
       "alphaPcts must be in [1, 50]")
-    batch.persist()
-    try {
-      if (batch.isEmpty) return
-      val spark = batch.sparkSession
-      import spark.implicits._
-      val root = new Path(statePath)
-      val conf = spark.sparkContext.hadoopConfiguration
-      val fs = root.getFileSystem(conf)
-      val versions = committedVersions(fs, conf, root)
-      def emitQhat(name: String): Unit = {
-        val spine = spark.read.parquet(s"$statePath/$name")
-        val W = org.apache.spark.sql.expressions.Window
-        // post-aggregation ppm-domain-bounded frame — the splitConformal
-        // spine discipline, never calibration-volume-sized
-        val cum = spine.withColumn("__cum", sum(col("c")).over(
-          W.orderBy(col("s")).rowsBetween(W.unboundedPreceding, 0)))
-        broadcast(spark.createDataset(alphaPcts)(Encoders.scalaLong).toDF("alpha_pct")
-            .crossJoin(broadcast(spine.agg(sum(col("c")).as("n_cal"))))
-            .select(col("alpha_pct"), col("n_cal"),
-              expr("((n_cal + 1) * (100 - alpha_pct) + 99) div 100").as("k")))
-          .join(cum, col("__cum") >= col("k"), "left")
-          .groupBy(col("alpha_pct"), col("n_cal"), col("k"))
-          .agg(coalesce(min(col("s")), lit(1000001L)).as("qhat_ppm"))
-          .write.mode("overwrite").parquet(s"$statePath/qhat_$name")
-      }
-      versions.find(v => v._2 == incarnation && v._3 == batchId) match {
-        case Some((_, _, _, name)) =>
-          // replayed batch: fold committed — repair a missing quantile
-          // table (the non-atomic-two-writes crash window) and no-op
-          if (!committed(fs, new Path(root, s"qhat_$name"))) emitQhat(name)
-          return
-        case None => ()
-      }
-      val winCounts = batch.select(
-          (lit(1000000L) - when(col("y") === 1L, col("p_ppm"))
-            .otherwise(lit(1000000L) - col("p_ppm"))).as("s"))
-        .groupBy(col("s")).agg(count(lit(1)).as("c"))
-      val folded = versions.sortBy(-_._1).headOption match {
-        case Some((_, _, _, latest)) =>
-          spark.read.parquet(s"$statePath/$latest")
-            .unionByName(winCounts)
-            .groupBy(col("s")).agg(sum(col("c")).as("c"))
-        case None => winCounts
-      }
-      val seq = versions.map(_._1).maxOption.getOrElse(0L) + 1
-      val name = versionName(seq, incarnation, batchId)
-      folded.write.mode("errorifexists").parquet(s"$statePath/$name")
-      emitQhat(name)
-    } finally {
-      batch.unpersist()
-      ()
+    refreshFold(batch, statePath, batchId, incarnation, Seq("s"), Seq("c"), "qhat")(
+      _.select((lit(1000000L) - when(col("y") === 1L, col("p_ppm"))
+        .otherwise(lit(1000000L) - col("p_ppm"))).as("s"), lit(1L).as("c"))) { spine =>
+      val W = org.apache.spark.sql.expressions.Window
+      // post-aggregation ppm-domain-bounded frame — the splitConformal
+      // spine discipline, never calibration-volume-sized
+      val cum = spine.withColumn("__cum", sum(col("c")).over(
+        W.orderBy(col("s")).rowsBetween(W.unboundedPreceding, 0)))
+      broadcast(spine.sparkSession.createDataset(alphaPcts)(Encoders.scalaLong).toDF("alpha_pct")
+          .crossJoin(broadcast(spine.agg(sum(col("c")).as("n_cal"))))
+          .select(col("alpha_pct"), col("n_cal"),
+            expr("((n_cal + 1) * (100 - alpha_pct) + 99) div 100").as("k")))
+        .join(cum, col("__cum") >= col("k"), "left")
+        .groupBy(col("alpha_pct"), col("n_cal"), col("k"))
+        .agg(coalesce(min(col("s")), lit(1000001L)).as("qhat_ppm"))
     }
   }
 
-  /** The latest COMMITTED conformal quantile table under a
-    * [[conformalRefreshIngestBatch]] state root — one row per α:
-    * (alpha_pct, n_cal, k, qhat_ppm). Read-only (torn versions skipped,
-    * never repaired — safe to call beside the running refresh); None
-    * before the first refresh commits its quantile table.
-    */
-  def latestConformalQhat(spark: SparkSession, statePath: String): Option[DataFrame] = {
-    val root = new Path(statePath)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = root.getFileSystem(conf)
-    committedVersions(fs, conf, root, repairTorn = false)
-      .sortBy(-_._1)
-      .find { case (_, _, _, name) => committed(fs, new Path(root, s"qhat_$name")) }
-      .map { case (_, _, _, name) => spark.read.parquet(s"$statePath/qhat_$name") }
-  }
-
   /** One micro-batch of the LIVE conformal gate: resolve q̂ for
-    * `alphaPct` from the latest COMMITTED refresh version (falling back
-    * to `fallbackQhatPpm` — conformal infinity by default, so an
-    * uncalibrated gate routes everything to review rather than
-    * guessing), route the batch on its prediction sets, and write the
-    * verdicts as the batch's own committed segment under `outPath`
-    * ([[committedSegments]] — a replayed batch is an exact no-op even if
-    * q̂ has moved since, so reprocessing can never rewrite history; a
-    * torn write is repaired on retry). Rows carry `qhat_ppm_used`, so an
-    * audit attributes every verdict to the calibration state that
-    * produced it.
+    * `alphaPct` from the latest committed quantile table of a
+    * [[conformalRefreshIngestBatch]] state root (`<statePath>/qhat`,
+    * falling back to `fallbackQhatPpm` — conformal infinity by default,
+    * so an uncalibrated gate routes everything to review rather than
+    * guessing), route the batch on its prediction sets, and append the
+    * verdicts to the SnapshotLog table at `outPath`, tagged with the
+    * incarnation-bound batch tag — a replayed batch is an exact no-op
+    * even if q̂ has moved since, so reprocessing can never rewrite
+    * history; a torn write is an unpublished segment no reader sees.
+    * Rows carry `qhat_ppm_used`, so an audit attributes every verdict to
+    * the calibration state that produced it.
     */
   def conformalGateIngestBatch(
       batch: DataFrame,
@@ -688,19 +638,17 @@ object StreamPipelines {
     try {
       if (batch.isEmpty) return
       val spark = batch.sparkSession
-      val outRoot = new Path(outPath)
-      val conf = spark.sparkContext.hadoopConfiguration
-      val fs = outRoot.getFileSystem(conf)
-      val segs = committedSegments(fs, conf, outRoot, repair = true)
-      if (segs.exists(_._1 == ((incarnation, batchId)))) return
-      val qhat = latestConformalQhat(spark, statePath)
+      val tag = versionedBatchTag(incarnation, batchId)
+      if (SnapshotLog.tags(spark, outPath).contains(tag)) return
+      val qhat = latestOf(spark, s"$statePath/qhat")
         .flatMap(_.filter(col("alpha_pct") === alphaPct)
           .select(col("qhat_ppm")).collect().headOption.map(_.getLong(0)))
         .getOrElse(fallbackQhatPpm)
-      conformalGateVerdicts(batch, idCol, textCol, weights, lit(qhat), keep)
-        .withColumn("qhat_ppm_used", lit(qhat))
-        .write.mode("errorifexists")
-        .parquet(s"$outPath/${segmentName(incarnation, batchId)}")
+      SnapshotLog.commitAppend(
+        conformalGateVerdicts(batch, idCol, textCol, weights, lit(qhat), keep)
+          .withColumn("qhat_ppm_used", lit(qhat)),
+        outPath, Some(tag))
+      ()
     } finally {
       batch.unpersist()
       ()
@@ -712,7 +660,7 @@ object StreamPipelines {
     * separate calibration stream) advances q̂; each of this gate's
     * micro-batches folds from the LATEST committed version, so a
     * recalibration changes routing mid-stream without restarting the
-    * gate. Read the verdicts with [[readSegmentedIndex]].
+    * gate. Read the verdicts with [[graft.table.SnapshotLog.read]].
     */
   def conformalGateRefreshingSink(
       docs: DataFrame,
@@ -1156,22 +1104,28 @@ object StreamPipelines {
   }
 
   /** Seed the versioned quantizer state behind [[kmeansUpdateSink]]:
-    * writes `(label, dim, c_bp, n)` as version 0 (batch tag −1). Call
-    * once, before the stream starts, with offline-trained centroids and
-    * their assignment counts.
+    * commits `(label, dim, c_bp, n)` as the first version of the
+    * SnapshotLog table at `statePath`, tagged `seed`. Call once, before
+    * the stream starts, with offline-trained centroids and their
+    * assignment counts.
     */
   def seedKmeansState(centroids: DataFrame, counts: DataFrame,
-                      statePath: String): Unit =
-    centroids.join(counts.select(col("label"), col("n")), Seq("label"), "left")
-      .select(col("label"), col("dim"), col("c_bp"),
-        coalesce(col("n"), lit(0L)).as("n"))
-      .write.mode("errorifexists").parquet(s"$statePath/v0_b-1")
+                      statePath: String): Unit = {
+    require(SnapshotLog.latestVersion(centroids.sparkSession, statePath).isEmpty,
+      s"$statePath is already seeded")
+    SnapshotLog.commitReplace(
+      centroids.join(counts.select(col("label"), col("n")), Seq("label"), "left")
+        .select(col("label"), col("dim"), col("c_bp"),
+          coalesce(col("n"), lit(0L)).as("n")),
+      statePath, Some("seed"))
+    ()
+  }
 
   /** Streaming twin of q137 — mini-batch k-means centroid maintenance as
     * a foreachBatch sink over versioned state: each micro-batch reads the
     * latest `(label, dim, c_bp, n)` version, applies
     * [[graft.ext.VectorSearch.kmeansUpdateBatch]], and commits the result
-    * as the next version DIRECTORY tagged with the micro-batch id.
+    * as the next SnapshotLog version tagged with the micro-batch.
     *
     * Unlike the append-only sinks ([[semanticDedupSink]],
     * [[knnGraphSink]]), a running-mean update is NOT naturally
@@ -1198,11 +1152,6 @@ object StreamPipelines {
           incarnation = streamIncarnation(batch.sparkSession))
       }
 
-  // the kmeans state grammar admits the seed's `v0_b-1` (negative batch
-  // id), which the strict shared VersionDirName does not — hence its own
-  // parse; incarnation-bound names share [[versionName]]'s grammar
-  private val KmVersionDirName = """^v(\d+)_b(-?\d+)$""".r
-
   /** The batch body of [[kmeansUpdateSink]], callable directly (and from
     * tests). `statePath` must have been seeded via [[seedKmeansState]].
     * Replay keys on (incarnation, batchId) like every versioned sink
@@ -1217,28 +1166,18 @@ object StreamPipelines {
     try {
       if (batch.isEmpty) return
       val spark = batch.sparkSession
-      val root = new Path(statePath)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val versions: Seq[(Long, Option[String], Long, String)] =
-        fs.listStatus(root).toSeq.map(_.getPath.getName).flatMap {
-          case name @ BoundVersionDirName(v, i, b) =>
-            Some((v.toLong, Some(i): Option[String], b.toLong, name))
-          case name @ KmVersionDirName(v, b) =>
-            Some((v.toLong, None: Option[String], b.toLong, name))
-          case _ => None
-        }
-      require(versions.nonEmpty,
-        s"$statePath has no seeded state — call seedKmeansState first")
-      if (versions.exists(v => v._2 == incarnation && v._3 == batchId))
+      val tag = versionedBatchTag(incarnation, batchId)
+      if (SnapshotLog.tags(spark, statePath).contains(tag))
         return // replayed batch: no-op
-      val (latestSeq, _, _, latestName) = versions.maxBy(_._1)
-      val state = spark.read.parquet(s"$statePath/$latestName")
-      graft.ext.VectorSearch.kmeansUpdateBatch(
+      val state = latestOf(spark, statePath).getOrElse(throw new IllegalArgumentException(
+        s"$statePath has no seeded state — call seedKmeansState first"))
+      SnapshotLog.commitReplace(
+        graft.ext.VectorSearch.kmeansUpdateBatch(
           batch, idCol, vecCol,
           state.select(col("label"), col("dim"), col("c_bp")),
-          state.select(col("label"), col("n")).distinct())
-        .write.mode("errorifexists")
-        .parquet(s"$statePath/${versionName(latestSeq + 1, incarnation, batchId)}")
+          state.select(col("label"), col("n")).distinct()),
+        statePath, Some(tag))
+      ()
     } finally {
       batch.unpersist()
       ()
@@ -1310,7 +1249,7 @@ object StreamPipelines {
         // Scans ALL retained tags, not just the latest: a compaction commit
         // landing inside that window would otherwise mask the batch's tag
         // and let the replay re-merge as a spurious extra version.
-        if (!graft.table.SnapshotLog.tags(spark, targetPath).contains(tag)) {
+        if (!SnapshotLog.tags(spark, targetPath).contains(tag)) {
           batch.persist()
           try {
             if (!batch.isEmpty) {
@@ -1322,14 +1261,14 @@ object StreamPipelines {
               // O(table); SnapshotLog.read folds latest-wins by
               // (last_seen, batch) with the sparse-column coalesce carry,
               // and compactLatest folds deltas back into a base.
-              graft.table.SnapshotLog.latestVersion(spark, targetPath) match {
+              SnapshotLog.latestVersion(spark, targetPath) match {
                 case Some(_) =>
-                  graft.table.SnapshotLog.commitDelta(reduced, targetPath,
-                    graft.table.SnapshotLog.MergeSpec(
+                  SnapshotLog.commitDelta(reduced, targetPath,
+                    SnapshotLog.MergeSpec(
                       key, carryCols = sparseCols, orderCol = Some("last_seen")),
                     Some(tag))
                 case None =>
-                  graft.table.SnapshotLog.commitReplace(reduced, targetPath, Some(tag))
+                  SnapshotLog.commitReplace(reduced, targetPath, Some(tag))
               }
               ()
             }
@@ -1378,7 +1317,7 @@ object StreamPipelines {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         val tag   = versionedBatchTag(streamIncarnation(spark), batchId)
-        if (!graft.table.SnapshotLog.tags(spark, targetPath).contains(tag) &&
+        if (!SnapshotLog.tags(spark, targetPath).contains(tag) &&
             !batch.isEmpty) {
           val latest = LatestWins.latestRow(batch, key, tsCol, Nil)
           // merge-on-read CDC apply (reference stream_dims.py:26-29): after
@@ -1386,16 +1325,16 @@ object StreamPipelines {
           // with a delete marker; the read-time fold ranks by (ts, batch)
           // so a stale delete never beats a newer upsert — the same
           // ts-ordered semantics applyCdcBatch implements copy-on-write.
-          graft.table.SnapshotLog.latestVersion(spark, targetPath) match {
+          SnapshotLog.latestVersion(spark, targetPath) match {
             case Some(_) =>
-              graft.table.SnapshotLog.commitDelta(
+              SnapshotLog.commitDelta(
                 latest.withColumn("is_delete", col("op") === "d").drop("op"),
                 targetPath,
-                graft.table.SnapshotLog.MergeSpec(
+                SnapshotLog.MergeSpec(
                   key, deleteCol = Some("is_delete"), orderCol = Some(tsCol)),
                 Some(tag))
             case None =>
-              graft.table.SnapshotLog.commitReplace(
+              SnapshotLog.commitReplace(
                 latest.filter(col("op") =!= "d").drop("op"), targetPath, Some(tag))
           }
           ()
@@ -1583,132 +1522,23 @@ object StreamPipelines {
     }
   }
 
-  /** The committed `b<batchId>` segment dirs under a MULTI-ROW-per-id
-    * fingerprint index root (the video/audio perceptual indexes, where a
-    * container owns n / n−1 window rows). A flat `mode("append")` is not
-    * crash-safe for these: a crash during the parquet job commit can
-    * leave a SUBSET of a container's window rows visible, and the
-    * retry's id anti-join then treats the container as indexed forever —
-    * a permanently partial fingerprint set that silently weakens its
-    * future window-vote matching. Per-batch segments close the window
-    * the [[committedVersions]] way: each micro-batch writes its admitted
-    * rows to its own segment dir — `i<queryId>_b<batchId>` from a
-    * streaming sink, `b<batchId>` from a direct batch call (_SUCCESS
-    * written last by the commit protocol) — the reader unions only
-    * COMMITTED segments (plus any pre-segmented legacy root files), and
-    * the single-writer ingest (`repair = true` — Structured Streaming
-    * runs one instance of a query) deletes torn segments before the
-    * retry re-runs. Non-matching dir names are skipped untouched; a
-    * read-only caller (`repair = false`) never deletes, so it cannot
-    * race an in-flight append.
-    */
-  private val SegmentDirName = """^b(\d+)$""".r
-  private val BoundSegmentDirName = """^i([A-Za-z0-9\-]+)_b(\d+)$""".r
-
-  /** Shared commit-gated dir listing under the versioned/segmented sink
-    * roots: keep the dirs whose name `parse`s AND whose parquet job
-    * COMMITTED (_SUCCESS present — written last by the commit protocol);
-    * a parsed dir without the marker is a torn write from a crashed
-    * micro-batch, deleted when `repairTorn` (single-writer callers only —
-    * Structured Streaming runs one instance of a query) and skipped
-    * otherwise (read-only callers never delete, so they cannot race an
-    * in-flight append). Non-parsing names (derived `effects_*`/
-    * `weights_*` artifacts, operator scratch, stray dirs) are skipped
-    * untouched — never parsed, never deleted. The marker protocol is
-    * REQUIRED: the `require` takes the job Configuration from the
-    * caller's session (never a possibly-detached `fs.getConf`), so with
-    * `mapreduce.fileoutputcommitter.marksuccessfuljobs=false` — where
-    * every committed dir would look torn and be destroyed — it fails
-    * loudly instead.
-    */
-  private def committedDirs[K](
-      fs: org.apache.hadoop.fs.FileSystem,
-      conf: org.apache.hadoop.conf.Configuration,
-      root: Path,
-      parse: String => Option[K],
-      repairTorn: Boolean,
-      what: String): Seq[(K, String)] = {
-    require(conf.getBoolean(
-        "mapreduce.fileoutputcommitter.marksuccessfuljobs", true),
-      s"$what require _SUCCESS markers " +
-        "(mapreduce.fileoutputcommitter.marksuccessfuljobs must stay true)")
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .flatMap { name =>
-        parse(name) match {
-          case Some(k) =>
-            if (fs.exists(new Path(new Path(root, name), "_SUCCESS")))
-              Some((k, name))
-            else {
-              if (repairTorn) fs.delete(new Path(root, name), true)
-              None
-            }
-          case None => None
-        }
-      }
-  }
-
-  /** Segment key: (incarnation, batchId). Segments written by a
-    * streaming sink are BOUND to the query incarnation
-    * (`i<queryId>_b<batchId>` — the checkpoint-persisted queryId, stable
-    * across restarts of the SAME checkpoint, fresh for a recreated one),
-    * so a stream restarted against an existing index with a fresh
-    * checkpoint — whose batch ids restart at 0 — can never mistake a
-    * prior incarnation's `b0` for its own replay and silently skip the
-    * batch. Unbound `b<batchId>` names come from direct batch-API calls
-    * (the caller owns batch-id uniqueness there) and from pre-r14
-    * indexes; both read as ordinary committed segments.
-    */
-  private def committedSegments(
-      fs: org.apache.hadoop.fs.FileSystem,
-      conf: org.apache.hadoop.conf.Configuration, root: Path,
-      repair: Boolean): Seq[((Option[String], Long), String)] =
-    committedDirs[(Option[String], Long)](fs, conf, root, {
-      case SegmentDirName(b)         => Some((None, b.toLong))
-      case BoundSegmentDirName(i, b) => Some((Some(i), b.toLong))
-      case _                         => None
-    }, repair, "segmented dedup indexes")
-
-  /** Root-level parquet data files under a segmented index — a
-    * fingerprint index written by the pre-segmented `mode("append")`
-    * layout. Folded into every read and every ingest's index side as a
-    * legacy committed segment (rather than silently ignored, which
-    * would re-admit every previously indexed container as a duplicate).
-    */
-  private def legacyRootFiles(
-      fs: org.apache.hadoop.fs.FileSystem, root: Path): Seq[String] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-      .map(_.getPath.toString)
-
-  /** The incarnation token the streaming sinks bind their segments to:
-    * the running query's checkpoint-persisted queryId (set as a local
+  /** The incarnation token the streaming sinks bind their replay tags
+    * to: the running query's checkpoint-persisted queryId (set as a local
     * property on the micro-batch thread by stream execution), sanitized
-    * to the segment-name alphabet. None outside a streaming query —
-    * direct batch-API callers own batch-id uniqueness themselves.
+    * to the tag alphabet. None outside a streaming query — direct
+    * batch-API callers own batch-id uniqueness themselves.
     */
   private def streamIncarnation(spark: SparkSession): Option[String] =
     Option(spark.sparkContext.getLocalProperty("sql.streaming.queryId"))
       .map(_.replaceAll("[^A-Za-z0-9\\-]", "-"))
 
-  private def segmentName(incarnation: Option[String], batchId: Long): String =
-    incarnation match {
-      case Some(tok) =>
-        require(tok.matches("[A-Za-z0-9\\-]+"),
-          s"incarnation token must be [A-Za-z0-9-]+, got '$tok'")
-        s"i${tok}_b$batchId"
-      case None => s"b$batchId"
-    }
-
-  /** The SnapshotLog replay tag of a versioned streaming sink's
-    * micro-batch — incarnation-bound like [[segmentName]] (r14): under a
-    * live query the tag carries the checkpoint-persisted queryId, so a
-    * fresh-checkpoint restart's `batch-…-0` never collides with a prior
-    * incarnation's tag and silently skips the merge. The fold itself
-    * stays content-idempotent (latest-wins by key/ts), so a
-    * re-delivered batch under a NEW incarnation costs one spurious
-    * delta version, never a wrong row.
+  /** The SnapshotLog replay tag of a sink's micro-batch, bound to the
+    * query incarnation (r14): under a live query the tag carries the
+    * checkpoint-persisted queryId (stable across restarts of the SAME
+    * checkpoint, fresh for a recreated one), so a fresh-checkpoint
+    * restart's `batch-…-0` never collides with a prior incarnation's tag
+    * and silently skips the batch. Unbound `batch-<id>` tags come from
+    * direct batch-API calls, whose caller owns batch-id uniqueness.
     */
   private def versionedBatchTag(incarnation: Option[String], batchId: Long): String =
     incarnation match {
@@ -1716,24 +1546,11 @@ object StreamPipelines {
       case None      => s"batch-$batchId"
     }
 
-  /** Read a segmented fingerprint index written by
-    * [[videoDhashDedupIngestBatch]] / [[audioChromaDedupIngestBatch]]:
-    * the union of COMMITTED segments (`b<batchId>` and incarnation-bound
-    * `i<tok>_b<batchId>`) plus any root-level parquet files left by the
-    * pre-segmented flat layout ([[legacyRootFiles]]). Torn segments are
-    * ignored (not repaired — this entry is safe to call beside a running
-    * ingest). None when nothing has committed yet.
+  /** The latest state of the SnapshotLog table at `path`; None before its
+    * first commit.
     */
-  def readSegmentedIndex(spark: SparkSession, indexPath: String): Option[DataFrame] = {
-    val root = new Path(indexPath)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs   = root.getFileSystem(conf)
-    val parts = legacyRootFiles(fs, root) ++
-      committedSegments(fs, conf, root, repair = false)
-        .map(s => s"$indexPath/${s._2}")
-    if (parts.isEmpty) None
-    else Some(spark.read.parquet(parts: _*))
-  }
+  private def latestOf(spark: SparkSession, path: String): Option[DataFrame] =
+    SnapshotLog.latestVersion(spark, path).map(v => SnapshotLog.read(spark, path, Some(v)))
 
   /** Streaming twin of q302 — the container-level (video) ingest gate:
     * each micro-batch's containers sample n aligned frames, fingerprint
@@ -1746,11 +1563,14 @@ object StreamPipelines {
     * pair is a near-dup when ≥ `minShared` of its n aligned frames match
     * within `maxHamming` bits (frame voting — q302's verdict rule,
     * live), near-dup arrivals DROP first-wins (an indexed partner, or a
-    * smaller-id batch partner), and survivors write their n frame rows
-    * as the batch's own COMMITTED segment ([[committedSegments]] — a
-    * torn segment is deleted on retry, so a container can never surface
-    * with only a subset of its frame rows). Replay-safe twice over: a
-    * committed `b<batchId>` segment makes the re-delivered batch an
+    * smaller-id batch partner), and survivors append their n frame rows
+    * to the SnapshotLog index at `indexPath` as one segment, published by
+    * one manifest claim tagged with the incarnation-bound batch tag. A
+    * crash before the claim leaves an unpublished segment no reader sees,
+    * so a container never surfaces with only a subset of its frame rows
+    * (a flat `mode("append")` could, and the retry's id anti-join would
+    * then treat the container as indexed forever). Replay-safe twice
+    * over: the batch's committed tag makes the re-delivered batch an
     * exact no-op, and a batch mixing already-indexed ids drops them by
     * the anti-join.
     */
@@ -1771,20 +1591,14 @@ object StreamPipelines {
     try {
       if (batch.isEmpty) return
       val spark = batch.sparkSession
-      val root = new Path(indexPath)
-      val conf = spark.sparkContext.hadoopConfiguration
-      val fs = root.getFileSystem(conf)
-      val segs = committedSegments(fs, conf, root, repair = true)
-      // replayed batch: THIS incarnation's segment committed. A same-
-      // numbered segment from another incarnation (fresh checkpoint,
-      // batch ids restarted at 0) is prior data, not a replay.
-      if (segs.exists(_._1 == ((incarnation, batchId)))) return
-      val parts = legacyRootFiles(fs, root) ++ segs.map(x => s"$indexPath/${x._2}")
-      val index = parts match {
-        case p if p.nonEmpty => spark.read.parquet(p: _*)
-        case _ => graft.ext.Multimodal.videoFrameFingerprints(
-          batch, idCol, payloadCol, n, frameBytes).limit(0)
-      }
+      val tag = versionedBatchTag(incarnation, batchId)
+      // replayed batch: THIS incarnation's tag committed. A same-numbered
+      // batch from another incarnation (fresh checkpoint, batch ids
+      // restarted at 0) is prior data, not a replay.
+      if (SnapshotLog.tags(spark, indexPath).contains(tag)) return
+      val index = latestOf(spark, indexPath).getOrElse(
+        graft.ext.Multimodal.videoFrameFingerprints(
+          batch, idCol, payloadCol, n, frameBytes).limit(0))
       val fresh = graft.ext.Multimodal.videoFrameFingerprints(
           batch, idCol, payloadCol, n, frameBytes)
         .join(index.select(col("id")).distinct(), Seq("id"), "left_anti")
@@ -1799,9 +1613,9 @@ object StreamPipelines {
           .filter(col("__f").isNull || col("nbr_id") < col("id"))
           .select(col("id"))
           .distinct()
-        val admitted = fresh.join(dropIds, Seq("id"), "left_anti")
-        admitted.write.mode("errorifexists")
-          .parquet(s"$indexPath/${segmentName(incarnation, batchId)}")
+        SnapshotLog.commitAppend(
+          fresh.join(dropIds, Seq("id"), "left_anti"), indexPath, Some(tag))
+        ()
       } finally {
         fresh.unpersist()
         ()
@@ -1825,13 +1639,13 @@ object StreamPipelines {
     * pair is a near-dup when ≥ `minShared` of its aligned windows match
     * within `maxHamming` bits (window voting — q310's verdict rule,
     * live), near-dup arrivals DROP first-wins (an indexed partner, or a
-    * smaller-id batch partner), and survivors write their n−1 window
-    * rows as the batch's own COMMITTED segment ([[committedSegments]] —
-    * a torn segment is deleted on retry, so a container can never
-    * surface with only a subset of its window rows). Replay-safe twice
-    * over: a committed `b<batchId>` segment makes the re-delivered batch
-    * an exact no-op, and a batch mixing already-indexed ids drops them
-    * by the anti-join.
+    * smaller-id batch partner), and survivors append their n−1 window
+    * rows to the SnapshotLog index as one tagged segment, exactly as in
+    * [[videoDhashDedupIngestBatch]]: a torn write is never visible, so a
+    * container cannot surface with only a subset of its window rows.
+    * Replay-safe twice over: the batch's committed tag makes the
+    * re-delivered batch an exact no-op, and a batch mixing
+    * already-indexed ids drops them by the anti-join.
     */
   def audioChromaDedupIngestBatch(
       batch: DataFrame,
@@ -1850,20 +1664,14 @@ object StreamPipelines {
     try {
       if (batch.isEmpty) return
       val spark = batch.sparkSession
-      val root = new Path(indexPath)
-      val conf = spark.sparkContext.hadoopConfiguration
-      val fs = root.getFileSystem(conf)
-      val segs = committedSegments(fs, conf, root, repair = true)
-      // replayed batch: THIS incarnation's segment committed (see
+      val tag = versionedBatchTag(incarnation, batchId)
+      // replayed batch: THIS incarnation's tag committed (see
       // [[videoDhashDedupIngestBatch]] — another incarnation's same-
-      // numbered segment is prior data, not a replay)
-      if (segs.exists(_._1 == ((incarnation, batchId)))) return
-      val parts = legacyRootFiles(fs, root) ++ segs.map(x => s"$indexPath/${x._2}")
-      val index = parts match {
-        case p if p.nonEmpty => spark.read.parquet(p: _*)
-        case _ => graft.ext.Multimodal.audioWindowFingerprints(
-          batch, idCol, payloadCol, n, windowChars).limit(0)
-      }
+      // numbered batch is prior data, not a replay)
+      if (SnapshotLog.tags(spark, indexPath).contains(tag)) return
+      val index = latestOf(spark, indexPath).getOrElse(
+        graft.ext.Multimodal.audioWindowFingerprints(
+          batch, idCol, payloadCol, n, windowChars).limit(0))
       val fresh = graft.ext.Multimodal.audioWindowFingerprints(
           batch, idCol, payloadCol, n, windowChars)
         .join(index.select(col("id")).distinct(), Seq("id"), "left_anti")
@@ -1878,9 +1686,9 @@ object StreamPipelines {
           .filter(col("__f").isNull || col("nbr_id") < col("id"))
           .select(col("id"))
           .distinct()
-        val admitted = fresh.join(dropIds, Seq("id"), "left_anti")
-        admitted.write.mode("errorifexists")
-          .parquet(s"$indexPath/${segmentName(incarnation, batchId)}")
+        SnapshotLog.commitAppend(
+          fresh.join(dropIds, Seq("id"), "left_anti"), indexPath, Some(tag))
+        ()
       } finally {
         fresh.unpersist()
         ()
@@ -1939,7 +1747,6 @@ object StreamPipelines {
           incarnation = streamIncarnation(batch.sparkSession))
       }
 
-  /** [[dhashDedupIngestBatch]] as a foreachBatch sink. */
   /** Per-window in-basket pair counts from CLOSED (window_start, items)
     * basket rows — the q306 pair roll-up as a window-close projection,
     * exposed so the spec can drive it directly. `items` must be sorted
@@ -2074,17 +1881,58 @@ object StreamPipelines {
         col("__tr.dst").as("dst"))
       .agg(count(lit(1)).as("n"))
 
+  /** The versioned-refresh fold shared by [[conformalRefreshIngestBatch]],
+    * [[attributionModelRefreshIngestBatch]] and
+    * [[mixtureWeightsRefreshIngestBatch]]: the batch's `rows` (key
+    * columns `keys`, additive columns `sums`) fold into the latest state
+    * of the SnapshotLog table at `statePath` — latest ∪ rows, grouped by
+    * key, summed — committed as a replace tagged with the incarnation-
+    * bound batch tag; then `derive` of that state is committed to the
+    * table `<statePath>/<derivedName>` under the same tag. The two commits
+    * are not atomic, so a replay whose state tag is present re-derives a
+    * missing derived commit from the state version carrying the tag, and
+    * otherwise no-ops. Sums make the fold across batches equal the batch
+    * operator over their union exactly.
+    */
+  private def refreshFold(batch: DataFrame, statePath: String, batchId: Long,
+                          incarnation: Option[String], keys: Seq[String],
+                          sums: Seq[String], derivedName: String)(
+      rows: DataFrame => DataFrame)(derive: DataFrame => DataFrame): Unit = {
+    batch.persist()
+    try {
+      if (batch.isEmpty) return
+      val spark = batch.sparkSession
+      val tag = versionedBatchTag(incarnation, batchId)
+      val version = SnapshotLog.taggedVersion(spark, statePath, tag).getOrElse {
+        val fresh = rows(batch).select((keys ++ sums).map(col): _*)
+        val sumCols = sums.map(c => sum(col(c)).as(c))
+        SnapshotLog.commitReplace(
+          latestOf(spark, statePath).fold(fresh)(_.unionByName(fresh))
+            .groupBy(keys.map(col): _*).agg(sumCols.head, sumCols.tail: _*),
+          statePath, Some(tag))
+      }
+      val derivedPath = s"$statePath/$derivedName"
+      if (!SnapshotLog.tags(spark, derivedPath).contains(tag))
+        SnapshotLog.commitReplace(
+          derive(SnapshotLog.read(spark, statePath, Some(version))), derivedPath, Some(tag))
+      ()
+    } finally {
+      batch.unpersist()
+      ()
+    }
+  }
+
   /** The attribution model-refresh fold — the live twin of
     * [[graft.ext.Attribution.markovRemovalEffects]] closing the q317
     * loop: each micro-batch of CLOSED (window_start, evs) journey rows
     * (the [[attributionTelemetrySink]] close shape) extracts its
     * window-scoped transitions ([[attributionTransitionsBatch]]), folds
     * them into the persisted transition matrix as a NEW VERSION
-    * (`v<seq>_b<batchId>` — the [[kmeansUpdateIngestBatch]] versioned-
-    * upsert rule: a re-delivered batch id is detected and skipped, so
-    * the fold is exactly-once), and re-emits the removal-effect table
-    * from the folded matrix beside it (`effects_v<seq>_b<batchId>`) —
-    * the model a serving tier reads between batch retrains.
+    * ([[refreshFold]] — the [[kmeansUpdateIngestBatch]] versioned-upsert
+    * rule: a re-delivered batch is detected by its tag and skipped, so
+    * the fold is exactly-once), and commits the removal-effect table of
+    * the folded matrix to `<statePath>/effects` — the model a serving
+    * tier reads between batch retrains.
     *
     * Journeys are window-scoped by construction (the telemetry contract);
     * when every user's journey closes inside one window, the folded
@@ -2095,59 +1943,6 @@ object StreamPipelines {
     * the persisted matrix itself carries raw types but folds by key, so
     * it tracks the type vocabulary, never event volume).
     */
-  /** The `v<seq>_b<batch>` versions under `root` whose parquet job
-    * COMMITTED (_SUCCESS present — written last by the commit protocol).
-    * A dir without it is a torn write from a crashed micro-batch whose
-    * id Structured Streaming is about to retry: it was never a readable
-    * version, so it is deleted here rather than silently becoming a
-    * partial fold base (or colliding with the retry's errorifexists).
-    * Only names matching the STRICT `v<digits>_b<digits>` shape are
-    * considered at all — anything else under the root (derived
-    * `effects_*`/`weights_*` artifacts, a stray `very_bad` dir, operator
-    * scratch files) is skipped untouched, never parsed and never
-    * deleted. This sink family REQUIRES the `_SUCCESS` marker protocol:
-    * deployments must keep `mapreduce.fileoutputcommitter
-    * .marksuccessfuljobs=true` (the Hadoop default) — with markers
-    * disabled every committed version would look torn and be destroyed,
-    * so the guard below fails loudly instead.
-    */
-  private val VersionDirName = """^v(\d+)_b(\d+)$""".r
-  private val BoundVersionDirName = """^v(\d+)_i([A-Za-z0-9\-]+)_b(\d+)$""".r
-
-  /** Version rows: (seq, incarnation, batchId, name) — the
-    * [[committedDirs]] listing under the `v<seq>[_i<tok>]_b<batch>`
-    * grammar. Like [[committedSegments]], sink-written versions bind to
-    * the query incarnation so a fresh-checkpoint restart (batch ids back
-    * at 0) can never mistake a prior incarnation's fold for its own
-    * replay; the fold chain itself is incarnation-agnostic (the new
-    * incarnation folds on top of the latest committed version by seq).
-    */
-  private def committedVersions(
-      fs: org.apache.hadoop.fs.FileSystem,
-      conf: org.apache.hadoop.conf.Configuration,
-      root: Path,
-      repairTorn: Boolean = true): Seq[(Long, Option[String], Long, String)] =
-    committedDirs[(Long, Option[String], Long)](fs, conf, root, {
-      case VersionDirName(v, b)         => Some((v.toLong, None, b.toLong))
-      case BoundVersionDirName(v, i, b) => Some((v.toLong, Some(i), b.toLong))
-      case _                            => None
-    }, repairTorn, "versioned model-refresh sinks")
-      .map { case ((v, i, b), name) => (v, i, b, name) }
-
-  private def versionName(seq: Long, incarnation: Option[String],
-                          batchId: Long): String =
-    incarnation match {
-      case Some(tok) =>
-        require(tok.matches("[A-Za-z0-9\\-]+"),
-          s"incarnation token must be [A-Za-z0-9-]+, got '$tok'")
-        s"v${seq}_i${tok}_b$batchId"
-      case None => s"v${seq}_b$batchId"
-    }
-
-  /** True when `dir` holds a COMMITTED parquet write. */
-  private def committed(fs: org.apache.hadoop.fs.FileSystem, dir: Path): Boolean =
-    fs.exists(new Path(dir, "_SUCCESS"))
-
   def attributionModelRefreshIngestBatch(
       batch: DataFrame,
       statePath: String,
@@ -2155,57 +1950,20 @@ object StreamPipelines {
       channels: Seq[String],
       convType: String = "purchase",
       steps: Int = 12,
-      incarnation: Option[String] = None): Unit = {
-    batch.persist()
-    try {
-      if (batch.isEmpty) return
-      val spark = batch.sparkSession
-      val root = new Path(statePath)
-      val conf = spark.sparkContext.hadoopConfiguration
-      val fs = root.getFileSystem(conf)
-      val versions = committedVersions(fs, conf, root)
-      def emitEffects(name: String): Unit =
-        graft.ext.Attribution.removalEffectsFromCounts(
-            spark.read.parquet(s"$statePath/$name"), channels, steps)
-          .write.mode("overwrite").parquet(s"$statePath/effects_$name")
-      versions.find(v => v._2 == incarnation && v._3 == batchId) match {
-        case Some((_, _, _, name)) =>
-          // replayed batch: the fold already committed — but the two
-          // writes are not atomic, so a crash BETWEEN them leaves the
-          // matrix without its effects table; the retry repairs it
-          // instead of silently no-opping one model behind
-          if (!committed(fs, new Path(root, s"effects_$name"))) emitEffects(name)
-          return
-        case None => ()
-      }
-      val winCounts = attributionTransitionsBatch(batch, convType)
-        .groupBy(col("src"), col("dst")).agg(sum(col("n")).as("n"))
-      val folded = versions.sortBy(-_._1).headOption match {
-        case Some((_, _, _, latest)) =>
-          spark.read.parquet(s"$statePath/$latest")
-            .unionByName(winCounts)
-            .groupBy(col("src"), col("dst")).agg(sum(col("n")).as("n"))
-        case None => winCounts
-      }
-      val seq = versions.map(_._1).maxOption.getOrElse(0L) + 1
-      val name = versionName(seq, incarnation, batchId)
-      folded.write.mode("errorifexists").parquet(s"$statePath/$name")
-      emitEffects(name)
-    } finally {
-      batch.unpersist()
-      ()
-    }
-  }
+      incarnation: Option[String] = None): Unit =
+    refreshFold(batch, statePath, batchId, incarnation, Seq("src", "dst"), Seq("n"), "effects")(
+      attributionTransitionsBatch(_, convType))(
+      graft.ext.Attribution.removalEffectsFromCounts(_, channels, steps))
 
   /** The mixture-weights model refresh — the q324 loop live (the
     * [[attributionModelRefreshIngestBatch]] contract on the sampling
     * tier): each micro-batch of CLOSED (window_start, domain, n_docs,
     * loss_sum) rows folds its per-domain loss MOMENTS into the persisted
-    * matrix as a new version (batch-id tagged — a re-delivered batch is
-    * an exact no-op) and re-emits the multiplicative-weights table from
-    * the folded moments beside it. Moments are sums, so the fold across
-    * window closes equals the batch operator over the union EXACTLY
-    * (spec-pinned); state is |domains|-bounded.
+    * matrix as a new version (batch-tagged — a re-delivered batch is an
+    * exact no-op) and commits the multiplicative-weights table of the
+    * folded moments to `<statePath>/weights`. Moments are sums, so the
+    * fold across window closes equals the batch operator over the union
+    * EXACTLY (spec-pinned); state is |domains|-bounded.
     */
   def mixtureWeightsRefreshIngestBatch(
       batch: DataFrame,
@@ -2213,48 +1971,12 @@ object StreamPipelines {
       batchId: Long,
       rounds: Int = 8,
       etaMilli: Long = 400L,
-      incarnation: Option[String] = None): Unit = {
-    batch.persist()
-    try {
-      if (batch.isEmpty) return
-      val spark = batch.sparkSession
-      val root = new Path(statePath)
-      val conf = spark.sparkContext.hadoopConfiguration
-      val fs = root.getFileSystem(conf)
-      val versions = committedVersions(fs, conf, root)
-      def emitWeights(name: String): Unit =
-        graft.ext.Sampling.mwDomainWeightsFromMoments(
-            spark.read.parquet(s"$statePath/$name"), rounds, etaMilli)
-          .write.mode("overwrite").parquet(s"$statePath/weights_$name")
-      versions.find(v => v._2 == incarnation && v._3 == batchId) match {
-        case Some((_, _, _, name)) =>
-          // replayed batch: fold committed — repair a missing weights
-          // table (the non-atomic-two-writes crash window) and no-op
-          if (!committed(fs, new Path(root, s"weights_$name"))) emitWeights(name)
-          return
-        case None => ()
-      }
-      val winMoments = batch
-        .groupBy(col("domain"))
-        .agg(sum(col("n_docs")).as("n_docs"), sum(col("loss_sum")).as("loss_sum"))
-      val folded = versions.sortBy(-_._1).headOption match {
-        case Some((_, _, _, latest)) =>
-          spark.read.parquet(s"$statePath/$latest")
-            .unionByName(winMoments)
-            .groupBy(col("domain"))
-            .agg(sum(col("n_docs")).as("n_docs"), sum(col("loss_sum")).as("loss_sum"))
-        case None => winMoments
-      }
-      val seq = versions.map(_._1).maxOption.getOrElse(0L) + 1
-      val name = versionName(seq, incarnation, batchId)
-      folded.write.mode("errorifexists").parquet(s"$statePath/$name")
-      emitWeights(name)
-    } finally {
-      batch.unpersist()
-      ()
-    }
-  }
+      incarnation: Option[String] = None): Unit =
+    refreshFold(batch, statePath, batchId, incarnation, Seq("domain"),
+      Seq("n_docs", "loss_sum"), "weights")(identity)(
+      graft.ext.Sampling.mwDomainWeightsFromMoments(_, rounds, etaMilli))
 
+  /** [[dhashDedupIngestBatch]] as a foreachBatch sink. */
   def dhashDedupSink(
       stream: DataFrame,
       idCol: String,

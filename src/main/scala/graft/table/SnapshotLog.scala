@@ -52,6 +52,21 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * deployment would serialize commits through a catalog; the protocol here
   * is the strongest a bare filesystem offers.
   *
+  * Streaming sinks commit through this log, one tagged version per
+  * micro-batch, and skip a batch whose tag is already in [[tags]] (the
+  * replay tag binds the query incarnation and the batch id):
+  *   - merge-on-read deltas: `upsertSinkVersioned`, `cdcSinkVersioned`;
+  *   - appends: the `videoDhashDedupIngestBatch` and
+  *     `audioChromaDedupIngestBatch` fingerprint indexes and the
+  *     `conformalGateIngestBatch` verdicts;
+  *   - replaces: the `conformalRefreshIngestBatch`,
+  *     `attributionModelRefreshIngestBatch` and
+  *     `mixtureWeightsRefreshIngestBatch` state (each with a derived table
+  *     under the same tag) and the `kmeansUpdateIngestBatch` centroids;
+  *   - lakebench's metrics table (`commitAppend`).
+  * A crash before the manifest claim leaves an unpublished `data/seg-*`
+  * dir: no reader sees it, and [[expireSnapshots]] collects it.
+  *
   * Scale notes: manifests hold segment DIRECTORY names, not file lists —
   * a commit is O(1) metadata regardless of data size; reads hand Spark the
   * segment dirs and let the parquet source list/prune in parallel. Expiry
@@ -128,6 +143,10 @@ object SnapshotLog {
   def tags(spark: SparkSession, path: String): Set[String] =
     versions(spark, path).flatMap(v => readManifest(spark, path, v).tag).toSet
 
+  /** The retained version whose manifest carries `tag`, if any. */
+  def taggedVersion(spark: SparkSession, path: String, tag: String): Option[Int] =
+    versions(spark, path).find(v => readManifest(spark, path, v).tag.contains(tag))
+
   /** Commit `df` as a full replacement of the table state. */
   def commitReplace(df: DataFrame, path: String, tag: Option[String] = None): Int =
     commit(df, path, "replace", tag)
@@ -199,11 +218,17 @@ object SnapshotLog {
     StructType(table.fields ++ next.fields.filterNot(f => table.exists(c => same(c.name, f.name))))
 
   /** An append or delta must keep the type of every column it shares with
-    * `table`: the segments of one version are read with one schema.
+    * the `latest` version: the segments of one version are read with one
+    * schema. An append must not land on a merge-on-read version either: its
+    * manifest carries no MergeSpec, so the read would union the delta
+    * segments unfolded and superseded rows would come back.
     */
-  private def requireSameTypes(op: String, table: StructType, next: StructType,
-                               same: (String, String) => Boolean): Unit = {
-    val clash = next.fields.flatMap(f => table.find(c => same(c.name, f.name))
+  private def requireExtends(op: String, latest: Manifest, next: StructType,
+                             same: (String, String) => Boolean): Unit = {
+    require(op == "delta" || latest.merge.isEmpty,
+      "commitAppend: the latest version is merge-on-read; commit deltas with " +
+        "commitDelta, or fold them with compactLatest before appending")
+    val clash = next.fields.flatMap(f => latest.schema.find(c => same(c.name, f.name))
       .filter(_.dataType != f.dataType)
       .map(c => s"${f.name}: ${c.dataType.simpleString} -> ${f.dataType.simpleString}"))
     require(clash.isEmpty,
@@ -221,7 +246,7 @@ object SnapshotLog {
     val extend = op == "append" || op == "delta"
     if (extend)
       latestVersion(spark, path).foreach(v =>
-        requireSameTypes(op, readManifest(spark, path, v).schema, schema, same))
+        requireExtends(op, readManifest(spark, path, v), schema, same))
     val seg    = s"$DataDir/seg-${java.util.UUID.randomUUID().toString.take(8)}"
     df.write.mode("overwrite").parquet(s"$path/$seg")
     f.mkdirs(new Path(path, LogDir))
@@ -231,9 +256,9 @@ object SnapshotLog {
       val base = latestVersion(spark, path)
       val prev = if (extend) base.map(readManifest(spark, path, _)) else None
       val v    = base.getOrElse(0) + 1
-      // a racer may have published a conflicting type since the check above
+      // a racer may have published a conflicting version since the check above
       prev.foreach { p =>
-        try requireSameTypes(op, p.schema, schema, same)
+        try requireExtends(op, p, schema, same)
         catch { case e: IllegalArgumentException => f.delete(new Path(path, seg), true); throw e }
       }
       val m = Manifest(op, prev.map(_.segments).getOrElse(Nil) :+ seg,

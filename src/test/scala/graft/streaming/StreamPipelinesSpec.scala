@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkFunSuite
 import graft.ops.LatestWins
+import graft.table.SnapshotLog
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -17,12 +18,32 @@ final case class Vec(vec_id: Long, embedding: Seq[Double])
 final case class Val(ts: Timestamp, key: String, value: Double)
 final case class UEv(user_id: Long, ts: Timestamp, event_id: Long, event_type: String)
 
+/** One ingest function that commits through SnapshotLog, for the
+  * table-driven crash matrix: `ingest(root, k, batchId, incarnation)`
+  * feeds the case's k-th batch (k in 0..2), and `tables` are the
+  * SnapshotLog tables it writes, relative to `root`.
+  */
+final case class SinkCase(
+    name: String,
+    tables: Seq[String],
+    ingest: (String, Int, Long, Option[String]) => Unit,
+    seed: String => Unit = _ => ())
+
 class StreamPipelinesSpec extends SparkFunSuite {
   import spark.implicits._
 
   private def t(s: String): Timestamp = Timestamp.valueOf(s)
   private def tmpDir(tag: String): String =
     graft.TestTmp.dir(tag)
+
+  /** A crash between a commit's segment write and its manifest claim: the
+    * latest manifest of the SnapshotLog table at `path` goes, and its
+    * segment stays behind unpublished.
+    */
+  private def unpublishLatest(path: String): Unit = {
+    val v = SnapshotLog.latestVersion(spark, path).get
+    Files.delete(java.nio.file.Paths.get(path, "_log", f"v$v%09d.json"))
+  }
 
   test("kafkaOptions builds the reference's exact option surface") {
     val opts = StreamPipelines.kafkaOptions(
@@ -719,50 +740,48 @@ class StreamPipelinesSpec extends SparkFunSuite {
     StreamPipelines.attributionModelRefreshIngestBatch(
       closedOf(w1), statePath, 1L, channels)
     // the folded matrix equals the batch transition counts over the union
-    val mat = spark.read.parquet(statePath + "/v2_b1").collect()
+    def matrix = SnapshotLog.read(spark, statePath).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     val bcnt = graft.ext.Attribution.transitionCounts(
         (w0 ++ w1).toDF("ts", "user", "id", "t"),
         "user", "ts", "id", "t", "purchase")
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(mat == bcnt)
+    assert(matrix == bcnt)
     // the re-emitted effects equal markovRemovalEffects row for row
     def effRows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    val live = effRows(spark.read.parquet(statePath + "/effects_v2_b1"))
+    def effects = effRows(SnapshotLog.read(spark, statePath + "/effects"))
+    val live = effects
     val batch = effRows(graft.ext.Attribution.markovRemovalEffects(
       (w0 ++ w1).toDF("ts", "user", "id", "t"), "user", "ts", "id", "t",
       channels, convType = "purchase"))
     assert(live == batch)
     assert(live.nonEmpty && live.values.exists(_._3 > 0L)) // non-trivial model
-    // replay of batch 1: detected by its batch id tag — no new version
+    // replay of batch 1: detected by its batch tag — no new version
     StreamPipelines.attributionModelRefreshIngestBatch(
       closedOf(w1), statePath, 1L, channels)
-    val versions = new java.io.File(statePath).listFiles()
-      .map(_.getName).filter(n => n.startsWith("v") && n.contains("_b")).toSet
-    assert(versions == Set("v1_b0", "v2_b1"))
-    // crash-between-the-two-writes repair: wipe the effects table and
-    // replay — the retry must re-emit it from the committed matrix
-    // instead of no-opping one model behind
-    def rmTree(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-    }
-    rmTree(new java.io.File(statePath + "/effects_v2_b1"))
+    assert(SnapshotLog.versions(spark, statePath) == Seq(1, 2))
+    assert(SnapshotLog.tags(spark, statePath) == Set("batch-0", "batch-1"))
+    assert(SnapshotLog.tags(spark, statePath + "/effects") == Set("batch-0", "batch-1"))
+    // crash between the two commits: the matrix version committed, the
+    // effects version did not — the replay must commit it from the
+    // tagged matrix instead of no-opping one model behind
+    unpublishLatest(statePath + "/effects")
+    assert(SnapshotLog.tags(spark, statePath + "/effects") == Set("batch-0"))
     StreamPipelines.attributionModelRefreshIngestBatch(
       closedOf(w1), statePath, 1L, channels)
-    assert(effRows(spark.read.parquet(statePath + "/effects_v2_b1")) == batch)
-    // a TORN matrix version (no _SUCCESS) is deleted and rewritten by
-    // the retry rather than silently becoming the fold base
-    rmTree(new java.io.File(statePath + "/v2_b1/_SUCCESS"))
+    assert(SnapshotLog.versions(spark, statePath) == Seq(1, 2))
+    assert(effects == batch)
+    // a TORN matrix version (its segment written, its manifest never
+    // published) is invisible: the retry folds from v1 again rather than
+    // from the torn rows
+    unpublishLatest(statePath)
+    unpublishLatest(statePath + "/effects")
     StreamPipelines.attributionModelRefreshIngestBatch(
       closedOf(w1), statePath, 1L, channels)
-    val mat2 = spark.read.parquet(statePath + "/v2_b1").collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(mat2 == bcnt, "the rewritten fold must equal the batch counts")
-    // a stray non-version dir under the root must be neither parsed nor
-    // deleted (the strict v<digits>_b<digits> name gate — this exact
-    // name used to throw MatchError in the version parser, and a
-    // marker-less near-miss dir used to be DELETED as "torn")
+    assert(matrix == bcnt, "the rewritten fold must equal the batch counts")
+    assert(effects == batch)
+    // a stray dir under the root is neither read nor deleted
     val stray = new java.io.File(statePath + "/very_bad")
     stray.mkdirs()
     val w2 = Seq(
@@ -770,8 +789,8 @@ class StreamPipelinesSpec extends SparkFunSuite {
       (t("2024-01-01 10:02:02"), 9L, 10L, "purchase"))
     StreamPipelines.attributionModelRefreshIngestBatch(
       closedOf(w2), statePath, 2L, channels)
-    assert(stray.exists, "non-matching dirs must be skipped untouched")
-    assert(new java.io.File(statePath + "/v3_b2").exists,
+    assert(stray.exists, "stray dirs must be left untouched")
+    assert(SnapshotLog.latestTag(spark, statePath).contains("batch-2"),
       "the batch must still fold a new version beside the stray dir")
   }
 
@@ -794,7 +813,8 @@ class StreamPipelinesSpec extends SparkFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
-    val live = rows(spark.read.parquet(statePath + "/weights_v2_b1"))
+    def weights = rows(SnapshotLog.read(spark, statePath + "/weights"))
+    val live = weights
     val batch = rows(graft.ext.Sampling.mwDomainWeights(
       (w0 ++ w1).toDF("domain", "loss"), "domain", "loss",
       rounds = 2, etaMilli = 500L))
@@ -802,21 +822,19 @@ class StreamPipelinesSpec extends SparkFunSuite {
     // the hand-walked case: A has 3 docs of loss 0, B mean 3000 — the
     // same trajectory as the batch unit test
     assert(live("B")._2 == 3000L && live("B")._4 > live("A")._4)
-    // replay of batch 1: detected by its batch id tag — no new version
+    // replay of batch 1: detected by its batch tag — no new version
     StreamPipelines.mixtureWeightsRefreshIngestBatch(
       closedOf(w1, 1L), statePath, 1L, rounds = 2, etaMilli = 500L)
-    val versions = new java.io.File(statePath).listFiles()
-      .map(_.getName).filter(n => n.startsWith("v") && n.contains("_b")).toSet
-    assert(versions == Set("v1_b0", "v2_b1"))
-    // crash-between-the-two-writes repair: wipe the weights table and
-    // replay — the retry re-emits it from the committed moment matrix
-    def rmTree(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-    }
-    rmTree(new java.io.File(statePath + "/weights_v2_b1"))
+    assert(SnapshotLog.versions(spark, statePath) == Seq(1, 2))
+    assert(SnapshotLog.tags(spark, statePath) == Set("batch-0", "batch-1"))
+    // crash between the two commits: the replay commits the missing
+    // weights version from the tagged moment matrix
+    unpublishLatest(statePath + "/weights")
     StreamPipelines.mixtureWeightsRefreshIngestBatch(
       closedOf(w1, 1L), statePath, 1L, rounds = 2, etaMilli = 500L)
-    assert(rows(spark.read.parquet(statePath + "/weights_v2_b1")) == batch)
+    assert(SnapshotLog.versions(spark, statePath) == Seq(1, 2))
+    assert(SnapshotLog.tags(spark, statePath + "/weights") == Set("batch-0", "batch-1"))
+    assert(weights == batch)
   }
 
   test("simhashDedupIngestBatch drops near-dups vs batch AND index; replay converges") {
@@ -873,7 +891,7 @@ class StreamPipelinesSpec extends SparkFunSuite {
 
   test("videoDhashDedupIngestBatch frame-votes containers vs batch AND index; replay converges") {
     val indexPath = tmpDir("vdhidx") + "/index"
-    def indexDf  = StreamPipelines.readSegmentedIndex(spark, indexPath).get
+    def indexDf  = SnapshotLog.read(spark, indexPath)
     def indexIds = indexDf.collect().map(_.getLong(0)).toSet
     val base  = (1 to 800).map(i => ('a' + (i * 7 % 26)).toChar).mkString
     val twin  = base.map(c => (c + 1).toChar)          // all 4 frames vote at 0
@@ -891,24 +909,22 @@ class StreamPipelinesSpec extends SparkFunSuite {
       Seq((5L, twin), (1L, base), (7L, third)).toDF("doc_id", "payload"),
       "doc_id", "payload", indexPath, batchId = 1L)
     assert(indexIds == Set(1L, 3L, 7L))
-    // replay of batch 2 is an exact no-op — its segment already committed
+    // replay of batch 2 is an exact no-op — its tag already committed
     StreamPipelines.videoDhashDedupIngestBatch(
       Seq((5L, twin), (1L, base), (7L, third)).toDF("doc_id", "payload"),
       "doc_id", "payload", indexPath, batchId = 1L)
     assert(indexIds == Set(1L, 3L, 7L))
     assert(indexDf.count() == 12L)
-    // torn-segment repair: a crashed batch 2 left `b2` WITHOUT _SUCCESS
-    // (only a subset of container 9's frame rows made it). The reader
-    // must not surface the partial container; the retry must delete the
-    // torn segment and re-admit ALL of 9's frame rows.
-    val fs = new org.apache.hadoop.fs.Path(indexPath).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
+    assert(SnapshotLog.tags(spark, indexPath) == Set("batch-0", "batch-1"))
+    // torn write: a crashed batch 2 wrote a segment holding only a subset
+    // of container 9's frame rows and never published it. The reader must
+    // not surface the partial container; the retry must admit ALL of 9's
+    // frame rows.
     val fourth = (1 to 800).map(i => ('a' + (i * 17 % 26)).toChar).mkString
     graft.ext.Multimodal.videoFrameFingerprints(
         Seq((9L, fourth)).toDF("doc_id", "payload"), "doc_id", "payload",
         n = 4, frameBytes = 96)
-      .limit(2).write.parquet(s"$indexPath/b2")
-    fs.delete(new org.apache.hadoop.fs.Path(s"$indexPath/b2/_SUCCESS"), false)
+      .limit(2).write.parquet(s"$indexPath/data/seg-torn")
     assert(indexIds == Set(1L, 3L, 7L)) // torn rows invisible to readers
     StreamPipelines.videoDhashDedupIngestBatch(
       Seq((9L, fourth)).toDF("doc_id", "payload"),
@@ -919,7 +935,7 @@ class StreamPipelinesSpec extends SparkFunSuite {
 
   test("audioChromaDedupIngestBatch window-votes containers vs batch AND index; replay converges") {
     val indexPath = tmpDir("acidx") + "/index"
-    def indexDf  = StreamPipelines.readSegmentedIndex(spark, indexPath).get
+    def indexDf  = SnapshotLog.read(spark, indexPath)
     def indexIds = indexDf.collect().map(_.getLong(0)).toSet
     val base  = (1 to 800).map(i => ('a' + (i * 7 % 26)).toChar).mkString
     // uniform code shift: every band energy moves by exactly +1, so every
@@ -941,23 +957,21 @@ class StreamPipelinesSpec extends SparkFunSuite {
       Seq((5L, twin), (1L, base), (7L, third)).toDF("doc_id", "payload"),
       "doc_id", "payload", indexPath, batchId = 1L)
     assert(indexIds == Set(1L, 3L, 7L))
-    // replay of batch 2 is an exact no-op — its segment already committed
+    // replay of batch 2 is an exact no-op — its tag already committed
     StreamPipelines.audioChromaDedupIngestBatch(
       Seq((5L, twin), (1L, base), (7L, third)).toDF("doc_id", "payload"),
       "doc_id", "payload", indexPath, batchId = 1L)
     assert(indexIds == Set(1L, 3L, 7L))
     assert(indexDf.count() == 15L)
-    // torn-segment repair: a crashed batch left `b2` without _SUCCESS
-    // holding a SUBSET of container 9's window rows — invisible to
-    // readers, deleted on retry, then re-admitted complete.
-    val fs = new org.apache.hadoop.fs.Path(indexPath).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
+    assert(SnapshotLog.tags(spark, indexPath) == Set("batch-0", "batch-1"))
+    // torn write: a crashed batch left an unpublished segment holding a
+    // SUBSET of container 9's window rows — invisible to readers, then
+    // re-admitted complete by the retry.
     val fourth = (1 to 800).map(i => ('a' + (i * 17 % 26)).toChar).mkString
     graft.ext.Multimodal.audioWindowFingerprints(
         Seq((9L, fourth)).toDF("doc_id", "payload"), "doc_id", "payload",
         n = 6)
-      .limit(2).write.parquet(s"$indexPath/b2")
-    fs.delete(new org.apache.hadoop.fs.Path(s"$indexPath/b2/_SUCCESS"), false)
+      .limit(2).write.parquet(s"$indexPath/data/seg-torn")
     assert(indexIds == Set(1L, 3L, 7L)) // torn rows invisible to readers
     StreamPipelines.audioChromaDedupIngestBatch(
       Seq((9L, fourth)).toDF("doc_id", "payload"),
@@ -971,9 +985,9 @@ class StreamPipelinesSpec extends SparkFunSuite {
     // The r13 hazard: batch ids restart at 0 under a recreated checkpoint,
     // and an unbound replay check (`any b0 committed → no-op`) silently
     // skipped the new incarnation's entire batch 0 — data loss. Bound
-    // segments key the replay on (incarnation, batchId).
+    // tags key the replay on (incarnation, batchId).
     val indexPath = tmpDir("vreidx") + "/index"
-    def indexIds = StreamPipelines.readSegmentedIndex(spark, indexPath).get
+    def indexIds = SnapshotLog.read(spark, indexPath)
       .collect().map(_.getLong(0)).toSet
     val base  = (1 to 800).map(i => ('a' + (i * 7 % 26)).toChar).mkString
     val other = (1 to 800).map(i => ('a' + (i * 11 % 26)).toChar).mkString
@@ -1004,47 +1018,162 @@ class StreamPipelinesSpec extends SparkFunSuite {
       Seq((9L, fourth)).toDF("doc_id", "payload"),
       "doc_id", "payload", indexPath, batchId = 0L)
     assert(indexIds == Set(1L, 3L, 7L, 9L))
+    assert(SnapshotLog.tags(spark, indexPath) ==
+      Set("batch-runA-0", "batch-runA-1", "batch-runB-0", "batch-0"))
   }
 
-  test("segmented dedup index folds a pre-segmented flat layout in as legacy data") {
-    // An index written by the old root-level mode("append") path must stay
-    // visible: readers union it, and the ingest's anti-join + near-dup
-    // probe still see its containers (previously they were silently
-    // ignored and every old container re-admitted as a duplicate).
-    val indexPath = tmpDir("vlegidx") + "/index"
-    val base  = (1 to 800).map(i => ('a' + (i * 7 % 26)).toChar).mkString
-    val other = (1 to 800).map(i => ('a' + (i * 11 % 26)).toChar).mkString
-    graft.ext.Multimodal.videoFrameFingerprints(
-        Seq((1L, base)).toDF("doc_id", "payload"), "doc_id", "payload",
-        n = 4, frameBytes = 96)
-      .write.mode("append").parquet(indexPath) // the legacy flat layout
-    def indexIds = StreamPipelines.readSegmentedIndex(spark, indexPath).get
-      .collect().map(_.getLong(0)).toSet
-    assert(indexIds == Set(1L), "legacy root files must be readable")
-    // a twin of the legacy container drops; a re-delivered legacy id
-    // no-ops via the anti-join; a fresh container is admitted
-    val twin = base.map(c => (c + 1).toChar)
-    StreamPipelines.videoDhashDedupIngestBatch(
-      Seq((1L, base), (2L, twin), (3L, other)).toDF("doc_id", "payload"),
-      "doc_id", "payload", indexPath, batchId = 0L, incarnation = Some("runA"))
-    assert(indexIds == Set(1L, 3L))
+  private lazy val gateWeights: Seq[Long] = {
+    val corpus = Seq(
+      (1L, "the quick fox of the hill and the dale went to a town", 1L),
+      (2L, "xx1! yy2@ zz3# qq4$ ww5% vv6^ uu7& tt8* ss9( rr0)", 0L)
+    ).toDF("doc_id", "text", "label")
+    val feats = graft.ext.Classifier.lrFeatures(corpus, "doc_id", "text",
+      col("label") === 1L).persist()
+    try graft.ext.Classifier.lrTrain(feats, iters = 4) finally feats.unpersist()
   }
 
-  test("segment/version listings fail loudly when the _SUCCESS marker protocol is off") {
+  private lazy val sinkCases: Seq[SinkCase] = {
+    def payload(k: Int) = (1 to 800).map(i => ('a' + (i * Seq(7, 11, 13)(k) % 26)).toChar).mkString
+    def container(k: Int) = Seq((k + 1L, payload(k))).toDF("doc_id", "payload")
+    def journeys(k: Int) = Seq(
+        Seq((1L, "click"), (2L, "purchase")),
+        Seq((3L, "view")),
+        Seq((4L, "click"), (5L, "view"), (6L, "purchase")))(k)
+      .map { case (id, ty) => (t("2024-01-01 10:00:00"), k.toLong, id, ty) }
+      .toDF("ts", "user", "id", "t")
+      .groupBy(window(col("ts"), "1 minute"), col("user"))
+      .agg(sort_array(collect_list(struct(col("ts").as("ts"),
+        col("id").as("id"), col("t").as("t")))).as("evs"))
+      .select(col("window.start").as("window_start"), col("evs"))
+    Seq(
+      SinkCase("videoDhashDedupIngestBatch", Seq("index"), (root, k, b, inc) =>
+        StreamPipelines.videoDhashDedupIngestBatch(container(k), "doc_id", "payload",
+          s"$root/index", b, incarnation = inc)),
+      SinkCase("audioChromaDedupIngestBatch", Seq("index"), (root, k, b, inc) =>
+        StreamPipelines.audioChromaDedupIngestBatch(container(k), "doc_id", "payload",
+          s"$root/index", b, incarnation = inc)),
+      SinkCase("conformalGateIngestBatch", Seq("out"), (root, k, b, inc) =>
+        StreamPipelines.conformalGateIngestBatch(
+          Seq((k + 1L, Seq("the quick fox of the hill and the dale",
+            "a cat and a dog sat on the mat", "xx1! yy2@ zz3# qq4$ ww5%")(k)))
+            .toDF("doc_id", "text"),
+          "doc_id", "text", gateWeights, s"$root/state", s"$root/out", b,
+          incarnation = inc)),
+      SinkCase("conformalRefreshIngestBatch", Seq("state", "state/qhat"), (root, k, b, inc) =>
+        StreamPipelines.conformalRefreshIngestBatch(
+          Seq(Seq((0L, 250000L), (0L, 300000L)), Seq((1L, 700000L)), Seq((0L, 400000L)))(k)
+            .toDF("y", "p_ppm"), s"$root/state", b, incarnation = inc)),
+      SinkCase("attributionModelRefreshIngestBatch", Seq("state", "state/effects"),
+        (root, k, b, inc) =>
+          StreamPipelines.attributionModelRefreshIngestBatch(
+            journeys(k), s"$root/state", b, Seq("click", "view"), incarnation = inc)),
+      SinkCase("mixtureWeightsRefreshIngestBatch", Seq("state", "state/weights"),
+        (root, k, b, inc) =>
+          StreamPipelines.mixtureWeightsRefreshIngestBatch(
+            Seq(Seq(("A", 2L, 0L), ("B", 1L, 2000L)), Seq(("B", 1L, 4000L)),
+              Seq(("C", 3L, 300L)))(k).map { case (d, n, l) => (0L, d, n, l) }
+              .toDF("window_start", "domain", "n_docs", "loss_sum"),
+            s"$root/state", b, rounds = 2, etaMilli = 500L, incarnation = inc)),
+      SinkCase("kmeansUpdateIngestBatch", Seq("state"), (root, k, b, inc) =>
+          StreamPipelines.kmeansUpdateIngestBatch(
+            Seq(Seq((101L, Array(0.8f, 0.2f))), Seq((102L, Array(0f, 1f))),
+              Seq((103L, Array(0.6f, 0f))))(k).toDF("vec_id", "embedding"),
+            "vec_id", "embedding", s"$root/state", b, incarnation = inc),
+        seed = root => StreamPipelines.seedKmeansState(
+          Seq((0L, 1L, 10000L), (0L, 2L, 0L), (1L, 1L, 0L), (1L, 2L, 10000L))
+            .toDF("label", "dim", "c_bp"),
+          Seq((0L, 3L), (1L, 5L)).toDF("label", "n"), s"$root/state"))
+    )
+  }
+
+  /** Per table of `c` under `root`: its versions and its rows. */
+  private def tableStates(c: SinkCase, root: String): Seq[(Seq[Int], Seq[String])] =
+    c.tables.map { t =>
+      val path = s"$root/$t"
+      (SnapshotLog.versions(spark, path),
+        SnapshotLog.read(spark, path).collect().map(_.toString).sorted.toSeq)
+    }
+
+  private def allTagged(c: SinkCase, root: String, tag: String): Boolean =
+    c.tables.forall(t => SnapshotLog.tags(spark, s"$root/$t").contains(tag))
+
+  /** Batches 0 and 1 of incarnation A, a replay of A's batch 0 between
+    * them, then batch 2 as incarnation B's batch 0, with no crash;
+    * returns each table's final rows.
+    */
+  private def uncrashedRun(c: SinkCase, root: String): Seq[Seq[String]] = {
+    c.seed(root)
+    c.ingest(root, 0, 0L, Some("runA"))
+    assert(allTagged(c, root, "batch-runA-0"), s"${c.name}: batch 0 must commit")
+    val afterFirst = tableStates(c, root)
+    c.ingest(root, 0, 0L, Some("runA"))
+    assert(tableStates(c, root) == afterFirst, s"${c.name}: a replay must be a no-op")
+    c.ingest(root, 1, 1L, Some("runA"))
+    c.ingest(root, 2, 0L, Some("runB"))
+    assert(allTagged(c, root, "batch-runA-1") && allTagged(c, root, "batch-runB-0"),
+      s"${c.name}: every batch must commit")
+    tableStates(c, root).map(_._2)
+  }
+
+  private val uncrashed = scala.collection.mutable.Map.empty[String, Seq[Seq[String]]]
+
+  /** The final rows of `c`'s uncrashed run, with `_SUCCESS` markers on. */
+  private def reference(c: SinkCase): Seq[Seq[String]] =
+    uncrashed.getOrElseUpdate(c.name, uncrashedRun(c, tmpDir(s"ref-${c.name}")))
+
+  /** The crash matrix of one SnapshotLog sink: a replay of the same
+    * (incarnation, batch) is a no-op; a batch that crashed after writing
+    * its segment but before its manifest claim leaves an orphan segment
+    * readers never see, and the retry commits; a fresh incarnation's
+    * batch 0 is folded, not skipped as a replay of the prior one's.
+    */
+  private def crashMatrix(c: SinkCase): Unit = {
+    val root = tmpDir(s"crash-${c.name}")
+    c.seed(root)
+    c.ingest(root, 0, 0L, Some("runA"))
+    val afterFirst = tableStates(c, root)
+    c.ingest(root, 0, 0L, Some("runA"))
+    assert(tableStates(c, root) == afterFirst, s"${c.name}: a replay must be a no-op")
+    // batch 1 crashes after its segment writes: each table gets a segment
+    // (a copy of its visible rows) that no manifest references
+    c.tables.foreach { t =>
+      SnapshotLog.read(spark, s"$root/$t").write.parquet(s"$root/$t/data/seg-orphan")
+    }
+    assert(tableStates(c, root) == afterFirst, s"${c.name}: an orphan segment must be invisible")
+    c.ingest(root, 1, 1L, Some("runA"))
+    assert(allTagged(c, root, "batch-runA-1"), s"${c.name}: the retry must commit")
+    assert(tableStates(c, root).map(_._1.size) == afterFirst.map(_._1.size + 1))
+    val beforeFresh = tableStates(c, root)
+    c.ingest(root, 2, 0L, Some("runB"))
+    assert(allTagged(c, root, "batch-runB-0"), s"${c.name}: incarnation B's batch 0 must commit")
+    tableStates(c, root).zip(beforeFresh).foreach { case (after, before) =>
+      assert(after._2 != before._2, s"${c.name}: incarnation B's batch 0 must be folded")
+    }
+    assert(tableStates(c, root).map(_._2) == reference(c),
+      s"${c.name}: the crashed run must end where the uncrashed run does")
+  }
+
+  Seq("videoDhashDedupIngestBatch", "audioChromaDedupIngestBatch", "conformalGateIngestBatch",
+      "conformalRefreshIngestBatch", "attributionModelRefreshIngestBatch",
+      "mixtureWeightsRefreshIngestBatch", "kmeansUpdateIngestBatch").foreach { name =>
+    test(s"crash matrix: $name — replay no-op, orphan segment invisible, fresh incarnation folds") {
+      crashMatrix(sinkCases.find(_.name == name).get)
+    }
+  }
+
+  test("with _SUCCESS markers off, every SnapshotLog sink commits, replays as a no-op " +
+    "and reads back") {
     val conf = spark.sparkContext.hadoopConfiguration
     val key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+    sinkCases.foreach(reference) // the reference runs write markers
     conf.setBoolean(key, false)
-    try {
-      val e1 = intercept[IllegalArgumentException] {
-        StreamPipelines.readSegmentedIndex(spark, tmpDir("nomark") + "/idx")
-      }
-      assert(e1.getMessage.contains("marksuccessfuljobs"))
-      val e2 = intercept[IllegalArgumentException] {
-        StreamPipelines.mixtureWeightsRefreshIngestBatch(
-          Seq(("web", 1L, 10L)).toDF("domain", "n_docs", "loss_sum"),
-          tmpDir("nomark2") + "/state", batchId = 0L)
-      }
-      assert(e2.getMessage.contains("marksuccessfuljobs"))
+    try sinkCases.foreach { c =>
+      val root = tmpDir(s"nomark-${c.name}")
+      assert(uncrashedRun(c, root) == reference(c), s"${c.name}: reads differ without markers")
+      val markers = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try assert(!markers.anyMatch(_.getFileName.toString == "_SUCCESS"),
+        s"${c.name}: the markers setting must reach the writes")
+      finally markers.close()
     } finally conf.setBoolean(key, true)
   }
 
@@ -1053,27 +1182,25 @@ class StreamPipelinesSpec extends SparkFunSuite {
     val statePath = tmpDir("mwinc") + "/state"
     def batchOf(rows: (String, Long, Long)*) =
       rows.toDF("domain", "n_docs", "loss_sum")
-    def moments(name: String) = spark.read.parquet(s"$statePath/$name")
+    def moments(v: Int) = SnapshotLog.read(spark, statePath, Some(v))
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     StreamPipelines.mixtureWeightsRefreshIngestBatch(
       batchOf(("web", 10L, 40L)), statePath, batchId = 0L,
       incarnation = Some("runA"))
-    assert(moments("v1_irunA_b0") == Map("web" -> ((10L, 40L))))
+    assert(SnapshotLog.taggedVersion(spark, statePath, "batch-runA-0").contains(1))
+    assert(moments(1) == Map("web" -> ((10L, 40L))))
     // incarnation B's batch 0 folds on top of A's latest — NOT a replay
     StreamPipelines.mixtureWeightsRefreshIngestBatch(
       batchOf(("web", 5L, 10L), ("code", 2L, 8L)), statePath, batchId = 0L,
       incarnation = Some("runB"))
-    assert(moments("v2_irunB_b0") ==
+    assert(SnapshotLog.taggedVersion(spark, statePath, "batch-runB-0").contains(2))
+    assert(moments(2) ==
       Map("web" -> ((15L, 50L)), "code" -> ((2L, 8L))))
     // replaying B's batch 0 IS a no-op (no v3 appears)
     StreamPipelines.mixtureWeightsRefreshIngestBatch(
       batchOf(("web", 5L, 10L), ("code", 2L, 8L)), statePath, batchId = 0L,
       incarnation = Some("runB"))
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val versions = fs.listStatus(new org.apache.hadoop.fs.Path(statePath))
-      .map(_.getPath.getName).filter(_.matches("^v\\d.*")).toSet
-    assert(versions == Set("v1_irunA_b0", "v2_irunB_b0"))
+    assert(SnapshotLog.versions(spark, statePath) == Seq(1, 2))
   }
 
   test("kmeansUpdateIngestBatch keys replay on (incarnation, batchId): a fresh " +
@@ -1092,13 +1219,10 @@ class StreamPipelinesSpec extends SparkFunSuite {
     // replay WITHIN incarnation B is still an exact no-op
     StreamPipelines.kmeansUpdateIngestBatch(b, "vec_id", "embedding",
       statePath, batchId = 0L, incarnation = Some("runB"))
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val names = fs.listStatus(new org.apache.hadoop.fs.Path(statePath))
-      .map(_.getPath.getName).filter(_.startsWith("v")).toSet
-    assert(names == Set("v0_b-1", "v1_irunA_b0", "v2_irunB_b0"), names.toString)
+    assert(SnapshotLog.versions(spark, statePath) == Seq(1, 2, 3))
+    assert(SnapshotLog.tags(spark, statePath) == Set("seed", "batch-runA-0", "batch-runB-0"))
     // both folds really applied: label-0's running count is 3 + 1 + 1
-    val n = spark.read.parquet(s"$statePath/v2_irunB_b0")
+    val n = SnapshotLog.read(spark, statePath)
       .filter($"label" === 0L).select($"n").distinct().collect().map(_.getLong(0)).toSeq
     assert(n == Seq(5L), s"both incarnations' folds must count: $n")
   }
@@ -1112,7 +1236,7 @@ class StreamPipelinesSpec extends SparkFunSuite {
       val n = ss.size; val k = ((n + 1) * (100 - alpha) + 99) / 100
       if (k <= n) ss.sorted.apply((k - 1).toInt) else 1000001L
     }
-    def qhatTable = StreamPipelines.latestConformalQhat(spark, statePath).get
+    def qhatTable = SnapshotLog.read(spark, statePath + "/qhat")
       .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
     // batch 0: y = 0 rows, so s = p_ppm directly
     val s0 = (22 to 30).map(_ * 10000L)
@@ -1132,26 +1256,21 @@ class StreamPipelinesSpec extends SparkFunSuite {
     StreamPipelines.conformalRefreshIngestBatch(
       s1.map(s => (1L, 1000000L - s)).toDF("y", "p_ppm"), statePath,
       batchId = 1L, alphas, incarnation = Some("runA"))
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def versionDirs = fs.listStatus(new org.apache.hadoop.fs.Path(statePath))
-      .map(_.getPath.getName).filter(_.matches("^v\\d.*")).toSet
-    assert(versionDirs == Set("v1_irunA_b0", "v2_irunA_b1"))
-    // crash window: the fold committed but the quantile table is gone —
-    // the replayed batch repairs it instead of silently no-opping
-    def rmTree(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rmTree)); f.delete(); ()
-    }
-    rmTree(new java.io.File(statePath + "/qhat_v2_irunA_b1"))
+    assert(SnapshotLog.versions(spark, statePath) == Seq(1, 2))
+    assert(SnapshotLog.tags(spark, statePath) == Set("batch-runA-0", "batch-runA-1"))
+    // crash window: the fold committed but the quantile table's commit
+    // did not — the replayed batch repairs it instead of silently no-opping
+    unpublishLatest(statePath + "/qhat")
+    assert(qhatTable == alphas.map(a => a -> qhatOf(s0, a)).toMap)
     StreamPipelines.conformalRefreshIngestBatch(
       s1.map(s => (1L, 1000000L - s)).toDF("y", "p_ppm"), statePath,
       batchId = 1L, alphas, incarnation = Some("runA"))
+    assert(SnapshotLog.versions(spark, statePath) == Seq(1, 2))
     assert(qhatTable == expectedUnion)
-    // torn version: a crashed batch 2 left its dir without _SUCCESS —
-    // invisible to the read-only quantile lookup, repaired by the retry
-    s0.map(s => (0L, s)).toDF("y", "p_ppm")
-      .write.parquet(statePath + "/v3_irunA_b2")
-    fs.delete(new org.apache.hadoop.fs.Path(statePath + "/v3_irunA_b2/_SUCCESS"), false)
+    // torn version: a crashed batch 2 wrote its spine segment but never
+    // published it — invisible to the quantile lookup and the next fold
+    s0.map(s => (s, 1L)).toDF("s", "c")
+      .write.parquet(statePath + "/data/seg-torn")
     assert(qhatTable == expectedUnion) // torn v3 never serves reads
     val s2 = Seq(400000L, 410000L, 420000L)
     StreamPipelines.conformalRefreshIngestBatch(
@@ -1164,8 +1283,8 @@ class StreamPipelinesSpec extends SparkFunSuite {
     // the incarnation token comes from the `sql.streaming.queryId` local
     // property stream execution sets on the micro-batch thread; if that
     // key ever drifts, streamIncarnation silently degrades to unbound
-    // names and the fresh-checkpoint collision protection is inert — so
-    // this pin drives a REAL stream and asserts the written dir carries
+    // tags and the fresh-checkpoint collision protection is inert — so
+    // this pin drives a REAL stream and asserts the committed tag carries
     // the runner's actual queryId
     implicit val sql = spark.sqlContext
     val statePath = tmpDir("incpin") + "/state"
@@ -1177,13 +1296,10 @@ class StreamPipelinesSpec extends SparkFunSuite {
     try {
       input.addData((0L, 250000L), (0L, 300000L))
       q.processAllAvailable()
-      val fs = new org.apache.hadoop.fs.Path(statePath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(statePath))
-        .map(_.getPath.getName).filter(_.startsWith("v")).toSeq
-      val expected = s"v1_i${q.id.toString}_b0"
-      assert(dirs == Seq(expected),
-        s"sink-written version must carry the live queryId: $dirs vs $expected")
+      val tags = SnapshotLog.tags(spark, statePath)
+      val expected = s"batch-${q.id.toString}-0"
+      assert(tags == Set(expected),
+        s"sink-written version must carry the live queryId: $tags vs $expected")
     } finally q.stop()
   }
 
@@ -1212,7 +1328,7 @@ class StreamPipelinesSpec extends SparkFunSuite {
         trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("0 seconds"))
       .start()
     try {
-      def verdicts = StreamPipelines.readSegmentedIndex(spark, outPath).get
+      def verdicts = SnapshotLog.read(spark, outPath)
         .collect().map(r => r.getLong(0) -> ((r.getString(2), r.getLong(3)))).toMap
       // before any calibration commits: q̂ falls back to conformal
       // infinity — EVERYTHING routes to review
@@ -1342,36 +1458,29 @@ class StreamPipelinesSpec extends SparkFunSuite {
     val counts = Seq((0L, 3L), (1L, 5L)).toDF("label", "n")
     StreamPipelines.seedKmeansState(cents, counts, statePath)
 
-    def latest = {
-      val fs = new org.apache.hadoop.fs.Path(statePath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val name = fs.listStatus(new org.apache.hadoop.fs.Path(statePath))
-        .map(_.getPath.getName).filter(_.startsWith("v"))
-        // seq is the digit run after "v" (live-sink names carry the
-        // incarnation between seq and batch id since r14)
-        .maxBy(_.stripPrefix("v").takeWhile(_.isDigit).toLong)
-      (name, spark.read.parquet(s"$statePath/$name").collect()
+    def latest =
+      (SnapshotLog.latestTag(spark, statePath).get, SnapshotLog.read(spark, statePath).collect()
         .map(r => (r.getLong(0), r.getLong(1)) -> ((r.getLong(2), r.getLong(3)))).toMap)
-    }
 
     // batch 0: both vectors land on label 0 → the q137 hand computation
     val b0 = Seq((101L, Array(0.8f, 0.2f)), (102L, Array(0.6f, 0.0f)))
       .toDF("vec_id", "embedding")
     StreamPipelines.kmeansUpdateIngestBatch(b0, "vec_id", "embedding", statePath, 100L)
     val (n1, s1) = latest
-    assert(n1 == "v1_b100")
+    assert(n1 == "batch-100")
     assert(s1((0L, 1L)) == ((8800L, 5L)) && s1((0L, 2L)) == ((400L, 5L)))
     assert(s1((1L, 1L)) == ((0L, 5L)))
 
     // replay the same batch id verbatim: version tag found → state unchanged
     StreamPipelines.kmeansUpdateIngestBatch(b0, "vec_id", "embedding", statePath, 100L)
-    assert(latest._1 == "v1_b100")
+    assert(latest._1 == "batch-100")
+    assert(SnapshotLog.versions(spark, statePath) == Seq(1, 2))
 
     // a NEW batch advances the chain from the updated state
     val b1 = Seq((103L, Array(0f, 1f))).toDF("vec_id", "embedding")
     StreamPipelines.kmeansUpdateIngestBatch(b1, "vec_id", "embedding", statePath, 101L)
     val (n2, s2) = latest
-    assert(n2 == "v2_b101")
+    assert(n2 == "batch-101")
     // label 1 at (0, 10000) with n=5 absorbs (0, 10000): mean unchanged, n=6
     assert(s2((1L, 1L)) == ((0L, 6L)) && s2((1L, 2L)) == ((10000L, 6L)))
     assert(s2((0L, 1L)) == ((8800L, 5L))) // untouched centroid passes through

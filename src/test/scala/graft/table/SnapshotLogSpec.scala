@@ -307,6 +307,27 @@ class SnapshotLogSpec extends SparkFunSuite {
     assert(rows(SnapshotLog.read(spark, path)) == Set(Row(3L, "c")))
   }
 
+  test("commitAppend onto a merge-on-read version is refused before writing a segment") {
+    // an append manifest carries no MergeSpec: had it committed, the read
+    // would union base and delta unfolded and (1, "a") would come back
+    val path = tmp()
+    SnapshotLog.commitReplace(Seq((1, "a"), (2, "b")).toDF("id", "v"), path)
+    SnapshotLog.commitDelta(Seq((1, "A")).toDF("id", "v"), path, SnapshotLog.MergeSpec(Seq("id")))
+    def segments = { val l = Files.list(Paths.get(path, "data")); try l.count() finally l.close() }
+    val segsBefore = segments
+    val e = intercept[IllegalArgumentException](
+      SnapshotLog.commitAppend(Seq((3, "c")).toDF("id", "v"), path))
+    assert(e.getMessage.contains("commitDelta") && e.getMessage.contains("compactLatest"),
+      e.getMessage)
+    assert(segments == segsBefore)
+    assert(SnapshotLog.versions(spark, path) == Seq(1, 2))
+    assert(rows(SnapshotLog.read(spark, path)) == Set(Row(1, "A"), Row(2, "b")))
+    // folded into a plain base first, the append lands
+    SnapshotLog.compactLatest(spark, path)
+    SnapshotLog.commitAppend(Seq((3, "c")).toDF("id", "v"), path)
+    assert(rows(SnapshotLog.read(spark, path)) == Set(Row(1, "A"), Row(2, "b"), Row(3, "c")))
+  }
+
   test("no Spark job runs while read builds its frame; results unchanged") {
     val spec = SnapshotLog.MergeSpec(Seq("id"), orderCol = Some("ts"))
     val mor = tmp()
