@@ -11,7 +11,7 @@ import java.sql.Timestamp
   * (SURVEY.md §3.1-§3.2): windowed gold aggregation, latest-wins order
   * upsert, CDC dims apply — each driven from a MemoryStream in micro-batch
   * chunks and reported as events/second end to end (including the
-  * foreachBatch merge + snapshot write for the stateful sinks).
+  * foreachBatch SnapshotLog commit for the stateful sinks).
   *
   * Context (BASELINE.md): the reference configures 50 events/sec for the
   * content generator, designs for 1k-10k events/sec, and caps micro-batches
@@ -105,12 +105,9 @@ object StreamBench {
     q1.stop()
 
     // -------------------------------------------------------------------
-    // Pipeline 2: orders upsert sink (latest-wins merge + snapshot swap)
-    val dir2 = scratchDir("upsert")
-    val in2  = MemoryStream[OrderEv]
-    val q2 = StreamPipelines.upsertSink(in2.toDF(), s"$dir2/gold", s"$dir2/ckpt",
-      Seq("user_id"), "ts", Seq("event_id"), Seq("event_type"), Seq("amount"),
-      Trigger.ProcessingTime(0)).start()
+    // Pipeline 2: orders upsert through the versioned merge-on-read sink
+    // — each micro-batch commits an O(batch) delta segment to the
+    // SnapshotLog (latest-wins reduce + tagged manifest commit).
     val statuses = Array("created", "paid", "shipped", "cancelled")
     def orderWave(n: Int, base: Long, seed: Int): Seq[OrderEv] = {
       val rnd = new scala.util.Random(seed)
@@ -121,42 +118,27 @@ object StreamBench {
           if (rnd.nextBoolean()) Some(rnd.nextInt(10000) / 100.0) else None)
       }
     }
-    in2.addData(orderWave(1000, 0L, -1)); q2.processAllAvailable()
     val upsertWaves = 5
     val upsertSize  = 5000 // the reference's maxOffsetsPerTrigger
+    val dir2 = scratchDir("upsert-mor")
+    val in2  = MemoryStream[OrderEv]
+    val q2 = StreamPipelines.upsertSinkVersioned(in2.toDF(), s"$dir2/gold", s"$dir2/ckpt",
+      Seq("user_id"), "ts", Seq("event_id"), Seq("event_type"), Seq("amount"),
+      Trigger.ProcessingTime(0)).start()
+    in2.addData(orderWave(1000, 0L, -1)); q2.processAllAvailable()
     val t2 = System.nanoTime()
     (0 until upsertWaves).foreach { w =>
       in2.addData(orderWave(upsertSize, 100000L + w * upsertSize, w))
       q2.processAllAvailable()
     }
-    val upsert_eps = (upsertWaves.toLong * upsertSize / ((System.nanoTime() - t2) / 1e9)).toLong
+    val upsert_mor_eps = (upsertWaves.toLong * upsertSize / ((System.nanoTime() - t2) / 1e9)).toLong
     q2.stop()
-
-    // -------------------------------------------------------------------
-    // Pipeline 2b: the same orders upsert through the VERSIONED
-    // merge-on-read sink — each micro-batch commits an O(batch) delta
-    // segment to the SnapshotLog instead of rewriting the gold table, so
-    // the delta vs upsertSink isolates what the manifest commit +
-    // time-travel history cost per event at the same batch shape.
-    val dir2b = scratchDir("upsert-mor")
-    val in2b  = MemoryStream[OrderEv]
-    val q2b = StreamPipelines.upsertSinkVersioned(in2b.toDF(), s"$dir2b/gold", s"$dir2b/ckpt",
-      Seq("user_id"), "ts", Seq("event_id"), Seq("event_type"), Seq("amount"),
-      Trigger.ProcessingTime(0)).start()
-    in2b.addData(orderWave(1000, 0L, -1)); q2b.processAllAvailable()
-    val t2b = System.nanoTime()
-    (0 until upsertWaves).foreach { w =>
-      in2b.addData(orderWave(upsertSize, 100000L + w * upsertSize, w))
-      q2b.processAllAvailable()
-    }
-    val upsert_mor_eps = (upsertWaves.toLong * upsertSize / ((System.nanoTime() - t2b) / 1e9)).toLong
-    q2b.stop()
 
     // -------------------------------------------------------------------
     // Pipeline 3: CDC dims apply (80/20 create/update + deletes)
     val dir3 = scratchDir("cdc")
     val in3  = MemoryStream[CdcEv]
-    val q3 = StreamPipelines.cdcSink(in3.toDF(), s"$dir3/dim", s"$dir3/ckpt",
+    val q3 = StreamPipelines.cdcSinkVersioned(in3.toDF(), s"$dir3/dim", s"$dir3/ckpt",
       Seq("user_id"), trigger = Trigger.ProcessingTime(0)).start()
     def cdcWave(n: Int, base: Long, seed: Int): Seq[CdcEv] = {
       val rnd = new scala.util.Random(seed)
@@ -726,7 +708,7 @@ object StreamBench {
     val att_eps = (attWaves.toLong * upsertSize / ((System.nanoTime() - tAtt) / 1e9)).toLong
     qAtt.stop()
 
-    println(s"""{"metric":"stream_throughput","unit":"events/sec","pipelines":{"gold_window_agg":$agg_eps,"orders_upsert":$upsert_eps,"orders_upsert_versioned":$upsert_mor_eps,"cdc_dims":$cdc_eps,"window_sketch_telemetry":$sketch_eps,"priority_sample":$prio_eps,"cms_telemetry_docs":$cms_eps,"drift_telemetry_docs":$drift_eps,"ingest_funnel_docs":$funnel_eps,"phrase_telemetry_docs":$phrase_eps,"knn_graph_ingest_vecs":$knn_eps,"simhash_dedup_ingest_docs":$simdedup_eps,"dhash_dedup_ingest_payloads":$dhdedup_eps,"video_dhash_ingest_containers":$vdhdedup_eps,"audio_chroma_ingest_containers":$acdedup_eps,"conformal_gate_docs":$cgate_eps,"graph_ann_serve_queries":$ann_qps,"transition_extract_events":$trans_eps,"change_point_events":$ph_eps,"hdr_telemetry_events":$hdr_eps,"audience_sketch_members":$aud_eps,"ab_telemetry_events":$ab_eps,"affinity_telemetry_events":$aff_eps,"attribution_telemetry_events":$att_eps},"reference":{"configured":50,"design_target_max":10000,"max_offsets_per_trigger":5000}}""")
+    println(s"""{"metric":"stream_throughput","unit":"events/sec","pipelines":{"gold_window_agg":$agg_eps,"orders_upsert_versioned":$upsert_mor_eps,"cdc_dims":$cdc_eps,"window_sketch_telemetry":$sketch_eps,"priority_sample":$prio_eps,"cms_telemetry_docs":$cms_eps,"drift_telemetry_docs":$drift_eps,"ingest_funnel_docs":$funnel_eps,"phrase_telemetry_docs":$phrase_eps,"knn_graph_ingest_vecs":$knn_eps,"simhash_dedup_ingest_docs":$simdedup_eps,"dhash_dedup_ingest_payloads":$dhdedup_eps,"video_dhash_ingest_containers":$vdhdedup_eps,"audio_chroma_ingest_containers":$acdedup_eps,"conformal_gate_docs":$cgate_eps,"graph_ann_serve_queries":$ann_qps,"transition_extract_events":$trans_eps,"change_point_events":$ph_eps,"hdr_telemetry_events":$hdr_eps,"audience_sketch_members":$aud_eps,"ab_telemetry_events":$ab_eps,"affinity_telemetry_events":$aff_eps,"attribution_telemetry_events":$att_eps},"reference":{"configured":50,"design_target_max":10000,"max_offsets_per_trigger":5000}}""")
     spark.stop()
     sweepScratch()
   }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.ops.LatestWins
 import graft.table.SnapshotLog
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -12,8 +11,10 @@ import org.apache.spark.sql.types.StructType
   * (SURVEY.md §2.9 T1-T10; reference src/spark/streaming_job.py,
   * stream_content.py, stream_dims.py) — re-expressed engine-natively:
   * file/memory sources instead of Kafka (same `readStream` surface),
-  * parquet snapshots instead of Iceberg, `foreachBatch` + LatestWins.merge
-  * instead of MERGE INTO.
+  * [[graft.table.SnapshotLog]] tables instead of Iceberg, `foreachBatch`
+  * + merge-on-read deltas instead of MERGE INTO. Every sink commits one
+  * tagged SnapshotLog version per micro-batch and skips a batch whose tag
+  * is already in the log.
   *
   * Scale notes: every stage is bounded-state. The windowed aggregate keeps
   * state only until the watermark passes (T9 late-data policy); the upsert
@@ -633,14 +634,9 @@ object StreamPipelines {
       alphaPct: Long = 10L,
       fallbackQhatPpm: Long = 1000001L,
       keep: Seq[String] = Nil,
-      incarnation: Option[String] = None): Unit = {
-    batch.persist()
-    try {
-      if (batch.isEmpty) return
-      val spark = batch.sparkSession
-      val tag = versionedBatchTag(incarnation, batchId)
-      if (SnapshotLog.tags(spark, outPath).contains(tag)) return
-      val qhat = latestOf(spark, s"$statePath/qhat")
+      incarnation: Option[String] = None): Unit =
+    onceTagged(batch, outPath, batchId, incarnation) { tag =>
+      val qhat = latestOf(batch.sparkSession, s"$statePath/qhat")
         .flatMap(_.filter(col("alpha_pct") === alphaPct)
           .select(col("qhat_ppm")).collect().headOption.map(_.getLong(0)))
         .getOrElse(fallbackQhatPpm)
@@ -649,11 +645,7 @@ object StreamPipelines {
           .withColumn("qhat_ppm_used", lit(qhat)),
         outPath, Some(tag))
       ()
-    } finally {
-      batch.unpersist()
-      ()
     }
-  }
 
   /** [[conformalGateIngestBatch]] as a foreachBatch sink — the refresh
     * loop's consumer half: [[conformalRefreshIngestBatch]] (driven by a
@@ -778,35 +770,6 @@ object StreamPipelines {
         col(rightTs) <= col(leftTs) + expr(s"INTERVAL $within"))
   }
 
-  /** T6/J1 — the foreachBatch upsert sink: each micro-batch is reduced to
-    * latest-state-per-key, merged into the parquet snapshot at `targetPath`
-    * with per-column coalesce carry-forward, and the snapshot is atomically
-    * swapped (write-new + rename; a table format would give a real commit
-    * log — the merge semantics are identical).
-    *
-    * Replay-safe: merging the same batch twice converges to the same state
-    * (latest-wins is idempotent), matching the reference's exactly-once-ish
-    * posture (T9: Bronze replay is the recovery path).
-    */
-  def upsertSink(
-      stream: DataFrame,
-      targetPath: String,
-      checkpointDir: String,
-      key: Seq[String],
-      orderCol: String,
-      tieBreak: Seq[String],
-      denseCols: Seq[String],
-      sparseCols: Seq[String],
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds")
-  ): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertBatch(batch, targetPath, key, orderCol, tieBreak, denseCols, sparseCols)
-      }
-
   /** Streaming twin of the v2 curation pipeline's semantic tier (q112) —
     * [[graft.ext.VectorSearch.semanticDedupIncremental]] run per
     * micro-batch against a PERSISTED cluster index: arriving embeddings
@@ -817,8 +780,9 @@ object StreamPipelines {
     * corpus-sized index streams, so per-batch latency is bounded by batch
     * size times cluster occupancy, not corpus history.
     *
-    * Replay-safe: a re-delivered batch finds its own prior admits in the
-    * index (anti join on id) and appends nothing — the index converges.
+    * Replay-safe twice over: a re-delivered batch finds its tag in the
+    * index's log and commits nothing, and an id already indexed is
+    * dropped by the anti join (the index's dedup rule).
     */
   def semanticDedupSink(
       stream: DataFrame,
@@ -834,13 +798,15 @@ object StreamPipelines {
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        semanticDedupIngestBatch(batch, idCol, vecCol, centroids, indexPath, threshold)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        semanticDedupIngestBatch(batch, idCol, vecCol, centroids, indexPath,
+          batchId, threshold, incarnation = streamIncarnation(batch.sparkSession))
       }
 
   /** The batch body of [[semanticDedupSink]], callable directly (and from
-    * tests): admit against the index at `indexPath` (absent = empty) and
-    * append the admitted (id, cluster, vec) rows.
+    * tests): admit against the latest SnapshotLog index at `indexPath`
+    * (none yet = empty) and append the admitted (id, cluster, vec) rows
+    * as one segment tagged with the incarnation-bound batch tag.
     */
   def semanticDedupIngestBatch(
       batch: DataFrame,
@@ -848,24 +814,18 @@ object StreamPipelines {
       vecCol: String,
       centroids: DataFrame,
       indexPath: String,
-      threshold: Double
-  ): Unit = {
-    batch.persist()
-    try {
-      if (batch.isEmpty) return
-      val spark = batch.sparkSession
-      val index =
-        if (pathExists(spark, indexPath)) spark.read.parquet(indexPath)
-        else batch.select(col(idCol), lit(0L).as("cluster"),
-          graft.ext.VectorSearch.asDouble(col(vecCol)).as("vec")).limit(0)
-      val admitted = graft.ext.VectorSearch.semanticDedupIncremental(
-        batch, index, idCol, vecCol, centroids, threshold)
-      admitted.write.mode("append").parquet(indexPath)
-    } finally {
-      batch.unpersist()
+      batchId: Long,
+      threshold: Double,
+      incarnation: Option[String] = None
+  ): Unit =
+    onceTagged(batch, indexPath, batchId, incarnation) { tag =>
+      val index = latestOf(batch.sparkSession, indexPath).getOrElse(
+        batch.select(col(idCol), lit(0L).as("cluster"),
+          graft.ext.VectorSearch.asDouble(col(vecCol)).as("vec")).limit(0))
+      SnapshotLog.commitAppend(graft.ext.VectorSearch.semanticDedupIncremental(
+        batch, index, idCol, vecCol, centroids, threshold), indexPath, Some(tag))
       ()
     }
-  }
 
   /** Streaming twin of q136 — [[graft.ext.VectorSearch.knnGraphIncremental]]
     * run per micro-batch against a PERSISTED bucket-keyed vector index:
@@ -876,9 +836,9 @@ object StreamPipelines {
     * corpus-sized index streams — per-batch latency is bounded by batch
     * size × bucket occupancy, not index history.
     *
-    * Replay-safe: a re-delivered batch has no fresh vectors after the id
-    * anti join, so it appends neither edges nor index rows — both
-    * artifacts converge.
+    * Replay-safe: both artifacts are SnapshotLog tables committed under
+    * the incarnation-bound batch tag (see [[knnGraphIngestBatch]]), and an
+    * id already indexed emits no edges (the id anti join).
     */
   def knnGraphSink(
       stream: DataFrame,
@@ -897,22 +857,16 @@ object StreamPipelines {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         knnGraphIngestBatch(batch, idCol, vecCol, k, bits, indexPath,
-          edgesPath, batchId)
+          edgesPath, batchId, incarnation = streamIncarnation(batch.sparkSession))
       }
 
   /** The batch body of [[knnGraphSink]], callable directly (and from
-    * tests): emit the batch's adjacency updates against the index at
-    * `indexPath` (absent = empty) to `edgesPath`, then append the fresh
-    * vectors to the index.
-    *
-    * Commit order makes the INDEX append the idempotence anchor (it
-    * commits LAST), and the edge log is idempotent on its own: edges
-    * land under `edgesPath/batch_id=<batchId>/` with OVERWRITE, so a
-    * replayed attempt rewrites the identical partition instead of
-    * appending duplicates. A replay arriving AFTER the index committed
-    * sees no fresh vectors and exits before touching the log (the
-    * already-written partition survives) — every failure point
-    * converges.
+    * tests): emit the batch's adjacency updates against the latest index
+    * at `indexPath` (none yet = empty), append them to the edge log at
+    * `edgesPath` with a `batch_id` column, then append the fresh vectors
+    * to the index. Both are SnapshotLog appends tagged with the
+    * incarnation-bound batch tag, committed in the order of
+    * [[knnGraphAdjacencyIngestBatch]].
     */
   def knnGraphIngestBatch(
       batch: DataFrame,
@@ -922,50 +876,21 @@ object StreamPipelines {
       bits: Int,
       indexPath: String,
       edgesPath: String,
-      batchId: Long
-  ): Unit = {
-    batch.persist()
-    try {
-      if (batch.isEmpty) return
-      val spark = batch.sparkSession
-      val keyed = graft.ext.VectorSearch.knnGraphIndex(batch, idCol, vecCol, bits)
-      val index =
-        if (pathExists(spark, indexPath)) spark.read.parquet(indexPath)
-        else keyed.limit(0)
-      // the fresh set is computed once and persisted: the edge emit reads
-      // it up to three times (out probe, in build, union) and the index
-      // append once more
-      val fresh = keyed.join(index.select(col(idCol)), Seq(idCol), "left_anti")
-        .persist()
-      try {
-        if (fresh.isEmpty) return
-        val edges = graft.ext.VectorSearch.knnGraphIncrementalFromFresh(
-          fresh, index, idCol, k)
-        edges.write.mode("overwrite").parquet(s"$edgesPath/batch_id=$batchId")
-        fresh.write.mode("append").parquet(indexPath)
-      } finally {
-        fresh.unpersist()
-        ()
-      }
-    } finally {
-      batch.unpersist()
-      ()
-    }
-  }
+      batchId: Long,
+      incarnation: Option[String] = None
+  ): Unit =
+    knnGraphCommit(batch, idCol, vecCol, k, bits, indexPath, edgesPath, None,
+      batchId, incarnation)
 
   /** [[knnGraphSink]] extended with a MAINTAINED adjacency snapshot —
     * the streaming form of the q287 composition: besides the append-only
     * edge log and index, each micro-batch folds its incremental edges
     * into the stored `(id, nbr_id, sim_bp)` adjacency via the monotone
     * top-k merge ([[graft.ext.VectorSearch.mergeAdjacency]]) and commits
-    * the result with [[upsertBatch]]'s atomic-swap write. A beam search
-    * ([[graft.ext.VectorSearch.graphSearchCurve]]) can walk the snapshot
-    * at any time — the index-maintenance → search loop stays closed
-    * while the stream runs.
-    *
-    * Replay-safe end to end: a re-delivered batch has no fresh vectors,
-    * so the edge emit is empty and the adjacency merge is the identity —
-    * all three artifacts converge.
+    * the result as a new SnapshotLog version. A beam search
+    * ([[graft.ext.VectorSearch.graphSearchCurve]]) can walk the latest
+    * version at any time — the index-maintenance → search loop stays
+    * closed while the stream runs.
     */
   def knnGraphAdjacencySink(
       stream: DataFrame,
@@ -985,20 +910,20 @@ object StreamPipelines {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         knnGraphAdjacencyIngestBatch(batch, idCol, vecCol, k, bits,
-          indexPath, edgesPath, adjacencyPath, batchId)
+          indexPath, edgesPath, adjacencyPath, batchId,
+          incarnation = streamIncarnation(batch.sparkSession))
       }
 
   /** The batch body of [[knnGraphAdjacencySink]], callable directly (and
     * from tests).
     *
-    * Commit order (edge log → adjacency swap → index append) makes the
-    * index the idempotence anchor, and every earlier artifact replays
-    * idempotently: the edge log writes `edgesPath/batch_id=<batchId>/`
-    * with OVERWRITE (a re-run rewrites the identical partition — never
-    * duplicate rows), the adjacency swap is a monotone merge (folding
-    * the same edges twice is the identity), and a replay arriving AFTER
-    * the index committed sees no fresh vectors and exits before touching
-    * anything — all three artifacts converge from any failure point.
+    * Three SnapshotLog commits, each tagged with the incarnation-bound
+    * batch tag: the edge log append (`(id, nbr_id, sim_bp, batch_id)`),
+    * the adjacency replace, then the index append. The index commits last,
+    * so its tag marks the batch done and a replay finding it is a no-op. A
+    * replay after a crash part-way finds the index unchanged, recomputes
+    * the same fresh set and edges, and commits only the tables that lack
+    * the tag (the [[refreshFold]] rule).
     */
   def knnGraphAdjacencyIngestBatch(
       batch: DataFrame,
@@ -1009,61 +934,74 @@ object StreamPipelines {
       indexPath: String,
       edgesPath: String,
       adjacencyPath: String,
-      batchId: Long
-  ): Unit = {
-    batch.persist()
-    try {
-      if (batch.isEmpty) return
+      batchId: Long,
+      incarnation: Option[String] = None
+  ): Unit =
+    knnGraphCommit(batch, idCol, vecCol, k, bits, indexPath, edgesPath,
+      Some(adjacencyPath), batchId, incarnation)
+
+  /** The shared body of [[knnGraphIngestBatch]] and
+    * [[knnGraphAdjacencyIngestBatch]]: with an adjacency table the edge
+    * log keeps only `(id, nbr_id, sim_bp)`, as the adjacency does.
+    */
+  private def knnGraphCommit(batch: DataFrame, idCol: String, vecCol: String,
+                             k: Int, bits: Int, indexPath: String, edgesPath: String,
+                             adjacencyPath: Option[String], batchId: Long,
+                             incarnation: Option[String]): Unit =
+    onceTagged(batch, indexPath, batchId, incarnation) { tag =>
       val spark = batch.sparkSession
       val keyed = graft.ext.VectorSearch.knnGraphIndex(batch, idCol, vecCol, bits)
-      val index =
-        if (pathExists(spark, indexPath)) spark.read.parquet(indexPath)
-        else keyed.limit(0)
+      val index = latestOf(spark, indexPath).getOrElse(keyed.limit(0))
+      // the fresh set is computed once and persisted: the edge emit reads
+      // it up to three times (out probe, in build, union) and the index
+      // append once more
       val fresh = keyed.join(index.select(col(idCol)), Seq(idCol), "left_anti")
         .persist()
       try {
-        if (fresh.isEmpty) return
-        val edges = graft.ext.VectorSearch.knnGraphIncrementalFromFresh(
+        if (!fresh.isEmpty) {
+          val all = graft.ext.VectorSearch.knnGraphIncrementalFromFresh(
             fresh, index, idCol, k)
-          .select(col("id"), col("nbr_id"), col("sim_bp")).persist()
-        try {
-          edges.count()
-          edges.write.mode("overwrite").parquet(s"$edgesPath/batch_id=$batchId")
-          val stored =
-            if (pathExists(spark, adjacencyPath)) spark.read.parquet(adjacencyPath)
-            else edges.limit(0)
-          val merged = graft.ext.VectorSearch.mergeAdjacency(stored, edges, k)
-          atomicSwapWrite(merged, adjacencyPath)
-          fresh.write.mode("append").parquet(indexPath)
-        } finally {
-          edges.unpersist()
-          ()
+          val edges = adjacencyPath.fold(all)(_ =>
+            all.select(col("id"), col("nbr_id"), col("sim_bp"))).persist()
+          try {
+            def lacksTag(path: String) = !SnapshotLog.tags(spark, path).contains(tag)
+            if (lacksTag(edgesPath))
+              SnapshotLog.commitAppend(edges.withColumn("batch_id", lit(batchId)),
+                edgesPath, Some(tag))
+            adjacencyPath.filter(lacksTag).foreach { p =>
+              SnapshotLog.commitReplace(graft.ext.VectorSearch.mergeAdjacency(
+                latestOf(spark, p).getOrElse(edges.limit(0)), edges, k), p, Some(tag))
+            }
+            SnapshotLog.commitAppend(fresh, indexPath, Some(tag))
+          } finally {
+            edges.unpersist()
+            ()
+          }
         }
       } finally {
         fresh.unpersist()
         ()
       }
-    } finally {
-      batch.unpersist()
-      ()
     }
-  }
 
   /** Maintained per-key audience sketch — the streaming form of the q289
     * theta set-op surface: each micro-batch's (key, member) rows fold
-    * into a stored KMV sketch snapshot
+    * into the latest KMV sketch version
     * ([[graft.ext.ThetaSketch.mergeSketches]]: union-then-truncate, the
-    * exactly-mergeable bottom-k), committed with [[atomicSwapWrite]].
-    * An overlap matrix ([[graft.ext.ThetaSketch.overlapEstimates]]) is
-    * computable from the snapshot at any time without touching the
-    * member history — which is the point: the raw per-key member sets
-    * are never stored or shuffled, only O(k) rows per key.
+    * exactly-mergeable bottom-k), committed with
+    * [[graft.table.SnapshotLog.commitReplace]] under the incarnation-bound
+    * batch tag. An overlap matrix
+    * ([[graft.ext.ThetaSketch.overlapEstimates]]) is computable from the
+    * snapshot at any time without touching the member history — which is
+    * the point: the raw per-key member sets are never stored or shuffled,
+    * only O(k) rows per key.
     *
-    * Replay-convergent by construction: re-delivered members hash to
-    * values already in (or above) the sketch, so the merge is the
-    * identity, and `mergeSketches(kmin(A), kmin(B)) = kmin(A ∪ B)`
-    * makes the snapshot equal the batch sketch over all data ever seen
-    * regardless of batch boundaries.
+    * A replayed batch finds its tag and commits nothing; a re-delivered
+    * member under a new batch hashes to a value already in (or above) the
+    * sketch, so the merge is the identity, and
+    * `mergeSketches(kmin(A), kmin(B)) = kmin(A ∪ B)` makes the snapshot
+    * equal the batch sketch over all data ever seen regardless of batch
+    * boundaries.
     */
   def audienceSketchSink(
       stream: DataFrame,
@@ -1078,8 +1016,9 @@ object StreamPipelines {
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        audienceSketchIngestBatch(batch, keyCol, memberCol, k, sketchPath)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        audienceSketchIngestBatch(batch, keyCol, memberCol, k, sketchPath,
+          batchId, incarnation = streamIncarnation(batch.sparkSession))
       }
 
   /** The batch body of [[audienceSketchSink]], callable directly (and
@@ -1090,18 +1029,18 @@ object StreamPipelines {
       keyCol: String,
       memberCol: String,
       k: Int,
-      sketchPath: String
-  ): Unit = {
-    if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    val fresh = graft.ext.ThetaSketch.kminSketch(batch, keyCol, memberCol, k)
-    val merged =
-      if (pathExists(spark, sketchPath))
-        graft.ext.ThetaSketch.mergeSketches(
-          spark.read.parquet(sketchPath), fresh, k)
-      else fresh
-    atomicSwapWrite(merged, sketchPath)
-  }
+      sketchPath: String,
+      batchId: Long,
+      incarnation: Option[String] = None
+  ): Unit =
+    onceTagged(batch, sketchPath, batchId, incarnation) { tag =>
+      val fresh = graft.ext.ThetaSketch.kminSketch(batch, keyCol, memberCol, k)
+      SnapshotLog.commitReplace(
+        latestOf(batch.sparkSession, sketchPath)
+          .fold(fresh)(graft.ext.ThetaSketch.mergeSketches(_, fresh, k)),
+        sketchPath, Some(tag))
+      ()
+    }
 
   /** Seed the versioned quantizer state behind [[kmeansUpdateSink]]:
     * commits `(label, dim, c_bp, n)` as the first version of the
@@ -1127,12 +1066,10 @@ object StreamPipelines {
     * [[graft.ext.VectorSearch.kmeansUpdateBatch]], and commits the result
     * as the next SnapshotLog version tagged with the micro-batch.
     *
-    * Unlike the append-only sinks ([[semanticDedupSink]],
-    * [[knnGraphSink]]), a running-mean update is NOT naturally
-    * replay-idempotent — re-applying a batch double-counts it — so
-    * idempotence is earned the versioned-upsert way (the S7 batch-id-tag
-    * convention): a replayed batch id finds its own version tag already
-    * present and skips. Versions are tiny (k × dims rows), so the log is
+    * Unlike the dedup indexes' id anti join, a running-mean update has
+    * no dedup rule of its own — re-applying a batch double-counts it — so
+    * the batch tag alone makes it exactly-once: a replayed batch id finds
+    * its own version tag already present and skips. Versions are tiny (k × dims rows), so the log is
     * the quantizer's time-travel history for free.
     */
   def kmeansUpdateSink(
@@ -1161,16 +1098,11 @@ object StreamPipelines {
     */
   def kmeansUpdateIngestBatch(batch: DataFrame, idCol: String, vecCol: String,
                               statePath: String, batchId: Long,
-                              incarnation: Option[String] = None): Unit = {
-    batch.persist()
-    try {
-      if (batch.isEmpty) return
-      val spark = batch.sparkSession
-      val tag = versionedBatchTag(incarnation, batchId)
-      if (SnapshotLog.tags(spark, statePath).contains(tag))
-        return // replayed batch: no-op
-      val state = latestOf(spark, statePath).getOrElse(throw new IllegalArgumentException(
-        s"$statePath has no seeded state — call seedKmeansState first"))
+                              incarnation: Option[String] = None): Unit =
+    onceTagged(batch, statePath, batchId, incarnation) { tag =>
+      val state = latestOf(batch.sparkSession, statePath).getOrElse(
+        throw new IllegalArgumentException(
+          s"$statePath has no seeded state — call seedKmeansState first"))
       SnapshotLog.commitReplace(
         graft.ext.VectorSearch.kmeansUpdateBatch(
           batch, idCol, vecCol,
@@ -1178,54 +1110,15 @@ object StreamPipelines {
           state.select(col("label"), col("n")).distinct()),
         statePath, Some(tag))
       ()
-    } finally {
-      batch.unpersist()
-      ()
     }
-  }
 
-  /** The batch body of [[upsertSink]], callable directly (and from tests). */
-  def upsertBatch(
-      batch: DataFrame,
-      targetPath: String,
-      key: Seq[String],
-      orderCol: String,
-      tieBreak: Seq[String],
-      denseCols: Seq[String],
-      sparseCols: Seq[String]
-  ): Unit = {
-    // cache: the batch is consumed by two actions (emptiness gate + merge
-    // write) — same reason the reference caches around its dual writes
-    // (streaming_job.py:75, SURVEY.md S11)
-    batch.persist()
-    try {
-      if (batch.isEmpty) return
-      val spark = batch.sparkSession
-      val reduced = LatestWins.latestState(
-        batch, key, orderCol, tieBreak, denseCols, sparseCols, maxOrderAlias = "last_seen")
-      val merged =
-        if (pathExists(spark, targetPath)) {
-          val target = spark.read.parquet(targetPath)
-          LatestWins.merge(target, reduced, key, coalesceCols = sparseCols)
-        } else reduced
-      atomicSwapWrite(merged, targetPath)
-    } finally {
-      batch.unpersist()
-      ()
-    }
-  }
-
-  /** [[upsertSink]] committing through [[graft.table.SnapshotLog]] instead
-    * of a bare swap: every micro-batch's merge becomes a table VERSION, so
-    * the gold state has history (time travel to any batch boundary),
-    * `$snapshots` metadata, and expire/GC maintenance — the shape the
-    * reference gets from Iceberg's merge-on-read commits
-    * (streaming_job.py:92-155 + compact_cold_data.py:66-92).
-    *
-    * Replay-idempotent via the manifest tag: each version is tagged with
-    * its micro-batch id, and a re-delivered batch (crash after commit,
-    * before the checkpoint offset write) is detected and skipped — one
-    * version per batch boundary, exactly once.
+  /** T6/J1 — the foreachBatch upsert sink committing through
+    * [[graft.table.SnapshotLog]]: every micro-batch's merge becomes a
+    * table VERSION, so the gold state has history (time travel to any
+    * batch boundary), `$snapshots` metadata, and expire/GC maintenance —
+    * the shape the reference gets from Iceberg's merge-on-read commits
+    * (streaming_job.py:92-155 + compact_cold_data.py:66-92). See
+    * [[upsertBatch]].
     */
   def upsertSinkVersioned(
       stream: DataFrame,
@@ -1243,64 +1136,73 @@ object StreamPipelines {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val tag   = versionedBatchTag(streamIncarnation(spark), batchId)
-        // replayed batch (restart between commit and checkpoint) → no-op.
-        // Scans ALL retained tags, not just the latest: a compaction commit
-        // landing inside that window would otherwise mask the batch's tag
-        // and let the replay re-merge as a spurious extra version.
-        if (!SnapshotLog.tags(spark, targetPath).contains(tag)) {
-          batch.persist()
-          try {
-            if (!batch.isEmpty) {
-              val reduced = LatestWins.latestState(
-                batch, key, orderCol, tieBreak, denseCols, sparseCols, maxOrderAlias = "last_seen")
-              // merge-on-read (reference streaming_job.py:55-60): after the
-              // first base version, each micro-batch commits ONLY its own
-              // reduced rows as a delta segment — O(batch) write cost, not
-              // O(table); SnapshotLog.read folds latest-wins by
-              // (last_seen, batch) with the sparse-column coalesce carry,
-              // and compactLatest folds deltas back into a base.
-              SnapshotLog.latestVersion(spark, targetPath) match {
-                case Some(_) =>
-                  SnapshotLog.commitDelta(reduced, targetPath,
-                    SnapshotLog.MergeSpec(
-                      key, carryCols = sparseCols, orderCol = Some("last_seen")),
-                    Some(tag))
-                case None =>
-                  SnapshotLog.commitReplace(reduced, targetPath, Some(tag))
-              }
-              ()
-            }
-          } finally { batch.unpersist(); () }
-        }
+        upsertBatch(batch, targetPath, key, orderCol, tieBreak, denseCols,
+          sparseCols, batchId, streamIncarnation(batch.sparkSession))
       }
 
-  /** The streaming wrapper for [[applyCdcBatch]] — the dims pipeline
-    * (reference stream_dims.py:171-191): each micro-batch of CDC envelopes
-    * is applied to the dimension snapshot with latest-wins + deletes.
+  /** The batch body of [[upsertSinkVersioned]], callable directly (and
+    * from tests): the batch is reduced to latest-state-per-key (the
+    * reference's "minimize MERGE overhead" rewrite, W1) and committed as
+    * the table's first version or as a merge-on-read delta with per-column
+    * coalesce carry-forward of `sparseCols`.
+    *
+    * Replay-idempotent via the manifest tag: each version is tagged with
+    * the incarnation-bound batch tag, and a re-delivered batch (crash after
+    * commit, before the checkpoint offset write) is detected and skipped —
+    * one version per batch boundary, exactly once.
     */
-  def cdcSink(
-      stream: DataFrame,
+  def upsertBatch(
+      batch: DataFrame,
       targetPath: String,
-      checkpointDir: String,
       key: Seq[String],
-      tsCol: String = "ts_ms",
-      trigger: Trigger = Trigger.ProcessingTime("1 minute")
-  ): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyCdcBatch(batch, targetPath, key, tsCol)
-      }
+      orderCol: String,
+      tieBreak: Seq[String],
+      denseCols: Seq[String],
+      sparseCols: Seq[String],
+      batchId: Long,
+      incarnation: Option[String] = None
+  ): Unit = {
+    val spark = batch.sparkSession
+    val tag   = versionedBatchTag(incarnation, batchId)
+    // replayed batch (restart between commit and checkpoint) → no-op.
+    // Scans ALL retained tags, not just the latest: a compaction commit
+    // landing inside that window would otherwise mask the batch's tag
+    // and let the replay re-merge as a spurious extra version.
+    if (!SnapshotLog.tags(spark, targetPath).contains(tag)) {
+      // cache: the batch is consumed by two actions (emptiness gate +
+      // delta write) — same reason the reference caches around its dual
+      // writes (streaming_job.py:75, SURVEY.md S11)
+      batch.persist()
+      try {
+        if (!batch.isEmpty) {
+          val reduced = LatestWins.latestState(
+            batch, key, orderCol, tieBreak, denseCols, sparseCols, maxOrderAlias = "last_seen")
+          // merge-on-read (reference streaming_job.py:55-60): after the
+          // first base version, each micro-batch commits ONLY its own
+          // reduced rows as a delta segment — O(batch) write cost, not
+          // O(table); SnapshotLog.read folds latest-wins by
+          // (last_seen, batch) with the sparse-column coalesce carry,
+          // and compactLatest folds deltas back into a base.
+          SnapshotLog.latestVersion(spark, targetPath) match {
+            case Some(_) =>
+              SnapshotLog.commitDelta(reduced, targetPath,
+                SnapshotLog.MergeSpec(
+                  key, carryCols = sparseCols, orderCol = Some("last_seen")),
+                Some(tag))
+            case None =>
+              SnapshotLog.commitReplace(reduced, targetPath, Some(tag))
+          }
+          ()
+        }
+      } finally { batch.unpersist(); () }
+    }
+  }
 
-  /** [[cdcSink]] committing through [[graft.table.SnapshotLog]]: every
-    * CDC micro-batch application becomes a dimension-table VERSION
-    * (time-travelable SCD1 — "what did dim_users look like at batch N"),
-    * batch-id tagged for replay idempotence like
-    * [[upsertSinkVersioned]].
+  /** The dims pipeline (reference stream_dims.py:171-191) committing
+    * through [[graft.table.SnapshotLog]]: every CDC micro-batch
+    * application becomes a dimension-table VERSION (time-travelable SCD1 —
+    * "what did dim_users look like at batch N"), tagged for replay
+    * idempotence like [[upsertSinkVersioned]]. See [[applyCdcBatch]].
     */
   def cdcSinkVersioned(
       stream: DataFrame,
@@ -1315,82 +1217,54 @@ object StreamPipelines {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val tag   = versionedBatchTag(streamIncarnation(spark), batchId)
-        if (!SnapshotLog.tags(spark, targetPath).contains(tag) &&
-            !batch.isEmpty) {
-          val latest = LatestWins.latestRow(batch, key, tsCol, Nil)
-          // merge-on-read CDC apply (reference stream_dims.py:26-29): after
-          // the base snapshot, each batch commits only its own envelopes
-          // with a delete marker; the read-time fold ranks by (ts, batch)
-          // so a stale delete never beats a newer upsert — the same
-          // ts-ordered semantics applyCdcBatch implements copy-on-write.
-          SnapshotLog.latestVersion(spark, targetPath) match {
-            case Some(_) =>
-              SnapshotLog.commitDelta(
-                latest.withColumn("is_delete", col("op") === "d").drop("op"),
-                targetPath,
-                SnapshotLog.MergeSpec(
-                  key, deleteCol = Some("is_delete"), orderCol = Some(tsCol)),
-                Some(tag))
-            case None =>
-              SnapshotLog.commitReplace(
-                latest.filter(col("op") =!= "d").drop("op"), targetPath, Some(tag))
-          }
-          ()
-        }
+        applyCdcBatch(batch, targetPath, key, batchId, tsCol,
+          streamIncarnation(batch.sparkSession))
       }
 
-  /** T10 — CDC apply (Debezium-style envelope): keep creates/updates,
-    * latest per key by `tsCol` ACROSS batches — the snapshot keeps each
-    * row's `tsCol`, and an envelope older than the stored state is a no-op
+  /** T10 — CDC apply (Debezium-style envelope), the batch body of
+    * [[cdcSinkVersioned]]: keep creates/updates, latest per key by
+    * `tsCol` ACROSS batches. After the base version each batch commits
+    * only its own latest-per-key envelopes with a delete marker as a
+    * merge-on-read delta, and the read-time fold ranks by (`tsCol`,
+    * batch): an envelope older than the stored state is a no-op
     * (replayed/backfilled topics deliver out of order; batch-local dedup
-    * alone would let stale envelopes overwrite newer state). Deletes ('d')
-    * remove the key, also ts-ordered: an old delete does not beat a newer
-    * upsert. Equal `tsCol` between snapshot and batch resolves to the
-    * batch (source precedence); ties WITHIN a batch need `tieBreak` to be
-    * total. Reference stream_dims.py:65-141.
+    * alone would let stale envelopes overwrite newer state), and deletes
+    * ('d') remove the key, also ts-ordered — an old delete does not beat
+    * a newer upsert. Equal `tsCol` resolves to the later batch. A batch
+    * whose incarnation-bound tag is committed already is skipped.
+    * Reference stream_dims.py:65-141.
     */
   def applyCdcBatch(
       batch: DataFrame,
       targetPath: String,
       key: Seq[String],
+      batchId: Long,
       tsCol: String = "ts_ms",
-      tieBreak: Seq[String] = Nil
+      incarnation: Option[String] = None
   ): Unit = {
-    if (batch.isEmpty) return
-    val spark  = batch.sparkSession
-    val latest = LatestWins.latestRow(batch, key, tsCol, tieBreak)
-    val resolved =
-      if (pathExists(spark, targetPath)) {
-        // snapshot rows re-enter as 'u' envelopes with source precedence 0;
-        // latest-wins over the union is the ts-ordered CDC apply
-        val target = spark.read.parquet(targetPath)
-          .withColumn("op", lit("u")).withColumn("__prec", lit(0))
-        val combined = target.unionByName(latest.withColumn("__prec", lit(1)))
-        LatestWins.latestRow(combined, key, tsCol, tieBreak :+ "__prec").drop("__prec")
-      } else latest
-    atomicSwapWrite(resolved.filter(col("op") =!= "d").drop("op"), targetPath)
-  }
-
-  /** Write a new snapshot beside the target, then swap via rename — the
-    * plain-parquet stand-in for a table-format commit. Reader races between
-    * delete and rename are the documented gap a real format closes.
-    */
-  private[graft] def atomicSwapWrite(df: DataFrame, targetPath: String): Unit = {
-    val spark = df.sparkSession
-    val fs    = new Path(targetPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp   = new Path(targetPath + ".tmp-" + java.util.UUID.randomUUID().toString.take(8))
-    df.write.mode("overwrite").parquet(tmp.toString)
-    val target = new Path(targetPath)
-    if (fs.exists(target)) fs.delete(target, true)
-    fs.rename(tmp, target)
-    ()
-  }
-
-  private def pathExists(spark: SparkSession, p: String): Boolean = {
-    val path = new Path(p)
-    path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
+    val spark = batch.sparkSession
+    val tag   = versionedBatchTag(incarnation, batchId)
+    if (!SnapshotLog.tags(spark, targetPath).contains(tag) &&
+        !batch.isEmpty) {
+      val latest = LatestWins.latestRow(batch, key, tsCol, Nil)
+      // merge-on-read CDC apply (reference stream_dims.py:26-29): after
+      // the base snapshot, each batch commits only its own envelopes
+      // with a delete marker; the read-time fold ranks by (ts, batch)
+      // so a stale delete never beats a newer upsert.
+      SnapshotLog.latestVersion(spark, targetPath) match {
+        case Some(_) =>
+          SnapshotLog.commitDelta(
+            latest.withColumn("is_delete", col("op") === "d").drop("op"),
+            targetPath,
+            SnapshotLog.MergeSpec(
+              key, deleteCol = Some("is_delete"), orderCol = Some(tsCol)),
+            Some(tag))
+        case None =>
+          SnapshotLog.commitReplace(
+            latest.filter(col("op") =!= "d").drop("op"), targetPath, Some(tag))
+      }
+      ()
+    }
   }
 
   /** Streaming twin of q283 — [[graft.ext.TextDedup.simhash64Incremental]]
@@ -1399,9 +1273,10 @@ object StreamPipelines {
     * document is DROPPED when its fingerprint near-dups an indexed
     * fingerprint or a smaller-id document of the same batch (first-wins,
     * the [[curateIngest]] rule one fingerprint family over); survivors
-    * append their fingerprints to the index. Replay-safe: a re-delivered
-    * batch has no fresh fingerprints after the id anti join, so it
-    * appends nothing — the index converges.
+    * append their fingerprints to the SnapshotLog index at `indexPath`
+    * ([[nearDupIngest]]: one segment tagged with the incarnation-bound
+    * batch tag, so a replayed batch is an exact no-op, and a re-delivered
+    * id drops by the anti join).
     *
     * Fingerprints are the 64-bit width with 16-bit bands — the
     * PRODUCTION default (SCALING.md: band occupancy n/2¹⁶ keeps the
@@ -1414,41 +1289,14 @@ object StreamPipelines {
       idCol: String,
       textCol: String,
       indexPath: String,
+      batchId: Long,
       nBands: Int = 4,
-      maxHamming: Int = 3
-  ): Unit = {
-    batch.persist()
-    try {
-      if (batch.isEmpty) return
-      val spark = batch.sparkSession
-      val index =
-        if (pathExists(spark, indexPath)) spark.read.parquet(indexPath)
-        else graft.ext.TextDedup.simhash64Index(batch, idCol, textCol).limit(0)
-      val fresh = graft.ext.TextDedup.simhash64Index(batch, idCol, textCol)
-        .join(index.select(col(idCol)), Seq(idCol), "left_anti")
-        .persist()
-      try {
-        val dups = graft.ext.TextDedup.simhash64IncrementalFromFresh(
-          fresh, index, idCol, nBands, maxHamming)
-        // a near-dup partner kills the fresh doc when the partner is
-        // indexed (absent from the fresh set) or an earlier batch doc
-        val dropIds = dups
-          .join(fresh.select(col(idCol).as("nbr_id"), lit(1).as("__f")),
-            Seq("nbr_id"), "left")
-          .filter(col("__f").isNull || col("nbr_id") < col("id"))
-          .select(col("id").as(idCol))
-          .distinct()
-        val admitted = fresh.join(dropIds, Seq(idCol), "left_anti")
-        admitted.write.mode("append").parquet(indexPath)
-      } finally {
-        fresh.unpersist()
-        ()
-      }
-    } finally {
-      batch.unpersist()
-      ()
-    }
-  }
+      maxHamming: Int = 3,
+      incarnation: Option[String] = None
+  ): Unit =
+    nearDupIngest(batch, idCol, indexPath, batchId, incarnation)(
+      graft.ext.TextDedup.simhash64Index(_, idCol, textCol))(
+      graft.ext.TextDedup.simhash64IncrementalFromFresh(_, _, idCol, nBands, maxHamming))
 
   /** [[simhashDedupIngestBatch]] as a foreachBatch sink. */
   def simhashDedupSink(
@@ -1465,9 +1313,9 @@ object StreamPipelines {
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        simhashDedupIngestBatch(batch, idCol, textCol, indexPath,
-          nBands, maxHamming)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        simhashDedupIngestBatch(batch, idCol, textCol, indexPath, batchId,
+          nBands, maxHamming, incarnation = streamIncarnation(batch.sparkSession))
       }
 
   /** Streaming twin of q294 at the ingest tier — the [[simhashDedupIngestBatch]]
@@ -1479,48 +1327,92 @@ object StreamPipelines {
     * ([[graft.ext.Multimodal.dhashNearDupsFromFresh]] — per-batch cost is
     * batch × band occupancy, never index history), near-dup arrivals are
     * DROPPED (first-wins: an indexed partner, or a smaller-id batch
-    * partner), and survivors append (id, fp_hi, fp_lo) to the index.
-    * Replay-safe: a re-delivered batch has no fresh fingerprints, so it
-    * appends nothing — the index converges.
+    * partner), and survivors append (id, fp_hi, fp_lo) to the SnapshotLog
+    * index as one tagged segment ([[nearDupIngest]]).
     */
   def dhashDedupIngestBatch(
       batch: DataFrame,
       idCol: String,
       payloadCol: String,
       indexPath: String,
+      batchId: Long,
       maxHamming: Int = 3,
-      maxBlockSize: Int = 64
-  ): Unit = {
-    batch.persist()
-    try {
-      if (batch.isEmpty) return
-      val spark = batch.sparkSession
-      val index =
-        if (pathExists(spark, indexPath)) spark.read.parquet(indexPath)
-        else graft.ext.Multimodal.dhashFingerprints(batch, idCol, payloadCol).limit(0)
-      val fresh = graft.ext.Multimodal.dhashFingerprints(batch, idCol, payloadCol)
-        .join(index.select(col("id")), Seq("id"), "left_anti")
+      maxBlockSize: Int = 64,
+      incarnation: Option[String] = None
+  ): Unit =
+    nearDupIngest(batch, "id", indexPath, batchId, incarnation)(
+      graft.ext.Multimodal.dhashFingerprints(_, idCol, payloadCol))(
+      graft.ext.Multimodal.dhashNearDupsFromFresh(_, _, maxHamming, maxBlockSize))
+
+  /** The near-dup ingest gate shared by the simhash, dHash, video-dHash
+    * and audio-chroma indexes: `fingerprints` of the batch (one or more
+    * rows per id, keyed by `idCol`) lose the ids already in the latest
+    * index at `indexPath` (the anti join: a re-delivered id admits
+    * nothing), `nearDups(fresh, index)` yields (id, nbr_id) partner
+    * pairs, and a fresh id DROPS first-wins when a partner is indexed
+    * (absent from the fresh set) or a smaller batch id. The survivors'
+    * rows commit as one SnapshotLog segment tagged with the
+    * incarnation-bound batch tag; a replayed batch finds the tag and is an
+    * exact no-op, and a crash before the manifest claim leaves an
+    * unpublished segment no reader sees, so an id never surfaces with only
+    * some of its rows.
+    */
+  private def nearDupIngest(batch: DataFrame, idCol: String, indexPath: String,
+                            batchId: Long, incarnation: Option[String])(
+      fingerprints: DataFrame => DataFrame)(
+      nearDups: (DataFrame, DataFrame) => DataFrame): Unit =
+    onceTagged(batch, indexPath, batchId, incarnation) { tag =>
+      val fps = fingerprints(batch)
+      val index = latestOf(batch.sparkSession, indexPath).getOrElse(fps.limit(0))
+      val fresh = fps.join(index.select(col(idCol)).distinct(), Seq(idCol), "left_anti")
         .persist()
       try {
-        val dups = graft.ext.Multimodal.dhashNearDupsFromFresh(
-          fresh, index, maxHamming, maxBlockSize)
-        val dropIds = dups
-          .join(fresh.select(col("id").as("nbr_id"), lit(1).as("__f")),
+        val dropIds = nearDups(fresh, index)
+          .join(fresh.select(col(idCol).as("nbr_id")).distinct()
+              .withColumn("__f", lit(1)),
             Seq("nbr_id"), "left")
           .filter(col("__f").isNull || col("nbr_id") < col("id"))
-          .select(col("id"))
+          .select(col("id").as(idCol))
           .distinct()
-        val admitted = fresh.join(dropIds, Seq("id"), "left_anti")
-        admitted.write.mode("append").parquet(indexPath)
+        SnapshotLog.commitAppend(
+          fresh.join(dropIds, Seq(idCol), "left_anti"), indexPath, Some(tag))
+        ()
       } finally {
         fresh.unpersist()
         ()
       }
+    }
+
+  /** Runs `commit` with the micro-batch's incarnation-bound replay tag,
+    * unless the batch is empty or the SnapshotLog table at `anchor`
+    * already carries the tag (a replay: the batch committed before a
+    * restart). The batch stays persisted meanwhile, since the emptiness
+    * probe and the commit both read it. Scans ALL retained tags, so a
+    * maintenance commit landing after the batch's cannot mask it.
+    */
+  private def onceTagged(batch: DataFrame, anchor: String, batchId: Long,
+                         incarnation: Option[String])(commit: String => Unit): Unit = {
+    batch.persist()
+    try {
+      val tag = versionedBatchTag(incarnation, batchId)
+      if (!batch.isEmpty && !SnapshotLog.tags(batch.sparkSession, anchor).contains(tag))
+        commit(tag)
     } finally {
       batch.unpersist()
       ()
     }
   }
+
+  /** A streaming sink's micro-batch: `rows(batch)` appended to the
+    * SnapshotLog table at `path` under the live query's batch tag
+    * ([[onceTagged]]).
+    */
+  private def appendOnce(batch: DataFrame, path: String, batchId: Long)(
+      rows: DataFrame => DataFrame): Unit =
+    onceTagged(batch, path, batchId, streamIncarnation(batch.sparkSession)) { tag =>
+      SnapshotLog.commitAppend(rows(batch), path, Some(tag))
+      ()
+    }
 
   /** The incarnation token the streaming sinks bind their replay tags
     * to: the running query's checkpoint-persisted queryId (set as a local
@@ -1564,15 +1456,9 @@ object StreamPipelines {
     * within `maxHamming` bits (frame voting — q302's verdict rule,
     * live), near-dup arrivals DROP first-wins (an indexed partner, or a
     * smaller-id batch partner), and survivors append their n frame rows
-    * to the SnapshotLog index at `indexPath` as one segment, published by
-    * one manifest claim tagged with the incarnation-bound batch tag. A
-    * crash before the claim leaves an unpublished segment no reader sees,
-    * so a container never surfaces with only a subset of its frame rows
-    * (a flat `mode("append")` could, and the retry's id anti-join would
-    * then treat the container as indexed forever). Replay-safe twice
-    * over: the batch's committed tag makes the re-delivered batch an
-    * exact no-op, and a batch mixing already-indexed ids drops them by
-    * the anti-join.
+    * to the SnapshotLog index at `indexPath` as one tagged segment
+    * ([[nearDupIngest]]): a container never surfaces with only a subset
+    * of its frame rows, and a replayed batch is an exact no-op.
     */
   def videoDhashDedupIngestBatch(
       batch: DataFrame,
@@ -1586,45 +1472,10 @@ object StreamPipelines {
       minShared: Int = 3,
       maxBlockSize: Int = 64,
       incarnation: Option[String] = None
-  ): Unit = {
-    batch.persist()
-    try {
-      if (batch.isEmpty) return
-      val spark = batch.sparkSession
-      val tag = versionedBatchTag(incarnation, batchId)
-      // replayed batch: THIS incarnation's tag committed. A same-numbered
-      // batch from another incarnation (fresh checkpoint, batch ids
-      // restarted at 0) is prior data, not a replay.
-      if (SnapshotLog.tags(spark, indexPath).contains(tag)) return
-      val index = latestOf(spark, indexPath).getOrElse(
-        graft.ext.Multimodal.videoFrameFingerprints(
-          batch, idCol, payloadCol, n, frameBytes).limit(0))
-      val fresh = graft.ext.Multimodal.videoFrameFingerprints(
-          batch, idCol, payloadCol, n, frameBytes)
-        .join(index.select(col("id")).distinct(), Seq("id"), "left_anti")
-        .persist()
-      try {
-        val dups = graft.ext.Multimodal.videoDhashNearDupsFromFresh(
-          fresh, index, maxHamming, minShared, maxBlockSize)
-        val dropIds = dups
-          .join(fresh.select(col("id").as("nbr_id")).distinct()
-              .withColumn("__f", lit(1)),
-            Seq("nbr_id"), "left")
-          .filter(col("__f").isNull || col("nbr_id") < col("id"))
-          .select(col("id"))
-          .distinct()
-        SnapshotLog.commitAppend(
-          fresh.join(dropIds, Seq("id"), "left_anti"), indexPath, Some(tag))
-        ()
-      } finally {
-        fresh.unpersist()
-        ()
-      }
-    } finally {
-      batch.unpersist()
-      ()
-    }
-  }
+  ): Unit =
+    nearDupIngest(batch, "id", indexPath, batchId, incarnation)(
+      graft.ext.Multimodal.videoFrameFingerprints(_, idCol, payloadCol, n, frameBytes))(
+      graft.ext.Multimodal.videoDhashNearDupsFromFresh(_, _, maxHamming, minShared, maxBlockSize))
 
   /** Streaming twin of q310 — the container-level AUDIO ingest gate
     * ([[videoDhashDedupIngestBatch]] transplanted to the second
@@ -1641,11 +1492,7 @@ object StreamPipelines {
     * live), near-dup arrivals DROP first-wins (an indexed partner, or a
     * smaller-id batch partner), and survivors append their n−1 window
     * rows to the SnapshotLog index as one tagged segment, exactly as in
-    * [[videoDhashDedupIngestBatch]]: a torn write is never visible, so a
-    * container cannot surface with only a subset of its window rows.
-    * Replay-safe twice over: the batch's committed tag makes the
-    * re-delivered batch an exact no-op, and a batch mixing
-    * already-indexed ids drops them by the anti-join.
+    * [[videoDhashDedupIngestBatch]].
     */
   def audioChromaDedupIngestBatch(
       batch: DataFrame,
@@ -1659,45 +1506,10 @@ object StreamPipelines {
       minShared: Int = 3,
       maxBlockSize: Int = 64,
       incarnation: Option[String] = None
-  ): Unit = {
-    batch.persist()
-    try {
-      if (batch.isEmpty) return
-      val spark = batch.sparkSession
-      val tag = versionedBatchTag(incarnation, batchId)
-      // replayed batch: THIS incarnation's tag committed (see
-      // [[videoDhashDedupIngestBatch]] — another incarnation's same-
-      // numbered batch is prior data, not a replay)
-      if (SnapshotLog.tags(spark, indexPath).contains(tag)) return
-      val index = latestOf(spark, indexPath).getOrElse(
-        graft.ext.Multimodal.audioWindowFingerprints(
-          batch, idCol, payloadCol, n, windowChars).limit(0))
-      val fresh = graft.ext.Multimodal.audioWindowFingerprints(
-          batch, idCol, payloadCol, n, windowChars)
-        .join(index.select(col("id")).distinct(), Seq("id"), "left_anti")
-        .persist()
-      try {
-        val dups = graft.ext.Multimodal.audioChromaNearDupsFromFresh(
-          fresh, index, maxHamming, minShared, maxBlockSize)
-        val dropIds = dups
-          .join(fresh.select(col("id").as("nbr_id")).distinct()
-              .withColumn("__f", lit(1)),
-            Seq("nbr_id"), "left")
-          .filter(col("__f").isNull || col("nbr_id") < col("id"))
-          .select(col("id"))
-          .distinct()
-        SnapshotLog.commitAppend(
-          fresh.join(dropIds, Seq("id"), "left_anti"), indexPath, Some(tag))
-        ()
-      } finally {
-        fresh.unpersist()
-        ()
-      }
-    } finally {
-      batch.unpersist()
-      ()
-    }
-  }
+  ): Unit =
+    nearDupIngest(batch, "id", indexPath, batchId, incarnation)(
+      graft.ext.Multimodal.audioWindowFingerprints(_, idCol, payloadCol, n, windowChars))(
+      graft.ext.Multimodal.audioChromaNearDupsFromFresh(_, _, maxHamming, minShared, maxBlockSize))
 
   /** [[audioChromaDedupIngestBatch]] as a foreachBatch sink. */
   def audioChromaDedupSink(
@@ -1774,10 +1586,11 @@ object StreamPipelines {
     * drop at close (the q306 oversize hub guard — one crawler touching
     * the whole catalog would otherwise pay |basket|² in the close
     * projection). All (window, user) rows of a window close in the same
-    * micro-batch, so each batch's per-window counts are complete; output
-    * lands at `outPath/batch-<id>` with overwrite — a redelivered batch
-    * replaces its own output instead of appending duplicates (the
-    * annServeSink replay rule).
+    * micro-batch, so each batch's per-window counts are complete; they
+    * append to the SnapshotLog table at `outPath`, tagged with the
+    * incarnation-bound batch tag, so a redelivered batch commits nothing
+    * and a fresh checkpoint's batch 0 adds to, never replaces, the prior
+    * incarnation's output (the [[annServeSink]] replay rule).
     */
   def affinityTelemetrySink(
       events: DataFrame,
@@ -1803,9 +1616,7 @@ object StreamPipelines {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          affinityPairsBatch(batch, minBoth)
-            .write.mode("overwrite").parquet(s"$outPath/batch-$batchId")
+        appendOnce(batch, outPath, batchId)(affinityPairsBatch(_, minBoth))
       }
   }
 
@@ -1816,9 +1627,9 @@ object StreamPipelines {
     * batch operator's exact conventions — `start` opens each journey,
     * the first `convType` event absorbs to `conv` and truncates, a
     * journey without one falls to `null`. One (window, user) state row
-    * holding the event list (window-bounded); output lands at
-    * `outPath/batch-<id>` with overwrite (the replay rule). Journeys are
-    * WINDOW-SCOPED by construction — the cross-window stitch is the
+    * holding the event list (window-bounded); output appends to the
+    * SnapshotLog table at `outPath` (the [[annServeSink]] replay rule).
+    * Journeys are WINDOW-SCOPED by construction — the cross-window stitch is the
     * batch model's job; this is the counter feed it folds.
     */
   def attributionTelemetrySink(
@@ -1845,9 +1656,7 @@ object StreamPipelines {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          attributionTransitionsBatch(batch, convType)
-            .write.mode("overwrite").parquet(s"$outPath/batch-$batchId")
+        appendOnce(batch, outPath, batchId)(attributionTransitionsBatch(_, convType))
       }
   }
 
@@ -1991,9 +1800,9 @@ object StreamPipelines {
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        dhashDedupIngestBatch(batch, idCol, payloadCol, indexPath,
-          maxHamming, maxBlockSize)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        dhashDedupIngestBatch(batch, idCol, payloadCol, indexPath, batchId,
+          maxHamming, maxBlockSize, incarnation = streamIncarnation(batch.sparkSession))
       }
 
   /** Streaming ANN serving — the deployment shape of the graph-ANN tier
@@ -2006,9 +1815,11 @@ object StreamPipelines {
     * serving layer drives an index (q108's batch-vs-index asymmetry, one
     * tier up).
     *
-    * Replay idempotence: each batch writes `outPath/batch-<id>` with
-    * overwrite, so a redelivered batch replaces its own output instead of
-    * appending duplicates — the q81/q108 redelivery rule in sink form.
+    * Replay idempotence: each batch's answers append to the SnapshotLog
+    * table at `outPath`, tagged with the incarnation-bound batch tag, so a
+    * redelivered batch commits nothing — the q81/q108 redelivery rule in
+    * sink form — and a fresh checkpoint, whose batch ids restart at 0,
+    * adds its answers beside the prior incarnation's.
     *
     * Per-batch cost tracks batch size × rounds·beam·degree (the
     * graph_ann_walk probe's flat curve), never index size.
@@ -2029,15 +1840,13 @@ object StreamPipelines {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
+        appendOnce(batch, outPath, batchId)(
           graft.ext.VectorSearch.graphSearchCurve(
-              batch, corpus, adjacency, qIdCol, qVecCol, idCol, vecCol,
+              _, corpus, adjacency, qIdCol, qVecCol, idCol, vecCol,
               k, beam, rounds, entryIds, roundDigits = 4,
               graphIsAdjacency = true)
             .filter(col("round_tier") === rounds.toLong)
-            .drop("round_tier")
-            .write.mode("overwrite").parquet(s"$outPath/batch-$batchId")
-        }
+            .drop("round_tier"))
       }
 
   /** S8 — block until any of THESE queries terminates (unlike

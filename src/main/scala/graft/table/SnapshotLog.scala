@@ -52,18 +52,25 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * deployment would serialize commits through a catalog; the protocol here
   * is the strongest a bare filesystem offers.
   *
-  * Streaming sinks commit through this log, one tagged version per
-  * micro-batch, and skip a batch whose tag is already in [[tags]] (the
-  * replay tag binds the query incarnation and the batch id):
-  *   - merge-on-read deltas: `upsertSinkVersioned`, `cdcSinkVersioned`;
-  *   - appends: the `videoDhashDedupIngestBatch` and
-  *     `audioChromaDedupIngestBatch` fingerprint indexes and the
-  *     `conformalGateIngestBatch` verdicts;
-  *   - replaces: the `conformalRefreshIngestBatch`,
-  *     `attributionModelRefreshIngestBatch` and
-  *     `mixtureWeightsRefreshIngestBatch` state (each with a derived table
-  *     under the same tag) and the `kmeansUpdateIngestBatch` centroids;
-  *   - lakebench's metrics table (`commitAppend`).
+  * Every `graft.streaming.StreamPipelines` sink commits through this log,
+  * one tagged version per micro-batch, and skips a batch whose tag is
+  * already in [[tags]] (the replay tag binds the query incarnation and the
+  * batch id):
+  *   - merge-on-read deltas: `upsertSinkVersioned` (`upsertBatch`) and
+  *     `cdcSinkVersioned` (`applyCdcBatch`);
+  *   - appends: the `simhashDedupIngestBatch`, `dhashDedupIngestBatch`,
+  *     `videoDhashDedupIngestBatch`, `audioChromaDedupIngestBatch` and
+  *     `semanticDedupIngestBatch` indexes, the `knnGraphIngestBatch` /
+  *     `knnGraphAdjacencyIngestBatch` edge log and index, the
+  *     `conformalGateIngestBatch` verdicts and the `affinityTelemetrySink`,
+  *     `attributionTelemetrySink` and `annServeSink` outputs;
+  *   - replaces: the `knnGraphAdjacencyIngestBatch` adjacency, the
+  *     `audienceSketchIngestBatch` sketch, the
+  *     `conformalRefreshIngestBatch`, `attributionModelRefreshIngestBatch`
+  *     and `mixtureWeightsRefreshIngestBatch` state (each with a derived
+  *     table under the same tag) and the `kmeansUpdateIngestBatch`
+  *     centroids.
+  * lakebench's metrics table commits with `commitAppend` too.
   * A crash before the manifest claim leaves an unpublished `data/seg-*`
   * dir: no reader sees it, and [[expireSnapshots]] collects it.
   *

@@ -2,7 +2,7 @@ package graft
 
 import graft.ops.LatestWins
 import graft.streaming.StreamPipelines
-import graft.table.TableLayout
+import graft.table.{SnapshotLog, TableLayout}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -35,11 +35,12 @@ class PipelineIntegrationSpec extends SparkFunSuite {
     val replay = bronze.select(col("user_id"), col("ts"), col("event_id"), col("event_type"),
       get_json_object(col("payload"), "$.value").cast("double").as("value"))
     val split = lit("2024-01-20 00:00:00").cast("timestamp")
-    Seq(replay.filter(col("ts") < split), replay.filter(col("ts") >= split)).foreach { b =>
-      StreamPipelines.upsertBatch(b, s"$root/gold", Seq("user_id"), "ts", Seq("event_id"),
-        denseCols = Seq("event_type"), sparseCols = Seq("value"))
-    }
-    val gold = spark.read.parquet(s"$root/gold")
+    Seq(replay.filter(col("ts") < split), replay.filter(col("ts") >= split)).zipWithIndex
+      .foreach { case (b, i) =>
+        StreamPipelines.upsertBatch(b, s"$root/gold", Seq("user_id"), "ts", Seq("event_id"),
+          denseCols = Seq("event_type"), sparseCols = Seq("value"), batchId = i.toLong)
+      }
+    val gold = SnapshotLog.read(spark, s"$root/gold")
     // equals the all-at-once reduction over the full log
     val expect = LatestWins.latestState(replay, Seq("user_id"), "ts", Seq("event_id"),
       Seq("event_type"), Seq("value"), "last_seen")

@@ -272,20 +272,23 @@ class StreamPipelinesSpec extends SparkFunSuite {
     val b2 = Seq( // status update without amount (sparse) + new key
       Ord("u1", t("2024-01-01 10:05:00"), 3L, "paid", None),
       Ord("u3", t("2024-01-01 10:06:00"), 4L, "created", Some(30.0))).toDF()
-    def apply(df: org.apache.spark.sql.DataFrame) = StreamPipelines.upsertBatch(
+    def apply(df: org.apache.spark.sql.DataFrame, batchId: Long) = StreamPipelines.upsertBatch(
       df, target, Seq("user_id"), "ts", Seq("event_id"),
-      denseCols = Seq("event_type"), sparseCols = Seq("amount"))
-    apply(b1); apply(b2)
-    val got = spark.read.parquet(target).collect()
+      denseCols = Seq("event_type"), sparseCols = Seq("amount"), batchId = batchId)
+    def state = SnapshotLog.read(spark, target).collect()
       .map(r => r.getString(0) -> (r.getString(1), r.get(2))).toMap
+    apply(b1, 0L); apply(b2, 1L)
+    val got = state
     assert(got("u1") == ("paid", 10.0))   // amount carried through sparse update
     assert(got("u2") == ("created", 20.0))
     assert(got("u3") == ("created", 30.0))
-    // replaying the last batch converges to the same state
-    apply(b2)
-    val again = spark.read.parquet(target).collect()
-      .map(r => r.getString(0) -> (r.getString(1), r.get(2))).toMap
-    assert(again == got)
+    // replaying the last batch is a no-op: its tag is committed
+    apply(b2, 1L)
+    assert(SnapshotLog.versions(spark, target) == Seq(1, 2))
+    assert(state == got)
+    // re-delivering it as a new batch converges to the same state
+    apply(b2, 2L)
+    assert(state == got)
     // equivalence with the all-at-once batch reduction (replay convergence)
     val full = LatestWins.latestState(b1.union(b2), Seq("user_id"), "ts", Seq("event_id"),
       Seq("event_type"), Seq("amount"), "last_seen")
@@ -293,11 +296,11 @@ class StreamPipelinesSpec extends SparkFunSuite {
     assert(full == got)
   }
 
-  test("upsertSink: end-to-end streaming upsert via foreachBatch") {
+  test("upsertSinkVersioned: end-to-end streaming upsert via foreachBatch") {
     implicit val sql = spark.sqlContext
     val dir    = tmpDir("sink")
     val input  = MemoryStream[Ord]
-    val writer = StreamPipelines.upsertSink(
+    val writer = StreamPipelines.upsertSinkVersioned(
       input.toDF(), s"$dir/gold", s"$dir/ckpt",
       Seq("user_id"), "ts", Seq("event_id"),
       denseCols = Seq("event_type"), sparseCols = Seq("amount"),
@@ -308,13 +311,13 @@ class StreamPipelinesSpec extends SparkFunSuite {
       q.processAllAvailable()
       input.addData(Ord("u1", t("2024-01-01 10:05:00"), 2L, "paid", None))
       q.processAllAvailable()
-      val got = spark.read.parquet(s"$dir/gold").collect()
+      val got = SnapshotLog.read(spark, s"$dir/gold").collect()
         .map(r => r.getString(0) -> (r.getString(1), r.get(2))).toMap
       assert(got == Map("u1" -> ("paid", 10.0)))
     } finally q.stop()
   }
 
-  test("upsertSink resumes from checkpoint across restarts (file source, rate-limited)") {
+  test("upsertSinkVersioned resumes from checkpoint across restarts (file source, rate-limited)") {
     val dir = tmpDir("resume")
     import spark.implicits._
     val wave1 = Seq(Ord("u1", t("2024-01-01 10:00:00"), 1L, "created", Some(10.0)))
@@ -325,34 +328,34 @@ class StreamPipelinesSpec extends SparkFunSuite {
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1") // T5 rate limiting
         .json(s"$dir/in")
-      val q = StreamPipelines.upsertSink(stream, s"$dir/gold", s"$dir/ckpt",
+      val q = StreamPipelines.upsertSinkVersioned(stream, s"$dir/gold", s"$dir/ckpt",
         Seq("user_id"), "ts", Seq("event_id"), Seq("event_type"), Seq("amount"),
         org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
     wave1.toDF().write.json(s"$dir/in")
     runOnce()
-    assert(spark.read.parquet(s"$dir/gold").count() == 1)
+    assert(SnapshotLog.read(spark, s"$dir/gold").count() == 1)
     // restart with new input files: checkpoint skips wave1, applies wave2
     wave2.toDF().write.mode("append").json(s"$dir/in")
     runOnce()
-    val gold = spark.read.parquet(s"$dir/gold").collect()
+    val gold = SnapshotLog.read(spark, s"$dir/gold").collect()
       .map(r => r.getString(0) -> (r.getString(1), r.get(2))).toMap
     assert(gold == Map("u1" -> ("paid", 10.0), "u2" -> ("created", 20.0)))
   }
 
-  test("cdcSink: streaming CDC envelopes maintain the dim snapshot") {
+  test("cdcSinkVersioned: streaming CDC envelopes maintain the dim snapshot") {
     implicit val sql = spark.sqlContext
     val dir   = tmpDir("cdcsink")
     val input = MemoryStream[Cdc]
-    val q = StreamPipelines.cdcSink(input.toDF(), s"$dir/dim", s"$dir/ckpt",
+    val q = StreamPipelines.cdcSinkVersioned(input.toDF(), s"$dir/dim", s"$dir/ckpt",
       Seq("user_id"), trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)).start()
     try {
       input.addData(Cdc("c", 1L, "u1", "bronze"), Cdc("c", 2L, "u2", "bronze"))
       q.processAllAvailable()
       input.addData(Cdc("u", 3L, "u1", "gold"), Cdc("d", 4L, "u2", "x"))
       q.processAllAvailable()
-      val dim = spark.read.parquet(s"$dir/dim").collect()
+      val dim = SnapshotLog.read(spark, s"$dir/dim").collect()
         .map(r => r.getAs[String]("user_id") -> r.getAs[String]("segment")).toMap
       assert(dim == Map("u1" -> "gold"))
     } finally q.stop()
@@ -360,31 +363,28 @@ class StreamPipelinesSpec extends SparkFunSuite {
 
   test("applyCdcBatch: creates/updates upsert, deletes remove, latest-wins per key") {
     val target = tmpDir("cdc") + "/dim"
+    def dim = SnapshotLog.read(spark, target).collect()
+      .map(r => r.getAs[String]("user_id") -> r.getAs[String]("segment")).toMap
     val b1 = Seq(
       Cdc("c", 1000L, "u1", "bronze"),
       Cdc("c", 1001L, "u2", "bronze"),
       Cdc("u", 1002L, "u1", "silver")).toDF() // same batch: u1 ends silver
-    StreamPipelines.applyCdcBatch(b1, target, Seq("user_id"))
-    val s1 = spark.read.parquet(target).collect()
-      .map(r => r.getAs[String]("user_id") -> r.getAs[String]("segment")).toMap
-    assert(s1 == Map("u1" -> "silver", "u2" -> "bronze"))
+    StreamPipelines.applyCdcBatch(b1, target, Seq("user_id"), batchId = 0L)
+    assert(dim == Map("u1" -> "silver", "u2" -> "bronze"))
 
     val b2 = Seq(
       Cdc("d", 2000L, "u2", "x"),      // delete u2
       Cdc("u", 2001L, "u1", "gold")).toDF()
-    StreamPipelines.applyCdcBatch(b2, target, Seq("user_id"))
-    val s2 = spark.read.parquet(target).collect()
-      .map(r => r.getAs[String]("user_id") -> r.getAs[String]("segment")).toMap
-    assert(s2 == Map("u1" -> "gold"))
+    StreamPipelines.applyCdcBatch(b2, target, Seq("user_id"), batchId = 1L)
+    assert(dim == Map("u1" -> "gold"))
 
     // cross-batch latest-wins: a REPLAYED older envelope must be a no-op,
     // and an old delete must not beat the newer state
     val b3 = Seq(
       Cdc("u", 1500L, "u1", "stale"),  // older than stored ts 2001
       Cdc("d", 1400L, "u1", "x")).toDF()
-    StreamPipelines.applyCdcBatch(b3, target, Seq("user_id"))
-    val s3 = spark.read.parquet(target).collect()
-      .map(r => r.getAs[String]("user_id") -> r.getAs[String]("segment")).toMap
+    StreamPipelines.applyCdcBatch(b3, target, Seq("user_id"), batchId = 2L)
+    val s3 = dim
     assert(s3 == Map("u1" -> "gold"), s"stale envelope overwrote newer state: $s3")
   }
 
@@ -423,7 +423,7 @@ class StreamPipelinesSpec extends SparkFunSuite {
     val bronze = src.writeStream.format("parquet")
       .option("path", s"$dir/bronze").option("checkpointLocation", s"$dir/ckptB")
       .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)).start()
-    val gold = StreamPipelines.upsertSink(src, s"$dir/gold", s"$dir/ckptG",
+    val gold = StreamPipelines.upsertSinkVersioned(src, s"$dir/gold", s"$dir/ckptG",
       Seq("user_id"), "ts", Seq("event_id"), Seq("event_type"), Seq("amount"),
       org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)).start()
     try {
@@ -432,7 +432,7 @@ class StreamPipelinesSpec extends SparkFunSuite {
         Ord("u1", t("2024-01-01 10:01:00"), 2L, "paid", None))
       bronze.processAllAvailable(); gold.processAllAvailable()
       assert(spark.read.parquet(s"$dir/bronze").count() == 2) // append keeps history
-      assert(spark.read.parquet(s"$dir/gold").count() == 1)   // upsert keeps state
+      assert(SnapshotLog.read(spark, s"$dir/gold").count() == 1) // upsert keeps state
     } finally { bronze.stop(); gold.stop() }
   }
 
@@ -607,8 +607,10 @@ class StreamPipelinesSpec extends SparkFunSuite {
     } finally q.stop()
   }
 
-  test("annServeSink answers each query batch from the persisted graph index; replay overwrites") {
-    implicit val sql = spark.sqlContext
+  /** A 3-node graph index for the annServeSink specs: corpus, symmetrized
+    * adjacency (persisted; the caller unpersists it) and one entry point.
+    */
+  private def annIndex() = {
     val cs = Seq(
       (1L, Seq(1.0, 0.0)), (2L, Seq(0.7, 0.7)), (3L, Seq(0.0, 1.0))
     ).toDF("vec_id", "embedding")
@@ -617,7 +619,26 @@ class StreamPipelinesSpec extends SparkFunSuite {
       .unionByName(graph.select(col("nbr_id").as("id"), col("id").as("nbr_id")))
       .distinct().persist()
     adj.count()
-    val entries = cs.select(col("vec_id").as("id")).orderBy(col("id")).limit(1)
+    (cs, adj, cs.select(col("vec_id").as("id")).orderBy(col("id")).limit(1))
+  }
+
+  /** Runs annServeSink over one batch of `queries` on checkpoint `ckpt`. */
+  private def annServeOnce(res: String, ckpt: String, queries: Vec*): Unit = {
+    implicit val sql = spark.sqlContext
+    val (cs, adj, entries) = annIndex()
+    val input = MemoryStream[Vec]
+    val q = StreamPipelines.annServeSink(input.toDF(), cs, adj, entries, res, ckpt,
+        "vec_id", "embedding", "vec_id", "embedding", k = 1, beam = 2, rounds = 2,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("50 milliseconds"))
+      .start()
+    try { input.addData(queries: _*); q.processAllAvailable() }
+    finally { q.stop(); adj.unpersist() }
+  }
+
+  test("annServeSink answers each query batch from the persisted graph index; " +
+    "one tagged version per batch") {
+    implicit val sql = spark.sqlContext
+    val (cs, adj, entries) = annIndex()
     val out = tmpDir("annserve")
     val input = MemoryStream[Vec]
     val q = StreamPipelines.annServeSink(input.toDF(), cs, adj, entries,
@@ -629,16 +650,32 @@ class StreamPipelinesSpec extends SparkFunSuite {
     try {
       input.addData(Vec(100L, Seq(0.0, 1.0)))   // true neighbor is node 3
       q.processAllAvailable()
-      val got = spark.read.parquet(out + "/res/batch-0")
+      val got = SnapshotLog.read(spark, out + "/res")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3)))
       assert(got.toSeq == Seq((100L, 3L, 1L)))
-      // second batch: a different query lands in its own batch directory
+      // second batch: a different query lands in its own version
       input.addData(Vec(101L, Seq(1.0, 0.0)))   // true neighbor is node 1
       q.processAllAvailable()
-      val got2 = spark.read.parquet(out + "/res/batch-1")
+      assert(SnapshotLog.versions(spark, out + "/res") == Seq(1, 2))
+      assert(SnapshotLog.tags(spark, out + "/res") ==
+        Set(s"batch-${q.id}-0", s"batch-${q.id}-1"))
+      val got2 = SnapshotLog.read(spark, out + "/res")
+        .filter($"qid" === 101L)
         .collect().map(r => (r.getLong(0), r.getLong(1)))
       assert(got2.toSeq == Seq((101L, 1L)))
     } finally { q.stop(); adj.unpersist() }
+  }
+
+  test("annServeSink: a fresh checkpoint's batch 0 keeps the prior incarnation's answers") {
+    // batch ids restart at 0 under a recreated checkpoint, so an output
+    // keyed on the batch id alone would let query B's batch 0 replace A's
+    val out = tmpDir("annserve-inc")
+    annServeOnce(out + "/res", out + "/ckptA", Vec(100L, Seq(0.0, 1.0)))
+    annServeOnce(out + "/res", out + "/ckptB", Vec(101L, Seq(1.0, 0.0)))
+    val got = SnapshotLog.read(spark, out + "/res")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(got == Set((100L, 3L), (101L, 1L)))
+    assert(SnapshotLog.versions(spark, out + "/res") == Seq(1, 2))
   }
 
   test("affinityTelemetrySink: closed windows emit per-window pair counts; size guards apply at close") {
@@ -665,7 +702,7 @@ class StreamPipelinesSpec extends SparkFunSuite {
       q.processAllAvailable()
       input.addData((t("2024-01-01 10:02:00"), 9L, 9L)) // close the window
       q.processAllAvailable()
-      val got = spark.read.parquet(out + "/pairs/batch-*").collect()
+      val got = SnapshotLog.read(spark, out + "/pairs").collect()
         .map(r => (r.getLong(1), r.getLong(2)) -> r.getLong(3)).toMap
       assert(got == Map((10L, 20L) -> 2L, (10L, 30L) -> 1L, (20L, 30L) -> 1L))
       // the streamed counts equal the batch operator over the same baskets
@@ -699,7 +736,7 @@ class StreamPipelinesSpec extends SparkFunSuite {
       q.processAllAvailable()
       input.addData((t("2024-01-01 10:02:00"), 9L, 9L, "view")) // close
       q.processAllAvailable()
-      val got = spark.read.parquet(out + "/tr/batch-*").collect()
+      val got = SnapshotLog.read(spark, out + "/tr").collect()
         .map(r => (r.getString(1), r.getString(2)) -> r.getLong(3)).toMap
       assert(got == Map(
         ("start", "view") -> 2L, ("view", "click") -> 1L,
@@ -839,32 +876,34 @@ class StreamPipelinesSpec extends SparkFunSuite {
 
   test("simhashDedupIngestBatch drops near-dups vs batch AND index; replay converges") {
     val indexPath = tmpDir("shidx") + "/index"
-    def indexIds = spark.read.parquet(indexPath).collect().map(_.getLong(0)).toSet
+    def indexIds = SnapshotLog.read(spark, indexPath).collect().map(_.getLong(0)).toSet
     // batch 1: 2 is an exact dup of 1 (dropped, first-wins by id);
     // 3 is unrelated (admitted)
     StreamPipelines.simhashDedupIngestBatch(
       Seq((1L, "a b c d e f"), (2L, "a b c d e f"), (3L, "z y x w v u"))
         .toDF("doc_id", "text"),
-      "doc_id", "text", indexPath)
+      "doc_id", "text", indexPath, batchId = 0L)
     assert(indexIds == Set(1L, 3L))
     // batch 2: 5 duplicates INDEXED 1 (dropped), 1 redelivers (no-op),
     // 7 is fresh
     StreamPipelines.simhashDedupIngestBatch(
       Seq((5L, "a b c d e f"), (1L, "a b c d e f"), (7L, "q w e r t y"))
         .toDF("doc_id", "text"),
-      "doc_id", "text", indexPath)
+      "doc_id", "text", indexPath, batchId = 1L)
     assert(indexIds == Set(1L, 3L, 7L))
-    // replay of batch 2 appends nothing
+    // replay of batch 2 is an exact no-op — its tag already committed
     StreamPipelines.simhashDedupIngestBatch(
       Seq((5L, "a b c d e f"), (1L, "a b c d e f"), (7L, "q w e r t y"))
         .toDF("doc_id", "text"),
-      "doc_id", "text", indexPath)
+      "doc_id", "text", indexPath, batchId = 1L)
     assert(indexIds == Set(1L, 3L, 7L))
+    assert(SnapshotLog.read(spark, indexPath).count() == 3L)
+    assert(SnapshotLog.tags(spark, indexPath) == Set("batch-0", "batch-1"))
   }
 
   test("dhashDedupIngestBatch drops perceptual near-dups vs batch AND index; replay converges") {
     val indexPath = tmpDir("dhidx") + "/index"
-    def indexIds = spark.read.parquet(indexPath).collect().map(_.getLong(0)).toSet
+    def indexIds = SnapshotLog.read(spark, indexPath).collect().map(_.getLong(0)).toSet
     val base  = (1 to 400).map(i => ('a' + (i * 7 % 26)).toChar).mkString
     // brightness shift: perceptually identical (hamming 0, the dhash spec
     // invariant) — the re-encode survivor the md5 tier cannot catch
@@ -875,18 +914,20 @@ class StreamPipelinesSpec extends SparkFunSuite {
     // 3 is unrelated (admitted)
     StreamPipelines.dhashDedupIngestBatch(
       Seq((1L, base), (2L, tweak), (3L, other)).toDF("doc_id", "payload"),
-      "doc_id", "payload", indexPath)
+      "doc_id", "payload", indexPath, batchId = 0L)
     assert(indexIds == Set(1L, 3L))
     // batch 2: 5 twins INDEXED 1 (dropped), 1 redelivers (no-op), 7 fresh
     StreamPipelines.dhashDedupIngestBatch(
       Seq((5L, tweak), (1L, base), (7L, third)).toDF("doc_id", "payload"),
-      "doc_id", "payload", indexPath)
+      "doc_id", "payload", indexPath, batchId = 1L)
     assert(indexIds == Set(1L, 3L, 7L))
-    // replay of batch 2 appends nothing — the index converges
+    // replay of batch 2 is an exact no-op — its tag already committed
     StreamPipelines.dhashDedupIngestBatch(
       Seq((5L, tweak), (1L, base), (7L, third)).toDF("doc_id", "payload"),
-      "doc_id", "payload", indexPath)
+      "doc_id", "payload", indexPath, batchId = 1L)
     assert(indexIds == Set(1L, 3L, 7L))
+    assert(SnapshotLog.read(spark, indexPath).count() == 3L)
+    assert(SnapshotLog.tags(spark, indexPath) == Set("batch-0", "batch-1"))
   }
 
   test("videoDhashDedupIngestBatch frame-votes containers vs batch AND index; replay converges") {
@@ -1045,6 +1086,18 @@ class StreamPipelinesSpec extends SparkFunSuite {
       .agg(sort_array(collect_list(struct(col("ts").as("ts"),
         col("id").as("id"), col("t").as("t")))).as("evs"))
       .select(col("window.start").as("window_start"), col("evs"))
+    // semantic: pairwise cosine below its 0.95 threshold, so all admit;
+    // kNN: one sign bucket, so every batch emits edges
+    def vectors(k: Int) = Seq(
+        Seq(1L -> Seq(1.0, 0.0), 2L -> Seq(0.6, 0.8)),
+        Seq(3L -> Seq(0.0, 1.0)),
+        Seq(4L -> Seq(0.8, -0.6)))(k)
+      .toDF("vec_id", "embedding")
+    def knnVectors(k: Int) = Seq(
+        Seq(1L -> Seq(1.0, 0.0), 2L -> Seq(0.9, 0.1)),
+        Seq(3L -> Seq(0.89, 0.11)),
+        Seq(4L -> Seq(1.0, 0.01)))(k)
+      .toDF("vec_id", "embedding")
     Seq(
       SinkCase("videoDhashDedupIngestBatch", Seq("index"), (root, k, b, inc) =>
         StreamPipelines.videoDhashDedupIngestBatch(container(k), "doc_id", "payload",
@@ -1082,7 +1135,48 @@ class StreamPipelinesSpec extends SparkFunSuite {
         seed = root => StreamPipelines.seedKmeansState(
           Seq((0L, 1L, 10000L), (0L, 2L, 0L), (1L, 1L, 0L), (1L, 2L, 10000L))
             .toDF("label", "dim", "c_bp"),
-          Seq((0L, 3L), (1L, 5L)).toDF("label", "n"), s"$root/state"))
+          Seq((0L, 3L), (1L, 5L)).toDF("label", "n"), s"$root/state")),
+      SinkCase("simhashDedupIngestBatch", Seq("index"), (root, k, b, inc) =>
+        StreamPipelines.simhashDedupIngestBatch(
+          Seq((k + 1L, Seq("the quick fox of the hill and the dale",
+            "a cat and a dog sat on the mat", "xx1 yy2 zz3 qq4 ww5 vv6 uu7")(k)))
+            .toDF("doc_id", "text"),
+          "doc_id", "text", s"$root/index", b, incarnation = inc)),
+      SinkCase("dhashDedupIngestBatch", Seq("index"), (root, k, b, inc) =>
+        StreamPipelines.dhashDedupIngestBatch(container(k), "doc_id", "payload",
+          s"$root/index", b, incarnation = inc)),
+      SinkCase("semanticDedupIngestBatch", Seq("index"), (root, k, b, inc) =>
+        StreamPipelines.semanticDedupIngestBatch(vectors(k), "vec_id", "embedding",
+          Seq((0L, 1L, 10000L), (0L, 2L, 0L), (1L, 1L, 0L), (1L, 2L, 10000L))
+            .toDF("label", "dim", "c_bp"),
+          s"$root/index", b, threshold = 0.95, incarnation = inc)),
+      SinkCase("knnGraphIngestBatch", Seq("edges", "index"), (root, k, b, inc) =>
+        StreamPipelines.knnGraphIngestBatch(knnVectors(k), "vec_id", "embedding",
+          k = 2, bits = 1, s"$root/index", s"$root/edges", b, incarnation = inc)),
+      SinkCase("knnGraphAdjacencyIngestBatch", Seq("edges", "adj", "index"),
+        (root, k, b, inc) =>
+          StreamPipelines.knnGraphAdjacencyIngestBatch(knnVectors(k), "vec_id", "embedding",
+            k = 2, bits = 1, s"$root/index", s"$root/edges", s"$root/adj", b,
+            incarnation = inc)),
+      SinkCase("audienceSketchIngestBatch", Seq("sketch"), (root, k, b, inc) =>
+        StreamPipelines.audienceSketchIngestBatch(
+          Seq(("A", 1 to 10), ("B", 1 to 5), ("A", 11 to 15))(k) match {
+            case (key, ms) => ms.map(m => (key, m.toLong)).toDF("key", "member")
+          },
+          "key", "member", 32, s"$root/sketch", b, incarnation = inc)),
+      SinkCase("upsertBatch", Seq("gold"), (root, k, b, inc) =>
+        StreamPipelines.upsertBatch(
+          Seq(Ord("u1", t("2024-01-01 10:00:00"), 1L, "created", Some(10.0)),
+            Ord("u1", t("2024-01-01 10:05:00"), 2L, "paid", None),
+            Ord("u2", t("2024-01-01 10:06:00"), 3L, "created", Some(20.0)))
+            .slice(k, k + 1).toDF(),
+          s"$root/gold", Seq("user_id"), "ts", Seq("event_id"), Seq("event_type"),
+          Seq("amount"), b, inc)),
+      SinkCase("applyCdcBatch", Seq("dim"), (root, k, b, inc) =>
+        StreamPipelines.applyCdcBatch(
+          Seq(Seq(Cdc("c", 1L, "u1", "bronze"), Cdc("c", 2L, "u2", "bronze")),
+            Seq(Cdc("u", 3L, "u1", "gold")), Seq(Cdc("d", 4L, "u2", "x")))(k).toDF(),
+          s"$root/dim", Seq("user_id"), b, incarnation = inc))
     )
   }
 
@@ -1153,12 +1247,28 @@ class StreamPipelinesSpec extends SparkFunSuite {
       s"${c.name}: the crashed run must end where the uncrashed run does")
   }
 
-  Seq("videoDhashDedupIngestBatch", "audioChromaDedupIngestBatch", "conformalGateIngestBatch",
-      "conformalRefreshIngestBatch", "attributionModelRefreshIngestBatch",
-      "mixtureWeightsRefreshIngestBatch", "kmeansUpdateIngestBatch").foreach { name =>
+  /** The names of [[sinkCases]], one crash-matrix test each. */
+  private val crashCaseNames = Seq(
+    "videoDhashDedupIngestBatch", "audioChromaDedupIngestBatch", "conformalGateIngestBatch",
+    "conformalRefreshIngestBatch", "attributionModelRefreshIngestBatch",
+    "mixtureWeightsRefreshIngestBatch", "kmeansUpdateIngestBatch",
+    "simhashDedupIngestBatch", "dhashDedupIngestBatch", "semanticDedupIngestBatch",
+    "knnGraphIngestBatch", "knnGraphAdjacencyIngestBatch", "audienceSketchIngestBatch",
+    "upsertBatch", "applyCdcBatch")
+
+  crashCaseNames.foreach { name =>
     test(s"crash matrix: $name — replay no-op, orphan segment invisible, fresh incarnation folds") {
       crashMatrix(sinkCases.find(_.name == name).get)
     }
+  }
+
+  test("every public *IngestBatch function of StreamPipelines has a crash-matrix case") {
+    val ingest = StreamPipelines.getClass.getMethods.map(_.getName)
+      .filter(_.endsWith("IngestBatch")).toSet
+    assert(ingest.size >= 13, s"reflection found too few ingest functions: $ingest")
+    assert(sinkCases.map(_.name) == crashCaseNames)
+    val missing = ingest -- crashCaseNames
+    assert(missing.isEmpty, s"ingest functions without a SinkCase: ${missing.mkString(", ")}")
   }
 
   test("with _SUCCESS markers off, every SnapshotLog sink commits, replays as a no-op " +
@@ -1356,14 +1466,14 @@ class StreamPipelinesSpec extends SparkFunSuite {
       .toDF("label", "dim", "c_bp")
     val indexPath = tmpDir("semidx") + "/index"
     def batchOf(rows: (Long, Seq[Double])*) = rows.toDF("vec_id", "embedding")
-    def indexIds = spark.read.parquet(indexPath).collect().map(_.getLong(0)).toSet
+    def indexIds = SnapshotLog.read(spark, indexPath).collect().map(_.getLong(0)).toSet
 
     // batch 1: 2 is a near-dup of 1 (same cluster, cos ≈ 1); 3 and 4 land
     // in cluster 1 but cos(3,4) = 0.8 < threshold → both admitted
     StreamPipelines.semanticDedupIngestBatch(
       batchOf(1L -> Seq(1.0, 0.0), 2L -> Seq(0.99, 0.01),
         3L -> Seq(0.0, 1.0), 4L -> Seq(0.6, 0.8)),
-      "vec_id", "embedding", cents, indexPath, threshold = 0.95)
+      "vec_id", "embedding", cents, indexPath, batchId = 0L, threshold = 0.95)
     assert(indexIds == Set(1L, 3L, 4L))
 
     // batch 2: 5 duplicates INDEXED 1 (killed by the index probe), 1 is an
@@ -1371,14 +1481,18 @@ class StreamPipelinesSpec extends SparkFunSuite {
     val batch2 = batchOf(5L -> Seq(1.0, 0.005), 1L -> Seq(1.0, 0.0),
       7L -> Seq(0.8, -0.6))
     StreamPipelines.semanticDedupIngestBatch(
-      batch2, "vec_id", "embedding", cents, indexPath, threshold = 0.95)
+      batch2, "vec_id", "embedding", cents, indexPath, batchId = 1L, threshold = 0.95)
     assert(indexIds == Set(1L, 3L, 4L, 7L))
 
-    // replay batch 2 verbatim: every admit is already indexed → no growth
+    // replay batch 2 verbatim: its tag is committed → no new version
     StreamPipelines.semanticDedupIngestBatch(
-      batch2, "vec_id", "embedding", cents, indexPath, threshold = 0.95)
+      batch2, "vec_id", "embedding", cents, indexPath, batchId = 1L, threshold = 0.95)
+    assert(SnapshotLog.versions(spark, indexPath) == Seq(1, 2))
+    // re-delivered as a new batch: every admit is already indexed → no growth
+    StreamPipelines.semanticDedupIngestBatch(
+      batch2, "vec_id", "embedding", cents, indexPath, batchId = 2L, threshold = 0.95)
     assert(indexIds == Set(1L, 3L, 4L, 7L))
-    assert(spark.read.parquet(indexPath).count() == 4) // no duplicate rows either
+    assert(SnapshotLog.read(spark, indexPath).count() == 4) // no duplicate rows either
 
     // end-to-end through the streaming sink wiring
     implicit val sql = spark.sqlContext
@@ -1399,8 +1513,9 @@ class StreamPipelinesSpec extends SparkFunSuite {
     val base = tmpDir("knnidx")
     val (indexPath, edgesPath) = (base + "/index", base + "/edges")
     def batchOf(rows: (Long, Seq[Double])*) = rows.toDF("vec_id", "embedding")
-    def indexIds = spark.read.parquet(indexPath).collect().map(_.getLong(0)).toSet
-    def edges = spark.read.parquet(edgesPath).collect()
+    def indexIds = SnapshotLog.read(spark, indexPath).collect().map(_.getLong(0)).toSet
+    def edgeLog = SnapshotLog.read(spark, edgesPath)
+    def edges = edgeLog.collect()
       .map(r => (r.getString(4), r.getLong(0), r.getLong(3)) -> r.getLong(1)).toMap
 
     // batch 1 against an empty index: within-batch adjacency only
@@ -1409,7 +1524,7 @@ class StreamPipelinesSpec extends SparkFunSuite {
       "vec_id", "embedding", k = 2, bits = 1, indexPath, edgesPath, batchId = 0L)
     assert(indexIds == Set(1L, 2L))
     assert(edges(("out", 1L, 1L)) == 2L && edges(("out", 2L, 1L)) == 1L)
-    def outRowsFor2 = spark.read.parquet(edgesPath)
+    def outRowsFor2 = edgeLog
       .filter($"direction" === "out" && $"id" === 2L).count()
     val outFor2AfterBatch1 = outRowsFor2
 
@@ -1427,13 +1542,23 @@ class StreamPipelinesSpec extends SparkFunSuite {
     // the re-delivered id emitted NO new out rows (batch 1's survive)
     assert(outRowsFor2 == outFor2AfterBatch1)
 
-    // replay batch 2 verbatim: nothing fresh → neither artifact grows
-    val nEdges = spark.read.parquet(edgesPath).count()
+    // every edge row carries its batch id
+    assert(edgeLog.select($"batch_id").distinct().collect().map(_.getLong(0)).toSet ==
+      Set(0L, 1L))
+
+    // replay batch 2 verbatim: its tag is committed → neither artifact grows
+    val nEdges = edgeLog.count()
     StreamPipelines.knnGraphIngestBatch(
       batch2, "vec_id", "embedding", k = 2, bits = 1, indexPath, edgesPath,
       batchId = 1L)
+    assert(SnapshotLog.versions(spark, indexPath) == Seq(1, 2))
+    assert(SnapshotLog.versions(spark, edgesPath) == Seq(1, 2))
+    // re-delivered as a new batch: nothing fresh → neither artifact grows
+    StreamPipelines.knnGraphIngestBatch(
+      batch2, "vec_id", "embedding", k = 2, bits = 1, indexPath, edgesPath,
+      batchId = 2L)
     assert(indexIds == Set(1L, 2L, 3L))
-    assert(spark.read.parquet(edgesPath).count() == nEdges)
+    assert(edgeLog.count() == nEdges)
 
     // end-to-end through the streaming sink wiring
     implicit val sql = spark.sqlContext
@@ -1727,7 +1852,7 @@ class StreamPipelinesSpec extends SparkFunSuite {
     val (indexPath, edgesPath, adjPath) =
       (base + "/index", base + "/edges", base + "/adj")
     def batchOf(rows: (Long, Seq[Double])*) = rows.toDF("vec_id", "embedding")
-    def adj = spark.read.parquet(adjPath).collect()
+    def adj = SnapshotLog.read(spark, adjPath).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
 
     StreamPipelines.knnGraphAdjacencyIngestBatch(
@@ -1745,18 +1870,26 @@ class StreamPipelinesSpec extends SparkFunSuite {
     val a2 = adj
     assert(a2.keySet == Set((1L, 2L), (1L, 3L), (2L, 1L), (2L, 3L), (3L, 2L), (3L, 1L)))
 
-    // replaying the same batch changes nothing (anti join → empty merge)
+    // replaying the same batch changes nothing (its tag is committed)
     StreamPipelines.knnGraphAdjacencyIngestBatch(
       batchOf(3L -> Seq(0.89, 0.11)),
       "vec_id", "embedding", k = 2, bits = 1, indexPath, edgesPath, adjPath,
       batchId = 1L)
     assert(adj == a2)
+    Seq(indexPath, edgesPath, adjPath).foreach(p =>
+      assert(SnapshotLog.versions(spark, p) == Seq(1, 2), p))
+    // nor does re-delivering it as a new batch (anti join → nothing fresh)
+    StreamPipelines.knnGraphAdjacencyIngestBatch(
+      batchOf(3L -> Seq(0.89, 0.11)),
+      "vec_id", "embedding", k = 2, bits = 1, indexPath, edgesPath, adjPath,
+      batchId = 2L)
+    assert(adj == a2)
 
     // the snapshot is directly walkable by the beam search
-    val stored = spark.read.parquet(adjPath)
+    val stored = SnapshotLog.read(spark, adjPath)
     val sym = stored.select($"id", $"nbr_id")
       .unionByName(stored.select($"nbr_id".as("id"), $"id".as("nbr_id"))).distinct()
-    val corpus = spark.read.parquet(indexPath)
+    val corpus = SnapshotLog.read(spark, indexPath)
       .select($"vec_id", $"vec".as("embedding"))
     val qs = Seq(9000L -> Seq(1.0, 0.05)).toDF("vec_id", "embedding")
     val hits = graft.ext.VectorSearch.graphSearchCurve(
@@ -1818,24 +1951,27 @@ class StreamPipelinesSpec extends SparkFunSuite {
   test("audienceSketchIngestBatch: snapshot equals the batch sketch over all data seen; replay is the identity") {
     val path = tmpDir("audsk") + "/sketch"
     def batchOf(rows: (String, Long)*) = rows.toDF("key", "member")
-    def snap() = spark.read.parquet(path).collect()
+    def snap() = SnapshotLog.read(spark, path).collect()
       .map(r => r.getString(0) -> ((r.getSeq[Long](1).toList, r.getLong(2)))).toMap
 
     val b1 = (1 to 40).map(i => ("A", i.toLong)) ++ (1 to 20).map(i => ("B", i.toLong))
     val b2 = (21 to 60).map(i => ("A", i.toLong)) ++ (15 to 50).map(i => ("B", i.toLong))
-    StreamPipelines.audienceSketchIngestBatch(batchOf(b1: _*), "key", "member", 32, path)
-    StreamPipelines.audienceSketchIngestBatch(batchOf(b2: _*), "key", "member", 32, path)
+    StreamPipelines.audienceSketchIngestBatch(batchOf(b1: _*), "key", "member", 32, path, 0L)
+    StreamPipelines.audienceSketchIngestBatch(batchOf(b2: _*), "key", "member", 32, path, 1L)
     val after2 = snap()
     // the maintained snapshot IS the batch sketch over b1 ∪ b2
     val direct = graft.ext.ThetaSketch.kminSketch(
         batchOf((b1 ++ b2): _*), "key", "member", 32).collect()
       .map(r => r.getString(0) -> ((r.getSeq[Long](1).toList, r.getLong(2)))).toMap
     assert(after2 == direct)
-    // re-delivering b2 changes nothing
-    StreamPipelines.audienceSketchIngestBatch(batchOf(b2: _*), "key", "member", 32, path)
+    // replaying b2 commits nothing; re-delivering it as a new batch
+    // changes nothing
+    StreamPipelines.audienceSketchIngestBatch(batchOf(b2: _*), "key", "member", 32, path, 1L)
+    assert(SnapshotLog.versions(spark, path) == Seq(1, 2))
+    StreamPipelines.audienceSketchIngestBatch(batchOf(b2: _*), "key", "member", 32, path, 2L)
     assert(snap() == after2)
     // the snapshot answers overlap queries without the member history
-    val est = graft.ext.ThetaSketch.overlapEstimates(spark.read.parquet(path)).head()
+    val est = graft.ext.ThetaSketch.overlapEstimates(SnapshotLog.read(spark, path)).head()
     assert(est.getAs[Long]("inter_est_milli") > 0L)
   }
 
