@@ -11,25 +11,17 @@ import org.apache.spark.sql.functions._
   * operators see a realistically grown corpus, not a pile of exact
   * duplicates with quadratic pair blowup.
   *
-  * Usage: sbt "runMain graft.ScaleProbe"; prints one JSON line
-  * {"op": [t1x, t2x, t4x], ...} — near-constant ratios t2x/t1x ≈ 2 and
-  * t4x/t2x ≈ 2 mean linear scaling.
+  * Run by `graft.Bench --scale 1,2,4 [probe names...]`, which prints one
+  * JSON line {"op": [t1x, t2x, t4x], ...} — near-constant ratios
+  * t2x/t1x ≈ 2 and t4x/t2x ≈ 2 mean linear scaling.
   */
 object ScaleProbe {
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // sized past the query suite so repeated passes never recompile
-      // generated classes (see Bench.scala)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  /** The probes over the tables at `sfDir`, in report order. Each maps a
+    * replication multiplier to its measured value: wall seconds, or
+    * shuffle MB for the `pagerank_iter_mb` rows.
+    */
+  def probes(spark: SparkSession, sfDir: String): Seq[(String, Int => Double)] = {
 
     def docsAt(mult: Int): DataFrame = {
       val base = Tables.documents(spark, sfDir)
@@ -195,834 +187,7 @@ object ScaleProbe {
         .select(col("x.p").as("src"), col("y.p").as("dst"))
     }
 
-    val ops: Seq[(String, Int => Long)] = Seq(
-      "token_stats"   -> (m => TextStats.tokenStats(docsAt(m), "doc_id", "text").count()),
-      // q289's theta set ops: membership grows ×m but sketch state is
-      // O(k) per group — the curve must track the ONE corpus scan, with
-      // the pairwise stage flat (|groups|²-bounded, sketch-sized)
-      "theta_overlap" -> { m =>
-        graft.ext.ThetaSketch.overlapEstimates(
-          graft.ext.ThetaSketch.kminSketch(evAt(m), "event_type", "user_id", 256))
-          .count()
-      },
-      // q290's peel on disjoint graph copies: rounds and layer sizes are
-      // m-invariant, so cost must track the per-round adjacency joins
-      "kcore_peel" -> { m =>
-        graft.ext.Graphs.kCore(copurchaseAt(m), "src", "dst",
-          k = 80, rounds = 4).count()
-      },
-      // q297's neighborhood sketches on disjoint copies: per-round work
-      // is adjacency × k exploded hashes — must track the edge list
-      "hyperanf" -> { m =>
-        graft.ext.Graphs.hyperAnf(copurchaseAt(m, partMod = 7),
-          "src", "dst", rounds = 4, k = 32).count()
-      },
-      // q294's fingerprint path (the native graft_dhash64 expression —
-      // one char scan per row), no shuffle — must track the corpus scan.
-      // The fingerprint columns are CONSUMED by the aggregate: a bare
-      // count() would column-prune the expression away and time an empty
-      // scan (which is exactly what the pre-r11 row measured)
-      "dhash_fp" -> { m =>
-        graft.ext.Multimodal.dhashFingerprints(docsAt(m), "doc_id", "text")
-          .agg(sum(col("fp_hi") + col("fp_lo")).as("__s"))
-          .count()
-      },
-      // q302's container near-dup on an m×-grown corpus whose replicas
-      // carry a per-replica ROTATED-alphabet translate (not a uniform
-      // char shift — dHash is brightness-shift invariant, so +r on every
-      // char would plant m² cross-replica hamming-0 twins and measure a
-      // quadratic TRUE-pair mass, not the operator): output stays
-      // corpus-linear and the curve must track fingerprints + the
-      // (frame, band)-blocked join
-      "video_dhash" -> { m =>
-        val alpha = "abcdefghijklmnopqrstuvwxyz"
-        val corpus = (0 until m).map { r =>
-          val rot = alpha.drop(r % 26) + alpha.take(r % 26)
-          Tables.documents(spark, sfDir)
-            .select((col("doc_id") + lit(r * 1000000L)).as("doc_id"),
-              translate(col("text"), alpha, rot).as("text"))
-        }.reduce(_ unionByName _)
-          .repartition(spark.sparkContext.defaultParallelism)
-        graft.ext.Multimodal.videoDhashNearDups(corpus, "doc_id", "text",
-          n = 4, frameBytes = 96, maxHamming = 3, minShared = 3).count()
-      },
-      // q292's sketch path in isolation (the audit's exact side is
-      // deliberately excluded — it is the thing the sketch replaces):
-      // one histogram aggregate, state bounded by the bucket space
-      "hdr_histogram" -> { m =>
-        val ev = (0 until m).map(_ => Tables.events(spark, sfDir))
-          .reduce(_ unionByName _)
-          .repartition(spark.sparkContext.defaultParallelism)
-          .select(col("event_type"),
-            expr("CAST(round(value * 100, 0) AS BIGINT)").as("v"))
-        graft.ext.HdrSketch.hdrHistogram(ev, "event_type", "v").count()
-      },
-      // unigram-LM trainer (q284): ONE corpus scan builds the word-count
-      // frame; candidate generation, all three segment rounds and the
-      // prunes run over distinct words × a ≤(chars+48)-piece vocab — the
-      // curve must track the scan, with the vocab-sized rounds flat
-      "unigram_train" -> (m => TextStats.unigramTrain(docsAt(m), "text").count()),
-      // q244's G²: the corpus grows, the 20 sources do not — the
-      // (source, token) agg must scale with the scan while the marginal
-      // joins and the top-k window stay post-agg-sized
-      "keyness_g2"    -> (m => TextStats.keyness(docsAt(m), "source", "text", k = 5).count()),
-      // q260's KS: ECDF windows and the pair join run on the
-      // (group, value) spine — replicas widen the length support only via
-      // the " replicaN" suffix, so growth must track the one corpus scan
-      "ks_pairwise_len" -> { m =>
-        val dl = docsAt(m).select(col("source"),
-          size(graft.ext.TextDedup.tokens(col("text"))).cast("long").as("len"))
-        graft.ext.RobustStats.ksPairwise(dl, "source", "len").count()
-      },
-      // the q186 Q21 shape: fact⋈fact semi + anti joins on the orderkey —
-      // both probe sides grow with m, so the join must stay key-partitioned
-      // linear (no pair blowup inside an order: ≤ 7 lines each)
-      "q21_semi_anti" -> { m =>
-        val li = liAt(m); val fo = foAt(m)
-        val late = li.join(fo, col("l_orderkey") === col("o_orderkey"))
-          .filter(col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS"))
-          .select(col("l_orderkey"), col("l_suppkey"))
-        late
-          .join(li.select(col("l_orderkey").as("o2"), col("l_suppkey").as("s2")),
-            col("l_orderkey") === col("o2") && col("l_suppkey") =!= col("s2"),
-            "left_semi")
-          .join(late.select(col("l_orderkey").as("o3"), col("l_suppkey").as("s3")),
-            col("l_orderkey") === col("o3") && col("l_suppkey") =!= col("s3"),
-            "left_anti")
-          .groupBy(col("l_suppkey")).agg(count(lit(1))).count()
-      },
-      // whole-query BM25 over a growing corpus: per-term tf is a
-      // projection, so time must track the scan, not the term count
-      "bm25_query_topk" -> (m =>
-        graft.ext.Retrieval.bm25QueryTopK(docsAt(m), "doc_id", "text",
-          Seq("table", "query", "join"), perTermK = 20, k = 20).count()),
-      // late interaction with a FIXED 2-doc query side against a growing
-      // chunked corpus: the query side broadcasts, so cost must track the
-      // corpus chunk scan (the dim join fans each corpus entry out to the
-      // bounded query entries of its dim — a constant factor)
-      "late_interaction" -> { m =>
-        val chunks = graft.ext.Packing.chunkDocuments(docsAt(m), "doc_id", "text",
-            chunkTokens = 40, stride = 40)
-          .select(concat_ws("#", col("doc_id"), col("chunk_id")).as("cid"),
-            col("chunk_text"))
-        val tall = TextStats.featureHashing(chunks, "cid", "chunk_text", dims = 32)
-          .select(split(col("cid"), "#").getItem(0).cast("long").as("doc"),
-            split(col("cid"), "#").getItem(1).cast("long").as("chunk"),
-            col("dim"), col("weight"))
-        graft.ext.Retrieval.lateInteractionTopK(
-          tall.filter(col("doc") < 2), tall.filter(col("doc") >= 2), k = 10).count()
-      },
-      // span corruption: the position explode is the row-inflation hazard
-      // (×n_tokens); the island window stays doc-keyed so growth must be
-      // the explode scan, never a cross-doc sort
-      "span_corruption" -> (m =>
-        graft.ext.Packing.spanCorruptionStats(docsAt(m), "doc_id", "text",
-          maskBp = 1500L).count()),
-      // ANALYZE column profile: the melt multiplies rows ×3 — cost must
-      // track that constant-factor scan plus the value-cardinality agg
-      "column_profile" -> (m =>
-        graft.ext.OptimizerStats.columnProfile(liAt(m),
-          Seq("l_orderkey", "l_suppkey", "l_shipdate")).count()),
-      // Zipf fit: vocabulary hash-agg + TakeOrdered(200) + bounded OLS —
-      // the cut must keep the cost at the aggregate, not a sort
-      "zipf_fit" -> (m => TextStats.zipfFit(docsAt(m), "text", 200).count()),
-      "exact_dedup"   -> (m => docsAt(m).groupBy(md5(col("text").cast("binary"))).count().count()),
-      "minhash_sigs"  -> (m => TextDedup.minhashSignatures(docsAt(m), "doc_id", "text", 8, 2).count()),
-      // NOTE: signature build is excluded from this op's timing (it is
-      // measured separately as minhash_sigs) — see the custom loop below
-      "lsh_candidates" -> (m => m.toLong),
-      "tfidf_top"     -> (m => TextStats.tfidfTop(docsAt(m), "doc_id", "text", 3).count()),
-      "centroid_assign" -> { m =>
-        val e = embAt(m)
-        VectorSearch.assignToNearestCentroid(
-          e, "vec_id", "embedding", VectorSearch.centroidsBp(e, "embedding", "label")).count()
-      },
-      // the hot-shingle document-frequency cap under its worst case: the
-      // hot phrase's shingles are dropped before the self-join, so growth
-      // tracks the discriminative-shingle pair count, not |block|²
-      "ngram_jaccard_capped" -> (m =>
-        TextDedup.jaccardPairs(docsStopHeavy(m), "doc_id", "text", "source",
-          shingleN = 2, maxDocFreq = 64).count()),
-      // the bucket-size guard on the real embedding distribution: hot sign
-      // buckets split on extra sign bits before the within-bucket pair join
-      "embedding_neardup_guarded" -> (m =>
-        VectorSearch.nearDupPairs(embAt(m), "vec_id", "embedding",
-          bits = 6, threshold = 0.5, maxBucketSize = 64, extraBits = 6).count()),
-      // decontamination under MAXIMAL match density: docsAt replicas keep
-      // their interior shingles, so nearly every train trigram collides
-      // with the (fixed, unreplicated) holdout — the proof that the
-      // semi-join shape stays linear even when everything matches: holdout
-      // digests are distinct, so each train shingle joins at most one row
-      "decontaminate_matchheavy" -> (m =>
-        Decontaminate.contamination(docsAt(m), Tables.documents(spark, sfDir),
-          "doc_id", "text", shingleN = 3).count()),
-      // the explode-heaviest projection: chunk tiling (~n_tokens/stride
-      // rows per doc) plus the per-doc lead window — row inflation must
-      // stay a constant factor, not a growth term
-      "doc_chunk_pairs" -> (m =>
-        Packing.contrastivePairs(docsAt(m), "doc_id", "text",
-          chunkTokens = 40, stride = 30).count()),
-      // quantized retrieval with a FIXED query set against a growing
-      // corpus: broadcast product, so time must track corpus size only
-      "quantized_topk" -> { m =>
-        VectorSearch.quantizedTopK(
-          Tables.embeddings(spark, sfDir).filter(col("vec_id") < 10), embAt(m),
-          "vec_id", "embedding", "vec_id", "embedding", k = 5).count()
-      },
-      // the iterative fixpoint: band-star edges + pointer-jumped min-label
-      // CC. docsAt replicas keep their interior shingles, so replicas of a
-      // doc land in the same buckets and components MERGE across replicas —
-      // edges grow linearly while component diameter grows with the
-      // multiplier, stressing the O(log diameter) round bound. Signature
-      // build is excluded (measured as minhash_sigs); see custom loop below
-      "dedup_clusters_cc" -> (m => m.toLong),
-      // PQ encode at the standard 256-codeword cardinality: cost is
-      // inherently N × m × K distance folds, so time must track corpus
-      // size (the cell-exploded formulation this replaced was N × d × K
-      // rows and 16× slower — this row guards that regression)
-      "pq_encode" -> { m =>
-        val e = embAt(m)
-        graft.ext.VectorSearch.pqEncode(e, "vec_id", "embedding",
-          graft.ext.VectorSearch.pqCodebooksSign(e, "vec_id", "embedding",
-            m = 4, dims = 64, bits = 8),
-          m = 4, dims = 64).count()
-      },
-      // containment under a DEGENERATE blocking: the whole corpus in ONE
-      // block with the Zipf-hot shared phrase — blocking prunes nothing,
-      // so the only thing standing between the self-join and |corpus|² is
-      // the shingle document-frequency cap. Bodies are replica-distinct,
-      // so true matches grow linearly and the ratio isolates the cap
-      "containment_hotblock" -> (m =>
-        TextDedup.containmentPairs(
-          docsStopHeavy(m).withColumn("source", lit("hot")),
-          "doc_id", "text", "source", shingleN = 2, maxDocFreq = 64).count()),
-      // simhash banding with a CONSTANT-size low-hamming cluster (two
-      // 256-doc groups of identical fingerprints → permanently hot band
-      // buckets) inside a corpus whose replicas have per-token-perturbed
-      // bodies (spread fingerprints). Bands are 16-bit — the WWW'07 regime
-      // the operator doc prescribes at scale, keeping random bucket
-      // occupancy O(n/2^16) — so growth must track the corpus scan + agg,
-      // with the hot cluster contributing a fixed candidate count
-      "simhash_banding_cluster" -> { m =>
-        val diverse = {
-          val base = Tables.documents(spark, sfDir)
-          (0 until m).map { r =>
-            base.withColumn("doc_id", col("doc_id") + lit(r * 1000000L))
-              .withColumn("text", regexp_replace(col("text"), "(\\S+)", "$1" + r))
-          }.reduce(_ unionByName _)
-        }
-        val cluster = spark.range(512).select(
-          (col("id") + 900000000L).as("doc_id"),
-          concat(lit("alpha beta gamma delta epsilon zeta eta theta iota kappa"),
-            when(col("id") % 2 === 0, lit(" pad")).otherwise(lit(""))).as("text"))
-        TextDedup.simhashNearDups(
-          diverse.select(col("doc_id"), col("text")).unionByName(cluster)
-            .repartition(spark.sparkContext.defaultParallelism),
-          "doc_id", "text", nBands = 2, maxHamming = 1).count()
-      },
-      // semantic dedup under embedding collapse: a CONSTANT 512-vector
-      // identical cluster (the guard sub-splits oversized clusters, but
-      // identical vectors share every sign bit — their pair cost is the
-      // fixed price of never missing an exact dup) inside a growing
-      // corpus whose k-means clusters stay occupancy-bounded; training
-      // runs per multiplier (it IS part of the operator's scale story)
-      "semantic_dedup_guarded" -> { m =>
-        val hot = Tables.embeddings(spark, sfDir).filter(col("vec_id") === 0)
-          .crossJoin(spark.range(512).select((col("id") + 900000000L).as("__hid")))
-          .select(col("__hid").as("vec_id"), col("embedding"))
-        val corpus = embAt(m).select(col("vec_id"), col("embedding"))
-          .unionByName(hot)
-        val cent = graft.ext.VectorSearch.kmeansFit(
-          corpus, "vec_id", "embedding", k = 10, iters = 2)
-        graft.ext.VectorSearch.semanticDedup(corpus, "vec_id", "embedding",
-          cent, threshold = 0.8, maxClusterSize = 64, extraBits = 6).count()
-      },
-      // the sharded budget sampler under maximal stratum skew: ONE stratum
-      // holds half the corpus. The in-shard windows spread it over 16
-      // tasks and the per-stratum exact-cum window only ever sees the
-      // budget-capped candidates, so growth must track the corpus scan —
-      // the single-window formulation this replaced sorted the hot
-      // stratum's entire slice in one task
-      "token_budget_hot_stratum" -> { m =>
-        val docs = docsAt(m)
-          .withColumn("source",
-            when(col("doc_id") % 2 === 0, lit("hot")).otherwise(col("source")))
-          .withColumn("n_tokens", size(TextDedup.tokens(col("text"))).cast("long"))
-        Sampling.tokenBudgetSample(docs, "source", "doc_id", "n_tokens",
-          budget = 20000L).count()
-      },
-      // MMR re-rank with a growing corpus: the relevance stage is the
-      // broadcast-queries × corpus scan (linear); the pair self-join and
-      // greedy UDF only ever touch queries × candK² rows — a constant —
-      // so growth must track the corpus scan alone
-      "mmr_rerank" -> { m =>
-        val emb = embAt(m)
-        VectorSearch.mmrRerank(
-          Tables.embeddings(spark, sfDir).filter(col("vec_id") < 10),
-          emb.filter(col("vec_id") >= 10),
-          "vec_id", "embedding", "vec_id", "embedding",
-          candK = 10, k = 3, lambdaPermille = 700L).count()
-      },
-      // priority sampling under the same maximal stratum skew: one
-      // stratum holds half the corpus, k = 100. The per-(stratum, shard)
-      // rank spreads the hot stratum's sort over 16 tasks and the
-      // per-stratum rank only ever sees ≤ shards·k survivors, so growth
-      // must track the corpus scan
-      "priority_sample_hot_stratum" -> { m =>
-        val docs = docsAt(m)
-          .withColumn("source",
-            when(col("doc_id") % 2 === 0, lit("hot")).otherwise(col("source")))
-          .withColumn("w", size(TextDedup.tokens(col("text"))).cast("long") + 1L)
-        Sampling.prioritySample(docs, "source", "doc_id", "w", k = 100).count()
-      },
-      // DSIR importance weighting end to end (model + scoring): the model
-      // is ≤128 rows no matter the corpus size and broadcasts into the
-      // (doc, bucket)-keyed scoring aggregate, so growth must track the
-      // two corpus scans — there is no corpus-sized join side to blow up
-      "dsir_weights" -> { m =>
-        val docs = docsAt(m).withColumn("__is_t", col("doc_id") % 10 === 0)
-        Sampling.importanceWeights(docs, "doc_id", "text", "__is_t", buckets = 128).count()
-      },
-      // paragraph dedup under total boilerplate: EVERY document (replicas
-      // included) opens with the same 10-token paragraph, so one digest's
-      // occurrence count equals the corpus size. The min(struct) winner
-      // aggregate collapses it map-side and the digest is never a join
-      // key, so growth must track the corpus scan — the join-back
-      // formulation this avoids would send every occurrence of the hot
-      // digest to a single reducer
-      "paragraph_dedup_hot_para" -> { m =>
-        val docs = docsAt(m).withColumn("text",
-          concat(lit("shared header line repeated on every page of this corpus "), col("text")))
-        ParagraphDedup.paragraphDedup(docs, "doc_id", "text", paraTokens = 10).count()
-      },
-      // duplicated-shingle scoring with one corpus-wide hot 3-gram: the
-      // doc-frequency side collapses the hot digest to ONE row (map-side
-      // combinable count), so the join-back is a skew-split/broadcast of a
-      // single hot build row, never a hot-reducer pile-up
-      "dup_shingle_hot" -> { m =>
-        val docs = docsAt(m).withColumn("text",
-          concat(lit("hot shared shingle "), col("text")))
-        ParagraphDedup.dupShingleScore(docs, "doc_id", "text", shingleN = 3).count()
-      },
-      // timed via the custom loop below (index materialized outside the
-      // timer — persisted production state)
-      "incr_para_probe" -> (m => m.toLong),
-      // bigram fluency with one corpus-wide hot bigram: every document
-      // opens with the same word pair, so one bigram's occurrence count
-      // equals the corpus size. The model side pre-collapses it to ONE
-      // row (partial+final count), so the scoring join-back is a
-      // broadcast/skew-split of a single hot build row — growth must
-      // track the exploded scan, not the hot bigram's frequency
-      "bigram_fluency_hot" -> { m =>
-        val docs = docsAt(m).withColumn("text",
-          concat(lit("hota hotb "), col("text")))
-        TextStats.bigramFluency(docs, "doc_id", "text").count()
-      },
-      // representative selection over ONE giant cluster holding the whole
-      // corpus (the boilerplate-blob degenerate case): the min(struct)
-      // argmax must collapse map-side — a rank-window formulation would
-      // sort the entire corpus in a single task and the ratio would blow
-      // past linear
-      "cluster_reps_giant" -> { m =>
-        val docs = docsAt(m)
-        val labels = docs.select(col("doc_id"), lit(0L).as("cluster_id"))
-        val scores = docs.select(col("doc_id"),
-          size(TextDedup.tokens(col("text"))).cast("long").as("n_tokens"))
-        Components.representatives(labels, scores, "doc_id", "cluster_id", "n_tokens").count()
-      },
-      // source overlap with two sources and a corpus-wide hot phrase every
-      // document of BOTH sources shares (docsStopHeavy's leading stopword
-      // run): the hot digests are the max-density pair case — they occur
-      // in both sources, so every one emits a pair row — while the
-      // replica-suffixed bodies keep the distinct digest space growing
-      // linearly with the multiplier, so the probe isolates the
-      // distinct+self-join shape rather than re-measuring collapsing
-      // duplicate digests
-      "source_overlap_2src" -> { m =>
-        val docs = docsStopHeavy(m).withColumn("source",
-          when(col("doc_id") % 2 === 0, lit("even")).otherwise(lit("odd")))
-        Decontaminate.sourceOverlap(docs, "source", "text", shingleN = 2).count()
-      },
-      // the power-iteration loop: a graph growing linearly with the corpus
-      // (a 10-ary tree over doc ids plus everyone-cites-one-of-100-hubs
-      // edges, so in-degree skew grows with corpus size). Per-iteration
-      // cost is claimed O(E) with map-side partial aggregation absorbing
-      // the hub skew — the ratio must track edge growth, not hub in-degree
-      "pagerank_iter" -> { m =>
-        val docs = docsAt(m).select(col("doc_id"))
-        val edges = docs.select(col("doc_id").as("src"), expr("doc_id div 10").as("dst"))
-          .union(docs.select(col("doc_id").as("src"), (col("doc_id") % 100).as("dst")))
-        graft.ext.Graphs.pageRankInt(edges, "src", "dst", iters = 3).count()
-      },
-      // the dictionary-encode trade at realistic key width: the fan-out
-      // url graph, 6 iterations, string-keyed vs idDictionary-encoded.
-      // The encoded run pays the dictionary build + two encode joins + one
-      // decode join ONCE; every iteration then shuffles (long, long) rows
-      // instead of url-width strings — 2 shuffles × 6 iterations of ~3.4×
-      // fewer bytes (the _mb rows below measure the reduction directly)
-      "pagerank_url_str" -> { m =>
-        graft.ext.Graphs.pageRankInt(urlEdgesAt(m), "src", "dst", iters = 6).count()
-      },
-      "pagerank_url_encoded" -> { m =>
-        graft.ext.Graphs.pageRankInt(urlEdgesAt(m), "src", "dst", iters = 6,
-          encodeIds = true).count()
-      },
-      // values are MB (shuffle bytes written by ONE iteration), not
-      // seconds — the width metric that survives this host's noise
-      "pagerank_iter_mb_str" -> (m => m.toLong),
-      "pagerank_iter_mb_enc" -> (m => m.toLong),
-      // classifier training end to end (feature build + 6 GD rounds):
-      // per-round cost is ONE map-side-combinable 6-column aggregate over
-      // the persisted feature frame and a 1×6 collect — there is no join,
-      // window, or corpus-sized driver state anywhere in the loop, so
-      // growth must track the corpus scan × a constant round count
-      "lr_train" -> { m =>
-        val corpus = graft.ext.Classifier.weakLabelCorpus(docsAt(m), "doc_id", "text")
-        val feats = graft.ext.Classifier.lrFeatures(
-          corpus, "doc_id", "text", col("y") === 1L).persist()
-        try graft.ext.Classifier.lrTrain(feats, iters = 6).length.toLong
-        finally feats.unpersist()
-      },
-      // the epoch shuffle: seeded-hash shard exchange + per-shard rank
-      // window (corpus/16 rows per sort task at this shard constant) × 2
-      // epochs — growth must track the corpus scan; a global-sort
-      // formulation would range-partition the whole corpus per epoch
-      "epoch_shuffle" -> (m =>
-        Packing.epochShuffle(docsAt(m), "doc_id", Seq(1, 2)).count()),
-      // synchronous LPA over the fan-out url graph, 3 rounds: per round
-      // one labels⋈adjacency equi-join + two hash-aggs. The vote argmax is
-      // an aggregate (min(struct)), so the 997-site hub skew combines
-      // map-side — a window formulation would sort each hub's votes in
-      // one task and the 4× ratio would bend superlinear
-      "label_prop_url" -> (m =>
-        graft.ext.Graphs.labelPropagation(urlEdgesAt(m), "src", "dst", iters = 3).count()),
-      // kNN graph under the bucket cap: candidate pairs grow with
-      // Σ bucket², which the maxBucketSize guard re-shards — growth must
-      // track the guarded pair count, not corpus². (embAt replicas share
-      // sign patterns, so buckets GROW with m — the adversarial case the
-      // guard exists for.)
-      "knn_graph_guarded" -> (m =>
-        VectorSearch.knnGraph(embAt(m), "vec_id", "embedding",
-          k = 5, bits = 6, maxBucketSize = 64).count()),
-      // curriculum staging: both windows key on (source[, stage]), so the
-      // per-task sort is corpus/|sources| rows — linear growth with the
-      // corpus at a fixed source count, and never a global range exchange
-      "curriculum" -> (m =>
-        TextStats.curriculumOrder(docsAt(m), "doc_id", "text", "source",
-          stages = 4).count()),
-      // embedding-outlier audit: the corpus explodes to dims cells/vector
-      // and meets ONLY broadcasts (centroid cells, the 1-row mean) — the
-      // trained centroids are session state, built outside the frame
-      "embedding_outliers" -> { m =>
-        val cents = graft.queries.QueryCaches.ivfCentFor(spark, sfDir)
-        val assigned = VectorSearch.assignToNearestCentroid(
-          embAt(m), "vec_id", "embedding", cents)
-        val g = assigned.agg(expr("sum(dist_bp2) div count(1)").as("__avg2"))
-        assigned.crossJoin(broadcast(g))
-          .filter(col("dist_bp2") * 10L > col("__avg2") * 20L).count()
-      },
-      "incr_knn_probe" -> (m => m.toLong),
-      // content-defined chunking: tokenize + anchor flags are a
-      // projection, the chunk index is a doc-keyed running sum (one
-      // document per window partition), and sharedness joins digest-width
-      // rows — replicas share most chunks, so the digest side's distinct
-      // space stays ~constant while the probe side grows ×m (the
-      // dup_shingle_hot shape at chunk grain)
-      "cdc_chunks" -> (m =>
-        graft.ext.ParagraphDedup.contentDefinedChunks(
-          docsAt(m), "doc_id", "text", anchorMod = 8).count()),
-      // drift monitor: one (source, bucket) conditional-sum aggregate
-      // over the exploded token stream + a roll-up of ≤ 64 rows/source —
-      // growth must track the token scan alone
-      "token_drift" -> (m =>
-        TextStats.tokenDrift(
-          docsAt(m).withColumn("__a", col("doc_id") % 2 === 0),
-          "text", "source", "__a").count()),
-      // frame voting under its worst case: EVERY payload opens with the
-      // same 16-byte template header, so frame 0 is one corpus-sized
-      // (idx, digest) block — the maxBlockSize cap must drop it before
-      // the self-join, leaving growth to the (distinct) residual frames
-      "frame_vote_hot" -> { m =>
-        val payloads = docsAt(m).select(col("doc_id"),
-          concat(lit("TEMPLATEHEADER16"), col("text")).cast("binary").as("payload"))
-        graft.ext.Multimodal.frameFingerprintNearDups(payloads, "doc_id", "payload",
-          n = 4, frameBytes = 16, minShared = 1, maxBlockSize = 64).count()
-      },
-      // PMI on the stop-heavy corpus (corpus-hot bigrams + replica-grown
-      // vocabulary): both counting aggregates must map-side combine and
-      // the marginal joins stay vocab-sized
-      "pmi_collocations" -> (m =>
-        TextStats.pmiCollocations(docsStopHeavy(m), "text", minCount = 5L, k = 50).count()),
-      // vocabulary-free vectorizer: one exploded scan + one (doc, dim)
-      // hash-agg — the flattest curve in the text tier by construction
-      "feature_hashing" -> (m =>
-        TextStats.featureHashing(docsAt(m), "doc_id", "text", dims = 32).count()),
-      // full greedy k-center select (4 rounds, each one corpus scan +
-      // TakeOrdered(1)): time must track the corpus linearly — the chosen
-      // set rides as literals, so there is no join side to grow
-      "kcenter_select" -> (m =>
-        VectorSearch.kCenterSelect(embAt(m), "vec_id", "embedding", k = 4).count()),
-      // held-out LM scoring on the stop-heavy corpus: hot bigrams inflate
-      // the model side's per-bigram counts, not its row count — the two
-      // vocab-keyed left joins must stay vocabulary-sized while the
-      // scoring side pre-collapses per (doc, bigram)
-      "heldout_lm" -> { m =>
-        val docs = docsStopHeavy(m)
-        val lbl  = Sampling.splitLabel(col("doc_id"), trainBp = 9000)
-        TextStats.interpolatedFluency(
-          docs.filter(lbl =!= "train"),
-          TextStats.bigramModel(docs.filter(lbl === "train"), "text"),
-          TextStats.unigramModel(docs.filter(lbl === "train"), "text"),
-          "doc_id", "text", lambdaPermille = 800L).count()
-      },
-      // windowed co-occurrence on the stop-heavy corpus: the hot pairs
-      // collapse map-side in the single (w1, w2) hash-agg; the positional
-      // tiers are pure projections, so growth tracks the token scan
-      "cooccurrence" -> (m =>
-        TextStats.cooccurrenceTop(docsStopHeavy(m), "text", window = 2, k = 50).count()),
-      // percentile normalization: the corpus enters one histogram
-      // aggregate; windows run over ≤ score-cardinality rows per source
-      // and the permille joins back on (source, score)
-      "score_percentile" -> { m =>
-        val sc = TextStats.qualityScore(docsAt(m), "doc_id", "text")
-          .select(col("doc_id"), col("ttr_bp"))
-        val scored = docsAt(m).select(col("doc_id"), col("source")).join(sc, "doc_id")
-        Sampling.scorePercentile(scored, "source", "ttr_bp").count()
-      },
-      // exact prefix-filter all-pairs join: replicas of one base doc are
-      // TRUE near-dups of each other (they differ by one replica tag), so
-      // the true-pair count itself grows ~m² per doc group — the probe
-      // certifies that candidate+verify work tracks the TRUE pairs, while
-      // the frequent-shingle mass (df-ordered out of every prefix) never
-      // re-enters the join as the corpus grows
-      "prefix_filter_pairs" -> (m =>
-        TextDedup.prefixFilterJaccardPairs(docsAt(m), "doc_id", "text",
-          shingleN = 2, thresholdBp = 8000).count()),
-      // triangle counting under worst-case degree skew: m disjoint copies
-      // of the co-purchase graph PLUS one hub adjacent to every part
-      // (deg(hub) = 20k·m). Degree-ordered orientation must keep the hub
-      // wedge-free (all its edges point IN), so growth tracks the edge
-      // count, never deg(hub)²
-      "triangles_hub" -> { m =>
-        val li = (0 until m).map { r =>
-          Tables.lineitem(spark, sfDir)
-            .select((col("l_orderkey") + lit(r * 100000000L)).as("o"),
-              (col("l_partkey") + lit(r * 10000000L)).as("p"))
-        }.reduce(_ unionByName _)
-          .repartition(spark.sparkContext.defaultParallelism)
-          .distinct()
-        val edges = li.as("x")
-          .join(li.as("y"), col("x.o") === col("y.o") && col("x.p") < col("y.p"))
-          .select(col("x.p").as("src"), col("y.p").as("dst"))
-        val hub = li.select(col("p").as("src")).distinct()
-          .withColumn("dst", lit(-1L))
-        graft.ext.Graphs.triangleCounts(edges.unionByName(hub), "src", "dst").count()
-      },
-      // Adamic-Adar under the q247 hub cap: m disjoint copies of the
-      // co-purchase graph PLUS one hub adjacent to every part
-      // (deg(hub) = 20k·m). The cap must exclude the hub as a wedge
-      // center BEFORE the quadratic pair join, so growth tracks the
-      // capped wedge mass (linear in disjoint copies), never deg(hub)²
-      "adamic_adar_cap" -> { m =>
-        val li = (0 until m).map { r =>
-          Tables.lineitem(spark, sfDir)
-            .select((col("l_orderkey") + lit(r * 100000000L)).as("o"),
-              (col("l_partkey") + lit(r * 10000000L)).as("p"))
-        }.reduce(_ unionByName _)
-          .repartition(spark.sparkContext.defaultParallelism)
-          .distinct()
-        val edges = li.as("x")
-          .join(li.as("y"), col("x.o") === col("y.o") && col("x.p") < col("y.p"))
-          .select(col("x.p").as("src"), col("y.p").as("dst"))
-        val hub = li.select(col("p").as("src")).distinct()
-          .withColumn("dst", lit(-1L))
-        graft.ext.Graphs.adamicAdar(edges.unionByName(hub), "src", "dst",
-          maxDeg = 150, k = 30).count()
-      },
-      // pivot-sampled betweenness under hub skew: m disjoint co-purchase
-      // copies PLUS one hub adjacent to every part (deg(hub) = 20k·m, the
-      // triangles_hub plant). At a FIXED pivot budget Brandes' forward
-      // pass is pivots × edges per level by construction, so the curve
-      // must track the adjacency scan (near-flat over disjoint copies —
-      // pivots scatter across copies and each BFS touches only its own
-      // component); the hub inflates one frontier fanout but σ/δ stay
-      // per-(pivot, node) aggregates, never deg(hub)² pair work. The
-      // 1× floor is the ~2·rounds-level BSP barrier depth (the kcore/
-      // hyperanf class), which amortizes on a real cluster.
-      "betweenness_pivots" -> { m =>
-        val edges = copurchaseAt(m)
-        val hub = edges.select(col("src")).unionByName(
-            edges.select(col("dst").as("src"))).distinct()
-          .withColumn("dst", lit(-1L))
-        graft.ext.Graphs.betweenness(edges.unionByName(hub), "src", "dst",
-          pivots = 6, rounds = 3, topK = 25).count()
-      },
-      // harmonic centrality (HyperANF-style KMV ball sketches) under the
-      // same hub plant: per round each node merges O(k)-state sketches
-      // over its neighborhood — the hub merges 20k·m neighbor sketches
-      // into ONE k-sized state through the map-side-combining array
-      // aggregate, so growth must track edge count, never hub degree ×
-      // sketch width beyond the one combine pass
-      "harmonic_balls" -> { m =>
-        val edges = copurchaseAt(m)
-        val hub = edges.select(col("src")).unionByName(
-            edges.select(col("dst").as("src"))).distinct()
-          .withColumn("dst", lit(-1L))
-        graft.ext.Graphs.harmonicCentrality(edges.unionByName(hub),
-          "src", "dst", rounds = 3, k = 32, topK = 25).count()
-      },
-      // the q208 TPC-H Q7 fact⋈fact shape with facts replicated and dims
-      // FIXED (production growth: lineitem and orders scale, supplier and
-      // nation do not) — the supplier side must stay a broadcast at every
-      // multiplier and the orderkey join must track fact size
-      "tpch_volume_join" -> { m =>
-        val li = (0 until m).map { r =>
-          Tables.lineitem(spark, sfDir).select(
-            (col("l_orderkey") + lit(r * 100000000L)).as("l_orderkey"),
-            col("l_suppkey"), col("l_shipdate"),
-            col("l_extendedprice"), col("l_discount"))
-        }.reduce(_ unionByName _)
-          .repartition(spark.sparkContext.defaultParallelism)
-        val ord = (0 until m).map { r =>
-          Tables.orders(spark, sfDir).select(
-            (col("o_orderkey") + lit(r * 100000000L)).as("o_orderkey"),
-            col("o_custkey"))
-        }.reduce(_ unionByName _)
-          .repartition(spark.sparkContext.defaultParallelism)
-        val nations = Seq("NATION_5", "NATION_12")
-        val sup = Tables.supplier(spark, sfDir)
-          .join(broadcast(Tables.nation(spark, sfDir)
-            .filter(col("n_name").isin(nations: _*))),
-            col("s_nationkey") === col("n_nationkey"))
-          .select(col("s_suppkey"), col("n_name").as("supp_nation"))
-        val cust = Tables.customer(spark, sfDir)
-          .join(broadcast(Tables.nation(spark, sfDir)
-            .filter(col("n_name").isin(nations: _*))),
-            col("c_nationkey") === col("n_nationkey"))
-          .select(col("c_custkey"), col("n_name").as("cust_nation"))
-        li.filter(col("l_shipdate") >= lit("1996-01-01") &&
-            col("l_shipdate") < lit("1998-01-01"))
-          .select(col("l_orderkey"), col("l_suppkey"),
-            year(col("l_shipdate")).cast("long").as("l_year"),
-            round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100, 0)
-              .cast("long").as("rev"))
-          .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-          .join(ord.join(cust, col("o_custkey") === col("c_custkey")),
-            col("l_orderkey") === col("o_orderkey"))
-          .groupBy(col("supp_nation"), col("cust_nation"), col("l_year"))
-          .agg(sum(col("rev")).as("revenue_cents"))
-          .count()
-      },
-      // Fellegi-Sunter linkage with the record sets replicated (names
-      // perturbed per replica so the suffix blocks stay selective — the
-      // realistic growth, not m identical twins per block) — the capped
-      // same-nation block is what keeps the hot blocking pass linear as
-      // both sides grow
-      "fs_linkage_blocked" -> { m =>
-        val sup0 = (0 until m).map { r =>
-          Tables.supplier(spark, sfDir).select(
-            (col("s_suppkey") + lit(r * 1000000L)).as("s_suppkey"),
-            concat(col("s_name"), lit(r.toString)).as("s_name"),
-            col("s_nationkey"),
-            round(col("s_acctbal") * 100, 0).cast("long").as("bal"))
-        }.reduce(_ unionByName _)
-          .repartition(spark.sparkContext.defaultParallelism)
-          .withColumn("s_bkt", expr("(bal + 10000500L) div 1000L"))
-        val dirty = sup0.select(
-            (col("s_suppkey") + 100000000L).as("d_id"),
-            expr("concat(substring(s_name, 1, 9), substring(s_name, 11))").as("d_name"),
-            when(col("s_suppkey") % 7 === 0, (col("s_nationkey") + 1) % 25)
-              .otherwise(col("s_nationkey")).as("d_nation"),
-            expr("((bal + 10000500L) div 1000L) * 1000L - 10000000L").as("d_bal"))
-          .withColumn("d_bkt", expr("(d_bal + 10000500L) div 1000L"))
-        val b1 = dirty.withColumn("__k", expr("right(d_name, 4)"))
-          .join(sup0.withColumn("__k", expr("right(s_name, 4)")), "__k").drop("__k")
-        val b2 = dirty.join(sup0,
-          col("d_nation") === col("s_nationkey") && col("d_bkt") === col("s_bkt"))
-        val supCapped = sup0.withColumn("__rn", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col("s_nationkey")).orderBy(col("s_suppkey"))))
-          .filter(col("__rn") <= 20).drop("__rn")
-        val b3 = dirty.join(supCapped, col("d_nation") === col("s_nationkey"))
-        val cand = b1.unionByName(b2).unionByName(b3)
-          .dropDuplicates("d_id", "s_suppkey")
-          .withColumn("a_name", graft.functions.GraftFunctions
-            .jaroWinkler(col("d_name"), col("s_name")) >= 0.97)
-          .withColumn("a_nation", col("d_nation") === col("s_nationkey"))
-          .withColumn("a_bal", abs(col("d_bal") - col("bal")) <= 1000)
-        val uPairs = dirty
-          .crossJoin(broadcast(sup0.agg(count(lit(1)).as("__n"))))
-          .withColumn("__pick", pmod(Sampling.hashBucket16(col("d_id")), col("__n")))
-          .join(sup0, col("s_suppkey") === col("__pick"))
-          .withColumn("a_name", graft.functions.GraftFunctions
-            .jaroWinkler(col("d_name"), col("s_name")) >= 0.97)
-          .withColumn("a_nation", col("d_nation") === col("s_nationkey"))
-          .withColumn("a_bal", abs(col("d_bal") - col("bal")) <= 1000)
-        graft.ext.Linkage.fellegiSunterScores(cand, uPairs,
-          Seq(("a_name", 9500L), ("a_nation", 9500L), ("a_bal", 9000L))).count()
-      },
-      // ONE power iteration over the TextRank word graph (edge build +
-      // join + inflow agg) as the corpus grows — the word graph's edge
-      // count tracks token count while its NODE set (the vocabulary)
-      // grows sublinearly, so the curve must track the token scan
-      "textrank_wordgraph" -> { m =>
-        graft.ext.Graphs.iterationPlanFrame(
-          TextStats.wordCoocEdges(docsAt(m), "text", window = 2),
-          "src", "dst").count()
-      },
-      // ROUGE on a FIXED candidate list as the corpus grows — the
-      // batch-shaped contract: the semi-join prefilter must keep the
-      // shingling work candidate-sized, so the curve should stay flat
-      // (the only growth term is the id semi-join's corpus-side scan)
-      "rouge_fixed_pairs" -> { m =>
-        val pairs = Tables.documents(spark, sfDir)
-          .filter(col("doc_id") % 29 === 0)
-          .select(col("doc_id").as("id_a"),
-            (col("doc_id") + 1L).as("id_b"))
-        TextDedup.rougeNPairs(pairs, docsAt(m), "doc_id", "text", n = 2).count()
-      },
-      // Matryoshka prefix-tier scan: 10 fixed queries, 4 dim tiers in ONE
-      // corpus pass — cost must track the corpus scan (linear), never
-      // tiers × corpus re-scans
-      "mrl_prefix_scan" -> { m =>
-        val qs = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 10)
-        VectorSearch.prefixDimTopK(qs, embAt(m).filter(col("vec_id") >= 10),
-          "vec_id", "embedding", "vec_id", "embedding",
-          k = 5, dims = Seq(8, 16, 32, 64)).count()
-      },
-      // padding-waste curve: the corpus enters one length-histogram agg;
-      // every window/explode after runs on |distinct lengths| rows, so
-      // the curve must track the token scan
-      "padding_hist" -> (m =>
-        Packing.paddingWasteCurve(docsAt(m), "text", Seq(1, 2, 4, 8, 16)).count()),
-      // UniMax allocation: one corpus token-count agg + |languages|-row
-      // windows — must track the scan
-      "unimax_alloc" -> (m =>
-        Sampling.unimaxBudget(docsAt(m), "lang", "text", 40000L, 2).count()),
-      // source-pair JSD: one (source, bucket) agg + a broadcast pair
-      // spine — must track the scan
-      "source_jsd" -> (m =>
-        TextStats.sourceDivergence(docsAt(m), "source", "text", 64).count()),
-      "graph_ann_walk" -> (m => m.toLong), // timed via `custom` below
-      "incr_simhash_probe" -> (m => m.toLong), // timed via `custom` below
-      "incr_simhash64_probe" -> (m => m.toLong), // timed via `custom` below
-      "incr_dhash_probe" -> (m => m.toLong), // timed via `custom` below
-      "audio_chroma_probe" -> (m => m.toLong), // timed via `custom` below
-      "knn_maintain_probe" -> (m => m.toLong), // timed via `custom` below
-      // q233's truth stage after the r10 bound: the exact all-pairs
-      // Jaccard runs over a FIXED-SIZE hash-cut sample (400 docs by
-      // smallest md5 bucket) of the m×-grown corpus — the timed cost is
-      // the sample cut (a TakeOrdered over the scan) + a constant-size
-      // all-pairs join, so the curve must track the scan, never Σdf²
-      "dedup_truth_sample" -> { m =>
-        val sample = docsAt(m)
-          .withColumn("__h", Sampling.hashBucket16(col("doc_id")))
-          .orderBy(col("__h"), col("doc_id")).limit(400)
-          .drop("__h")
-        TextDedup.jaccardPairs(
-          sample.withColumn("__blk", lit(0)), "doc_id", "text", "__blk", 2)
-          .count()
-      },
-      // Bradley–Terry MM fitting as the preference list grows: pairs come
-      // from the grown corpus's LSH candidates (winner = longer doc), so
-      // both the game list and the item set grow ~linearly — each round
-      // is two id-keyed equi-joins + one hash-agg, and the curve must
-      // track the pair scan, never a pair blowup
-      "bt_fit" -> { m =>
-        val lens = docsAt(m).select(col("doc_id"),
-          size(graft.ext.TextDedup.tokens(col("text"))).cast("long").as("__n"))
-        val sigs = TextDedup.minhashSignatures(docsAt(m), "doc_id", "text", 8, 2)
-        val pairs = TextDedup.lshCandidates(sigs, "doc_id", 8, 2)
-          .select(col("id_a"), col("id_b"))
-        val aWins = col("__na") > col("__nb") ||
-          (col("__na") === col("__nb") && col("id_a") < col("id_b"))
-        val cmp = pairs
-          .join(lens.select(col("doc_id").as("id_a"), col("__n").as("__na")), "id_a")
-          .join(lens.select(col("doc_id").as("id_b"), col("__n").as("__nb")), "id_b")
-          .select(when(aWins, col("id_a")).otherwise(col("id_b")).as("w"),
-            when(aWins, col("id_b")).otherwise(col("id_a")).as("l"))
-        graft.ext.Preference.btStrengths(cmp, "w", "l", iters = 3).count()
-      },
-      // association rules under the oversized-basket hazard: m disjoint
-      // copies of the order→part baskets PLUS one "everything" basket
-      // holding every part (|basket| = 20k·m — |basket|² pairs if it ever
-      // reached the explode). The maxBasket guard must drop it BEFORE
-      // pair generation, so growth tracks per-basket pair mass (linear in
-      // disjoint copies), never the hot basket's square
-      "basket_rules_hot" -> { m =>
-        val li = (0 until m).map { r =>
-          Tables.lineitem(spark, sfDir).select(
-            (col("l_orderkey") + lit(r * 100000000L)).as("bk"),
-            (col("l_partkey") + lit(r * 10000000L)).as("it"))
-        }.reduce(_ unionByName _)
-          .repartition(spark.sparkContext.defaultParallelism)
-        val hot = li.select(col("it")).distinct()
-          .select(lit(-1L).as("bk"), col("it"))
-        graft.ext.Affinity.basketRules(li.unionByName(hot), "bk", "it",
-          minBoth = 2L, maxBasket = 64, topK = 30).count()
-      },
-      // modularity scoring cost in isolation (labels precomputed as a
-      // cheap deterministic hash partition): one distinct + one degree
-      // agg + two node-keyed label joins — must track the edge scan
-      "modularity" -> { m =>
-        val li = (0 until m).map { r =>
-          Tables.lineitem(spark, sfDir).select(
-            (col("l_orderkey") + lit(r * 100000000L)).as("o"),
-            (col("l_partkey") + lit(r * 10000000L)).as("p"))
-        }.reduce(_ unionByName _)
-          .repartition(spark.sparkContext.defaultParallelism)
-          .distinct()
-        val edges = li.as("x")
-          .join(li.as("y"), col("x.o") === col("y.o") && col("x.p") < col("y.p"))
-          .select(col("x.p").as("src"), col("y.p").as("dst"))
-        val labels = edges.select(col("src").as("node"))
-          .unionByName(edges.select(col("dst").as("node"))).distinct()
-          .withColumn("label", pmod(col("node"), lit(997L)).cast("string"))
-        graft.ext.Graphs.modularity(edges, "src", "dst", labels).count()
-      },
-      "silhouette_scan" -> (m => m.toLong), // timed via `custom` below
-      // (the round-12 hubless betweenness row was superseded by the
-      // hub-planted `betweenness_pivots` above — one name, one shape)
-      // assortativity: join-free marginal moments + ONE edge-sized join
-      // collapsed per target node — must track the edge scan
-      "assortativity" -> { m =>
-        val li = (0 until m).map { r =>
-          Tables.lineitem(spark, sfDir).select(
-            (col("l_orderkey") + lit(r * 100000000L)).as("o"),
-            (col("l_partkey") + lit(r * 10000000L)).as("p"))
-        }.reduce(_ unionByName _)
-          .repartition(spark.sparkContext.defaultParallelism)
-          .distinct()
-        val edges = li.as("x")
-          .join(li.as("y"), col("x.o") === col("y.o") && col("x.p") < col("y.p"))
-          .select(col("x.p").as("src"), col("y.p").as("dst"))
-        graft.ext.Graphs.assortativity(edges, "src", "dst").count()
-      },
-      // WordPiece trainer rounds are vocabulary-sized like the BPE/unigram
-      // trainers — the corpus pays one word-count aggregate, every round
-      // runs over distinct words × bounded units (plus the two broadcast
-      // unit-count joins the likelihood score adds)
-      "wordpiece_train" -> (m =>
-        TextStats.wordpieceTrain(docsAt(m), "text", rounds = 6).size.toLong),
-      // split-conformal under ADVERSARIAL score skew: 90% of the m×-grown
-      // corpus collapses onto ONE score value, so the distinct-score
-      // spine degenerates to a hot key — the quantile must still come
-      // from the hash-agg spine (partial counts absorb the hot key
-      // map-side; the spine window stays ≤ distinct-score-sized, here
-      // ~10% of the ppm domain + 1 hot value) and the cost must track
-      // the corpus scan, never a sort of the scored rows
-      "split_conformal" -> { m =>
-        val scored = (0 until m).map { r =>
-          Tables.documents(spark, sfDir).select(
-            (col("doc_id") + lit(r * 10000000L)).as("doc_id"))
-        }.reduce(_ unionByName _)
-          .repartition(spark.sparkContext.defaultParallelism)
-          .select(col("doc_id"), pmod(col("doc_id"), lit(2L)).as("y"),
-            when(pmod(col("doc_id"), lit(10L)) < 9L, lit(777000L))
-              .otherwise(pmod(col("doc_id") * 31L, lit(1000000L))).as("p_ppm"))
-        graft.ext.Classifier.splitConformal(scored, "doc_id").count()
-      }
-    )
+    def timed(f: Int => Long): Int => Double = m => time(f(m))
 
     // lsh_candidates: persist+materialize signatures OUTSIDE the timer so
     // the ratio isolates candidate-pair growth from the (separately
@@ -1239,49 +404,833 @@ object ScaleProbe {
       time(VectorSearch.silhouette(embAt(m), "vec_id", "embedding",
         silhouetteCentroids).count())
 
-    val custom: Map[String, Int => Double] =
-      Map("lsh_candidates" -> lshTimed, "dedup_clusters_cc" -> ccTimed,
-        "silhouette_scan" -> silhouetteTimed,
-        "incr_para_probe" -> incrParaTimed, "incr_knn_probe" -> incrKnnTimed,
-        "graph_ann_walk" -> gannTimed,
-        "incr_simhash_probe" -> incrSimhashTimed,
-        "incr_simhash64_probe" -> incrSimhash64Timed,
-        "incr_dhash_probe" -> incrDhashTimed,
-        "audio_chroma_probe" -> audioChromaTimed,
-        "knn_maintain_probe" -> knnMaintainTimed,
-        "pagerank_iter_mb_str" -> prIterMB(encode = false),
-        "pagerank_iter_mb_enc" -> prIterMB(encode = true))
-
-    // optional arg filter: `runMain graft.ScaleProbe op1 op2` measures only
-    // the named rows (SCALING.md is updated per-op; a full 25-op sweep is
-    // ~20 min of Spark time this shouldn't cost a one-row refresh)
-    val selected =
-      if (args.isEmpty) ops
-      else {
-        val want    = args.toSet
-        val known   = ops.map(_._1).toSet
-        val unknown = want -- known
-        require(unknown.isEmpty, s"unknown probe ops: ${unknown.mkString(", ")} (known: ${known.toSeq.sorted.mkString(", ")})")
-        ops.filter(o => want.contains(o._1))
+    Seq(
+      "token_stats"   -> timed(m => TextStats.tokenStats(docsAt(m), "doc_id", "text").count()),
+      // q289's theta set ops: membership grows ×m but sketch state is
+      // O(k) per group — the curve must track the ONE corpus scan, with
+      // the pairwise stage flat (|groups|²-bounded, sketch-sized)
+      "theta_overlap" -> timed { m =>
+        graft.ext.ThetaSketch.overlapEstimates(
+          graft.ext.ThetaSketch.kminSketch(evAt(m), "event_type", "user_id", 256))
+          .count()
+      },
+      // q290's peel on disjoint graph copies: rounds and layer sizes are
+      // m-invariant, so cost must track the per-round adjacency joins
+      "kcore_peel" -> timed { m =>
+        graft.ext.Graphs.kCore(copurchaseAt(m), "src", "dst",
+          k = 80, rounds = 4).count()
+      },
+      // q297's neighborhood sketches on disjoint copies: per-round work
+      // is adjacency × k exploded hashes — must track the edge list
+      "hyperanf" -> timed { m =>
+        graft.ext.Graphs.hyperAnf(copurchaseAt(m, partMod = 7),
+          "src", "dst", rounds = 4, k = 32).count()
+      },
+      // q294's fingerprint path (the native graft_dhash64 expression —
+      // one char scan per row), no shuffle — must track the corpus scan.
+      // The fingerprint columns are CONSUMED by the aggregate: a bare
+      // count() would column-prune the expression away and time an empty
+      // scan (which is exactly what the pre-r11 row measured)
+      "dhash_fp" -> timed { m =>
+        graft.ext.Multimodal.dhashFingerprints(docsAt(m), "doc_id", "text")
+          .agg(sum(col("fp_hi") + col("fp_lo")).as("__s"))
+          .count()
+      },
+      // q302's container near-dup on an m×-grown corpus whose replicas
+      // carry a per-replica ROTATED-alphabet translate (not a uniform
+      // char shift — dHash is brightness-shift invariant, so +r on every
+      // char would plant m² cross-replica hamming-0 twins and measure a
+      // quadratic TRUE-pair mass, not the operator): output stays
+      // corpus-linear and the curve must track fingerprints + the
+      // (frame, band)-blocked join
+      "video_dhash" -> timed { m =>
+        val alpha = "abcdefghijklmnopqrstuvwxyz"
+        val corpus = (0 until m).map { r =>
+          val rot = alpha.drop(r % 26) + alpha.take(r % 26)
+          Tables.documents(spark, sfDir)
+            .select((col("doc_id") + lit(r * 1000000L)).as("doc_id"),
+              translate(col("text"), alpha, rot).as("text"))
+        }.reduce(_ unionByName _)
+          .repartition(spark.sparkContext.defaultParallelism)
+        graft.ext.Multimodal.videoDhashNearDups(corpus, "doc_id", "text",
+          n = 4, frameBytes = 96, maxHamming = 3, minShared = 3).count()
+      },
+      // q292's sketch path in isolation (the audit's exact side is
+      // deliberately excluded — it is the thing the sketch replaces):
+      // one histogram aggregate, state bounded by the bucket space
+      "hdr_histogram" -> timed { m =>
+        val ev = (0 until m).map(_ => Tables.events(spark, sfDir))
+          .reduce(_ unionByName _)
+          .repartition(spark.sparkContext.defaultParallelism)
+          .select(col("event_type"),
+            expr("CAST(round(value * 100, 0) AS BIGINT)").as("v"))
+        graft.ext.HdrSketch.hdrHistogram(ev, "event_type", "v").count()
+      },
+      // unigram-LM trainer (q284): ONE corpus scan builds the word-count
+      // frame; candidate generation, all three segment rounds and the
+      // prunes run over distinct words × a ≤(chars+48)-piece vocab — the
+      // curve must track the scan, with the vocab-sized rounds flat
+      "unigram_train" -> timed(m => TextStats.unigramTrain(docsAt(m), "text").count()),
+      // q244's G²: the corpus grows, the 20 sources do not — the
+      // (source, token) agg must scale with the scan while the marginal
+      // joins and the top-k window stay post-agg-sized
+      "keyness_g2"    -> timed(m => TextStats.keyness(docsAt(m), "source", "text", k = 5).count()),
+      // q260's KS: ECDF windows and the pair join run on the
+      // (group, value) spine — replicas widen the length support only via
+      // the " replicaN" suffix, so growth must track the one corpus scan
+      "ks_pairwise_len" -> timed { m =>
+        val dl = docsAt(m).select(col("source"),
+          size(graft.ext.TextDedup.tokens(col("text"))).cast("long").as("len"))
+        graft.ext.RobustStats.ksPairwise(dl, "source", "len").count()
+      },
+      // the q186 Q21 shape: fact⋈fact semi + anti joins on the orderkey —
+      // both probe sides grow with m, so the join must stay key-partitioned
+      // linear (no pair blowup inside an order: ≤ 7 lines each)
+      "q21_semi_anti" -> timed { m =>
+        val li = liAt(m); val fo = foAt(m)
+        val late = li.join(fo, col("l_orderkey") === col("o_orderkey"))
+          .filter(col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS"))
+          .select(col("l_orderkey"), col("l_suppkey"))
+        late
+          .join(li.select(col("l_orderkey").as("o2"), col("l_suppkey").as("s2")),
+            col("l_orderkey") === col("o2") && col("l_suppkey") =!= col("s2"),
+            "left_semi")
+          .join(late.select(col("l_orderkey").as("o3"), col("l_suppkey").as("s3")),
+            col("l_orderkey") === col("o3") && col("l_suppkey") =!= col("s3"),
+            "left_anti")
+          .groupBy(col("l_suppkey")).agg(count(lit(1))).count()
+      },
+      // whole-query BM25 over a growing corpus: per-term tf is a
+      // projection, so time must track the scan, not the term count
+      "bm25_query_topk" -> timed(m =>
+        graft.ext.Retrieval.bm25QueryTopK(docsAt(m), "doc_id", "text",
+          Seq("table", "query", "join"), perTermK = 20, k = 20).count()),
+      // late interaction with a FIXED 2-doc query side against a growing
+      // chunked corpus: the query side broadcasts, so cost must track the
+      // corpus chunk scan (the dim join fans each corpus entry out to the
+      // bounded query entries of its dim — a constant factor)
+      "late_interaction" -> timed { m =>
+        val chunks = graft.ext.Packing.chunkDocuments(docsAt(m), "doc_id", "text",
+            chunkTokens = 40, stride = 40)
+          .select(concat_ws("#", col("doc_id"), col("chunk_id")).as("cid"),
+            col("chunk_text"))
+        val tall = TextStats.featureHashing(chunks, "cid", "chunk_text", dims = 32)
+          .select(split(col("cid"), "#").getItem(0).cast("long").as("doc"),
+            split(col("cid"), "#").getItem(1).cast("long").as("chunk"),
+            col("dim"), col("weight"))
+        graft.ext.Retrieval.lateInteractionTopK(
+          tall.filter(col("doc") < 2), tall.filter(col("doc") >= 2), k = 10).count()
+      },
+      // span corruption: the position explode is the row-inflation hazard
+      // (×n_tokens); the island window stays doc-keyed so growth must be
+      // the explode scan, never a cross-doc sort
+      "span_corruption" -> timed(m =>
+        graft.ext.Packing.spanCorruptionStats(docsAt(m), "doc_id", "text",
+          maskBp = 1500L).count()),
+      // ANALYZE column profile: the melt multiplies rows ×3 — cost must
+      // track that constant-factor scan plus the value-cardinality agg
+      "column_profile" -> timed(m =>
+        graft.ext.OptimizerStats.columnProfile(liAt(m),
+          Seq("l_orderkey", "l_suppkey", "l_shipdate")).count()),
+      // Zipf fit: vocabulary hash-agg + TakeOrdered(200) + bounded OLS —
+      // the cut must keep the cost at the aggregate, not a sort
+      "zipf_fit" -> timed(m => TextStats.zipfFit(docsAt(m), "text", 200).count()),
+      "exact_dedup"   -> timed(m => docsAt(m).groupBy(md5(col("text").cast("binary"))).count().count()),
+      "minhash_sigs"  -> timed(m => TextDedup.minhashSignatures(docsAt(m), "doc_id", "text", 8, 2).count()),
+      // NOTE: signature build is excluded from this op's timing (it is
+      // measured separately as minhash_sigs) — see lshTimed above
+      "lsh_candidates" -> lshTimed,
+      "tfidf_top"     -> timed(m => TextStats.tfidfTop(docsAt(m), "doc_id", "text", 3).count()),
+      "centroid_assign" -> timed { m =>
+        val e = embAt(m)
+        VectorSearch.assignToNearestCentroid(
+          e, "vec_id", "embedding", VectorSearch.centroidsBp(e, "embedding", "label")).count()
+      },
+      // the hot-shingle document-frequency cap under its worst case: the
+      // hot phrase's shingles are dropped before the self-join, so growth
+      // tracks the discriminative-shingle pair count, not |block|²
+      "ngram_jaccard_capped" -> timed(m =>
+        TextDedup.jaccardPairs(docsStopHeavy(m), "doc_id", "text", "source",
+          shingleN = 2, maxDocFreq = 64).count()),
+      // the bucket-size guard on the real embedding distribution: hot sign
+      // buckets split on extra sign bits before the within-bucket pair join
+      "embedding_neardup_guarded" -> timed(m =>
+        VectorSearch.nearDupPairs(embAt(m), "vec_id", "embedding",
+          bits = 6, threshold = 0.5, maxBucketSize = 64, extraBits = 6).count()),
+      // decontamination under MAXIMAL match density: docsAt replicas keep
+      // their interior shingles, so nearly every train trigram collides
+      // with the (fixed, unreplicated) holdout — the proof that the
+      // semi-join shape stays linear even when everything matches: holdout
+      // digests are distinct, so each train shingle joins at most one row
+      "decontaminate_matchheavy" -> timed(m =>
+        Decontaminate.contamination(docsAt(m), Tables.documents(spark, sfDir),
+          "doc_id", "text", shingleN = 3).count()),
+      // the explode-heaviest projection: chunk tiling (~n_tokens/stride
+      // rows per doc) plus the per-doc lead window — row inflation must
+      // stay a constant factor, not a growth term
+      "doc_chunk_pairs" -> timed(m =>
+        Packing.contrastivePairs(docsAt(m), "doc_id", "text",
+          chunkTokens = 40, stride = 30).count()),
+      // quantized retrieval with a FIXED query set against a growing
+      // corpus: broadcast product, so time must track corpus size only
+      "quantized_topk" -> timed { m =>
+        VectorSearch.quantizedTopK(
+          Tables.embeddings(spark, sfDir).filter(col("vec_id") < 10), embAt(m),
+          "vec_id", "embedding", "vec_id", "embedding", k = 5).count()
+      },
+      // the iterative fixpoint: band-star edges + pointer-jumped min-label
+      // CC. docsAt replicas keep their interior shingles, so replicas of a
+      // doc land in the same buckets and components MERGE across replicas —
+      // edges grow linearly while component diameter grows with the
+      // multiplier, stressing the O(log diameter) round bound. Signature
+      // build is excluded (measured as minhash_sigs); see ccTimed above
+      "dedup_clusters_cc" -> ccTimed,
+      // PQ encode at the standard 256-codeword cardinality: cost is
+      // inherently N × m × K distance folds, so time must track corpus
+      // size (the cell-exploded formulation this replaced was N × d × K
+      // rows and 16× slower — this row guards that regression)
+      "pq_encode" -> timed { m =>
+        val e = embAt(m)
+        graft.ext.VectorSearch.pqEncode(e, "vec_id", "embedding",
+          graft.ext.VectorSearch.pqCodebooksSign(e, "vec_id", "embedding",
+            m = 4, dims = 64, bits = 8),
+          m = 4, dims = 64).count()
+      },
+      // containment under a DEGENERATE blocking: the whole corpus in ONE
+      // block with the Zipf-hot shared phrase — blocking prunes nothing,
+      // so the only thing standing between the self-join and |corpus|² is
+      // the shingle document-frequency cap. Bodies are replica-distinct,
+      // so true matches grow linearly and the ratio isolates the cap
+      "containment_hotblock" -> timed(m =>
+        TextDedup.containmentPairs(
+          docsStopHeavy(m).withColumn("source", lit("hot")),
+          "doc_id", "text", "source", shingleN = 2, maxDocFreq = 64).count()),
+      // simhash banding with a CONSTANT-size low-hamming cluster (two
+      // 256-doc groups of identical fingerprints → permanently hot band
+      // buckets) inside a corpus whose replicas have per-token-perturbed
+      // bodies (spread fingerprints). Bands are 16-bit — the WWW'07 regime
+      // the operator doc prescribes at scale, keeping random bucket
+      // occupancy O(n/2^16) — so growth must track the corpus scan + agg,
+      // with the hot cluster contributing a fixed candidate count
+      "simhash_banding_cluster" -> timed { m =>
+        val diverse = {
+          val base = Tables.documents(spark, sfDir)
+          (0 until m).map { r =>
+            base.withColumn("doc_id", col("doc_id") + lit(r * 1000000L))
+              .withColumn("text", regexp_replace(col("text"), "(\\S+)", "$1" + r))
+          }.reduce(_ unionByName _)
+        }
+        val cluster = spark.range(512).select(
+          (col("id") + 900000000L).as("doc_id"),
+          concat(lit("alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+            when(col("id") % 2 === 0, lit(" pad")).otherwise(lit(""))).as("text"))
+        TextDedup.simhashNearDups(
+          diverse.select(col("doc_id"), col("text")).unionByName(cluster)
+            .repartition(spark.sparkContext.defaultParallelism),
+          "doc_id", "text", nBands = 2, maxHamming = 1).count()
+      },
+      // semantic dedup under embedding collapse: a CONSTANT 512-vector
+      // identical cluster (the guard sub-splits oversized clusters, but
+      // identical vectors share every sign bit — their pair cost is the
+      // fixed price of never missing an exact dup) inside a growing
+      // corpus whose k-means clusters stay occupancy-bounded; training
+      // runs per multiplier (it IS part of the operator's scale story)
+      "semantic_dedup_guarded" -> timed { m =>
+        val hot = Tables.embeddings(spark, sfDir).filter(col("vec_id") === 0)
+          .crossJoin(spark.range(512).select((col("id") + 900000000L).as("__hid")))
+          .select(col("__hid").as("vec_id"), col("embedding"))
+        val corpus = embAt(m).select(col("vec_id"), col("embedding"))
+          .unionByName(hot)
+        val cent = graft.ext.VectorSearch.kmeansFit(
+          corpus, "vec_id", "embedding", k = 10, iters = 2)
+        graft.ext.VectorSearch.semanticDedup(corpus, "vec_id", "embedding",
+          cent, threshold = 0.8, maxClusterSize = 64, extraBits = 6).count()
+      },
+      // the sharded budget sampler under maximal stratum skew: ONE stratum
+      // holds half the corpus. The in-shard windows spread it over 16
+      // tasks and the per-stratum exact-cum window only ever sees the
+      // budget-capped candidates, so growth must track the corpus scan —
+      // the single-window formulation this replaced sorted the hot
+      // stratum's entire slice in one task
+      "token_budget_hot_stratum" -> timed { m =>
+        val docs = docsAt(m)
+          .withColumn("source",
+            when(col("doc_id") % 2 === 0, lit("hot")).otherwise(col("source")))
+          .withColumn("n_tokens", size(TextDedup.tokens(col("text"))).cast("long"))
+        Sampling.tokenBudgetSample(docs, "source", "doc_id", "n_tokens",
+          budget = 20000L).count()
+      },
+      // MMR re-rank with a growing corpus: the relevance stage is the
+      // broadcast-queries × corpus scan (linear); the pair self-join and
+      // greedy UDF only ever touch queries × candK² rows — a constant —
+      // so growth must track the corpus scan alone
+      "mmr_rerank" -> timed { m =>
+        val emb = embAt(m)
+        VectorSearch.mmrRerank(
+          Tables.embeddings(spark, sfDir).filter(col("vec_id") < 10),
+          emb.filter(col("vec_id") >= 10),
+          "vec_id", "embedding", "vec_id", "embedding",
+          candK = 10, k = 3, lambdaPermille = 700L).count()
+      },
+      // priority sampling under the same maximal stratum skew: one
+      // stratum holds half the corpus, k = 100. The per-(stratum, shard)
+      // rank spreads the hot stratum's sort over 16 tasks and the
+      // per-stratum rank only ever sees ≤ shards·k survivors, so growth
+      // must track the corpus scan
+      "priority_sample_hot_stratum" -> timed { m =>
+        val docs = docsAt(m)
+          .withColumn("source",
+            when(col("doc_id") % 2 === 0, lit("hot")).otherwise(col("source")))
+          .withColumn("w", size(TextDedup.tokens(col("text"))).cast("long") + 1L)
+        Sampling.prioritySample(docs, "source", "doc_id", "w", k = 100).count()
+      },
+      // DSIR importance weighting end to end (model + scoring): the model
+      // is ≤128 rows no matter the corpus size and broadcasts into the
+      // (doc, bucket)-keyed scoring aggregate, so growth must track the
+      // two corpus scans — there is no corpus-sized join side to blow up
+      "dsir_weights" -> timed { m =>
+        val docs = docsAt(m).withColumn("__is_t", col("doc_id") % 10 === 0)
+        Sampling.importanceWeights(docs, "doc_id", "text", "__is_t", buckets = 128).count()
+      },
+      // paragraph dedup under total boilerplate: EVERY document (replicas
+      // included) opens with the same 10-token paragraph, so one digest's
+      // occurrence count equals the corpus size. The min(struct) winner
+      // aggregate collapses it map-side and the digest is never a join
+      // key, so growth must track the corpus scan — the join-back
+      // formulation this avoids would send every occurrence of the hot
+      // digest to a single reducer
+      "paragraph_dedup_hot_para" -> timed { m =>
+        val docs = docsAt(m).withColumn("text",
+          concat(lit("shared header line repeated on every page of this corpus "), col("text")))
+        ParagraphDedup.paragraphDedup(docs, "doc_id", "text", paraTokens = 10).count()
+      },
+      // duplicated-shingle scoring with one corpus-wide hot 3-gram: the
+      // doc-frequency side collapses the hot digest to ONE row (map-side
+      // combinable count), so the join-back is a skew-split/broadcast of a
+      // single hot build row, never a hot-reducer pile-up
+      "dup_shingle_hot" -> timed { m =>
+        val docs = docsAt(m).withColumn("text",
+          concat(lit("hot shared shingle "), col("text")))
+        ParagraphDedup.dupShingleScore(docs, "doc_id", "text", shingleN = 3).count()
+      },
+      // timed by incrParaTimed above (index materialized outside the
+      // timer — persisted production state)
+      "incr_para_probe" -> incrParaTimed,
+      // bigram fluency with one corpus-wide hot bigram: every document
+      // opens with the same word pair, so one bigram's occurrence count
+      // equals the corpus size. The model side pre-collapses it to ONE
+      // row (partial+final count), so the scoring join-back is a
+      // broadcast/skew-split of a single hot build row — growth must
+      // track the exploded scan, not the hot bigram's frequency
+      "bigram_fluency_hot" -> timed { m =>
+        val docs = docsAt(m).withColumn("text",
+          concat(lit("hota hotb "), col("text")))
+        TextStats.bigramFluency(docs, "doc_id", "text").count()
+      },
+      // representative selection over ONE giant cluster holding the whole
+      // corpus (the boilerplate-blob degenerate case): the min(struct)
+      // argmax must collapse map-side — a rank-window formulation would
+      // sort the entire corpus in a single task and the ratio would blow
+      // past linear
+      "cluster_reps_giant" -> timed { m =>
+        val docs = docsAt(m)
+        val labels = docs.select(col("doc_id"), lit(0L).as("cluster_id"))
+        val scores = docs.select(col("doc_id"),
+          size(TextDedup.tokens(col("text"))).cast("long").as("n_tokens"))
+        Components.representatives(labels, scores, "doc_id", "cluster_id", "n_tokens").count()
+      },
+      // source overlap with two sources and a corpus-wide hot phrase every
+      // document of BOTH sources shares (docsStopHeavy's leading stopword
+      // run): the hot digests are the max-density pair case — they occur
+      // in both sources, so every one emits a pair row — while the
+      // replica-suffixed bodies keep the distinct digest space growing
+      // linearly with the multiplier, so the probe isolates the
+      // distinct+self-join shape rather than re-measuring collapsing
+      // duplicate digests
+      "source_overlap_2src" -> timed { m =>
+        val docs = docsStopHeavy(m).withColumn("source",
+          when(col("doc_id") % 2 === 0, lit("even")).otherwise(lit("odd")))
+        Decontaminate.sourceOverlap(docs, "source", "text", shingleN = 2).count()
+      },
+      // the power-iteration loop: a graph growing linearly with the corpus
+      // (a 10-ary tree over doc ids plus everyone-cites-one-of-100-hubs
+      // edges, so in-degree skew grows with corpus size). Per-iteration
+      // cost is claimed O(E) with map-side partial aggregation absorbing
+      // the hub skew — the ratio must track edge growth, not hub in-degree
+      "pagerank_iter" -> timed { m =>
+        val docs = docsAt(m).select(col("doc_id"))
+        val edges = docs.select(col("doc_id").as("src"), expr("doc_id div 10").as("dst"))
+          .union(docs.select(col("doc_id").as("src"), (col("doc_id") % 100).as("dst")))
+        graft.ext.Graphs.pageRankInt(edges, "src", "dst", iters = 3).count()
+      },
+      // the dictionary-encode trade at realistic key width: the fan-out
+      // url graph, 6 iterations, string-keyed vs idDictionary-encoded.
+      // The encoded run pays the dictionary build + two encode joins + one
+      // decode join ONCE; every iteration then shuffles (long, long) rows
+      // instead of url-width strings — 2 shuffles × 6 iterations of ~3.4×
+      // fewer bytes (the _mb rows below measure the reduction directly)
+      "pagerank_url_str" -> timed { m =>
+        graft.ext.Graphs.pageRankInt(urlEdgesAt(m), "src", "dst", iters = 6).count()
+      },
+      "pagerank_url_encoded" -> timed { m =>
+        graft.ext.Graphs.pageRankInt(urlEdgesAt(m), "src", "dst", iters = 6,
+          encodeIds = true).count()
+      },
+      // values are MB (shuffle bytes written by ONE iteration), not
+      // seconds — the width metric that survives this host's noise
+      "pagerank_iter_mb_str" -> prIterMB(encode = false),
+      "pagerank_iter_mb_enc" -> prIterMB(encode = true),
+      // classifier training end to end (feature build + 6 GD rounds):
+      // per-round cost is ONE map-side-combinable 6-column aggregate over
+      // the persisted feature frame and a 1×6 collect — there is no join,
+      // window, or corpus-sized driver state anywhere in the loop, so
+      // growth must track the corpus scan × a constant round count
+      "lr_train" -> timed { m =>
+        val corpus = graft.ext.Classifier.weakLabelCorpus(docsAt(m), "doc_id", "text")
+        val feats = graft.ext.Classifier.lrFeatures(
+          corpus, "doc_id", "text", col("y") === 1L).persist()
+        try graft.ext.Classifier.lrTrain(feats, iters = 6).length.toLong
+        finally feats.unpersist()
+      },
+      // the epoch shuffle: seeded-hash shard exchange + per-shard rank
+      // window (corpus/16 rows per sort task at this shard constant) × 2
+      // epochs — growth must track the corpus scan; a global-sort
+      // formulation would range-partition the whole corpus per epoch
+      "epoch_shuffle" -> timed(m =>
+        Packing.epochShuffle(docsAt(m), "doc_id", Seq(1, 2)).count()),
+      // synchronous LPA over the fan-out url graph, 3 rounds: per round
+      // one labels⋈adjacency equi-join + two hash-aggs. The vote argmax is
+      // an aggregate (min(struct)), so the 997-site hub skew combines
+      // map-side — a window formulation would sort each hub's votes in
+      // one task and the 4× ratio would bend superlinear
+      "label_prop_url" -> timed(m =>
+        graft.ext.Graphs.labelPropagation(urlEdgesAt(m), "src", "dst", iters = 3).count()),
+      // kNN graph under the bucket cap: candidate pairs grow with
+      // Σ bucket², which the maxBucketSize guard re-shards — growth must
+      // track the guarded pair count, not corpus². (embAt replicas share
+      // sign patterns, so buckets GROW with m — the adversarial case the
+      // guard exists for.)
+      "knn_graph_guarded" -> timed(m =>
+        VectorSearch.knnGraph(embAt(m), "vec_id", "embedding",
+          k = 5, bits = 6, maxBucketSize = 64).count()),
+      // curriculum staging: both windows key on (source[, stage]), so the
+      // per-task sort is corpus/|sources| rows — linear growth with the
+      // corpus at a fixed source count, and never a global range exchange
+      "curriculum" -> timed(m =>
+        TextStats.curriculumOrder(docsAt(m), "doc_id", "text", "source",
+          stages = 4).count()),
+      // embedding-outlier audit: the corpus explodes to dims cells/vector
+      // and meets ONLY broadcasts (centroid cells, the 1-row mean) — the
+      // trained centroids are session state, built outside the frame
+      "embedding_outliers" -> timed { m =>
+        val cents = graft.queries.QueryCaches.ivfCentFor(spark, sfDir)
+        val assigned = VectorSearch.assignToNearestCentroid(
+          embAt(m), "vec_id", "embedding", cents)
+        val g = assigned.agg(expr("sum(dist_bp2) div count(1)").as("__avg2"))
+        assigned.crossJoin(broadcast(g))
+          .filter(col("dist_bp2") * 10L > col("__avg2") * 20L).count()
+      },
+      "incr_knn_probe" -> incrKnnTimed,
+      // content-defined chunking: tokenize + anchor flags are a
+      // projection, the chunk index is a doc-keyed running sum (one
+      // document per window partition), and sharedness joins digest-width
+      // rows — replicas share most chunks, so the digest side's distinct
+      // space stays ~constant while the probe side grows ×m (the
+      // dup_shingle_hot shape at chunk grain)
+      "cdc_chunks" -> timed(m =>
+        graft.ext.ParagraphDedup.contentDefinedChunks(
+          docsAt(m), "doc_id", "text", anchorMod = 8).count()),
+      // drift monitor: one (source, bucket) conditional-sum aggregate
+      // over the exploded token stream + a roll-up of ≤ 64 rows/source —
+      // growth must track the token scan alone
+      "token_drift" -> timed(m =>
+        TextStats.tokenDrift(
+          docsAt(m).withColumn("__a", col("doc_id") % 2 === 0),
+          "text", "source", "__a").count()),
+      // frame voting under its worst case: EVERY payload opens with the
+      // same 16-byte template header, so frame 0 is one corpus-sized
+      // (idx, digest) block — the maxBlockSize cap must drop it before
+      // the self-join, leaving growth to the (distinct) residual frames
+      "frame_vote_hot" -> timed { m =>
+        val payloads = docsAt(m).select(col("doc_id"),
+          concat(lit("TEMPLATEHEADER16"), col("text")).cast("binary").as("payload"))
+        graft.ext.Multimodal.frameFingerprintNearDups(payloads, "doc_id", "payload",
+          n = 4, frameBytes = 16, minShared = 1, maxBlockSize = 64).count()
+      },
+      // PMI on the stop-heavy corpus (corpus-hot bigrams + replica-grown
+      // vocabulary): both counting aggregates must map-side combine and
+      // the marginal joins stay vocab-sized
+      "pmi_collocations" -> timed(m =>
+        TextStats.pmiCollocations(docsStopHeavy(m), "text", minCount = 5L, k = 50).count()),
+      // vocabulary-free vectorizer: one exploded scan + one (doc, dim)
+      // hash-agg — the flattest curve in the text tier by construction
+      "feature_hashing" -> timed(m =>
+        TextStats.featureHashing(docsAt(m), "doc_id", "text", dims = 32).count()),
+      // full greedy k-center select (4 rounds, each one corpus scan +
+      // TakeOrdered(1)): time must track the corpus linearly — the chosen
+      // set rides as literals, so there is no join side to grow
+      "kcenter_select" -> timed(m =>
+        VectorSearch.kCenterSelect(embAt(m), "vec_id", "embedding", k = 4).count()),
+      // held-out LM scoring on the stop-heavy corpus: hot bigrams inflate
+      // the model side's per-bigram counts, not its row count — the two
+      // vocab-keyed left joins must stay vocabulary-sized while the
+      // scoring side pre-collapses per (doc, bigram)
+      "heldout_lm" -> timed { m =>
+        val docs = docsStopHeavy(m)
+        val lbl  = Sampling.splitLabel(col("doc_id"), trainBp = 9000)
+        TextStats.interpolatedFluency(
+          docs.filter(lbl =!= "train"),
+          TextStats.bigramModel(docs.filter(lbl === "train"), "text"),
+          TextStats.unigramModel(docs.filter(lbl === "train"), "text"),
+          "doc_id", "text", lambdaPermille = 800L).count()
+      },
+      // windowed co-occurrence on the stop-heavy corpus: the hot pairs
+      // collapse map-side in the single (w1, w2) hash-agg; the positional
+      // tiers are pure projections, so growth tracks the token scan
+      "cooccurrence" -> timed(m =>
+        TextStats.cooccurrenceTop(docsStopHeavy(m), "text", window = 2, k = 50).count()),
+      // percentile normalization: the corpus enters one histogram
+      // aggregate; windows run over ≤ score-cardinality rows per source
+      // and the permille joins back on (source, score)
+      "score_percentile" -> timed { m =>
+        val sc = TextStats.qualityScore(docsAt(m), "doc_id", "text")
+          .select(col("doc_id"), col("ttr_bp"))
+        val scored = docsAt(m).select(col("doc_id"), col("source")).join(sc, "doc_id")
+        Sampling.scorePercentile(scored, "source", "ttr_bp").count()
+      },
+      // exact prefix-filter all-pairs join: replicas of one base doc are
+      // TRUE near-dups of each other (they differ by one replica tag), so
+      // the true-pair count itself grows ~m² per doc group — the probe
+      // certifies that candidate+verify work tracks the TRUE pairs, while
+      // the frequent-shingle mass (df-ordered out of every prefix) never
+      // re-enters the join as the corpus grows
+      "prefix_filter_pairs" -> timed(m =>
+        TextDedup.prefixFilterJaccardPairs(docsAt(m), "doc_id", "text",
+          shingleN = 2, thresholdBp = 8000).count()),
+      // triangle counting under worst-case degree skew: m disjoint copies
+      // of the co-purchase graph PLUS one hub adjacent to every part
+      // (deg(hub) = 20k·m). Degree-ordered orientation must keep the hub
+      // wedge-free (all its edges point IN), so growth tracks the edge
+      // count, never deg(hub)²
+      "triangles_hub" -> timed { m =>
+        val li = (0 until m).map { r =>
+          Tables.lineitem(spark, sfDir)
+            .select((col("l_orderkey") + lit(r * 100000000L)).as("o"),
+              (col("l_partkey") + lit(r * 10000000L)).as("p"))
+        }.reduce(_ unionByName _)
+          .repartition(spark.sparkContext.defaultParallelism)
+          .distinct()
+        val edges = li.as("x")
+          .join(li.as("y"), col("x.o") === col("y.o") && col("x.p") < col("y.p"))
+          .select(col("x.p").as("src"), col("y.p").as("dst"))
+        val hub = li.select(col("p").as("src")).distinct()
+          .withColumn("dst", lit(-1L))
+        graft.ext.Graphs.triangleCounts(edges.unionByName(hub), "src", "dst").count()
+      },
+      // Adamic-Adar under the q247 hub cap: m disjoint copies of the
+      // co-purchase graph PLUS one hub adjacent to every part
+      // (deg(hub) = 20k·m). The cap must exclude the hub as a wedge
+      // center BEFORE the quadratic pair join, so growth tracks the
+      // capped wedge mass (linear in disjoint copies), never deg(hub)²
+      "adamic_adar_cap" -> timed { m =>
+        val li = (0 until m).map { r =>
+          Tables.lineitem(spark, sfDir)
+            .select((col("l_orderkey") + lit(r * 100000000L)).as("o"),
+              (col("l_partkey") + lit(r * 10000000L)).as("p"))
+        }.reduce(_ unionByName _)
+          .repartition(spark.sparkContext.defaultParallelism)
+          .distinct()
+        val edges = li.as("x")
+          .join(li.as("y"), col("x.o") === col("y.o") && col("x.p") < col("y.p"))
+          .select(col("x.p").as("src"), col("y.p").as("dst"))
+        val hub = li.select(col("p").as("src")).distinct()
+          .withColumn("dst", lit(-1L))
+        graft.ext.Graphs.adamicAdar(edges.unionByName(hub), "src", "dst",
+          maxDeg = 150, k = 30).count()
+      },
+      // pivot-sampled betweenness under hub skew: m disjoint co-purchase
+      // copies PLUS one hub adjacent to every part (deg(hub) = 20k·m, the
+      // triangles_hub plant). At a FIXED pivot budget Brandes' forward
+      // pass is pivots × edges per level by construction, so the curve
+      // must track the adjacency scan (near-flat over disjoint copies —
+      // pivots scatter across copies and each BFS touches only its own
+      // component); the hub inflates one frontier fanout but σ/δ stay
+      // per-(pivot, node) aggregates, never deg(hub)² pair work. The
+      // 1× floor is the ~2·rounds-level BSP barrier depth (the kcore/
+      // hyperanf class), which amortizes on a real cluster.
+      "betweenness_pivots" -> timed { m =>
+        val edges = copurchaseAt(m)
+        val hub = edges.select(col("src")).unionByName(
+            edges.select(col("dst").as("src"))).distinct()
+          .withColumn("dst", lit(-1L))
+        graft.ext.Graphs.betweenness(edges.unionByName(hub), "src", "dst",
+          pivots = 6, rounds = 3, topK = 25).count()
+      },
+      // harmonic centrality (HyperANF-style KMV ball sketches) under the
+      // same hub plant: per round each node merges O(k)-state sketches
+      // over its neighborhood — the hub merges 20k·m neighbor sketches
+      // into ONE k-sized state through the map-side-combining array
+      // aggregate, so growth must track edge count, never hub degree ×
+      // sketch width beyond the one combine pass
+      "harmonic_balls" -> timed { m =>
+        val edges = copurchaseAt(m)
+        val hub = edges.select(col("src")).unionByName(
+            edges.select(col("dst").as("src"))).distinct()
+          .withColumn("dst", lit(-1L))
+        graft.ext.Graphs.harmonicCentrality(edges.unionByName(hub),
+          "src", "dst", rounds = 3, k = 32, topK = 25).count()
+      },
+      // the q208 TPC-H Q7 fact⋈fact shape with facts replicated and dims
+      // FIXED (production growth: lineitem and orders scale, supplier and
+      // nation do not) — the supplier side must stay a broadcast at every
+      // multiplier and the orderkey join must track fact size
+      "tpch_volume_join" -> timed { m =>
+        val li = (0 until m).map { r =>
+          Tables.lineitem(spark, sfDir).select(
+            (col("l_orderkey") + lit(r * 100000000L)).as("l_orderkey"),
+            col("l_suppkey"), col("l_shipdate"),
+            col("l_extendedprice"), col("l_discount"))
+        }.reduce(_ unionByName _)
+          .repartition(spark.sparkContext.defaultParallelism)
+        val ord = (0 until m).map { r =>
+          Tables.orders(spark, sfDir).select(
+            (col("o_orderkey") + lit(r * 100000000L)).as("o_orderkey"),
+            col("o_custkey"))
+        }.reduce(_ unionByName _)
+          .repartition(spark.sparkContext.defaultParallelism)
+        val nations = Seq("NATION_5", "NATION_12")
+        val sup = Tables.supplier(spark, sfDir)
+          .join(broadcast(Tables.nation(spark, sfDir)
+            .filter(col("n_name").isin(nations: _*))),
+            col("s_nationkey") === col("n_nationkey"))
+          .select(col("s_suppkey"), col("n_name").as("supp_nation"))
+        val cust = Tables.customer(spark, sfDir)
+          .join(broadcast(Tables.nation(spark, sfDir)
+            .filter(col("n_name").isin(nations: _*))),
+            col("c_nationkey") === col("n_nationkey"))
+          .select(col("c_custkey"), col("n_name").as("cust_nation"))
+        li.filter(col("l_shipdate") >= lit("1996-01-01") &&
+            col("l_shipdate") < lit("1998-01-01"))
+          .select(col("l_orderkey"), col("l_suppkey"),
+            year(col("l_shipdate")).cast("long").as("l_year"),
+            round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100, 0)
+              .cast("long").as("rev"))
+          .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
+          .join(ord.join(cust, col("o_custkey") === col("c_custkey")),
+            col("l_orderkey") === col("o_orderkey"))
+          .groupBy(col("supp_nation"), col("cust_nation"), col("l_year"))
+          .agg(sum(col("rev")).as("revenue_cents"))
+          .count()
+      },
+      // Fellegi-Sunter linkage with the record sets replicated (names
+      // perturbed per replica so the suffix blocks stay selective — the
+      // realistic growth, not m identical twins per block) — the capped
+      // same-nation block is what keeps the hot blocking pass linear as
+      // both sides grow
+      "fs_linkage_blocked" -> timed { m =>
+        val sup0 = (0 until m).map { r =>
+          Tables.supplier(spark, sfDir).select(
+            (col("s_suppkey") + lit(r * 1000000L)).as("s_suppkey"),
+            concat(col("s_name"), lit(r.toString)).as("s_name"),
+            col("s_nationkey"),
+            round(col("s_acctbal") * 100, 0).cast("long").as("bal"))
+        }.reduce(_ unionByName _)
+          .repartition(spark.sparkContext.defaultParallelism)
+          .withColumn("s_bkt", expr("(bal + 10000500L) div 1000L"))
+        val dirty = sup0.select(
+            (col("s_suppkey") + 100000000L).as("d_id"),
+            expr("concat(substring(s_name, 1, 9), substring(s_name, 11))").as("d_name"),
+            when(col("s_suppkey") % 7 === 0, (col("s_nationkey") + 1) % 25)
+              .otherwise(col("s_nationkey")).as("d_nation"),
+            expr("((bal + 10000500L) div 1000L) * 1000L - 10000000L").as("d_bal"))
+          .withColumn("d_bkt", expr("(d_bal + 10000500L) div 1000L"))
+        val b1 = dirty.withColumn("__k", expr("right(d_name, 4)"))
+          .join(sup0.withColumn("__k", expr("right(s_name, 4)")), "__k").drop("__k")
+        val b2 = dirty.join(sup0,
+          col("d_nation") === col("s_nationkey") && col("d_bkt") === col("s_bkt"))
+        val supCapped = sup0.withColumn("__rn", row_number().over(
+            org.apache.spark.sql.expressions.Window
+              .partitionBy(col("s_nationkey")).orderBy(col("s_suppkey"))))
+          .filter(col("__rn") <= 20).drop("__rn")
+        val b3 = dirty.join(supCapped, col("d_nation") === col("s_nationkey"))
+        val cand = b1.unionByName(b2).unionByName(b3)
+          .dropDuplicates("d_id", "s_suppkey")
+          .withColumn("a_name", graft.functions.GraftFunctions
+            .jaroWinkler(col("d_name"), col("s_name")) >= 0.97)
+          .withColumn("a_nation", col("d_nation") === col("s_nationkey"))
+          .withColumn("a_bal", abs(col("d_bal") - col("bal")) <= 1000)
+        val uPairs = dirty
+          .crossJoin(broadcast(sup0.agg(count(lit(1)).as("__n"))))
+          .withColumn("__pick", pmod(Sampling.hashBucket16(col("d_id")), col("__n")))
+          .join(sup0, col("s_suppkey") === col("__pick"))
+          .withColumn("a_name", graft.functions.GraftFunctions
+            .jaroWinkler(col("d_name"), col("s_name")) >= 0.97)
+          .withColumn("a_nation", col("d_nation") === col("s_nationkey"))
+          .withColumn("a_bal", abs(col("d_bal") - col("bal")) <= 1000)
+        graft.ext.Linkage.fellegiSunterScores(cand, uPairs,
+          Seq(("a_name", 9500L), ("a_nation", 9500L), ("a_bal", 9000L))).count()
+      },
+      // ONE power iteration over the TextRank word graph (edge build +
+      // join + inflow agg) as the corpus grows — the word graph's edge
+      // count tracks token count while its NODE set (the vocabulary)
+      // grows sublinearly, so the curve must track the token scan
+      "textrank_wordgraph" -> timed { m =>
+        graft.ext.Graphs.iterationPlanFrame(
+          TextStats.wordCoocEdges(docsAt(m), "text", window = 2),
+          "src", "dst").count()
+      },
+      // ROUGE on a FIXED candidate list as the corpus grows — the
+      // batch-shaped contract: the semi-join prefilter must keep the
+      // shingling work candidate-sized, so the curve should stay flat
+      // (the only growth term is the id semi-join's corpus-side scan)
+      "rouge_fixed_pairs" -> timed { m =>
+        val pairs = Tables.documents(spark, sfDir)
+          .filter(col("doc_id") % 29 === 0)
+          .select(col("doc_id").as("id_a"),
+            (col("doc_id") + 1L).as("id_b"))
+        TextDedup.rougeNPairs(pairs, docsAt(m), "doc_id", "text", n = 2).count()
+      },
+      // Matryoshka prefix-tier scan: 10 fixed queries, 4 dim tiers in ONE
+      // corpus pass — cost must track the corpus scan (linear), never
+      // tiers × corpus re-scans
+      "mrl_prefix_scan" -> timed { m =>
+        val qs = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 10)
+        VectorSearch.prefixDimTopK(qs, embAt(m).filter(col("vec_id") >= 10),
+          "vec_id", "embedding", "vec_id", "embedding",
+          k = 5, dims = Seq(8, 16, 32, 64)).count()
+      },
+      // padding-waste curve: the corpus enters one length-histogram agg;
+      // every window/explode after runs on |distinct lengths| rows, so
+      // the curve must track the token scan
+      "padding_hist" -> timed(m =>
+        Packing.paddingWasteCurve(docsAt(m), "text", Seq(1, 2, 4, 8, 16)).count()),
+      // UniMax allocation: one corpus token-count agg + |languages|-row
+      // windows — must track the scan
+      "unimax_alloc" -> timed(m =>
+        Sampling.unimaxBudget(docsAt(m), "lang", "text", 40000L, 2).count()),
+      // source-pair JSD: one (source, bucket) agg + a broadcast pair
+      // spine — must track the scan
+      "source_jsd" -> timed(m =>
+        TextStats.sourceDivergence(docsAt(m), "source", "text", 64).count()),
+      "graph_ann_walk" -> gannTimed,
+      "incr_simhash_probe" -> incrSimhashTimed,
+      "incr_simhash64_probe" -> incrSimhash64Timed,
+      "incr_dhash_probe" -> incrDhashTimed,
+      "audio_chroma_probe" -> audioChromaTimed,
+      "knn_maintain_probe" -> knnMaintainTimed,
+      // q233's truth stage after the r10 bound: the exact all-pairs
+      // Jaccard runs over a FIXED-SIZE hash-cut sample (400 docs by
+      // smallest md5 bucket) of the m×-grown corpus — the timed cost is
+      // the sample cut (a TakeOrdered over the scan) + a constant-size
+      // all-pairs join, so the curve must track the scan, never Σdf²
+      "dedup_truth_sample" -> timed { m =>
+        val sample = docsAt(m)
+          .withColumn("__h", Sampling.hashBucket16(col("doc_id")))
+          .orderBy(col("__h"), col("doc_id")).limit(400)
+          .drop("__h")
+        TextDedup.jaccardPairs(
+          sample.withColumn("__blk", lit(0)), "doc_id", "text", "__blk", 2)
+          .count()
+      },
+      // Bradley–Terry MM fitting as the preference list grows: pairs come
+      // from the grown corpus's LSH candidates (winner = longer doc), so
+      // both the game list and the item set grow ~linearly — each round
+      // is two id-keyed equi-joins + one hash-agg, and the curve must
+      // track the pair scan, never a pair blowup
+      "bt_fit" -> timed { m =>
+        val lens = docsAt(m).select(col("doc_id"),
+          size(graft.ext.TextDedup.tokens(col("text"))).cast("long").as("__n"))
+        val sigs = TextDedup.minhashSignatures(docsAt(m), "doc_id", "text", 8, 2)
+        val pairs = TextDedup.lshCandidates(sigs, "doc_id", 8, 2)
+          .select(col("id_a"), col("id_b"))
+        val aWins = col("__na") > col("__nb") ||
+          (col("__na") === col("__nb") && col("id_a") < col("id_b"))
+        val cmp = pairs
+          .join(lens.select(col("doc_id").as("id_a"), col("__n").as("__na")), "id_a")
+          .join(lens.select(col("doc_id").as("id_b"), col("__n").as("__nb")), "id_b")
+          .select(when(aWins, col("id_a")).otherwise(col("id_b")).as("w"),
+            when(aWins, col("id_b")).otherwise(col("id_a")).as("l"))
+        graft.ext.Preference.btStrengths(cmp, "w", "l", iters = 3).count()
+      },
+      // association rules under the oversized-basket hazard: m disjoint
+      // copies of the order→part baskets PLUS one "everything" basket
+      // holding every part (|basket| = 20k·m — |basket|² pairs if it ever
+      // reached the explode). The maxBasket guard must drop it BEFORE
+      // pair generation, so growth tracks per-basket pair mass (linear in
+      // disjoint copies), never the hot basket's square
+      "basket_rules_hot" -> timed { m =>
+        val li = (0 until m).map { r =>
+          Tables.lineitem(spark, sfDir).select(
+            (col("l_orderkey") + lit(r * 100000000L)).as("bk"),
+            (col("l_partkey") + lit(r * 10000000L)).as("it"))
+        }.reduce(_ unionByName _)
+          .repartition(spark.sparkContext.defaultParallelism)
+        val hot = li.select(col("it")).distinct()
+          .select(lit(-1L).as("bk"), col("it"))
+        graft.ext.Affinity.basketRules(li.unionByName(hot), "bk", "it",
+          minBoth = 2L, maxBasket = 64, topK = 30).count()
+      },
+      // modularity scoring cost in isolation (labels precomputed as a
+      // cheap deterministic hash partition): one distinct + one degree
+      // agg + two node-keyed label joins — must track the edge scan
+      "modularity" -> timed { m =>
+        val li = (0 until m).map { r =>
+          Tables.lineitem(spark, sfDir).select(
+            (col("l_orderkey") + lit(r * 100000000L)).as("o"),
+            (col("l_partkey") + lit(r * 10000000L)).as("p"))
+        }.reduce(_ unionByName _)
+          .repartition(spark.sparkContext.defaultParallelism)
+          .distinct()
+        val edges = li.as("x")
+          .join(li.as("y"), col("x.o") === col("y.o") && col("x.p") < col("y.p"))
+          .select(col("x.p").as("src"), col("y.p").as("dst"))
+        val labels = edges.select(col("src").as("node"))
+          .unionByName(edges.select(col("dst").as("node"))).distinct()
+          .withColumn("label", pmod(col("node"), lit(997L)).cast("string"))
+        graft.ext.Graphs.modularity(edges, "src", "dst", labels).count()
+      },
+      "silhouette_scan" -> silhouetteTimed,
+      // (the round-12 hubless betweenness row was superseded by the
+      // hub-planted `betweenness_pivots` above — one name, one shape)
+      // assortativity: join-free marginal moments + ONE edge-sized join
+      // collapsed per target node — must track the edge scan
+      "assortativity" -> timed { m =>
+        val li = (0 until m).map { r =>
+          Tables.lineitem(spark, sfDir).select(
+            (col("l_orderkey") + lit(r * 100000000L)).as("o"),
+            (col("l_partkey") + lit(r * 10000000L)).as("p"))
+        }.reduce(_ unionByName _)
+          .repartition(spark.sparkContext.defaultParallelism)
+          .distinct()
+        val edges = li.as("x")
+          .join(li.as("y"), col("x.o") === col("y.o") && col("x.p") < col("y.p"))
+          .select(col("x.p").as("src"), col("y.p").as("dst"))
+        graft.ext.Graphs.assortativity(edges, "src", "dst").count()
+      },
+      // WordPiece trainer rounds are vocabulary-sized like the BPE/unigram
+      // trainers — the corpus pays one word-count aggregate, every round
+      // runs over distinct words × bounded units (plus the two broadcast
+      // unit-count joins the likelihood score adds)
+      "wordpiece_train" -> timed(m =>
+        TextStats.wordpieceTrain(docsAt(m), "text", rounds = 6).size.toLong),
+      // split-conformal under ADVERSARIAL score skew: 90% of the m×-grown
+      // corpus collapses onto ONE score value, so the distinct-score
+      // spine degenerates to a hot key — the quantile must still come
+      // from the hash-agg spine (partial counts absorb the hot key
+      // map-side; the spine window stays ≤ distinct-score-sized, here
+      // ~10% of the ppm domain + 1 hot value) and the cost must track
+      // the corpus scan, never a sort of the scored rows
+      "split_conformal" -> timed { m =>
+        val scored = (0 until m).map { r =>
+          Tables.documents(spark, sfDir).select(
+            (col("doc_id") + lit(r * 10000000L)).as("doc_id"))
+        }.reduce(_ unionByName _)
+          .repartition(spark.sparkContext.defaultParallelism)
+          .select(col("doc_id"), pmod(col("doc_id"), lit(2L)).as("y"),
+            when(pmod(col("doc_id"), lit(10L)) < 9L, lit(777000L))
+              .otherwise(pmod(col("doc_id") * 31L, lit(1000000L))).as("p_ppm"))
+        graft.ext.Classifier.splitConformal(scored, "doc_id").count()
       }
-
-    // warm each op once at 1× (JIT + codegen), then measure each
-    // multiplier — default 1×/2×/4×; SPARK_GRAFT_PROBE_MULTS (e.g.
-    // "1,4,16") stretches the curve when adjudicating linear-vs-quadratic
-    // needs a longer lever arm
-    val mults = sys.env.getOrElse("SPARK_GRAFT_PROBE_MULTS", "1,2,4")
-      .split(",").map(_.trim.toInt).toSeq
-    selected.foreach { case (name, f) => custom.get(name).fold[Unit](f(1))(c => c(1)) }
-    val results = selected.map { case (name, f) =>
-      name -> mults.map { m =>
-        val t = custom.get(name).fold(time(f(m)))(c => c(m))
-        math.round(t * 1000) / 1000.0
-      }
-    }
-    val json = results
-      .map { case (k, ts) => s"\"$k\":[${ts.mkString(",")}]" }
-      .mkString("{", ",", s""","multipliers":[${mults.mkString(",")}],"sf":"$sfDir"}""")
-    println(json)
-    spark.stop()
+    )
   }
 }

@@ -287,7 +287,7 @@ object Graphs {
   /** One UNEXECUTED power iteration over `edges0` from the uniform start
     * state — the frame whose physical plan IS the operator's scale story
     * (the public [[pageRankInt]] output is a checkpoint scan with no plan
-    * left to read). Used by the plan audit and `graft.Explain`.
+    * left to read). Used by the plan audit and `graft.Bench --plans`.
     */
   private[graft] def iterationPlanFrame(edges0: DataFrame, srcCol: String,
                                         dstCol: String, scaleMu: Long = 1000000L,
@@ -629,7 +629,7 @@ object Graphs {
       .select(col("node"), col("__best.label").as("label"))
 
   /** One unexecuted LPA round over `edges0` from the self-label start
-    * state, for `graft.Explain` and the plan audit.
+    * state, for `graft.Bench --plans` and the plan audit.
     */
   private[graft] def lpRoundPlanFrame(edges0: DataFrame, srcCol: String,
                                       dstCol: String): DataFrame = {
@@ -857,8 +857,8 @@ object Graphs {
 
   /** ONE HITS phase (auth update + L1 normalize) as a plannable frame —
     * [[hitsInt]]'s returned frame is a checkpoint scan, so plan audits and
-    * Explain read the load-bearing per-phase plan from here (the
-    * [[iterationPlanFrame]] pattern).
+    * `graft.Bench --plans` read the load-bearing per-phase plan from here
+    * (the [[iterationPlanFrame]] pattern).
     */
   private[graft] def hitsPhasePlanFrame(edges0: DataFrame, srcCol: String,
                                         dstCol: String): DataFrame = {

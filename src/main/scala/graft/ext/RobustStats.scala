@@ -128,8 +128,7 @@ object RobustStats {
     require(maxLag >= 1, "maxLag must be >= 1")
     val src = series.select(col(tCol).cast("long").as("__t"),
       col(vCol).cast("long").as("__v"))
-    val span = broadcast(src.agg(min(col("__t")).as("__mn"),
-      max(col("__t")).as("__mx")))
+    val span = src.agg(min(col("__t")).as("__mn"), max(col("__t")).as("__mx"))
     val filled = span
       .select(explode(expr("sequence(__mn, __mx)")).as("__t"))
       .join(src, Seq("__t"), "left")
@@ -325,8 +324,7 @@ object RobustStats {
     require(k >= 1, "k must be >= 1")
     val src = series.select(col(tCol).cast("long").as("t"),
       col(vCol).cast("long").as("v"))
-    val span = broadcast(src.agg(min(col("t")).as("__mn"),
-      max(col("t")).as("__mx")))
+    val span = src.agg(min(col("t")).as("__mn"), max(col("t")).as("__mx"))
     val filled = span
       .select(explode(expr("sequence(__mn, __mx)")).as("t"))
       .join(src, Seq("t"), "left")

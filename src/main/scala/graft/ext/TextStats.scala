@@ -408,7 +408,7 @@ object TextStats {
   /** One UNEXECUTED trainer round from the seeded vocabulary — the frame
     * whose physical plan IS the operator's scale story (the q94 output is
     * a driver-local merge table with no plan left to read; the q87
-    * situation). Used by `graft.Explain`.
+    * situation). Used by `graft.Bench --plans`.
     */
   private[graft] def bpeTrainRoundPlanFrame(df: DataFrame, textCol: String): DataFrame =
     bpeRoundWinner(bpeSeedVocab(df, textCol, "·"), "·")
@@ -479,7 +479,7 @@ object TextStats {
   /** One UNEXECUTED WordPiece trainer round from the seeded vocabulary —
     * the frame whose physical plan IS the operator's scale story (the
     * q94/q304 situation: the returned merge table is driver-local with no
-    * plan left to read). Used by `graft.Explain`.
+    * plan left to read). Used by `graft.Bench --plans`.
     */
   private[graft] def wordpieceTrainRoundPlanFrame(df: DataFrame, textCol: String): DataFrame =
     wpRoundWinner(bpeSeedVocab(df, textCol, "·"), "·")

@@ -1357,7 +1357,7 @@ object VectorSearch {
   /** One k-center round's frame for plan audits: min-dist to a literal
     * chosen set + TakeOrdered(1). [[kCenterSelect]]'s returned frame is
     * driver-local (k collected rows), so the load-bearing per-round plan
-    * is exposed here for Explain/PlanAuditSpec.
+    * is exposed here for `graft.Bench --plans` and PlanAuditSpec.
     */
   private[graft] def kCenterRoundPlanFrame(df: DataFrame, idCol: String,
                                            vecCol: String): DataFrame = {

@@ -1574,7 +1574,7 @@ object ExtensionQueries {
   // that only emit mass.
   /** The q87 citation graph: (source → cited domain) from the planted q80
     * URL scheme, plus within-doc domain co-citations (lexicographic low →
-    * high). Shared with [[graft.Explain]], which renders one power
+    * high). Shared with `graft.Bench --plans`, which renders one power
     * iteration over it — the q87 output frame itself is a checkpoint scan
     * with no plan to read.
     */
@@ -4062,7 +4062,7 @@ object ExtensionQueries {
       val tot = v.agg(count(lit(1)).as("__td"), sum(col("n_tokens")).as("__tt"))
       val w = org.apache.spark.sql.expressions.Window.orderBy(col("stage_idx"))
         .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-      broadcast(spine).join(drops, Seq("stage"), "left")
+      spine.join(drops, Seq("stage"), "left")
         .withColumn("n_dropped_docs", coalesce(col("__dd"), lit(0L)))
         .withColumn("n_dropped_tokens", coalesce(col("__dt"), lit(0L)))
         .withColumn("__cdd", sum(col("n_dropped_docs")).over(w))
@@ -8886,7 +8886,7 @@ object ExtensionQueries {
       val mc = Tables.events(s, dir)
         .groupBy(expr("cast(ts as long) div 60").as("t"))
         .agg(count(lit(1)).as("v"))
-      val span = broadcast(mc.agg(min(col("t")).as("__mn"), max(col("t")).as("__mx")))
+      val span = mc.agg(min(col("t")).as("__mn"), max(col("t")).as("__mx"))
       val filled = span
         .select(explode(expr("sequence(__mn, __mx)")).as("t"))
         .join(mc, Seq("t"), "left")

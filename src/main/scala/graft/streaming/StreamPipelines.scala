@@ -1367,6 +1367,10 @@ object StreamPipelines {
       val fresh = fps.join(index.select(col(idCol)).distinct(), Seq(idCol), "left_anti")
         .persist()
       try {
+        // filled here, once: the near-dup probe and the first-wins join
+        // below both read `fresh`, and left to the commit job they would
+        // fingerprint the same partition in two tasks at once
+        fresh.count()
         val dropIds = nearDups(fresh, index)
           .join(fresh.select(col(idCol).as("nbr_id")).distinct()
               .withColumn("__f", lit(1)),

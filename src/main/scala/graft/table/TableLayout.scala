@@ -243,13 +243,6 @@ object TableLayout {
     rows.toDF("partition", "n_files", "total_bytes", "avg_bytes")
   }
 
-  /** Data-freshness lag in seconds (the reference's Grafana gauge on
-    * max(event_timestamp), lakehouse_monitor.json:181; SURVEY.md F8).
-    * `now` is injectable for deterministic tests.
-    */
-  def freshnessLagSeconds(df: DataFrame, tsCol: String, now: Column = current_timestamp()): DataFrame =
-    df.agg((unix_timestamp(now) - unix_timestamp(max(col(tsCol)))).as("freshness_lag_s"))
-
   /** M3 — orphan cleanup: delete stray temp dirs left by failed compactions
     * or swaps (the plain-parquet analog of remove_orphan_files).
     */
