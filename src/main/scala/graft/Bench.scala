@@ -706,11 +706,11 @@ object Bench {
     Tables.lineitem(s, sfDir).select(col("l_orderkey").as("src"), col("l_partkey").as("dst"))
 
   /** Writes the formatted physical plan of every [[Plans]] entry (or of
-    * the named queries' entries) to `out`. Each frame is counted before it
-    * is rendered; the count executes its own aggregate plan, not the
-    * frame's, so a section shows AQE's initial plan (isFinalPlan=false)
-    * unless the frame's own plan already ran. Two files and a `diff`
-    * compare plans before and after a change.
+    * the named queries' entries) to `out`. Each frame's own plan runs to
+    * completion (its rows are dropped on the executors) before it is
+    * rendered, so a section shows the plan AQE finally ran
+    * (isFinalPlan=true). Two files and a `diff` compare plans before and
+    * after a change.
     */
   def plans(spark: SparkSession, sfDir: String, out: String, names: Seq[String]): Unit = {
     requireKnown(names, Plans.map(_.query))
@@ -721,7 +721,9 @@ object Bench {
     sb.append("plan-affecting changes.\n")
     Plans.filter(p => names.isEmpty || names.contains(p.query)).foreach { p =>
       val df = p.frame(spark, sfDir)
-      df.count()
+      // not df.count(): that plans and runs its own aggregate, and this
+      // frame's plan would render before AQE re-optimised it
+      df.queryExecution.toRdd.foreach(_ => ())
       val title = if (p.note.isEmpty) p.query else s"${p.query} (${p.note})"
       sb.append(s"\n## $title\n\n```\n")
       sb.append(df.queryExecution.explainString(ExplainMode.fromString("formatted")))

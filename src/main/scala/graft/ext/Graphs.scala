@@ -506,6 +506,9 @@ object Graphs {
     // cache entry or re-derive the graph per downstream action)
     val deg = dir.groupBy(col("x").as("node")).agg(count(lit(1)).as("__d")).persist()
     try {
+      // fill the cache before the three consumers share one job, or two of
+      // their tasks can compute the same cached partition at once
+      deg.count()
       val nn = deg.agg(count(lit(1)).as("n_nodes"),
         sum(col("__d")).as("m2"),
         sum(col("__d") * col("__d")).as("sum_deg_src"),

@@ -5,6 +5,7 @@ import scala.util.Try
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
@@ -34,7 +35,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * `spark.read.schema(..)`, so [[read]] starts no Spark job before the
   * caller's action (as long as a version spans at most
   * `spark.sql.sources.parallelPartitionDiscovery.threshold` segments, past
-  * which Spark lists the dirs with a job).
+  * which Spark lists the dirs with a job; a merge-on-read version is one
+  * scan over its segment dirs too, so the same bound holds for it).
+  *
+  * Reads of merge-on-read versions fold once: the fold is one parquet scan
+  * over every segment dir, one key shuffle and one sort, and [[read]] keeps
+  * the persisted fold of the newest version it built, per table and
+  * SparkContext, for the next read of that version and for
+  * [[compactLatest]]. Storage holds at most one persisted fold per
+  * merge-on-read table.
   *
   * A commit writes a NEW segment dir, then publishes the manifest with an
   * ATOMIC CLAIM on the final manifest path, per filesystem:
@@ -187,8 +196,10 @@ object SnapshotLog {
     require(spec.key.nonEmpty, "commitDelta: merge key required")
     (spec.key ++ spec.carryCols ++ spec.deleteCol ++ spec.orderCol).foreach(c =>
       require(ColPattern.matches(c), s"column name must match [A-Za-z0-9_]+, got: '$c'"))
-    val reserved = Seq("__seq", "__mor_ord", "__mor_del", "__mor_lastdel", "__mor_rn")
-    require(!df.columns.exists(reserved.contains),
+    // the fold adds the __mor columns, and reads each row's segment from
+    // Spark's `_metadata` file column, which a data column of that name hides
+    val reserved = Seq("__seq", "__mor_ord", "__mor_del", "__mor_lastdel", "__mor_rn", "_metadata")
+    require(!df.columns.exists(c => reserved.exists(_.equalsIgnoreCase(c))),
       s"commitDelta: input must not use reserved columns ${reserved.mkString(", ")}")
     commit(df, path, "delta", tag, Some(spec))
   }
@@ -396,57 +407,138 @@ object SnapshotLog {
     spark.read.schema(schema).parquet(dirs: _*)
 
   /** Read the table at `version` (time travel), or at the latest version.
-    * A merge-on-read version folds its delta segments over the base at
-    * scan time (see [[commitDelta]]); readers always see merged state.
     * A plain version is one scan over all its segments with the recorded
-    * schema. The frame is built from the manifest alone: no Spark job runs
-    * before the caller's action.
+    * schema. A merge-on-read version folds its delta segments over the base
+    * at scan time (see [[commitDelta]] and [[foldDeltas]]); readers always
+    * see merged state. The frame is built from the manifest alone: no Spark
+    * job runs before the caller's action.
+    *
+    * Reuse: `read` keeps, per table and SparkContext, the persisted fold of
+    * the newest merge-on-read version it has built, keyed on the manifest's
+    * version and segment list. A second read of that version returns the
+    * same frame, whose first action filled the cache, so it folds nothing
+    * (the dashboard reads of one round, and [[compactLatest]] after them).
+    * Storage holds at most ONE persisted fold per merge-on-read table: the
+    * entry is released when a newer version of the table is read, when
+    * [[compactLatest]] commits and when [[expireSnapshots]] drops its
+    * version. A read of an older version (time travel) folds without
+    * persisting and leaves the entry alone. A frame read before its entry
+    * was released still computes the right rows, from the segments.
     */
   def read(spark: SparkSession, path: String, version: Option[Int] = None): DataFrame = {
     val v = version.orElse(latestVersion(spark, path))
       .getOrElse(throw new IllegalArgumentException(s"no committed version at $path"))
+    readAt(spark, path, v, keep = true)
+  }
+
+  /** The table at `v`: a scan for a plain version, else the fold — the
+    * kept one when it matches, and one kept for the next read if `keep`.
+    */
+  private def readAt(spark: SparkSession, path: String, v: Int, keep: Boolean): DataFrame = {
     val m = readManifest(spark, path, v)
     m.merge match {
       case None       => scan(spark, m.segments.map(s => s"$path/$s"), m.schema)
-      case Some(spec) => foldDeltas(spark, path, m, spec)
+      case Some(spec) => folded(spark, path, v, m, spec, keep)
     }
   }
 
-  /** The merge-on-read fold: one hash shuffle on the merge key, then
-    * windowed latest-wins. Rows rank by (orderCol, segment position) so a
-    * later segment wins ties and, with an orderCol, stale late arrivals
-    * lose to newer state. Delete-marked rows cut history: nothing at or
-    * before a key's newest delete survives or carries forward. Carry
-    * columns take the newest non-null value (MERGE coalesce); everything
-    * else comes from the newest surviving row.
+  /** A kept fold: the persisted frame of merge-on-read `version` of a table,
+    * identified by its manifest's segment list, so a table re-created at
+    * the same path never matches an old entry.
+    */
+  private final case class Fold(sc: SparkContext, version: Int, segments: Seq[String], df: DataFrame)
+
+  /** One kept fold per table (qualified path) per SparkContext. Spark's
+    * CacheManager is shared by every session of a context, so the entries
+    * are too: any session's read of the kept version hits it.
+    */
+  private val folds = scala.collection.mutable.Map[String, Fold]()
+
+  private def tableKey(spark: SparkSession, path: String): String =
+    fs(spark, path).makeQualified(new Path(path)).toString
+
+  /** The kept fold of `path`, dropping an entry of another (stopped)
+    * SparkContext, whose storage went with it. Call under `folds`.
+    */
+  private def kept(spark: SparkSession, key: String): Option[Fold] = {
+    folds.get(key).filter(_.sc ne spark.sparkContext).foreach(_ => folds.remove(key))
+    folds.get(key)
+  }
+
+  /** Unpersist and forget the kept fold of `path`, if `which` selects it. */
+  private def release(spark: SparkSession, path: String, which: Fold => Boolean = _ => true): Unit =
+    folds.synchronized {
+      val key = tableKey(spark, path)
+      kept(spark, key).filter(which).foreach { e =>
+        folds.remove(key)
+        e.df.unpersist(blocking = false)
+      }
+    }
+
+  private def folded(spark: SparkSession, path: String, v: Int, m: Manifest,
+                     spec: MergeSpec, keep: Boolean): DataFrame = folds.synchronized {
+    val key = tableKey(spark, path)
+    kept(spark, key) match {
+      case Some(e) if e.version == v && e.segments == m.segments =>
+        // another session of the context gets its own frame of the same
+        // plan, which the shared CacheManager serves from the kept data
+        if (e.df.sparkSession eq spark) e.df else foldDeltas(spark, path, m, spec)
+      case old if keep && old.forall(e => v > e.version || !retained(spark, path, e)) =>
+        old.foreach(_.df.unpersist(blocking = false))
+        val df = foldDeltas(spark, path, m, spec).persist()
+        folds(key) = Fold(spark.sparkContext, v, m.segments, df)
+        df
+      case _ => foldDeltas(spark, path, m, spec)
+    }
+  }
+
+  /** Whether the version `e` kept is still retained with the same segments
+    * (not expired by another process, nor the table re-created).
+    */
+  private def retained(spark: SparkSession, path: String, e: Fold): Boolean =
+    fs(spark, path).exists(new Path(path, s"$LogDir/${manifestName(e.version)}")) &&
+      readManifest(spark, path, e.version).segments == e.segments
+
+  /** The merge-on-read fold: ONE parquet scan over all the version's
+    * segment dirs, one hash shuffle on the merge key and one sort, feeding
+    * windows that all share one spec, (merge key, `__mor_ord` desc).
+    *   - Each row's segment position `__seq` comes from its file's
+    *     `_metadata.file_path`, mapped through the manifest's segment order.
+    *   - Rows rank by `__mor_ord` = (orderCol, segment position), so a later
+    *     segment wins ties and, with an orderCol, stale late arrivals lose
+    *     to newer state. The newest row (`__mor_rn` = 1) is the key's row.
+    *   - Deletes cut history: `__mor_lastdel` is the key's newest delete,
+    *     and the newest row survives only if it is newer than that (it is
+    *     not itself a delete). Nothing at or before the cut carries.
+    *   - Carry columns take the newest non-null value after the cut (MERGE
+    *     coalesce); everything else comes from the newest row.
     *
     * Scale: the fold is exactly the read-side cost merge-on-read trades
     * for O(batch) commits — bounded by segment count between compactions,
-    * which [[compactLatest]] resets by folding into a plain base.
+    * which [[compactLatest]] resets by folding into a plain base. Its one
+    * scan lists the segment dirs as a plain version's scan does: past
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) dirs,
+    * Spark lists them with a job.
     */
   private def foldDeltas(spark: SparkSession, path: String,
                          m: Manifest, spec: MergeSpec): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    val parts = m.segments.zipWithIndex.map { case (s, i) =>
-      scan(spark, Seq(s"$path/$s"), m.schema).withColumn("__seq", lit(i))
-    }
-    val all = parts.reduce(_ union _)
-    val keyCols = spec.key.map(col)
-    val ord  = struct(spec.orderCol.map(col).getOrElse(lit(0)).as("o"), col("__seq").as("s"))
-    val del  = spec.deleteCol.map(c => coalesce(col(c).cast("boolean"), lit(false))).getOrElse(lit(false))
-    val wAll  = Window.partitionBy(keyCols: _*)
-    val wDesc = Window.partitionBy(keyCols: _*).orderBy(col("__mor_ord").desc)
-    val wFull = wDesc.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val cut = all
-      .withColumn("__mor_ord", ord)
-      .withColumn("__mor_lastdel", max(when(del, col("__mor_ord"))).over(wAll))
-      .filter(col("__mor_lastdel").isNull || col("__mor_ord") > col("__mor_lastdel"))
-    val carried = spec.carryCols.foldLeft(cut.withColumn("__mor_rn", row_number().over(wDesc))) {
-      (d, c) => d.withColumn(c, first(col(c), ignoreNulls = true).over(wFull))
-    }
+    val position = typedLit(m.segments.map(_.stripPrefix(s"$DataDir/")).zipWithIndex.toMap)
+    val all = scan(spark, m.segments.map(s => s"$path/$s"), m.schema)
+      .withColumn("__seq", element_at(position, element_at(split(col("_metadata.file_path"), "/"), -2)))
+    val ord = struct(spec.orderCol.map(col).getOrElse(lit(0)).as("o"), col("__seq").as("s"))
+    val del = spec.deleteCol.map(c => coalesce(col(c).cast("boolean"), lit(false))).getOrElse(lit(false))
+    val w     = Window.partitionBy(spec.key.map(col): _*).orderBy(col("__mor_ord").desc)
+    val wFull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val live  = col("__mor_lastdel").isNull || col("__mor_ord") > col("__mor_lastdel")
+    val ranked = all.withColumn("__mor_ord", ord).withColumns(Map(
+      "__mor_rn"      -> row_number().over(w),
+      "__mor_lastdel" -> max(when(del, col("__mor_ord"))).over(wFull)))
+    val carried = ranked.withColumns(spec.carryCols.map(c =>
+      c -> first(when(live, col(c)), ignoreNulls = true).over(wFull)).toMap)
     val internal = Seq("__seq", "__mor_ord", "__mor_lastdel", "__mor_rn") ++ spec.deleteCol
-    carried.filter(col("__mor_rn") === 1).drop(internal: _*)
+    carried.filter(col("__mor_rn") === 1 && live).drop(internal: _*)
   }
 
   /** Row-level diff between two committed versions (time-travel changelog
@@ -462,13 +554,14 @@ object SnapshotLog {
     * comparison is a null-safe struct equality, so sparse columns diff
     * correctly.
     *
-    * Output: keyCols ++ (change: string).
+    * Output: keyCols ++ (change: string). A one-off comparison: neither
+    * side's fold is kept (see [[read]]), though a kept one is used.
     */
   def diff(spark: SparkSession, path: String, fromVersion: Int, toVersion: Int,
            keyCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions._
-    val a = read(spark, path, Some(fromVersion))
-    val b = read(spark, path, Some(toVersion))
+    val a = readAt(spark, path, fromVersion, keep = false)
+    val b = readAt(spark, path, toVersion, keep = false)
     require(keyCols.nonEmpty && keyCols.forall(a.columns.contains),
       s"diff: key columns ${keyCols.mkString(",")} must exist in the table")
     require(a.columns.sorted.sameElements(b.columns.sorted),
@@ -502,7 +595,10 @@ object SnapshotLog {
     * commits a snapshot rather than mutating files in place). Readers of
     * older versions are untouched; [[expireSnapshots]] reclaims the
     * pre-compaction segments once they age out.
-    * Returns the committed version.
+    * A merge-on-read version whose fold [[read]] keeps is written from the
+    * kept frame, so compaction right after a read folds nothing; otherwise
+    * it folds once, without keeping the fold. The commit releases the
+    * table's kept fold. Returns the committed version.
     */
   def compactLatest(spark: SparkSession, path: String,
                     targetFileBytes: Long = 128L * 1024 * 1024): Int = {
@@ -517,7 +613,9 @@ object SnapshotLog {
       n
     }.sum
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    commitReplace(read(spark, path, Some(v)).coalesce(nFiles), path, Some(s"compact-v$v"))
+    try commitReplace(readAt(spark, path, v, keep = false).coalesce(nFiles), path,
+      Some(s"compact-v$v"))
+    finally release(spark, path)
   }
 
   /** M2 + M3 — expire old snapshots and GC unreferenced segments: keep the
@@ -525,7 +623,8 @@ object SnapshotLog {
     * segment that (a) no retained manifest references AND (b) is older
     * than `orphanOlderThanMs` — the age guard that keeps an in-flight
     * commit's freshly-written segment (manifest not yet published) safe,
-    * exactly Iceberg's remove_orphan_files(older_than).
+    * exactly Iceberg's remove_orphan_files(older_than). A fold [[read]]
+    * keeps of an expired version is released.
     * Returns (expired versions, deleted segment dirs).
     */
   def expireSnapshots(spark: SparkSession, path: String, retainLast: Int,
@@ -545,6 +644,7 @@ object SnapshotLog {
         .map(s => s"$DataDir/${s.getPath.getName}")
         .filterNot(live.contains)
     orphans.foreach(s => f.delete(new Path(path, s), true))
+    release(spark, path, e => expire.contains(e.version))
     (expire, orphans)
   }
 }

@@ -52,6 +52,9 @@ class BenchSpec extends SparkFunSuite {
     // the iteration's own joins and aggregates, not a checkpoint scan
     assert(q87.contains("HashAggregate") && q87.contains("Join"))
     assert(!q87.contains("ExistingRDD"))
+    // each frame's own plan ran, so its section is AQE's final plan
+    val q01 = text.substring(text.indexOf("## q01_pricing_summary"), text.indexOf("## q87_pagerank"))
+    assert(q01.contains("isFinalPlan=true") && !q01.contains("isFinalPlan=false"), q01)
   }
 
   test("--scale prints each named probe plus the multipliers and sf") {

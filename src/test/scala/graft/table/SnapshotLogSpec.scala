@@ -3,6 +3,7 @@ package graft.table
 import graft.SparkFunSuite
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Reads what a SnapshotLog manifest records, straight from its JSON. */
@@ -35,7 +36,7 @@ object Manifests {
     }
 }
 
-class SnapshotLogSpec extends SparkFunSuite {
+class SnapshotLogSpec extends SparkFunSuite with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def tmp(): String = graft.TestTmp.dir("snaplog") + "/t"
@@ -164,9 +165,11 @@ class SnapshotLogSpec extends SparkFunSuite {
       SnapshotLog.commitDelta(
         (1 to 10).map(i => (s"u$i", d, i * 100)).toDF("id", "ts", "x"), path, spec)
     }
+    // before its first action the kept fold prints its plan once, inside
+    // the InMemoryRelation it fills
     def plan = SnapshotLog.read(spark, path).queryExecution.executedPlan.toString
-    // the entire fold (delete cut + carry + latest-wins rank, three windows
-    // all partitioned on the merge key) must cost exactly ONE exchange on
+    // the entire fold (delete cut + carry + latest-wins rank, windows all
+    // partitioned on the merge key) must cost exactly ONE exchange on
     // that key — a second exchange means a window stopped sharing the
     // key partitioning and the read path re-shuffles the table per scan
     val p1 = plan
@@ -174,9 +177,11 @@ class SnapshotLogSpec extends SparkFunSuite {
       s"fold must be a single key shuffle:\n$p1")
     assert(p1.split("Exchange hashpartitioning\\(")(1).startsWith("id"),
       s"the one exchange must be on the merge key:\n$p1")
-    // read-side cost is the fold width: base + 3 deltas = 4 scanned segments
-    assert(p1.split("FileScan parquet").length - 1 == 4,
-      s"expected base+3 delta scans:\n$p1")
+    // the fold's width is one scan over base + 3 delta dirs, and its windows
+    // share one spec, so one sort serves them all
+    assert(p1.split("FileScan parquet").length - 1 == 1 && p1.contains("InMemoryFileIndex(4 paths)"),
+      s"expected one scan over base+3 delta dirs:\n$p1")
+    assert("\\bSort \\[".r.findAllIn(p1).size == 1, s"expected one sort:\n$p1")
     // compaction folds the deltas into a plain base: the read plan collapses
     // to one scan and needs no exchange at all (nothing left to fold)
     SnapshotLog.compactLatest(spark, path)
@@ -219,6 +224,14 @@ class SnapshotLogSpec extends SparkFunSuite {
     intercept[IllegalArgumentException](
       SnapshotLog.commitDelta(df.withColumn("__seq", org.apache.spark.sql.functions.lit(1)),
         path, SnapshotLog.MergeSpec(Seq("id"))))
+    // a data column named _metadata would hide the file column the fold
+    // reads each row's segment from
+    Seq("_metadata", "_METADATA").foreach { c =>
+      intercept[IllegalArgumentException](
+        SnapshotLog.commitDelta(df.withColumn(c, org.apache.spark.sql.functions.lit("x")),
+          path, SnapshotLog.MergeSpec(Seq("id"))))
+    }
+    assert(SnapshotLog.versions(spark, path) == Seq(1))
   }
 
   test("tags scans every retained manifest, not just the latest") {
@@ -404,5 +417,108 @@ class SnapshotLogSpec extends SparkFunSuite {
     SnapshotLog.commitDelta(Seq((2, "B")).toDF("ID", "v"), path, SnapshotLog.MergeSpec(Seq("ID")))
     assert(rows(readNoJobs(path)) == Set(Row(1, "a"), Row(2, "B"), Row(3, "c")))
     Manifests.assertSchemaMatchesFooters(spark, path)
+  }
+
+  /** The stages that ran tasks in the Spark jobs started by `body`, as
+    * "job/stage: name" (a job lists the shuffle stages it skipped too).
+    */
+  private def stagesStartedBy(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val group = s"stages-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, "stage count")
+    try body finally sc.clearJobGroup()
+    jobsStartedBy(()) // fence: every job of the group is in the status store
+    val st = sc.statusTracker
+    st.getJobIdsForGroup(group).toSeq.sorted.flatMap(j => st.getJobInfo(j).toSeq.flatMap(_.stageIds.toSeq
+      .flatMap(st.getStageInfo).filter(_.numCompletedTasks > 0).map(s => s"$j/${s.stageId}: ${s.name}")))
+  }
+
+  private def morTable(): String = {
+    val path = tmp()
+    val spec = SnapshotLog.MergeSpec(Seq("id"), carryCols = Seq("x"), orderCol = Some("ts"))
+    SnapshotLog.commitReplace((1 to 30).map(i => (i, 0L, Option(i))).toDF("id", "ts", "x"), path)
+    (1L to 3L).foreach { d =>
+      SnapshotLog.commitDelta((1 to 8).map(i => (i, d, if (i % 2 == 0) None else Some(i * 10)))
+        .toDF("id", "ts", "x"), path, spec)
+    }
+    path
+  }
+
+  /** The physical plan `df` runs; AdaptiveSparkPlanHelper's `collect`
+    * walks it through AQE's stages but not into the plan an
+    * InMemoryRelation was filled with.
+    */
+  private def physical(df: DataFrame) = df.queryExecution.executedPlan
+
+  test("a second read of an unchanged version scans the kept fold: no Window, no fold job") {
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val path = morTable()
+    val first = SnapshotLog.read(spark, path)
+    val want = rows(first)
+    val again = readNoJobs(path)
+    assert(again eq first, "the second read must return the kept frame")
+    // the plan that runs is a scan of the filled cache; the fold's windows
+    // live only inside the InMemoryRelation, which is already loaded
+    val p = physical(again)
+    val scans = collect(p) { case s: InMemoryTableScanExec => s }
+    assert(scans.size == 1 && scans.head.relation.cacheBuilder.isCachedColumnBuffersLoaded, p.toString)
+    assert(collect(p) { case w: WindowExec => w }.isEmpty, p.toString)
+    var got = Set.empty[Row]
+    val stages = stagesStartedBy { got = rows(again) }
+    assert(stages.size == 1, s"a kept-fold read runs one stage: $stages")
+    assert(got == want)
+    // another session of the context reads the same kept data
+    val other = SnapshotLog.read(spark.newSession(), path)
+    assert(collect(physical(other)) { case s: InMemoryTableScanExec => s }.nonEmpty)
+    assert(rows(other) == want)
+    // time travel to an older version folds without touching the kept entry
+    assert(collect(physical(SnapshotLog.read(spark, path, Some(3)))) { case w: WindowExec => w }.nonEmpty)
+    assert(SnapshotLog.read(spark, path) eq first)
+  }
+
+  test("compactLatest right after a read writes the kept fold: one stage, no fold") {
+    val path = morTable()
+    val want = rows(SnapshotLog.read(spark, path))
+    val stages = stagesStartedBy(SnapshotLog.compactLatest(spark, path))
+    assert(stages.size == 1, s"compaction of a kept fold must run only its write stage: $stages")
+    assert(rows(SnapshotLog.read(spark, path)) == want)
+    assert(Manifests.segments(path, 5).size == 1)
+    // with nothing kept (a fresh delta version), compaction folds once
+    SnapshotLog.commitDelta(Seq((1, 9L, Option(1))).toDF("id", "ts", "x"), path,
+      SnapshotLog.MergeSpec(Seq("id"), carryCols = Seq("x"), orderCol = Some("ts")))
+    assert(stagesStartedBy(SnapshotLog.compactLatest(spark, path)).size > 1)
+  }
+
+  test("storage holds at most one persisted fold per merge-on-read table") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    def held = (sc.getPersistentRDDs.keySet -- before).size
+    val a = morTable()
+    val b = morTable()
+    val spec = SnapshotLog.MergeSpec(Seq("id"), carryCols = Seq("x"), orderCol = Some("ts"))
+    (4L to 9L).foreach { d =>
+      Seq(a, b).foreach { p =>
+        SnapshotLog.commitDelta(Seq((d.toInt, d, Option(1))).toDF("id", "ts", "x"), p, spec)
+        SnapshotLog.read(spark, p).count()
+        SnapshotLog.read(spark, p, Some(2)).count() // time travel keeps nothing
+      }
+      assert(held == 2, s"after delta $d: $held persisted RDDs for two tables")
+    }
+    // compaction releases its table's fold
+    SnapshotLog.compactLatest(spark, a)
+    assert(held == 1)
+    // expiring the kept version releases it too
+    SnapshotLog.commitDelta(Seq((1, 99L, Option(1))).toDF("id", "ts", "x"), a, spec)
+    SnapshotLog.read(spark, a).count()
+    assert(held == 2)
+    SnapshotLog.commitReplace(Seq((1, 0L, Option(1))).toDF("id", "ts", "x"), a)
+    SnapshotLog.expireSnapshots(spark, a, retainLast = 1, orphanOlderThanMs = 0L)
+    assert(held == 1)
+    SnapshotLog.expireSnapshots(spark, b, retainLast = 1, orphanOlderThanMs = 0L)
+    assert(held == 1, "expiry that keeps the fold's version must not release it")
+    SnapshotLog.commitReplace(Seq((1, 0L, Option(1))).toDF("id", "ts", "x"), b)
+    SnapshotLog.expireSnapshots(spark, b, retainLast = 1, orphanOlderThanMs = 0L)
+    assert(held == 0)
   }
 }
