@@ -124,30 +124,21 @@ object Components {
       edges: DataFrame, srcCol: String, dstCol: String,
       maxIter: Int = 16
   ): DataFrame = {
-    val e = edges
-      .select(col(srcCol).cast("string").as("src"), col(dstCol).cast("string").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .persist()
-    val dict = Graphs.idDictionary(
-      e.select(col("src").as("node")).union(e.select(col("dst").as("node"))),
-      "node").persist()
-    val enc = e
-      .join(dict.select(col("node").as("src"), col("node_id").as("__sid")), "src")
-      .join(dict.select(col("node").as("dst"), col("node_id").as("__did")), "dst")
-      .select(col("__sid").as("src"), col("__did").as("dst"))
-    val cc = connectedComponents(enc, "src", "dst", maxIter)
-    val decoded = cc.join(dict, cc("node") === dict("node_id"))
-      .select(dict("node"), cc("component").as("__comp"))
-      .persist()
-    decoded.count() // materialize: referenced by both the relabel agg and the join-back
-    val out = decoded
-      .join(decoded.groupBy(col("__comp")).agg(min(col("node")).as("component")), "__comp")
-      .select(col("node"), col("component"))
-      .localCheckpoint(true)
-    decoded.unpersist()
-    dict.unpersist()
-    e.unpersist()
-    out
+    Lineage { lin =>
+      val e = lin.keep(edges
+        .select(col(srcCol).cast("string").as("src"), col(dstCol).cast("string").as("dst"))
+        .filter(col("src").isNotNull && col("dst").isNotNull))
+      val dict = lin.keep(Graphs.idDictionary(
+        e.select(col("src").as("node")).union(e.select(col("dst").as("node"))),
+        "node"))
+      val cc = connectedComponents(Graphs.encodeEdges(e, dict), "src", "dst", maxIter)
+      val decoded = cc.join(dict, cc("node") === dict("node_id"))
+        .select(dict("node"), cc("component").as("__comp"))
+      lin.fill(decoded) // referenced by both the relabel agg and the join-back
+      lin.checkpoint(decoded
+        .join(decoded.groupBy(col("__comp")).agg(min(col("node")).as("component")), "__comp")
+        .select(col("node"), col("component")))
+    }
   }
 
   /** Duplicate-cluster representative selection: given cluster labels

@@ -53,6 +53,45 @@ object Graphs {
         .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
         .distinct()
 
+  /** Directed distinct edge list (src, dst as strings, neither null; self
+    * loops kept) — the normalization the directed operators start from.
+    */
+  private def directedEdges(edges0: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges0
+      .select(col(srcCol).cast("string").as("src"), col(dstCol).cast("string").as("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
+      .distinct()
+
+  /** Every endpoint of a (src, dst) edge frame, once per edge end. */
+  private def endpoints(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("node")).union(edges.select(col("dst").as("node")))
+
+  private def nodesOf(edges: DataFrame): DataFrame = endpoints(edges).distinct()
+
+  /** (src, dst, odeg): the out-degree rides each edge row, so an
+    * iteration's join against the rank frame is single.
+    */
+  private def outEdgesOf(edges: DataFrame): DataFrame =
+    edges.join(edges.groupBy("src").agg(count(lit(1)).as("odeg")), "src")
+
+  /** (src, dst) string edges re-keyed to their [[idDictionary]] long ids. */
+  private[graft] def encodeEdges(edges: DataFrame, dict: DataFrame): DataFrame =
+    edges
+      .join(dict.select(col("node").as("src"), col("node_id").as("__sid")), "src")
+      .join(dict.select(col("node").as("dst"), col("node_id").as("__did")), "dst")
+      .select(col("__sid").as("src"), col("__did").as("dst"))
+
+  /** Both orientations of a canonical (a, b) edge list as (node, nbr). */
+  private def adjacency(e: DataFrame): DataFrame =
+    e.select(col("a").as("node"), col("b").as("nbr"))
+      .unionAll(e.select(col("b").as("node"), col("a").as("nbr")))
+
+  /** Milli ball-size estimate of a bottom-`k` KMV sketch column `hs`. */
+  private def kmvEstimateSql(k: Int): String =
+    s"""CAST(CASE WHEN size(hs) < $k THEN size(hs) * 1000L
+       |  ELSE ((${k - 1}L * 1000L * ${graft.ext.ThetaSketch.HashSpace}L) div element_at(hs, $k))
+       |END AS BIGINT)""".stripMargin
+
   /** Dense long ids for a (string) key column — the dictionary-encode
     * step web-scale graph work does upstream so every iteration shuffles
     * (long, long) rows instead of (url-string, long). GraphX requires
@@ -127,11 +166,12 @@ object Graphs {
     * long) — at web scale, pass `encodeIds = true` to run the iterations
     * over [[idDictionary]]-assigned dense longs (2 shuffles × iters of
     * (long, long) rows; the encode/decode joins are paid once) with
-    * bit-identical output. A generation is persisted and materialized
-    * every 4th iteration (kept shallower than the ~7-deep cliff where
-    * iterative DataFrame plans start compounding — see [[Components]]),
+    * bit-identical output. A generation is filled every 4th iteration
+    * (kept shallower than the ~7-deep cliff where iterative DataFrame
+    * plans start compounding — see [[Components]]),
     * so short runs execute as a single job; `iters` is fixed and small
-    * (3-20 in practice), not a convergence loop.
+    * (3-20 in practice), not a convergence loop. Every frame the run
+    * persists is owned by one [[Lineage]] scope.
     *
     * Overflow: Σ shares ≤ nodes × scaleMu, so dampingPct × inflow stays
     * under 2^63 for corpora up to ~10^11 nodes at the default scale —
@@ -147,134 +187,79 @@ object Graphs {
     require(iters >= 0, "iters must be non-negative")
     require(dampingPct >= 0 && dampingPct <= 100, "dampingPct must be in [0, 100]")
     // edges feeds four downstream builds (both node branches, the out-deg
-    // agg, and the join probe) — persisted, or the upstream extraction
-    // (regexp scans, distinct shuffle) runs four times. Materialized and
-    // re-based on its RDD up front: the iteration loop nests references to
-    // this frame (rank_i's plan contains rank_{i-1}'s), so leaving the
-    // caller's extraction subtree attached makes every action re-analyze
-    // and re-canonicalize it once per occurrence — pure driver time that
-    // measured multiples of the actual compute on small graphs
-    val edgesChain = edges0
-      .select(col(srcCol).cast("string").as("src"), col(dstCol).cast("string").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .persist()
-    edgesChain.count()
-    val edges = edgesChain.sparkSession
-      .createDataFrame(edgesChain.rdd, edgesChain.schema)
-    val out =
+    // agg, and the join probe) — filled, or the upstream extraction
+    // (regexp scans, distinct shuffle) runs four times — and the loop reads
+    // it through an anchor (see [[Lineage.anchor]]): the iterations nest
+    // references to this frame, so the caller's extraction subtree would be
+    // re-analyzed at every occurrence — driver time that measured multiples
+    // of the actual compute on small graphs
+    Lineage { lin =>
+      val edgesChain = directedEdges(edges0, srcCol, dstCol)
+      lin.fill(edgesChain)
+      val edges = Lineage.anchor(edgesChain)
       if (!encodeIds) runPageRank(edges, iters, scaleMu, dampingPct, redistributeDangling)
       else {
         // dictionary-encode once up front (two node-keyed equi-joins), so
         // every ITERATION's join + hash-agg shuffles (long, long) rows
-        // instead of string keys — the web-scale posture Graphs.scala has
-        // documented since the string-keyed version: iterations dominate
-        // (2 shuffles × iters vs 2 encode joins + 1 decode join, paid once)
-        val dict = idDictionary(
-          edges.select(col("src").as("node")).union(edges.select(col("dst").as("node"))),
-          "node").persist()
-        dict.count() // materialize BEFORE the two encode joins scan it
-        val encChain = edges
-          .join(dict.select(col("node").as("src"), col("node_id").as("__sid")), "src")
-          .join(dict.select(col("node").as("dst"), col("node_id").as("__did")), "dst")
-          .select(col("__sid").as("src"), col("__did").as("dst"))
-          .persist()
-        encChain.count() // materialize the encoded graph before iterating
-        // serve the iterations from a short-lineage anchor: the loop
-        // references the encoded graph ~2× per iteration and nests those
-        // references (rank_i's plan contains rank_{i-1}'s), so with the
-        // full extract→distinct→dictionary→encode subtree still attached
-        // each action would re-analyze and re-canonicalize that tree at
+        // instead of string keys: iterations dominate (2 shuffles × iters
+        // vs 2 encode joins + 1 decode join, paid once)
+        val dict = idDictionary(endpoints(edges), "node")
+        lin.fill(dict) // BEFORE the two encode joins scan it
+        val encChain = encodeEdges(edges, dict)
+        lin.fill(encChain)
+        // the anchor matters most here: with the extract→distinct→
+        // dictionary→encode subtree attached, each action re-analyzed it at
         // every occurrence — measured 12-24 s of pure DRIVER time on a
-        // 26-node sf0.1 graph, >10× the whole string-keyed run. Re-basing
-        // the materialized cache on its RDD gives the loop a LogicalRDD
-        // leaf reading through encChain's live cache (the q112 anchor
-        // pattern; NOT localCheckpoint, which would demote the
-        // AQE-executed plan — and no second cache copy, encChain stays
-        // persisted until the decoded output is checkpointed)
-        val enc = encChain.sparkSession
-          .createDataFrame(encChain.rdd, encChain.schema)
-        val ranked = runPageRank(enc, iters, scaleMu, dampingPct, redistributeDangling)
-        // decode back to the caller's key space; checkpoint severs the
-        // lineage into dict before it is unpersisted
-        val decoded = ranked.join(dict, ranked("node") === dict("node_id"))
-          .select(dict("node"), ranked("rank_mu"))
-          .localCheckpoint(true)
-        encChain.unpersist()
-        dict.unpersist()
-        decoded
+        // 26-node sf0.1 graph, >10× the whole string-keyed run
+        val ranked = runPageRank(Lineage.anchor(encChain), iters, scaleMu, dampingPct,
+          redistributeDangling)
+        lin.checkpoint(ranked.join(dict, ranked("node") === dict("node_id"))
+          .select(dict("node"), ranked("rank_mu")))
       }
-    edgesChain.unpersist()
-    out
+    }
   }
 
-  /** The iteration loop over a normalized, persisted (src, dst) edge
+  /** The iteration loop over a normalized, filled (src, dst) edge
     * frame — key type is whatever the caller shuffles best (strings on
     * the direct path, dense longs via [[idDictionary]] when
     * `encodeIds`). Returns (node, rank_mu) checkpointed, internal
     * frames unpersisted.
     */
   private[graft] def runPageRank(edges: DataFrame, iters: Int, scaleMu: Long,
-                          dampingPct: Int, redistributeDangling: Boolean): DataFrame = {
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node")))
-      .distinct()
-      .persist()
-    // (src, dst, odeg): outdeg rides each edge row so an iteration's join
-    // against the rank frame is single — persisted once, reused every round
-    val outEdges = edges
-      .join(edges.groupBy("src").agg(count(lit(1)).as("odeg")), "src")
-      .persist()
-    val base = ((100L - dampingPct) * scaleMu) / 100L
-    // Materialize a generation only every 4th iteration: each barrier is a
-    // full job, and a 3-iteration run should be ONE job, not four. Four is
-    // safely below the lineage-depth cliff where per-round Catalyst
-    // re-planning and compounding size estimates start to bite (measured
-    // around depth ~7 on self-joining iterative plans — see
-    // [[Components]]'s rationale for leaving DataFrames entirely).
-    // dangling node set + node count: both fixed across iterations. The
-    // count rides as a broadcast 1-row frame, NOT a driver scalar — a
-    // nodes.count() here would cost a whole extra job per invocation just
-    // to fetch a number the plan can carry itself
-    val dangling =
-      if (!redistributeDangling) None
-      else Some((
-        nodes.join(edges.select(col("src").as("node")).distinct(),
-          Seq("node"), "left_anti").persist(),
-        nodes.agg(count(lit(1)).as("__n"))))
-    var rank = nodes.withColumn("rank_mu", lit(scaleMu))
-    var lastMat: Option[DataFrame] = None
-    var depth = 0
-    // With redistribution each generation is referenced TWICE (inflow join
-    // + dangling-sum aggregate), so an unmaterialized chain re-evaluates
-    // 2^depth times — cap the doubling at depth 2 there (4 evals of cheap
-    // narrow ops beats a materialization barrier per round at stage-floor
-    // scales); the single-reference default keeps the every-4th cadence
-    val matEvery = if (dangling.isDefined) 2 else 4
-    for (i <- 1 to iters) {
-      rank = iteration(outEdges, nodes, rank, base, dampingPct, dangling)
-      depth += 1
-      if (depth >= matEvery && i < iters) {
-        val m = rank.persist()
-        m.count() // materialize before dropping the previous generation
-        lastMat.foreach(_.unpersist())
-        lastMat = Some(m)
-        // continue from a short-lineage anchor over the materialized
-        // cache, not from the chained plan — with redistribution each
-        // generation is referenced twice, so keeping the chain attached
-        // re-canonicalizes the whole prefix at every later action
-        rank = m.sparkSession.createDataFrame(m.rdd, m.schema)
-        depth = 0
-      }
+                          dampingPct: Int, redistributeDangling: Boolean): DataFrame =
+    Lineage { lin =>
+      // both are read by every iteration, the first job included
+      val nodes = nodesOf(edges)
+      val outEdges = outEdgesOf(edges)
+      lin.fill(nodes, outEdges)
+      val base = ((100L - dampingPct) * scaleMu) / 100L
+      // dangling node set + node count: both fixed across iterations. The
+      // count rides as a broadcast 1-row frame, NOT a driver scalar — a
+      // nodes.count() here would cost a whole extra job per invocation just
+      // to fetch a number the plan can carry itself
+      val dangling =
+        if (!redistributeDangling) None
+        else {
+          val danglingNodes = nodes.join(edges.select(col("src").as("node")).distinct(),
+            Seq("node"), "left_anti")
+          lin.fill(danglingNodes)
+          Some((danglingNodes, nodes.agg(count(lit(1)).as("__n"))))
+        }
+      // Materialize a generation only every 4th iteration: each barrier is
+      // a full job, and a 3-iteration run should be ONE job, not four. Four
+      // is safely below the lineage-depth cliff where per-round Catalyst
+      // re-planning and compounding size estimates start to bite (measured
+      // around depth ~7 on self-joining iterative plans — see
+      // [[Components]]'s rationale for leaving DataFrames entirely). With
+      // redistribution each generation is referenced TWICE (inflow join +
+      // dangling-sum aggregate), so the cadence drops to 2 there (4 evals
+      // of cheap narrow ops beats a barrier per round at stage-floor scales)
+      val matEvery = if (dangling.isDefined) 2 else 4
+      val rank0 = nodes.withColumn("rank_mu", lit(scaleMu))
+      lin.checkpoint(lin.iterate(rank0, iters, matEvery, rollover = true) { (rank, _) =>
+        iteration(outEdges, nodes, rank, base, dampingPct, dangling)
+      })
     }
-    // sever lineage into the persisted frames before unpersisting them
-    val out = rank.localCheckpoint(true)
-    lastMat.foreach(_.unpersist())
-    dangling.foreach(_._1.unpersist())
-    outEdges.unpersist()
-    nodes.unpersist()
-    out
-  }
 
   /** One power iteration, exposed at package level so the plan audit can
     * pin its physical shape: an equi-join of rank onto out-edges, a
@@ -291,18 +276,14 @@ object Graphs {
     */
   private[graft] def iterationPlanFrame(edges0: DataFrame, srcCol: String,
                                         dstCol: String, scaleMu: Long = 1000000L,
-                                        dampingPct: Int = 85): DataFrame = {
-    val edges = edges0
-      .select(col(srcCol).cast("string").as("src"), col(dstCol).cast("string").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node")))
-      .distinct()
-    val outEdges = edges
-      .join(edges.groupBy("src").agg(count(lit(1)).as("odeg")), "src")
+                                        dampingPct: Int = 85): DataFrame =
+    iterationPlanFrameOf(directedEdges(edges0, srcCol, dstCol), scaleMu, dampingPct)
+
+  /** One unexecuted power iteration over a normalized (src, dst) frame. */
+  private def iterationPlanFrameOf(edges: DataFrame, scaleMu: Long, dampingPct: Int): DataFrame = {
+    val nodes = nodesOf(edges)
     val base = ((100L - dampingPct) * scaleMu) / 100L
-    iteration(outEdges, nodes, nodes.withColumn("rank_mu", lit(scaleMu)), base, dampingPct)
+    iteration(outEdgesOf(edges), nodes, nodes.withColumn("rank_mu", lit(scaleMu)), base, dampingPct)
   }
 
   /** [[iterationPlanFrame]] with `encodeIds` semantics: the dictionary
@@ -313,24 +294,9 @@ object Graphs {
   private[graft] def iterationPlanFrameEncoded(edges0: DataFrame, srcCol: String,
                                                dstCol: String, scaleMu: Long = 1000000L,
                                                dampingPct: Int = 85): DataFrame = {
-    val edges = edges0
-      .select(col(srcCol).cast("string").as("src"), col(dstCol).cast("string").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-    val dict = idDictionary(
-      edges.select(col("src").as("node")).union(edges.select(col("dst").as("node"))),
-      "node")
-    val enc = edges
-      .join(dict.select(col("node").as("src"), col("node_id").as("__sid")), "src")
-      .join(dict.select(col("node").as("dst"), col("node_id").as("__did")), "dst")
-      .select(col("__sid").as("src"), col("__did").as("dst"))
-    val nodes = enc.select(col("src").as("node"))
-      .union(enc.select(col("dst").as("node")))
-      .distinct()
-    val outEdges = enc
-      .join(enc.groupBy("src").agg(count(lit(1)).as("odeg")), "src")
-    val base = ((100L - dampingPct) * scaleMu) / 100L
-    iteration(outEdges, nodes, nodes.withColumn("rank_mu", lit(scaleMu)), base, dampingPct)
+    val edges = directedEdges(edges0, srcCol, dstCol)
+    iterationPlanFrameOf(encodeEdges(edges, idDictionary(endpoints(edges), "node")),
+      scaleMu, dampingPct)
   }
 
   /** Synchronous label-propagation community detection (Raghavan et al.
@@ -358,10 +324,9 @@ object Graphs {
     * neighbor key) and TWO hash-aggregates — (node, label) vote counts,
     * then per-node argmax via `min(struct(-count, label))`. The argmax is
     * deliberately an aggregate, not a `row_number` window: partial
-    * aggregation absorbs vote skew map-side and nothing sorts. Same
-    * generation-anchor cadence as [[runPageRank]]: materialize every 4th
-    * round and re-base on the cached RDD so the self-nesting plan never
-    * re-canonicalizes its prefix.
+    * aggregation absorbs vote skew map-side and nothing sorts. Every 4th
+    * round is filled and read through an anchor ([[Lineage.iterate]]), so
+    * the self-nesting plan never re-canonicalizes its prefix.
     *
     * Output: (node, label) for every node in the edge list.
     */
@@ -371,35 +336,19 @@ object Graphs {
     val e = edges0
       .select(col(srcCol).cast("string").as("src"), col(dstCol).cast("string").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-    val adjChain = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .select(col("src").as("node"), col("dst").as("nbr"))
-      .persist()
-    adjChain.count()
-    // short-lineage anchor: the loop references this frame once per round
-    // and nests the references, so the caller's extraction subtree must
-    // not ride along (see runPageRank's rationale)
-    val adj = adjChain.sparkSession.createDataFrame(adjChain.rdd, adjChain.schema)
-    var labels = adj.select(col("node")).distinct()
-      .withColumn("label", col("node"))
-    var lastMat: Option[DataFrame] = None
-    var depth = 0
-    for (i <- 1 to iters) {
-      labels = lpRound(adj, labels)
-      depth += 1
-      if (depth >= 4 && i < iters) {
-        val m = labels.persist()
-        m.count()
-        lastMat.foreach(_.unpersist())
-        lastMat = Some(m)
-        labels = m.sparkSession.createDataFrame(m.rdd, m.schema)
-        depth = 0
-      }
+    Lineage { lin =>
+      val adjChain = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct()
+        .select(col("src").as("node"), col("dst").as("nbr"))
+      lin.fill(adjChain)
+      // the loop references this frame once per round and nests the
+      // references: read it through an anchor (see runPageRank)
+      val adj = Lineage.anchor(adjChain)
+      val labels0 = adj.select(col("node")).distinct().withColumn("label", col("node"))
+      lin.checkpoint(lin.iterate(labels0, iters, every = 4, rollover = true) { (labels, _) =>
+        lpRound(adj, labels)
+      })
     }
-    val out = labels.localCheckpoint(true)
-    lastMat.foreach(_.unpersist())
-    adjChain.unpersist()
-    out
   }
 
   /** Newman modularity of a node→community assignment over the simple
@@ -716,8 +665,8 @@ object Graphs {
     * Scale: identical per-iteration shape to [[pageRankInt]] — one edge
     * join + one node-keyed hash-agg — plus one node-keyed left join onto
     * the base frame (which replaces the uniform-base node join, so the
-    * shuffle count per iteration is unchanged). The base frame is
-    * materialized once and served through a short-lineage anchor.
+    * shuffle count per iteration is unchanged). The base frame is filled
+    * once and read through a [[Lineage.anchor]].
     *
     * Output: (node, rank_mu) for every node in the edge list.
     */
@@ -727,70 +676,46 @@ object Graphs {
                               dampingPct: Int = 85): DataFrame = {
     require(iters >= 0, "iters must be non-negative")
     require(dampingPct >= 0 && dampingPct <= 100, "dampingPct must be in [0, 100]")
-    val edgesChain = edges0
-      .select(col(srcCol).cast("string").as("src"), col(dstCol).cast("string").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .persist()
-    edgesChain.count()
-    val edges = edgesChain.sparkSession
-      .createDataFrame(edgesChain.rdd, edgesChain.schema)
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node"))).distinct().persist()
-    val outEdges = edges
-      .join(edges.groupBy("src").agg(count(lit(1)).as("odeg")), "src")
-      .persist()
-    val sd = nodes.join(
-      seeds0.select(col(seedCol).cast("string").as("node")).distinct(),
-      Seq("node"))
-    require(!sd.isEmpty, "no seed node appears in the edge list")
-    val totals = broadcast(nodes.agg(count(lit(1)).as("__n"))
-      .crossJoin(sd.agg(count(lit(1)).as("__s"))))
-    val baseChain = nodes
-      .join(sd.select(col("node"), lit(1L).as("__seed")), Seq("node"), "left")
-      .crossJoin(totals)
-      .select(col("node"),
-        when(col("__seed").isNotNull,
-          expr(s"((100L - ${dampingPct}L) * ${scaleMu}L * __n) div (100L * __s)"))
-          .otherwise(lit(0L)).as("base_mu"),
-        when(col("__seed").isNotNull, expr(s"(${scaleMu}L * __n) div __s"))
-          .otherwise(lit(0L)).as("rank0_mu"))
-      .persist()
-    baseChain.count()
-    // the loop references the base frame every round — serve it through a
-    // short-lineage anchor (the q112 pattern) so later generations do not
-    // re-analyze the seed-join subtree at every action
-    val baseF = baseChain.sparkSession
-      .createDataFrame(baseChain.rdd, baseChain.schema)
-    var rank = baseF.select(col("node"), col("rank0_mu").as("rank_mu"))
-    var lastMat: Option[DataFrame] = None
-    var depth = 0
-    for (i <- 1 to iters) {
-      val inflow = outEdges.join(rank, col("src") === col("node"))
-        .select(col("dst").as("node"), expr("rank_mu div odeg").as("__share"))
-        .groupBy("node").agg(sum(col("__share")).as("__inflow"))
-      rank = baseF.join(inflow, Seq("node"), "left")
+    Lineage { lin =>
+      val edgesChain = directedEdges(edges0, srcCol, dstCol)
+      lin.fill(edgesChain)
+      val edges = Lineage.anchor(edgesChain)
+      // nodes is read several times by the seed check and the base frame,
+      // and both by every iteration
+      val nodes = nodesOf(edges)
+      val outEdges = outEdgesOf(edges)
+      lin.fill(nodes, outEdges)
+      val sd = nodes.join(
+        seeds0.select(col(seedCol).cast("string").as("node")).distinct(),
+        Seq("node"))
+      require(!sd.isEmpty, "no seed node appears in the edge list")
+      val totals = broadcast(nodes.agg(count(lit(1)).as("__n"))
+        .crossJoin(sd.agg(count(lit(1)).as("__s"))))
+      val baseChain = nodes
+        .join(sd.select(col("node"), lit(1L).as("__seed")), Seq("node"), "left")
+        .crossJoin(totals)
         .select(col("node"),
-          (col("base_mu") +
-            expr(s"(${dampingPct}L * coalesce(__inflow, 0L)) div 100"))
-            .as("rank_mu"))
-      depth += 1
-      if (depth >= 4 && i < iters) {
-        val m = rank.persist()
-        m.count()
-        lastMat.foreach(_.unpersist())
-        lastMat = Some(m)
-        rank = m.sparkSession.createDataFrame(m.rdd, m.schema)
-        depth = 0
-      }
+          when(col("__seed").isNotNull,
+            expr(s"((100L - ${dampingPct}L) * ${scaleMu}L * __n) div (100L * __s)"))
+            .otherwise(lit(0L)).as("base_mu"),
+          when(col("__seed").isNotNull, expr(s"(${scaleMu}L * __n) div __s"))
+            .otherwise(lit(0L)).as("rank0_mu"))
+      lin.fill(baseChain)
+      // the loop references the base frame every round — read it through an
+      // anchor so later generations do not re-analyze the seed-join subtree
+      val baseF = Lineage.anchor(baseChain)
+      val rank0 = baseF.select(col("node"), col("rank0_mu").as("rank_mu"))
+      lin.checkpoint(lin.iterate(rank0, iters, every = 4, rollover = true) { (rank, _) =>
+        val inflow = outEdges.join(rank, col("src") === col("node"))
+          .select(col("dst").as("node"), expr("rank_mu div odeg").as("__share"))
+          .groupBy("node").agg(sum(col("__share")).as("__inflow"))
+        baseF.join(inflow, Seq("node"), "left")
+          .select(col("node"),
+            (col("base_mu") +
+              expr(s"(${dampingPct}L * coalesce(__inflow, 0L)) div 100"))
+              .as("rank_mu"))
+      })
     }
-    val out = rank.localCheckpoint(true)
-    lastMat.foreach(_.unpersist())
-    baseChain.unpersist()
-    outEdges.unpersist()
-    nodes.unpersist()
-    edgesChain.unpersist()
-    out
   }
 
   /** HITS hubs & authorities (Kleinberg 1999, "Authoritative sources in a
@@ -818,44 +743,37 @@ object Graphs {
   def hitsInt(edges0: DataFrame, srcCol: String, dstCol: String,
               iters: Int, scaleMu: Long = 1000000L): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    val edgesChain = edges0
-      .select(col(srcCol).cast("string").as("src"), col(dstCol).cast("string").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .persist()
-    edgesChain.count()
-    val edges = edgesChain.sparkSession
-      .createDataFrame(edgesChain.rdd, edgesChain.schema)
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node"))).distinct()
-    def normalize(raw: DataFrame, massCol: String): DataFrame = {
-      val total = broadcast(raw.agg(
-        coalesce(sum(col(massCol)), lit(0L)).as("__tot")))
-      nodes.join(raw, Seq("node"), "left").crossJoin(total)
-        .select(col("node"),
-          when(col("__tot") > 0L,
-            expr(s"coalesce($massCol, 0L) * ${scaleMu}L div __tot"))
-            .otherwise(lit(0L)).as(massCol))
+    Lineage { lin =>
+      val edgesChain = directedEdges(edges0, srcCol, dstCol)
+      lin.fill(edgesChain)
+      val edges = Lineage.anchor(edgesChain)
+      val nodes = nodesOf(edges)
+      def normalize(raw: DataFrame, massCol: String): DataFrame = {
+        val total = broadcast(raw.agg(
+          coalesce(sum(col(massCol)), lit(0L)).as("__tot")))
+        nodes.join(raw, Seq("node"), "left").crossJoin(total)
+          .select(col("node"),
+            when(col("__tot") > 0L,
+              expr(s"coalesce($massCol, 0L) * ${scaleMu}L div __tot"))
+              .otherwise(lit(0L)).as(massCol))
+      }
+      var hub = nodes.select(col("node"), lit(scaleMu).as("hub_mu"))
+      var auth: DataFrame = null
+      for (_ <- 1 to iters) {
+        auth = normalize(
+          edges.join(hub, col("src") === col("node"))
+            .groupBy(col("dst").as("node")).agg(sum(col("hub_mu")).as("auth_mu"))
+            .select(col("node"), col("auth_mu")),
+          "auth_mu")
+        hub = normalize(
+          edges.join(auth, col("dst") === col("node"))
+            .groupBy(col("src").as("node")).agg(sum(col("auth_mu")).as("hub_mu"))
+            .select(col("node"), col("hub_mu")),
+          "hub_mu")
+      }
+      lin.checkpoint(hub.join(auth, Seq("node"))
+        .select(col("node"), col("hub_mu"), col("auth_mu")))
     }
-    var hub = nodes.select(col("node"), lit(scaleMu).as("hub_mu"))
-    var auth: DataFrame = null
-    for (_ <- 1 to iters) {
-      auth = normalize(
-        edges.join(hub, col("src") === col("node"))
-          .groupBy(col("dst").as("node")).agg(sum(col("hub_mu")).as("auth_mu"))
-          .select(col("node"), col("auth_mu")),
-        "auth_mu")
-      hub = normalize(
-        edges.join(auth, col("dst") === col("node"))
-          .groupBy(col("src").as("node")).agg(sum(col("auth_mu")).as("hub_mu"))
-          .select(col("node"), col("hub_mu")),
-        "hub_mu")
-    }
-    val out = hub.join(auth, Seq("node"))
-      .select(col("node"), col("hub_mu"), col("auth_mu"))
-      .localCheckpoint(true)
-    edgesChain.unpersist()
-    out
   }
 
   /** ONE HITS phase (auth update + L1 normalize) as a plannable frame —
@@ -865,12 +783,8 @@ object Graphs {
     */
   private[graft] def hitsPhasePlanFrame(edges0: DataFrame, srcCol: String,
                                         dstCol: String): DataFrame = {
-    val edges = edges0
-      .select(col(srcCol).cast("string").as("src"), col(dstCol).cast("string").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node"))).distinct()
+    val edges = directedEdges(edges0, srcCol, dstCol)
+    val nodes = nodesOf(edges)
     val hub = nodes.select(col("node"), lit(1000000L).as("hub_mu"))
     val raw = edges.join(hub, col("src") === col("node"))
       .groupBy(col("dst").as("node")).agg(sum(col("hub_mu")).as("auth_mu"))
@@ -955,9 +869,8 @@ object Graphs {
     *
     * Each round is two survivor semi-joins on the node key + one
     * hash-aggregate — never a window, never a product; the adjacency
-    * persists once and every round's survivor set persists behind a
-    * short-lineage anchor (the [[labelPropagation]] discipline), so plan
-    * depth stays constant in `rounds`. At 100 TB the peel converges in
+    * and every round's survivor set are kept behind a [[Lineage.anchor]],
+    * so plan depth stays constant in `rounds`. At 100 TB the peel converges in
     * few synchronous rounds on power-law graphs (the frontier collapses
     * geometrically); the fixed budget makes cost predictable and the
     * `converged` flag reports whether the last round was a fixpoint.
@@ -970,82 +883,70 @@ object Graphs {
             k: Int, rounds: Int, assumeCanonical: Boolean = false): DataFrame = {
     require(k >= 1 && rounds >= 1, "k and rounds must be >= 1")
     val e = canonicalEdges(edges0, srcCol, dstCol, assumeCanonical)
-    val adjChain = e.select(col("a").as("node"), col("b").as("nbr"))
-      .unionAll(e.select(col("b").as("node"), col("a").as("nbr")))
-      .persist()
-    // no eager count: the round-1 frontier count's degree aggregate scans
-    // the adjacency in full, filling this cache in the SAME job — an
-    // up-front materialization barrier here was pure stage-floor waste
-    // (one of rounds+2 jobs on a 6-round peel)
-    val spark = adjChain.sparkSession
-    val adj = spark.createDataFrame(adjChain.rdd, adjChain.schema)
+    Lineage { lin =>
+      // kept, not filled: the round-1 frontier fill's degree aggregate
+      // scans the adjacency in full, filling this cache in the SAME job —
+      // an up-front materialization barrier here was pure stage-floor
+      // waste (one of rounds+2 jobs on a 6-round peel)
+      val adj = Lineage.anchor(lin.keep(adjacency(e)))
 
-    // Matula-Beck frontier peeling in BSP form: degrees are MAINTAINED,
-    // not recomputed — round r removes survivors with deg < k, then only
-    // the removed nodes' neighbors lose degree (one frontier join over
-    // the streaming adjacency + one frontier-sized aggregate). The full
-    // graph pays exactly ONE degree aggregate (round 1); every later
-    // round costs the edges incident to what was just removed. Results
-    // are bit-identical to recomputing the induced subgraph.
-    //
-    // ONE job per round: only the frontier count (which drives the
-    // short-circuit AND the broadcast-vs-shuffle choice) is an eager
-    // barrier; the degree frames persist lazily and materialize as the
-    // next round's count (or the single final action) pulls them.
-    var degs = adj.groupBy("node").agg(count(lit(1)).as("deg")).persist()
-    var mats: List[DataFrame] = List(degs)
-    degs = spark.createDataFrame(degs.rdd, degs.schema)
-    var removed: Option[DataFrame] = None
-    var lastRemoved = -1L
-    var r = 1
-    while (r <= rounds && lastRemoved != 0L) {
-      val remNodesChain = degs.filter(col("deg") < k).select("node").persist()
-      lastRemoved = remNodesChain.count()
-      mats ::= remNodesChain
-      val remNodes = spark.createDataFrame(remNodesChain.rdd, remNodesChain.schema)
-      val rem = remNodes.select(col("node"), lit(r.toLong).as("removed_round"))
-      removed = Some(removed.fold(rem)(_.unionByName(rem)))
-      if (lastRemoved > 0L) {
-        // the round-1 frontier is every node below k — potentially most
-        // of the graph — so broadcast only when the just-counted frontier
-        // is provably small; otherwise the delta is a shuffle equi-join
-        // (same result, no driver-memory cliff at 100 TB)
-        val remRef = remNodes.select(col("node").as("nbr"))
-        val remSide =
-          if (lastRemoved <= BroadcastFrontierMaxRows) broadcast(remRef)
-          else remRef
-        val delta = adj
-          .join(remSide, "nbr")
-          .groupBy("node").agg(count(lit(1)).as("__rm"))
-        // survivors are degs MINUS the frontier — and the frontier IS
-        // `deg < k` over the same single-row-per-node aggregate, so the
-        // anti-join is a plain filter: one fewer join (and its exchange)
-        // per round, bit-identical rows
-        val nextChain = degs.filter(col("deg") >= k)
-          .join(delta, Seq("node"), "left")
-          .select(col("node"),
-            (col("deg") - coalesce(col("__rm"), lit(0L))).as("deg"))
-          .persist()
-        mats ::= nextChain
-        degs = spark.createDataFrame(nextChain.rdd, nextChain.schema)
+      // Matula-Beck frontier peeling in BSP form: degrees are MAINTAINED,
+      // not recomputed — round r removes survivors with deg < k, then only
+      // the removed nodes' neighbors lose degree (one frontier join over
+      // the streaming adjacency + one frontier-sized aggregate). The full
+      // graph pays exactly ONE degree aggregate (round 1); every later
+      // round costs the edges incident to what was just removed. Results
+      // are bit-identical to recomputing the induced subgraph.
+      //
+      // ONE job per round: only the frontier fill (whose count drives the
+      // short-circuit AND the broadcast-vs-shuffle choice) is an eager
+      // barrier; the degree frames are kept and materialize as the next
+      // round's fill (or the single final action) pulls them.
+      var degs = Lineage.anchor(lin.keep(adj.groupBy("node").agg(count(lit(1)).as("deg"))))
+      var removed: Option[DataFrame] = None
+      var lastRemoved = -1L
+      var r = 1
+      while (r <= rounds && lastRemoved != 0L) {
+        val remNodesChain = degs.filter(col("deg") < k).select("node")
+        lastRemoved = lin.fill(remNodesChain).head
+        val remNodes = Lineage.anchor(remNodesChain)
+        val rem = remNodes.select(col("node"), lit(r.toLong).as("removed_round"))
+        removed = Some(removed.fold(rem)(_.unionByName(rem)))
+        if (lastRemoved > 0L) {
+          // the round-1 frontier is every node below k — potentially most
+          // of the graph — so broadcast only when the just-counted frontier
+          // is provably small; otherwise the delta is a shuffle equi-join
+          // (same result, no driver-memory cliff at 100 TB)
+          val remRef = remNodes.select(col("node").as("nbr"))
+          val remSide =
+            if (lastRemoved <= BroadcastFrontierMaxRows) broadcast(remRef)
+            else remRef
+          val delta = adj
+            .join(remSide, "nbr")
+            .groupBy("node").agg(count(lit(1)).as("__rm"))
+          // survivors are degs MINUS the frontier — and the frontier IS
+          // `deg < k` over the same single-row-per-node aggregate, so the
+          // anti-join is a plain filter: one fewer join (and its exchange)
+          // per round, bit-identical rows
+          degs = Lineage.anchor(lin.keep(degs.filter(col("deg") >= k)
+            .join(delta, Seq("node"), "left")
+            .select(col("node"),
+              (col("deg") - coalesce(col("__rm"), lit(0L))).as("deg"))))
+        }
+        r += 1
       }
-      r += 1
+      // fixpoint iff the LAST peel removed nothing (a short-circuited run
+      // is by construction converged; the skipped rounds are identities)
+      val converged = lastRemoved == 0L
+      val core = degs
+        .select(col("node"), lit(0L).as("removed_round"),
+          col("deg").as("core_deg"), lit(true).as("in_core"))
+      lin.checkpoint(removed.get
+        .select(col("node"), col("removed_round"),
+          lit(0L).as("core_deg"), lit(false).as("in_core"))
+        .unionByName(core)
+        .withColumn("converged", lit(converged)))
     }
-    // fixpoint iff the LAST peel removed nothing (a short-circuited run
-    // is by construction converged; the skipped rounds are identities)
-    val converged = lastRemoved == 0L
-    val core = degs
-      .select(col("node"), lit(0L).as("removed_round"),
-        col("deg").as("core_deg"), lit(true).as("in_core"))
-    val out = removed.get
-      .select(col("node"), col("removed_round"),
-        lit(0L).as("core_deg"), lit(false).as("in_core"))
-      .unionByName(core)
-      .withColumn("converged", lit(converged))
-      .localCheckpoint(true)
-    mats.foreach(_.unpersist())
-    adjChain.unpersist()
-    out
   }
 
   /** HyperANF-style neighborhood function (Boldi, Rosa & Vigna WWW 2011;
@@ -1062,8 +963,8 @@ object Graphs {
     * over the sketch ARRAYS themselves
     * ([[graft.functions.KmvMergeArrays]] — the map-side partial merges
     * whole sketches, so the shuffle carries combined partials, never
-    * exploded edges×k element rows); sketches persist behind
-    * short-lineage anchors. Per-node sketches grow monotonically
+    * exploded edges×k element rows); sketches are kept behind
+    * [[Lineage.anchor]]s. Per-node sketches grow monotonically
     * (bottom-k of a superset), so the per-round deltas are provably
     * non-negative.
     *
@@ -1076,69 +977,52 @@ object Graphs {
                rounds: Int, k: Int, assumeCanonical: Boolean = false): DataFrame = {
     require(rounds >= 1 && k >= 16, "rounds >= 1 and k >= 16")
     val e = canonicalEdges(edges0, srcCol, dstCol, assumeCanonical)
-    // the adjacency caches REPARTITIONED on its per-round join key and is
-    // used directly, NOT behind an .rdd anchor (the [[betweenness]]
-    // discipline): the InMemoryRelation keeps its hash partitioning and
-    // measured size, so every round's equi-join reuses ONE exchange of
-    // the adjacency instead of re-shuffling it per hop — the anchored
-    // form paid that re-shuffle in all `rounds` joins (the probe showed
-    // the same adjacency exchange bytes written once per round). Lineage
-    // is one hop, so the anchor's plan-depth protection isn't needed.
-    val adj = e.select(col("a").as("node"), col("b").as("nbr"))
-      .unionAll(e.select(col("b").as("node"), col("a").as("nbr")))
-      .repartition(col("nbr"))
-      .persist()
-    adj.count()
-    val spark = adj.sparkSession
+    // the adjacency is kept REPARTITIONED on its per-round join key and
+    // used directly, NOT behind an anchor ([[Lineage.keepPartitioned]]):
+    // every round's equi-join reuses ONE exchange of the adjacency instead
+    // of re-shuffling it per hop — the anchored form paid that re-shuffle
+    // in all `rounds` joins (the probe showed the same adjacency exchange
+    // bytes written once per round). Its lineage is one hop, so the
+    // anchor's plan-depth protection isn't needed.
+    Lineage { lin =>
+      val adj = lin.keepPartitioned(adjacency(e), col("nbr"))
+      lin.fill(adj)
+      val estSql = kmvEstimateSql(k)
+      def roundSum(sk: DataFrame, t: Int): DataFrame =
+        sk.select(expr(estSql).as("__est"))
+          .agg(sum(col("__est")).as("nf_milli"))
+          .select(lit(t.toLong).as("t"), col("nf_milli"))
 
-    val m = graft.ext.ThetaSketch.HashSpace
-    val estSql =
-      s"""CAST(CASE WHEN size(hs) < $k THEN size(hs) * 1000L
-         |  ELSE ((${k - 1}L * 1000L * ${m}L) div element_at(hs, $k))
-         |END AS BIGINT)""".stripMargin
-    def roundSum(sk: DataFrame, t: Int): DataFrame =
-      sk.select(expr(estSql).as("__est"))
-        .agg(sum(col("__est")).as("nf_milli"))
-        .select(lit(t.toLong).as("t"), col("nf_milli"))
-
-    var sk = adj.select(col("node")).distinct()
-      .withColumn("hs", array(graft.ext.ThetaSketch.hash40(col("node"))))
-    var sums = roundSum(sk, 0)
-    var mats: List[DataFrame] = Nil
-    for (t <- 1 to rounds) {
-      val fromNbrs = adj
-        .join(sk.select(col("node").as("nbr"), col("hs")), "nbr")
-        .select(col("node"), col("hs"))
-      val own = sk.select(col("node"), col("hs"))
-      // sketches merge as ARRAYS via the O(k)-state KmvMergeArrays
-      // aggregate — the map-side partial holds one merged buffer per
-      // (node, task), so the round's shuffle carries combined partials,
-      // never the former explode's edges×k element rows.
-      // persist WITHOUT an eager count: the single final action (the
-      // eager localCheckpoint below) materializes every round once,
-      // caching as it goes — per-round count() barriers would add a
-      // full job launch per hop for nothing
-      val nextChain = fromNbrs.unionByName(own)
-        .groupBy("node")
-        .agg(graft.functions.GraftFunctions.kmvMergeArrays(col("hs"), k).as("hs"))
-        .persist()
-      mats ::= nextChain
-      sk = spark.createDataFrame(nextChain.rdd, nextChain.schema)
-      sums = sums.unionByName(roundSum(sk, t))
+      var sk = adj.select(col("node")).distinct()
+        .withColumn("hs", array(graft.ext.ThetaSketch.hash40(col("node"))))
+      var sums = roundSum(sk, 0)
+      for (t <- 1 to rounds) {
+        val fromNbrs = adj
+          .join(sk.select(col("node").as("nbr"), col("hs")), "nbr")
+          .select(col("node"), col("hs"))
+        val own = sk.select(col("node"), col("hs"))
+        // sketches merge as ARRAYS via the O(k)-state KmvMergeArrays
+        // aggregate — the map-side partial holds one merged buffer per
+        // (node, task), so the round's shuffle carries combined partials,
+        // never the former explode's edges×k element rows.
+        // kept WITHOUT a fill: the single final action (the eager
+        // checkpoint below) materializes every round once, caching as it
+        // goes — per-round barriers would add a full job launch per hop
+        sk = Lineage.anchor(lin.keep(fromNbrs.unionByName(own)
+          .groupBy("node")
+          .agg(graft.functions.GraftFunctions.kmvMergeArrays(col("hs"), k).as("hs"))))
+        sums = sums.unionByName(roundSum(sk, t))
+      }
+      val w = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
+      lin.checkpoint(sums
+        .withColumn("delta_milli",
+          col("nf_milli") - coalesce(lag(col("nf_milli"), 1).over(Window.orderBy("t")), lit(0L)))
+        .withColumn("__wd", sum(col("t") * col("delta_milli")).over(w))
+        .withColumn("__td", sum(col("delta_milli")).over(w))
+        .select(col("t"), col("nf_milli"), col("delta_milli"),
+          expr("CAST(CASE WHEN __td > 0 THEN (__wd * 1000) div __td ELSE 0 END AS BIGINT)")
+            .as("mean_dist_milli")))
     }
-    val w = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
-    val out = sums
-      .withColumn("delta_milli",
-        col("nf_milli") - coalesce(lag(col("nf_milli"), 1).over(Window.orderBy("t")), lit(0L)))
-      .withColumn("__wd", sum(col("t") * col("delta_milli")).over(w))
-      .withColumn("__td", sum(col("delta_milli")).over(w))
-      .select(col("t"), col("nf_milli"), col("delta_milli"),
-        expr("CAST(CASE WHEN __td > 0 THEN (__wd * 1000) div __td ELSE 0 END AS BIGINT)")
-          .as("mean_dist_milli"))
-      .localCheckpoint(true)
-    mats.foreach(_.unpersist())
-    adj.unpersist()
-    out
   }
 
   /** Harmonic centrality via the [[hyperAnf]] sketch loop (Boldi & Vigna
@@ -1171,55 +1055,39 @@ object Graphs {
     require(rounds >= 1 && k >= 16, "rounds >= 1 and k >= 16")
     require(topK >= 1, "topK must be >= 1")
     val e = canonicalEdges(edges0, srcCol, dstCol, assumeCanonical)
-    // repartitioned, un-anchored adjacency cache — the [[betweenness]] /
-    // [[hyperAnf]] discipline: the InMemoryRelation keeps its hash
-    // partitioning on the round-join key, so all `rounds` equi-joins
-    // reuse ONE adjacency exchange instead of re-shuffling it per hop
-    val adj = e.select(col("a").as("node"), col("b").as("nbr"))
-      .unionAll(e.select(col("b").as("node"), col("a").as("nbr")))
-      .repartition(col("nbr"))
-      .persist()
-    adj.count()
-    val spark = adj.sparkSession
-
-    val m = graft.ext.ThetaSketch.HashSpace
-    val estSql =
-      s"""CAST(CASE WHEN size(hs) < $k THEN size(hs) * 1000L
-         |  ELSE ((${k - 1}L * 1000L * ${m}L) div element_at(hs, $k))
-         |END AS BIGINT)""".stripMargin
-    var sk = adj.select(col("node")).distinct()
-      .withColumn("hs", array(graft.ext.ThetaSketch.hash40(col("node"))))
-      .withColumn("__prev", lit(1000L)) // |B_0| = the node itself
-      .withColumn("harmonic_milli", lit(0L))
-    var mats: List[DataFrame] = Nil
-    for (t <- 1 to rounds) {
-      val fromNbrs = adj
-        .join(sk.select(col("node").as("nbr"), col("hs")), "nbr")
-        .select(col("node"), col("hs"),
-          lit(0L).as("__prev"), lit(0L).as("harmonic_milli"))
-      val own = sk.select(col("node"), col("hs"), col("__prev"), col("harmonic_milli"))
-      val nextChain = fromNbrs.unionByName(own)
-        .groupBy("node")
-        .agg(graft.functions.GraftFunctions.kmvMergeArrays(col("hs"), k).as("hs"),
-          max(col("__prev")).as("__prev"),
-          max(col("harmonic_milli")).as("harmonic_milli"))
-        .withColumn("__est", expr(estSql))
-        .withColumn("harmonic_milli",
-          col("harmonic_milli") + expr(s"(__est - __prev) div ${t}L"))
-        .select(col("node"), col("hs"),
-          col("__est").as("__prev"), col("harmonic_milli"))
-        .persist()
-      mats ::= nextChain
-      sk = spark.createDataFrame(nextChain.rdd, nextChain.schema)
+    // repartitioned, un-anchored adjacency cache
+    // ([[Lineage.keepPartitioned]]): all `rounds` equi-joins reuse ONE
+    // adjacency exchange instead of re-shuffling it per hop
+    Lineage { lin =>
+      val adj = lin.keepPartitioned(adjacency(e), col("nbr"))
+      lin.fill(adj)
+      val estSql = kmvEstimateSql(k)
+      var sk = adj.select(col("node")).distinct()
+        .withColumn("hs", array(graft.ext.ThetaSketch.hash40(col("node"))))
+        .withColumn("__prev", lit(1000L)) // |B_0| = the node itself
+        .withColumn("harmonic_milli", lit(0L))
+      for (t <- 1 to rounds) {
+        val fromNbrs = adj
+          .join(sk.select(col("node").as("nbr"), col("hs")), "nbr")
+          .select(col("node"), col("hs"),
+            lit(0L).as("__prev"), lit(0L).as("harmonic_milli"))
+        val own = sk.select(col("node"), col("hs"), col("__prev"), col("harmonic_milli"))
+        sk = Lineage.anchor(lin.keep(fromNbrs.unionByName(own)
+          .groupBy("node")
+          .agg(graft.functions.GraftFunctions.kmvMergeArrays(col("hs"), k).as("hs"),
+            max(col("__prev")).as("__prev"),
+            max(col("harmonic_milli")).as("harmonic_milli"))
+          .withColumn("__est", expr(estSql))
+          .withColumn("harmonic_milli",
+            col("harmonic_milli") + expr(s"(__est - __prev) div ${t}L"))
+          .select(col("node"), col("hs"),
+            col("__est").as("__prev"), col("harmonic_milli"))))
+      }
+      lin.checkpoint(sk
+        .select(col("node"), col("__prev").as("ball_milli"), col("harmonic_milli"))
+        .orderBy(col("harmonic_milli").desc, col("node"))
+        .limit(topK))
     }
-    val out = sk
-      .select(col("node"), col("__prev").as("ball_milli"), col("harmonic_milli"))
-      .orderBy(col("harmonic_milli").desc, col("node"))
-      .limit(topK)
-      .localCheckpoint(true)
-    mats.foreach(_.unpersist())
-    adj.unpersist()
-    out
   }
 
   /** Pivot-sampled betweenness centrality (Brandes 2001's dependency
@@ -1241,8 +1109,8 @@ object Graphs {
     *
     * Scale shape: forward = per-level adjacency equi-join + (pivot, node)
     * hash-aggregate + visited anti-join; backward = per-level two keyed
-    * joins + one aggregate; every frame persists behind short-lineage
-    * anchors (the labelPropagation discipline), state is
+    * joins + one aggregate; every frame is kept behind a
+    * [[Lineage.anchor]], state is
     * pivots × reachable rows. σ/δ headroom: path counts compound with
     * density — the fixed horizon and pivot count keep σ·(1000+δ) far
     * inside BIGINT on diameter-bounded graphs; a 100 TB run picks
@@ -1261,88 +1129,77 @@ object Graphs {
     require(pivots >= 1 && rounds >= 1 && topK >= 1,
       "pivots, rounds, topK must be >= 1")
     val e = canonicalEdges(edges0, srcCol, dstCol, assumeCanonical)
-    // the adjacency caches REPARTITIONED on its join key and is used
-    // directly (NOT behind an .rdd anchor): the InMemoryRelation keeps
-    // its hash partitioning and measured size, so all 2·rounds level
-    // joins reuse ONE exchange of the big side instead of re-shuffling
-    // it per level (the anchored form lost both — measured 12.2 s → the
-    // re-shuffle was the whole overage). Its lineage is one hop, so the
-    // anchor's plan-depth protection isn't needed here.
-    val spark = e.sparkSession
-    val adj = e.select(col("a").as("node"), col("b").as("nbr"))
-      .unionAll(e.select(col("b").as("node"), col("a").as("nbr")))
-      .repartition(col("node"))
-      .persist()
-    var mats: List[DataFrame] = List(adj)
+    // the adjacency is kept REPARTITIONED on its join key and used
+    // directly, NOT behind an anchor ([[Lineage.keepPartitioned]]): all
+    // 2·rounds level joins reuse ONE exchange of the big side instead of
+    // re-shuffling it per level (the anchored form lost both stats and
+    // partitioning — measured 12.2 s → the re-shuffle was the whole
+    // overage). Its lineage is one hop, so the anchor's plan-depth
+    // protection isn't needed here.
+    Lineage { lin =>
+      val adj = lin.keepPartitioned(adjacency(e), col("node"))
 
-    def anchor(df: DataFrame): DataFrame = {
-      val c = df.persist()
-      mats ::= c
-      spark.createDataFrame(c.rdd, c.schema)
+      // deterministic pivot sample: md5-order over the node set (broadcast
+      // — `pivots` rows)
+      val pv = Lineage.anchor(lin.keep(adj.select(col("node")).distinct()
+        .orderBy(md5(col("node").cast("string")), col("node"))
+        .limit(pivots)
+        .select(col("node").as("pivot"))))
+
+      // forward: levels of (pivot, node, sigma); the per-level frames are
+      // KEPT (the backward pass reads exactly one level per side, so
+      // filtering a visited union per depth would re-scan every cached
+      // level 2·rounds times for nothing); visited exists only for the
+      // frontier anti-join
+      val levels = new scala.collection.mutable.ArrayBuffer[DataFrame]
+      var level = Lineage.anchor(lin.keep(pv.select(col("pivot"), col("pivot").as("node"),
+        lit(1L).as("sigma"))))
+      levels += level
+      var visited = Lineage.anchor(lin.keep(level.select(col("pivot"), col("node"))))
+      for (t <- 1 to rounds) {
+        val cand = adj.join(level, "node")
+          .groupBy(col("pivot"), col("nbr").as("node"))
+          .agg(sum(col("sigma")).as("sigma"))
+        val next = Lineage.anchor(lin.keep(cand
+          .join(visited, Seq("pivot", "node"), "left_anti")))
+        levels += next
+        visited = Lineage.anchor(lin.keep(
+          visited.unionByName(next.select(col("pivot"), col("node")))))
+        level = next
+      }
+
+      // backward: dependency by descending distance; nodes at the horizon
+      // have delta 0
+      var delta = Lineage.anchor(lin.keep(levels(rounds)
+        .select(col("pivot"), col("node"), lit(0L).as("delta"))))
+      var deltaAll = delta
+      for (d <- (rounds - 1) to 0 by -1) {
+        val vd = levels(d).select(col("pivot"), col("node"), col("sigma"))
+        val wd = levels(d + 1)
+          .select(col("pivot"), col("node").as("nbr"), col("sigma").as("__sw"))
+          .join(delta.select(col("pivot"), col("node").as("nbr"), col("delta")),
+            Seq("pivot", "nbr"))
+        // successor terms union zero-seed rows and fold in ONE aggregate —
+        // a terms-then-left-join form would pay an extra exchange per
+        // level just to re-attach the no-successor nodes' zeros
+        val terms = vd.join(adj, "node")
+          .join(wd, Seq("pivot", "nbr"))
+          .select(col("pivot"), col("node"),
+            expr("(sigma * (1000L + delta)) div __sw").as("__t"))
+        delta = Lineage.anchor(lin.keep(terms
+          .unionByName(vd.select(col("pivot"), col("node"), lit(0L).as("__t")))
+          .groupBy(col("pivot"), col("node"))
+          .agg(sum(col("__t")).as("delta"))))
+        deltaAll = Lineage.anchor(lin.keep(deltaAll.unionByName(delta)))
+      }
+      lin.checkpoint(deltaAll
+        .filter(col("node") =!= col("pivot"))
+        .groupBy(col("node"))
+        .agg(sum(col("delta")).as("bc_milli"), count(lit(1)).as("n_pivots"))
+        .filter(col("bc_milli") > 0L)
+        .orderBy(col("bc_milli").desc, col("node"))
+        .limit(topK))
     }
-
-    // deterministic pivot sample: md5-order over the node set (broadcast
-    // — `pivots` rows)
-    val pv = anchor(adj.select(col("node")).distinct()
-      .orderBy(md5(col("node").cast("string")), col("node"))
-      .limit(pivots)
-      .select(col("node").as("pivot")))
-
-    // forward: levels of (pivot, node, sigma); the per-level frames are
-    // KEPT (the backward pass reads exactly one level per side, so
-    // filtering a visited union per depth would re-scan every cached
-    // level 2·rounds times for nothing); visited exists only for the
-    // frontier anti-join
-    val levels = new scala.collection.mutable.ArrayBuffer[DataFrame]
-    var level = anchor(pv.select(col("pivot"), col("pivot").as("node"),
-      lit(1L).as("sigma")))
-    levels += level
-    var visited = anchor(level.select(col("pivot"), col("node")))
-    for (t <- 1 to rounds) {
-      val cand = adj.join(level, "node")
-        .groupBy(col("pivot"), col("nbr").as("node"))
-        .agg(sum(col("sigma")).as("sigma"))
-      val next = anchor(cand
-        .join(visited, Seq("pivot", "node"), "left_anti"))
-      levels += next
-      visited = anchor(visited.unionByName(next.select(col("pivot"), col("node"))))
-      level = next
-    }
-
-    // backward: dependency by descending distance; nodes at the horizon
-    // have delta 0
-    var delta = anchor(levels(rounds)
-      .select(col("pivot"), col("node"), lit(0L).as("delta")))
-    var deltaAll = delta
-    for (d <- (rounds - 1) to 0 by -1) {
-      val vd = levels(d).select(col("pivot"), col("node"), col("sigma"))
-      val wd = levels(d + 1)
-        .select(col("pivot"), col("node").as("nbr"), col("sigma").as("__sw"))
-        .join(delta.select(col("pivot"), col("node").as("nbr"), col("delta")),
-          Seq("pivot", "nbr"))
-      // successor terms union zero-seed rows and fold in ONE aggregate —
-      // a terms-then-left-join form would pay an extra exchange per
-      // level just to re-attach the no-successor nodes' zeros
-      val terms = vd.join(adj, "node")
-        .join(wd, Seq("pivot", "nbr"))
-        .select(col("pivot"), col("node"),
-          expr("(sigma * (1000L + delta)) div __sw").as("__t"))
-      delta = anchor(terms
-        .unionByName(vd.select(col("pivot"), col("node"), lit(0L).as("__t")))
-        .groupBy(col("pivot"), col("node"))
-        .agg(sum(col("__t")).as("delta")))
-      deltaAll = anchor(deltaAll.unionByName(delta))
-    }
-    val out = deltaAll
-      .filter(col("node") =!= col("pivot"))
-      .groupBy(col("node"))
-      .agg(sum(col("delta")).as("bc_milli"), count(lit(1)).as("n_pivots"))
-      .filter(col("bc_milli") > 0L)
-      .orderBy(col("bc_milli").desc, col("node"))
-      .limit(topK)
-      .localCheckpoint(true)
-    mats.foreach(_.unpersist())
-    out
   }
 
   /** One unexecuted betweenness forward level (the [[betweenness]] BFS
@@ -1352,13 +1209,7 @@ object Graphs {
     */
   private[graft] def betweennessRoundPlanFrame(edges0: DataFrame, srcCol: String,
                                                dstCol: String, pivots: Int): DataFrame = {
-    val e = edges0
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("a"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .distinct()
-    val adj = e.select(col("a").as("node"), col("b").as("nbr"))
-      .unionAll(e.select(col("b").as("node"), col("a").as("nbr")))
+    val adj = adjacency(canonicalEdges(edges0, srcCol, dstCol, assumeCanonical = false))
     val pv = adj.select(col("node")).distinct()
       .orderBy(md5(col("node").cast("string")), col("node"))
       .limit(pivots)
@@ -1378,18 +1229,8 @@ object Graphs {
     */
   private[graft] def harmonicRoundPlanFrame(edges0: DataFrame, srcCol: String,
                                             dstCol: String, k: Int): DataFrame = {
-    val e = edges0
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("a"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .distinct()
-    val adj = e.select(col("a").as("node"), col("b").as("nbr"))
-      .unionAll(e.select(col("b").as("node"), col("a").as("nbr")))
-    val m = graft.ext.ThetaSketch.HashSpace
-    val estSql =
-      s"""CAST(CASE WHEN size(hs) < $k THEN size(hs) * 1000L
-         |  ELSE ((${k - 1}L * 1000L * ${m}L) div element_at(hs, $k))
-         |END AS BIGINT)""".stripMargin
+    val adj = adjacency(canonicalEdges(edges0, srcCol, dstCol, assumeCanonical = false))
+    val estSql = kmvEstimateSql(k)
     val sk = adj.select(col("node")).distinct()
       .withColumn("hs", array(graft.ext.ThetaSketch.hash40(col("node"))))
       .withColumn("__prev", lit(1000L))
@@ -1420,13 +1261,7 @@ object Graphs {
     */
   private[graft] def kCoreRoundPlanFrame(edges0: DataFrame, srcCol: String,
                                          dstCol: String, k: Int): DataFrame = {
-    val e = edges0
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("a"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .distinct()
-    val adj = e.select(col("a").as("node"), col("b").as("nbr"))
-      .unionAll(e.select(col("b").as("node"), col("a").as("nbr")))
+    val adj = adjacency(canonicalEdges(edges0, srcCol, dstCol, assumeCanonical = false))
     val degs = adj.groupBy("node").agg(count(lit(1)).as("deg"))
     val remNodes = degs.filter(col("deg") < k).select("node")
     val delta = adj

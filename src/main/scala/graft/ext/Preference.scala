@@ -130,9 +130,9 @@ object Preference {
     * Scale shape per round: the comparison list joins the strength frame
     * twice on the item id (equi-joins; strengths are |items| rows), one
     * item-keyed hash-agg for the denominators, one projection for the
-    * update. Iterations follow the runPageRank materialization lifecycle
-    * (persist + short-lineage anchor per round, final checkpoint,
-    * internals unpersisted).
+    * update. Every round but the last is filled and read through an anchor
+    * ([[Lineage.iterate]]); the output is checkpointed and the internals
+    * unpersisted.
     *
     * Items winning every game would drift toward ∞ in true BT; the
     * fixed iteration count keeps every strength finite — callers
@@ -144,69 +144,55 @@ object Preference {
   def btStrengths(comparisons: DataFrame, winnerCol: String, loserCol: String,
                   iters: Int): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    val spark = comparisons.sparkSession
-    def anchor(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
-    // collapse raw games to per-unordered-pair counts once: n_ij and the
-    // wins of the lexicographically smaller side
-    val gamesChain = comparisons
-      .select(col(winnerCol).cast("long").as("__w"), col(loserCol).cast("long").as("__l"))
-      .select(least(col("__w"), col("__l")).as("__i"),
-        greatest(col("__w"), col("__l")).as("__j"),
-        when(col("__w") < col("__l"), 1L).otherwise(0L).as("__iw"))
-      .groupBy(col("__i"), col("__j"))
-      .agg(count(lit(1)).as("__n"), sum(col("__iw")).as("__wi"))
-      .persist()
-    gamesChain.count()
-    val games = anchor(gamesChain)
-    val persisted = Seq.newBuilder[DataFrame]
-    persisted += gamesChain
-    def materialize(df: DataFrame): DataFrame = {
-      val m = df.persist(); m.count(); persisted += m; anchor(m)
+    Lineage { lin =>
+      // collapse raw games to per-unordered-pair counts once: n_ij and the
+      // wins of the lexicographically smaller side
+      val gamesChain = comparisons
+        .select(col(winnerCol).cast("long").as("__w"), col(loserCol).cast("long").as("__l"))
+        .select(least(col("__w"), col("__l")).as("__i"),
+          greatest(col("__w"), col("__l")).as("__j"),
+          when(col("__w") < col("__l"), 1L).otherwise(0L).as("__iw"))
+        .groupBy(col("__i"), col("__j"))
+        .agg(count(lit(1)).as("__n"), sum(col("__iw")).as("__wi"))
+      lin.fill(gamesChain)
+      val games = Lineage.anchor(gamesChain)
+      val statsChain = games.select(col("__i").as("id"), col("__wi").as("w"), col("__n").as("n"))
+        .unionByName(games.select(col("__j").as("id"),
+          (col("__n") - col("__wi")).as("w"), col("__n").as("n")))
+        .groupBy(col("id"))
+        .agg(sum(col("w")).as("n_wins"), sum(col("n")).as("n_games"))
+      // |items| gates the per-round join strategy below
+      val nItems = lin.fill(statsChain).head
+      val stats = Lineage.anchor(statsChain)
+      // The strength frame is |items| rows but rides behind a short-lineage
+      // anchor each round, which loses BOTH size stats and partitioning —
+      // the planner assumed it huge, picked sort-merge, and re-shuffled the
+      // pair list (the big side) TWICE PER ROUND for nothing. When the item
+      // set is provably small (the just-counted |items|, the kCore frontier
+      // guard), ride it into the pair list as a BROADCAST on both joins and
+      // broadcast the items-sized denominator back onto stats: zero
+      // exchanges of the pair list per round. Above the cap the joins stay
+      // shuffled equi-joins (identical result, no driver-memory cliff).
+      val broadcastItems = nItems <= Graphs.BroadcastFrontierMaxRows
+      def itemSide(df: DataFrame): DataFrame = if (broadcastItems) broadcast(df) else df
+      val w0 = stats.select(col("id"), lit(1000000L).as("bt_micro"))
+      val w = lin.iterate(w0, iters, every = 1, rollover = false) { (w, _) =>
+        // per pair: n_ij·1e12 div (w_i + w_j) is n_ij/(w_i+w_j) in micro
+        val pairTerm = games
+          .join(itemSide(w.select(col("id").as("__i"), col("bt_micro").as("__si"))), "__i")
+          .join(itemSide(w.select(col("id").as("__j"), col("bt_micro").as("__sj"))), "__j")
+          .select(col("__i"), col("__j"),
+            expr("(__n * 1000000000000L) div (__si + __sj)").as("__c"))
+        val denom = pairTerm.select(col("__i").as("id"), col("__c"))
+          .unionByName(pairTerm.select(col("__j").as("id"), col("__c")))
+          .groupBy(col("id")).agg(sum(col("__c")).as("__d"))
+        stats.join(itemSide(denom), "id")
+          .select(col("id"),
+            expr("greatest(1L, (n_wins * 1000000000000L) div __d)").as("bt_micro"))
+      }
+      lin.checkpoint(stats.join(itemSide(w), "id")
+        .select(col("id"), col("n_wins"), col("n_games"), col("bt_micro")))
     }
-    val statsChain = games.select(col("__i").as("id"), col("__wi").as("w"), col("__n").as("n"))
-      .unionByName(games.select(col("__j").as("id"),
-        (col("__n") - col("__wi")).as("w"), col("__n").as("n")))
-      .groupBy(col("id"))
-      .agg(sum(col("w")).as("n_wins"), sum(col("n")).as("n_games"))
-      .persist()
-    // |items| gates the per-round join strategy below; the count also
-    // materializes the stats cache (the anchor serves from it)
-    val nItems = statsChain.count()
-    persisted += statsChain
-    val stats = anchor(statsChain)
-    // The strength frame is |items| rows but rides behind a short-lineage
-    // anchor each round, which loses BOTH size stats and partitioning —
-    // the planner assumed it huge, picked sort-merge, and re-shuffled the
-    // pair list (the big side) TWICE PER ROUND for nothing. When the item
-    // set is provably small (the just-counted |items|, the kCore frontier
-    // guard), ride it into the pair list as a BROADCAST on both joins and
-    // broadcast the items-sized denominator back onto stats: zero
-    // exchanges of the pair list per round. Above the cap the joins stay
-    // shuffled equi-joins (identical result, no driver-memory cliff).
-    val broadcastItems = nItems <= Graphs.BroadcastFrontierMaxRows
-    def itemSide(df: DataFrame): DataFrame = if (broadcastItems) broadcast(df) else df
-    var w = stats.select(col("id"), lit(1000000L).as("bt_micro"))
-    for (r <- 1 to iters) {
-      // per pair: n_ij·1e12 div (w_i + w_j) is n_ij/(w_i+w_j) in micro
-      val pairTerm = games
-        .join(itemSide(w.select(col("id").as("__i"), col("bt_micro").as("__si"))), "__i")
-        .join(itemSide(w.select(col("id").as("__j"), col("bt_micro").as("__sj"))), "__j")
-        .select(col("__i"), col("__j"),
-          expr("(__n * 1000000000000L) div (__si + __sj)").as("__c"))
-      val denom = pairTerm.select(col("__i").as("id"), col("__c"))
-        .unionByName(pairTerm.select(col("__j").as("id"), col("__c")))
-        .groupBy(col("id")).agg(sum(col("__c")).as("__d"))
-      w = stats.join(itemSide(denom), "id")
-        .select(col("id"),
-          expr("greatest(1L, (n_wins * 1000000000000L) div __d)").as("bt_micro"))
-      if (r < iters) w = materialize(w)
-    }
-    val out = stats.join(itemSide(w), "id")
-      .select(col("id"), col("n_wins"), col("n_games"), col("bt_micro"))
-      .localCheckpoint(true)
-    persisted.result().foreach(_.unpersist())
-    out
   }
 
   /** One UNEXECUTED Bradley–Terry MM round from the uniform start — the

@@ -124,15 +124,13 @@ object VectorSearch {
       candK: Int, k: Int, lambdaPermille: Long
   ): DataFrame = {
     require(candK >= k, "need candK >= k")
-    // persisted: the pair self-join and the relevance roll-up both read
-    // the bounded candidate-vector frame
-    val cv = mmrCandidateVectors(queries, corpus, qIdCol, qVecCol, idCol, vecCol, candK)
-      .persist()
-    cv.count()
-    val res = mmrSelect(cv, k, lambdaPermille)
-      .localCheckpoint(true) // eager: queries × k rows, severs into cv
-    cv.unpersist()
-    res
+    Lineage { lin =>
+      // filled: the pair self-join and the relevance roll-up both read the
+      // bounded candidate-vector frame
+      val cv = mmrCandidateVectors(queries, corpus, qIdCol, qVecCol, idCol, vecCol, candK)
+      lin.fill(cv)
+      lin.checkpoint(mmrSelect(cv, k, lambdaPermille)) // queries × k rows
+    }
   }
 
   /** [[mmrRerank]]'s stage 1, unexecuted: candidates with vectors
@@ -1706,34 +1704,10 @@ object VectorSearch {
                        graphIsAdjacency: Boolean = false): DataFrame = {
     require(k > 0 && beam >= k, "need beam >= k > 0")
     require(rounds >= 0, "need rounds >= 0")
-    val spark = queries.sparkSession
-    val d = dotFn(spark)
-    // short-lineage anchor over a materialized cache (the Graphs
-    // convention): each round references the previous generation TWICE
-    // (frontier + candidate union), so an unmaterialized chain
-    // re-evaluates 2^depth — materialization runs on the matEvery=2
-    // cadence runPageRank uses for double-referenced generations (4
-    // evals of cached narrow ops beat a barrier per round)
-    def anchor(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
+    val d = dotFn(queries.sparkSession)
     val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("__cv"))
     val q = broadcast(queries.select(col(qIdCol).as("qid"),
       asDouble(col(qVecCol)).as("__qv")))
-    val persisted = Seq.newBuilder[DataFrame]
-    // callers sweeping a parameter (the q225 beam sweep) pass the
-    // symmetrized adjacency once via graphIsAdjacency — ONE distinct
-    // shuffle shared by every walk instead of one per walk
-    val adj =
-      if (graphIsAdjacency) graph
-      else {
-        val adjChain = graph.select(col("id"), col("nbr_id"))
-          .unionByName(graph.select(col("nbr_id").as("id"), col("id").as("nbr_id")))
-          .distinct()
-          .persist()
-        adjChain.count()
-        persisted += adjChain
-        anchor(adjChain)
-      }
     val entry = broadcast(entryIds.select(col(entryIds.columns.head).as("id")))
     def score(cands: DataFrame): DataFrame = {
       val den = sqrt(d(col("__qv"), col("__qv"))) * sqrt(d(col("__cv"), col("__cv")))
@@ -1746,35 +1720,40 @@ object VectorSearch {
     def topN(scored: DataFrame, n: Int): DataFrame = scored
       .withColumn("rnk", row_number().over(wq).cast("long"))
       .filter(col("rnk") <= n)
-    def materialize(df: DataFrame): DataFrame = {
-      val m = df.persist(); m.count(); persisted += m; anchor(m)
-    }
-    var scored = materialize(score(q.select(col("qid")).crossJoin(entry)))
-    var depth = 0
-    val tiers = Seq.newBuilder[DataFrame]
-    tiers += topN(scored, k).withColumn("round_tier", lit(0L))
-    for (r <- 1 to rounds) {
-      val frontier = topN(scored, beam).select(col("qid"), col("id"))
-      val expand = frontier.join(adj, "id")
-        .select(col("qid"), col("nbr_id").as("id"))
-      val cands = scored.select(col("qid"), col("id"))
-        .unionByName(expand).distinct()
-      scored = score(cands)
-      depth += 1
-      if (depth >= 2 && r < rounds) {
-        scored = materialize(scored)
-        depth = 0
+    def tier(scored: DataFrame, r: Int): DataFrame =
+      topN(scored, k).withColumn("round_tier", lit(r.toLong))
+    Lineage { lin =>
+      // callers sweeping a parameter (the q225 beam sweep) pass the
+      // symmetrized adjacency once via graphIsAdjacency — ONE distinct
+      // shuffle shared by every walk instead of one per walk
+      val adj =
+        if (graphIsAdjacency) graph
+        else {
+          val adjChain = graph.select(col("id"), col("nbr_id"))
+            .unionByName(graph.select(col("nbr_id").as("id"), col("id").as("nbr_id")))
+            .distinct()
+          lin.fill(adjChain)
+          Lineage.anchor(adjChain)
+        }
+      val scored0 = score(q.select(col("qid")).crossJoin(entry))
+      lin.fill(scored0)
+      // each round references the previous generation TWICE (frontier +
+      // candidate union), so every second generation is filled; the tiers
+      // still read the earlier generations, so none is released before
+      // the output is checkpointed
+      val tiers = Seq.newBuilder[DataFrame]
+      val last = lin.iterate(Lineage.anchor(scored0), rounds, every = 2, rollover = false) {
+        (scored, r) =>
+          tiers += tier(scored, r - 1)
+          val frontier = topN(scored, beam).select(col("qid"), col("id"))
+          val expand = frontier.join(adj, "id")
+            .select(col("qid"), col("nbr_id").as("id"))
+          score(scored.select(col("qid"), col("id")).unionByName(expand).distinct())
       }
-      tiers += topN(scored, k).withColumn("round_tier", lit(r.toLong))
+      tiers += tier(last, rounds)
+      lin.checkpoint(tiers.result().reduce(_ unionByName _)
+        .select(col("round_tier"), col("qid"), col("id"), col("sim"), col("rnk")))
     }
-    // final output checkpointed off the per-round caches (tiers are
-    // windows over beam-sized frames at most depth 2 from a cache), then
-    // everything internal unpersisted — the runPageRank lifecycle
-    val out = tiers.result().reduce(_ unionByName _)
-      .select(col("round_tier"), col("qid"), col("id"), col("sim"), col("rnk"))
-      .localCheckpoint(true)
-    persisted.result().foreach(_.unpersist())
-    out
   }
 
   /** [[graphSearchCurve]] for a WHOLE beam sweep in one walk: `beam_tier`
@@ -1795,10 +1774,7 @@ object VectorSearch {
                            roundDigits: Int = 4): DataFrame = {
     require(beams.nonEmpty && beams.forall(_ >= k) && k > 0, "need every beam >= k > 0")
     require(rounds >= 0, "need rounds >= 0")
-    val spark = queries.sparkSession
-    val d = dotFn(spark)
-    def anchor(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
+    val d = dotFn(queries.sparkSession)
     val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("__cv"))
     val q = broadcast(queries.select(col(qIdCol).as("qid"),
       asDouble(col(qVecCol)).as("__qv")))
@@ -1815,33 +1791,23 @@ object VectorSearch {
       .orderBy(col("sim").desc, col("id"))
     def ranked(scored: DataFrame): DataFrame = scored
       .withColumn("rnk", row_number().over(wq).cast("long"))
-    val persisted = Seq.newBuilder[DataFrame]
-    def materialize(df: DataFrame): DataFrame = {
-      val m = df.persist(); m.count(); persisted += m; anchor(m)
-    }
-    var scored = materialize(score(q.select(col("qid")).crossJoin(entry)
-      .select(explode(tierArr).as("beam_tier"), col("qid"), col("id"))))
-    var depth = 0
-    for (r <- 1 to rounds) {
-      val frontier = ranked(scored)
-        .filter(col("rnk") <= col("beam_tier"))
-        .select(col("beam_tier"), col("qid"), col("id"))
-      val expand = frontier.join(adj, "id")
-        .select(col("beam_tier"), col("qid"), col("nbr_id").as("id"))
-      val cands = scored.select(col("beam_tier"), col("qid"), col("id"))
-        .unionByName(expand).distinct()
-      scored = score(cands)
-      depth += 1
-      if (depth >= 2 && r < rounds) {
-        scored = materialize(scored)
-        depth = 0
+    Lineage { lin =>
+      val scored0 = score(q.select(col("qid")).crossJoin(entry)
+        .select(explode(tierArr).as("beam_tier"), col("qid"), col("id")))
+      lin.fill(scored0)
+      val last = lin.iterate(Lineage.anchor(scored0), rounds, every = 2, rollover = false) {
+        (scored, _) =>
+          val frontier = ranked(scored)
+            .filter(col("rnk") <= col("beam_tier"))
+            .select(col("beam_tier"), col("qid"), col("id"))
+          val expand = frontier.join(adj, "id")
+            .select(col("beam_tier"), col("qid"), col("nbr_id").as("id"))
+          score(scored.select(col("beam_tier"), col("qid"), col("id"))
+            .unionByName(expand).distinct())
       }
+      lin.checkpoint(ranked(last).filter(col("rnk") <= k)
+        .select(col("beam_tier"), col("qid"), col("id"), col("sim"), col("rnk")))
     }
-    val out = ranked(scored).filter(col("rnk") <= k)
-      .select(col("beam_tier"), col("qid"), col("id"), col("sim"), col("rnk"))
-      .localCheckpoint(true)
-    persisted.result().foreach(_.unpersist())
-    out
   }
 
   /** One UNEXECUTED beam-search round from the entry state — the frame

@@ -3,7 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.ops.{AsOfJoin, LatestWins}
 import graft.table.TableLayout
-import graft.ext.{Affinity, Classifier, Components, Decontaminate, Graphs, Linkage, Multimodal, OptimizerStats, Packing, ParagraphDedup, Preference, Privacy, Retrieval, RobustStats, Sampling, TextDedup, TextStats, VectorSearch}
+import graft.ext.{Affinity, Classifier, Components, Decontaminate, Graphs, Lineage, Linkage, Multimodal, OptimizerStats, Packing, ParagraphDedup, Preference, Privacy, Retrieval, RobustStats, Sampling, TextDedup, TextStats, VectorSearch}
 import graft.queries.ParityQueries.Q
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -2621,38 +2621,32 @@ object ExtensionQueries {
             cands.select(col("doc_id"), col("kept_text").as("text")),
             holdout, "doc_id", "text", shingleN = 5)
           .select(col("doc_id"), col("contaminated"))
-        val m3 = s2.join(contam, Seq("doc_id"), "left")
-          .withColumn("contaminated", coalesce(col("contaminated"), lit(false)))
-          .select(col("doc_id"), col("source"), col("n_tokens"),
-            col("para_dup"), col("low_quality"), col("contaminated"))
-          .persist()
-        m3.count() // materialize: the semantic stage self-joins this frame
-        // 4: semantic dedup over the survivors' embeddings
-        val survEmb = m3
-          .filter(!col("para_dup") && !col("low_quality") && !col("contaminated"))
-          .select(col("doc_id"), (col("doc_id") % 100000L).as("vec_id"))
-          .join(Tables.embeddings(s, dir), "vec_id")
-          .select(col("doc_id"), col("embedding"))
-        val sem = VectorSearch.semanticDedup(survEmb, "doc_id", "embedding",
-            QueryCaches.fullCentFor(s, dir), threshold = 0.8)
-          .select(col("id").as("doc_id"), col("is_dup").as("semantic_dup"))
-        val m4 = m3.join(sem, Seq("doc_id"), "left")
-          .withColumn("semantic_dup", coalesce(col("semantic_dup"), lit(false)))
-          .persist()
-        m4.count()
-        m3.unpersist()
-        // serve the meta through a short-lineage anchor: the chain above is
-        // a very large DataFrame graph, and every post-hit invocation would
-        // re-traverse it during analysis (~0.6 s/invocation of pure driver
-        // time at sf0.1). Re-basing the persisted rows on their RDD gives
-        // downstream plans a LogicalRDD leaf; the anchor is persisted from
-        // the hot m4 cache (one cheap pass), then the chain cache is freed.
-        // NOT localCheckpoint: the anchor materializes from the ALREADY
-        // AQE-executed cache, so no plan demotion (see verify notes).
-        val served = s.createDataFrame(m4.rdd, m4.schema).persist()
-        served.count()
-        m4.unpersist()
-        served
+        Lineage { lin =>
+          val m3 = s2.join(contam, Seq("doc_id"), "left")
+            .withColumn("contaminated", coalesce(col("contaminated"), lit(false)))
+            .select(col("doc_id"), col("source"), col("n_tokens"),
+              col("para_dup"), col("low_quality"), col("contaminated"))
+          lin.fill(m3) // the semantic stage self-joins this frame
+          // 4: semantic dedup over the survivors' embeddings
+          val survEmb = m3
+            .filter(!col("para_dup") && !col("low_quality") && !col("contaminated"))
+            .select(col("doc_id"), (col("doc_id") % 100000L).as("vec_id"))
+            .join(Tables.embeddings(s, dir), "vec_id")
+            .select(col("doc_id"), col("embedding"))
+          val sem = VectorSearch.semanticDedup(survEmb, "doc_id", "embedding",
+              QueryCaches.fullCentFor(s, dir), threshold = 0.8)
+            .select(col("id").as("doc_id"), col("is_dup").as("semantic_dup"))
+          val m4 = m3.join(sem, Seq("doc_id"), "left")
+            .withColumn("semantic_dup", coalesce(col("semantic_dup"), lit(false)))
+          lin.fill(m4)
+          lin.release(m3)
+          // the slot serves the meta through an anchor: the chain above is a
+          // very large DataFrame graph, and every post-hit invocation would
+          // re-traverse it during analysis (~0.6 s/invocation of pure driver
+          // time at sf0.1). The anchor fills from the hot m4 cache (one cheap
+          // pass) before the scope frees m4.
+          Lineage.filled(Lineage.anchor(m4))
+        }
       }
       // 5: per-source token budget over what's left (the library sampler —
       // admitted ids are budget-bounded, so they broadcast back)
@@ -7458,8 +7452,6 @@ object ExtensionQueries {
         .withColumn("__bp", expr("n_common * 10000L div (n_a + n_b - n_common)"))
         .filter(col("__bp") >= 5000L)
         .select(col("id_a"), col("id_b"))
-        .persist()
-      truth.count()
       val lsh = TextDedup.lshCandidates(
           TextDedup.minhashSignatures(corpus, "doc_id", "text", 8, 2),
           "doc_id", k = 8, rowsPerBand = 2)
@@ -10980,7 +10972,7 @@ object ExtensionQueries {
   private val q314 = Q(
     "q314_modularity_refine",
     (s, dir) => {
-      // serve the cached edge list through a short-lineage ANCHOR here:
+      // serve the cached edge list through an ANCHOR here:
       // refine + two modularity passes fan the frame into ~15 branches,
       // and with the InMemoryRelation's accurate (tiny) stats visible the
       // planner turned most of them into independent BroadcastExchange
@@ -10988,8 +10980,7 @@ object ExtensionQueries {
       // anchor hides the stats, the branches stay sort-merge with ONE
       // reused exchange per subtree, and the regexp extraction still
       // comes from the cache (45 jobs, ~2.6 s).
-      val edgesC = QueryCaches.pagerankEdgesFor(s, dir)
-      val edges = s.createDataFrame(edgesC.rdd, edgesC.schema)
+      val edges = Lineage.anchor(QueryCaches.pagerankEdgesFor(s, dir))
       val l0 = QueryCaches.lpaLabelsFor(s, dir) // q130 measures LPA live
       val l1 = Graphs.modularityRefine(edges, "src", "dst", l0)
       val before = Graphs.modularity(edges, "src", "dst", l0)

@@ -1,9 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.ext.Lineage
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentHashMap
+import scala.jdk.CollectionConverters._
 
 /** Session-scoped memoization for query-suite inputs that are expensive to
   * rebuild per invocation (bench warm-up + reps would otherwise rebuild —
@@ -56,6 +58,8 @@ private[graft] object QueryCaches {
 
     def holds(s: SparkSession): Boolean = held.containsKey(s)
 
+    def entries: Seq[A] = held.values().asScala.map(_._2).toSeq
+
     def drop(s: SparkSession): Unit = synchronized {
       Option(held.remove(s)).foreach(e => release(e._2))
     }
@@ -78,15 +82,6 @@ private[graft] object QueryCaches {
     slot[(DataFrame, DataFrame)](name) { case (a, b) => a.unpersist(); b.unpersist() }
   private def localSlot[A](name: String) = slot[A](name)(_ => ())
   private def treeSlot(name: String) = slot[Path](name, sweepAtExit = true)(deleteTree)
-
-  /** `df` persisted and materialized by count(), which keeps AQE in the
-    * build (a localCheckpoint materializes the NON-adaptive plan).
-    */
-  private def persisted(df: DataFrame): DataFrame = {
-    val p = df.persist()
-    p.count()
-    p
-  }
 
   /** A fresh temp directory filled by `fill`, deleted again if `fill` throws. */
   private def tempTree(prefix: String)(fill: Path => Unit): Path = {
@@ -127,7 +122,7 @@ private[graft] object QueryCaches {
     import org.apache.spark.sql.functions.col
     val li = graft.Tables.lineitem(s, dir)
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-    persisted(li.as("x")
+    Lineage.filled(li.as("x")
       .join(li.as("y"), col("x.o") === col("y.o") && col("x.p") < col("y.p"))
       .select(col("x.p").as("src"), col("y.p").as("dst")))
   }
@@ -144,7 +139,7 @@ private[graft] object QueryCaches {
     */
   private val copurchaseDistinct = frameSlot("copurchaseDistinct")
   def copurchaseDistinctFor(s: SparkSession, dir: String): DataFrame =
-    copurchaseDistinct(s, dir)(persisted(copurchaseFor(s, dir).distinct()))
+    copurchaseDistinct(s, dir)(Lineage.filled(copurchaseFor(s, dir).distinct()))
 
   /** The canonical DISTINCT edge list of the l_partkey % 7 == 0 sampled
     * co-purchase subgraph — the shared input of the three sketch/BFS
@@ -160,7 +155,7 @@ private[graft] object QueryCaches {
     val li = graft.Tables.lineitem(s, dir)
       .filter(col("l_partkey") % 7 === 0)
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-    persisted(li.as("x")
+    Lineage.filled(li.as("x")
       .join(li.as("y"), col("x.o") === col("y.o") && col("x.p") < col("y.p"))
       .select(col("x.p").as("src"), col("y.p").as("dst"))
       .distinct())
@@ -176,7 +171,7 @@ private[graft] object QueryCaches {
     */
   private val prEdges = frameSlot("prEdges")
   def pagerankEdgesFor(s: SparkSession, dir: String): DataFrame =
-    prEdges(s, dir)(persisted(ExtensionQueries.pagerankEdges(s, dir)))
+    prEdges(s, dir)(Lineage.filled(ExtensionQueries.pagerankEdges(s, dir)))
 
   /** PQ index — (codebooks, codes-with-dist) over the FULL embeddings table.
     * q90/q91/q93 all consume it, and an un-memoized plan recomputes the
@@ -248,7 +243,7 @@ private[graft] object QueryCaches {
     */
   private val curation = frameSlot("curation")
   def curationMetaFor(s: SparkSession, dir: String)(build: => DataFrame): DataFrame =
-    curation(s, dir)(persisted(build))
+    curation(s, dir)(Lineage.filled(build))
 
   /** q112's curated-metadata frame (doc_id, source, n_tokens, para_dup,
     * low_quality, contaminated, semantic_dup). Unlike [[curationMetaFor]],
@@ -287,10 +282,10 @@ private[graft] object QueryCaches {
     val cs = graft.Tables.embeddings(s, dir).filter(col("vec_id") >= 10)
     val g = graft.ext.VectorSearch.knnGraph(cs, "vec_id", "embedding",
       k = 3, bits = 6, maxBucketSize = 64)
-    val adj = persisted(g.select(col("id"), col("nbr_id"))
+    val adj = Lineage.filled(g.select(col("id"), col("nbr_id"))
       .unionByName(g.select(col("nbr_id").as("id"), col("id").as("nbr_id")))
       .distinct())
-    val entries = persisted(graft.ext.VectorSearch.bucketEntryPoints(
+    val entries = Lineage.filled(graft.ext.VectorSearch.bucketEntryPoints(
       cs, "vec_id", "embedding", bits = 6))
     (adj, entries)
   }
@@ -383,7 +378,7 @@ private[graft] object QueryCaches {
     */
   private val videoPairs = frameSlot("videoPairs")
   def videoPairsFor(s: SparkSession, dir: String): DataFrame = videoPairs(s, dir) {
-    persisted(graft.ext.Multimodal.videoDhashNearDups(
+    Lineage.filled(graft.ext.Multimodal.videoDhashNearDups(
       ExtensionQueries.videoCorpus(s, dir), "doc_id", "text",
       n = 4, frameBytes = 96, maxHamming = 3, minShared = 3))
   }
@@ -395,7 +390,7 @@ private[graft] object QueryCaches {
     */
   private val audioPairs = frameSlot("audioPairs")
   def audioPairsFor(s: SparkSession, dir: String): DataFrame = audioPairs(s, dir) {
-    persisted(graft.ext.Multimodal.audioChromaNearDups(
+    Lineage.filled(graft.ext.Multimodal.audioChromaNearDups(
       ExtensionQueries.audioCorpus(s, dir), "doc_id", "text",
       n = 6, windowChars = 128, maxHamming = 3, minShared = 3, maxBlockSize = 64))
   }
@@ -419,6 +414,13 @@ private[graft] object QueryCaches {
     f"""{"metric":"cache_footprint","caches":[${held.mkString(",")}],"n_cached_rdds":${info.length},"cached_mem_mb":$memMB%.1f,"cached_disk_mb":$diskMB%.1f,"per_rdd":$perRdd}"""
   }
 
+  /** Every frame a slot holds, in any session: the caches QueryCaches owns. */
+  private[graft] def heldFrames: Seq[DataFrame] = slots.toSeq.flatMap(_.entries).flatMap {
+    case df: Dataset[_]                     => Seq(df.toDF())
+    case (a: Dataset[_], b: Dataset[_]) => Seq(a.toDF(), b.toDF())
+    case _                                  => Nil
+  }
+
   /** Release everything cached for `s`: every slot's entry is dropped and
     * released (frames unpersisted, layout/snapshot directories deleted).
     * Call before stopping the session.
@@ -427,7 +429,6 @@ private[graft] object QueryCaches {
 
   private def deleteTree(root: Path): Unit =
     if (Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
       scala.util.Using.resource(Files.walk(root)) { st =>
         st.iterator().asScala.toSeq.reverseIterator
           .foreach(p => Files.deleteIfExists(p))
