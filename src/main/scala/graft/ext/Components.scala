@@ -124,7 +124,7 @@ object Components {
       edges: DataFrame, srcCol: String, dstCol: String,
       maxIter: Int = 16
   ): DataFrame = {
-    Lineage { lin =>
+    Lineage.checkpointed { lin =>
       val e = lin.keep(edges
         .select(col(srcCol).cast("string").as("src"), col(dstCol).cast("string").as("dst"))
         .filter(col("src").isNotNull && col("dst").isNotNull))
@@ -135,9 +135,9 @@ object Components {
       val decoded = cc.join(dict, cc("node") === dict("node_id"))
         .select(dict("node"), cc("component").as("__comp"))
       lin.fill(decoded) // referenced by both the relabel agg and the join-back
-      lin.checkpoint(decoded
+      decoded
         .join(decoded.groupBy(col("__comp")).agg(min(col("node")).as("component")), "__comp")
-        .select(col("node"), col("component")))
+        .select(col("node"), col("component"))
     }
   }
 

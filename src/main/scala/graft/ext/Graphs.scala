@@ -198,23 +198,23 @@ object Graphs {
       lin.fill(edgesChain)
       val edges = Lineage.anchor(edgesChain)
       if (!encodeIds) runPageRank(edges, iters, scaleMu, dampingPct, redistributeDangling)
-      else {
+      else Lineage.checkpointed { enc =>
         // dictionary-encode once up front (two node-keyed equi-joins), so
         // every ITERATION's join + hash-agg shuffles (long, long) rows
         // instead of string keys: iterations dominate (2 shuffles × iters
         // vs 2 encode joins + 1 decode join, paid once)
         val dict = idDictionary(endpoints(edges), "node")
-        lin.fill(dict) // BEFORE the two encode joins scan it
+        enc.fill(dict) // BEFORE the two encode joins scan it
         val encChain = encodeEdges(edges, dict)
-        lin.fill(encChain)
+        enc.fill(encChain)
         // the anchor matters most here: with the extract→distinct→
         // dictionary→encode subtree attached, each action re-analyzed it at
         // every occurrence — measured 12-24 s of pure DRIVER time on a
         // 26-node sf0.1 graph, >10× the whole string-keyed run
         val ranked = runPageRank(Lineage.anchor(encChain), iters, scaleMu, dampingPct,
           redistributeDangling)
-        lin.checkpoint(ranked.join(dict, ranked("node") === dict("node_id"))
-          .select(dict("node"), ranked("rank_mu")))
+        ranked.join(dict, ranked("node") === dict("node_id"))
+          .select(dict("node"), ranked("rank_mu"))
       }
     }
   }
@@ -227,7 +227,7 @@ object Graphs {
     */
   private[graft] def runPageRank(edges: DataFrame, iters: Int, scaleMu: Long,
                           dampingPct: Int, redistributeDangling: Boolean): DataFrame =
-    Lineage { lin =>
+    Lineage.checkpointed { lin =>
       // both are read by every iteration, the first job included
       val nodes = nodesOf(edges)
       val outEdges = outEdgesOf(edges)
@@ -256,9 +256,9 @@ object Graphs {
       // of cheap narrow ops beats a barrier per round at stage-floor scales)
       val matEvery = if (dangling.isDefined) 2 else 4
       val rank0 = nodes.withColumn("rank_mu", lit(scaleMu))
-      lin.checkpoint(lin.iterate(rank0, iters, matEvery, rollover = true) { (rank, _) =>
+      lin.iterate(rank0, iters, matEvery, rollover = true) { (rank, _) =>
         iteration(outEdges, nodes, rank, base, dampingPct, dangling)
-      })
+      }
     }
 
   /** One power iteration, exposed at package level so the plan audit can
@@ -336,7 +336,7 @@ object Graphs {
     val e = edges0
       .select(col(srcCol).cast("string").as("src"), col(dstCol).cast("string").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-    Lineage { lin =>
+    Lineage.checkpointed { lin =>
       val adjChain = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
         .distinct()
         .select(col("src").as("node"), col("dst").as("nbr"))
@@ -345,9 +345,9 @@ object Graphs {
       // references: read it through an anchor (see runPageRank)
       val adj = Lineage.anchor(adjChain)
       val labels0 = adj.select(col("node")).distinct().withColumn("label", col("node"))
-      lin.checkpoint(lin.iterate(labels0, iters, every = 4, rollover = true) { (labels, _) =>
+      lin.iterate(labels0, iters, every = 4, rollover = true) { (labels, _) =>
         lpRound(adj, labels)
-      })
+      }
     }
   }
 
@@ -676,7 +676,7 @@ object Graphs {
                               dampingPct: Int = 85): DataFrame = {
     require(iters >= 0, "iters must be non-negative")
     require(dampingPct >= 0 && dampingPct <= 100, "dampingPct must be in [0, 100]")
-    Lineage { lin =>
+    Lineage.checkpointed { lin =>
       val edgesChain = directedEdges(edges0, srcCol, dstCol)
       lin.fill(edgesChain)
       val edges = Lineage.anchor(edgesChain)
@@ -705,7 +705,7 @@ object Graphs {
       // anchor so later generations do not re-analyze the seed-join subtree
       val baseF = Lineage.anchor(baseChain)
       val rank0 = baseF.select(col("node"), col("rank0_mu").as("rank_mu"))
-      lin.checkpoint(lin.iterate(rank0, iters, every = 4, rollover = true) { (rank, _) =>
+      lin.iterate(rank0, iters, every = 4, rollover = true) { (rank, _) =>
         val inflow = outEdges.join(rank, col("src") === col("node"))
           .select(col("dst").as("node"), expr("rank_mu div odeg").as("__share"))
           .groupBy("node").agg(sum(col("__share")).as("__inflow"))
@@ -714,7 +714,7 @@ object Graphs {
             (col("base_mu") +
               expr(s"(${dampingPct}L * coalesce(__inflow, 0L)) div 100"))
               .as("rank_mu"))
-      })
+      }
     }
   }
 
@@ -743,7 +743,7 @@ object Graphs {
   def hitsInt(edges0: DataFrame, srcCol: String, dstCol: String,
               iters: Int, scaleMu: Long = 1000000L): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    Lineage { lin =>
+    Lineage.checkpointed { lin =>
       val edgesChain = directedEdges(edges0, srcCol, dstCol)
       lin.fill(edgesChain)
       val edges = Lineage.anchor(edgesChain)
@@ -771,8 +771,8 @@ object Graphs {
             .select(col("node"), col("hub_mu")),
           "hub_mu")
       }
-      lin.checkpoint(hub.join(auth, Seq("node"))
-        .select(col("node"), col("hub_mu"), col("auth_mu")))
+      hub.join(auth, Seq("node"))
+        .select(col("node"), col("hub_mu"), col("auth_mu"))
     }
   }
 
@@ -883,7 +883,7 @@ object Graphs {
             k: Int, rounds: Int, assumeCanonical: Boolean = false): DataFrame = {
     require(k >= 1 && rounds >= 1, "k and rounds must be >= 1")
     val e = canonicalEdges(edges0, srcCol, dstCol, assumeCanonical)
-    Lineage { lin =>
+    Lineage.checkpointed { lin =>
       // kept, not filled: the round-1 frontier fill's degree aggregate
       // scans the adjacency in full, filling this cache in the SAME job —
       // an up-front materialization barrier here was pure stage-floor
@@ -941,11 +941,11 @@ object Graphs {
       val core = degs
         .select(col("node"), lit(0L).as("removed_round"),
           col("deg").as("core_deg"), lit(true).as("in_core"))
-      lin.checkpoint(removed.get
+      removed.get
         .select(col("node"), col("removed_round"),
           lit(0L).as("core_deg"), lit(false).as("in_core"))
         .unionByName(core)
-        .withColumn("converged", lit(converged)))
+        .withColumn("converged", lit(converged))
     }
   }
 
@@ -978,14 +978,14 @@ object Graphs {
     require(rounds >= 1 && k >= 16, "rounds >= 1 and k >= 16")
     val e = canonicalEdges(edges0, srcCol, dstCol, assumeCanonical)
     // the adjacency is kept REPARTITIONED on its per-round join key and
-    // used directly, NOT behind an anchor ([[Lineage.keepPartitioned]]):
+    // used directly, NOT behind an anchor ([[Lineage.keep]]):
     // every round's equi-join reuses ONE exchange of the adjacency instead
     // of re-shuffling it per hop — the anchored form paid that re-shuffle
     // in all `rounds` joins (the probe showed the same adjacency exchange
     // bytes written once per round). Its lineage is one hop, so the
     // anchor's plan-depth protection isn't needed.
-    Lineage { lin =>
-      val adj = lin.keepPartitioned(adjacency(e), col("nbr"))
+    Lineage.checkpointed { lin =>
+      val adj = lin.keep(adjacency(e).repartition(col("nbr")))
       lin.fill(adj)
       val estSql = kmvEstimateSql(k)
       def roundSum(sk: DataFrame, t: Int): DataFrame =
@@ -1014,14 +1014,14 @@ object Graphs {
         sums = sums.unionByName(roundSum(sk, t))
       }
       val w = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
-      lin.checkpoint(sums
+      sums
         .withColumn("delta_milli",
           col("nf_milli") - coalesce(lag(col("nf_milli"), 1).over(Window.orderBy("t")), lit(0L)))
         .withColumn("__wd", sum(col("t") * col("delta_milli")).over(w))
         .withColumn("__td", sum(col("delta_milli")).over(w))
         .select(col("t"), col("nf_milli"), col("delta_milli"),
           expr("CAST(CASE WHEN __td > 0 THEN (__wd * 1000) div __td ELSE 0 END AS BIGINT)")
-            .as("mean_dist_milli")))
+            .as("mean_dist_milli"))
     }
   }
 
@@ -1056,10 +1056,10 @@ object Graphs {
     require(topK >= 1, "topK must be >= 1")
     val e = canonicalEdges(edges0, srcCol, dstCol, assumeCanonical)
     // repartitioned, un-anchored adjacency cache
-    // ([[Lineage.keepPartitioned]]): all `rounds` equi-joins reuse ONE
+    // ([[Lineage.keep]]): all `rounds` equi-joins reuse ONE
     // adjacency exchange instead of re-shuffling it per hop
-    Lineage { lin =>
-      val adj = lin.keepPartitioned(adjacency(e), col("nbr"))
+    Lineage.checkpointed { lin =>
+      val adj = lin.keep(adjacency(e).repartition(col("nbr")))
       lin.fill(adj)
       val estSql = kmvEstimateSql(k)
       var sk = adj.select(col("node")).distinct()
@@ -1083,10 +1083,10 @@ object Graphs {
           .select(col("node"), col("hs"),
             col("__est").as("__prev"), col("harmonic_milli"))))
       }
-      lin.checkpoint(sk
+      sk
         .select(col("node"), col("__prev").as("ball_milli"), col("harmonic_milli"))
         .orderBy(col("harmonic_milli").desc, col("node"))
-        .limit(topK))
+        .limit(topK)
     }
   }
 
@@ -1130,14 +1130,14 @@ object Graphs {
       "pivots, rounds, topK must be >= 1")
     val e = canonicalEdges(edges0, srcCol, dstCol, assumeCanonical)
     // the adjacency is kept REPARTITIONED on its join key and used
-    // directly, NOT behind an anchor ([[Lineage.keepPartitioned]]): all
+    // directly, NOT behind an anchor ([[Lineage.keep]]): all
     // 2·rounds level joins reuse ONE exchange of the big side instead of
     // re-shuffling it per level (the anchored form lost both stats and
     // partitioning — measured 12.2 s → the re-shuffle was the whole
     // overage). Its lineage is one hop, so the anchor's plan-depth
     // protection isn't needed here.
-    Lineage { lin =>
-      val adj = lin.keepPartitioned(adjacency(e), col("node"))
+    Lineage.checkpointed { lin =>
+      val adj = lin.keep(adjacency(e).repartition(col("node")))
 
       // deterministic pivot sample: md5-order over the node set (broadcast
       // — `pivots` rows)
@@ -1192,13 +1192,13 @@ object Graphs {
           .agg(sum(col("__t")).as("delta"))))
         deltaAll = Lineage.anchor(lin.keep(deltaAll.unionByName(delta)))
       }
-      lin.checkpoint(deltaAll
+      deltaAll
         .filter(col("node") =!= col("pivot"))
         .groupBy(col("node"))
         .agg(sum(col("delta")).as("bc_milli"), count(lit(1)).as("n_pivots"))
         .filter(col("bc_milli") > 0L)
         .orderBy(col("bc_milli").desc, col("node"))
-        .limit(topK))
+        .limit(topK)
     }
   }
 

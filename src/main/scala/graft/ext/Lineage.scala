@@ -1,26 +1,24 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.DataFrame
 
 import scala.collection.mutable.ArrayBuffer
 
 /** The one owner of the frames an operator persists to keep its plans
   * short. Each frame goes through one policy, named at the call site, and
-  * the scope ([[Lineage.apply]]) unpersists every frame it tracked when the
-  * body returns or throws, so no generation outlives its operator.
+  * the scope ([[Lineage.apply]], or [[Lineage.checkpointed]] for an
+  * operator that returns a frame) unpersists every frame it tracked when
+  * the body returns or throws, so no generation outlives its operator.
   *
   *   - [[keep]]: persist; the first action that reads the frame fills it.
-  *   - [[fill]]: persist and materialise now, several frames in one job —
-  *     for a frame whose first reader is a job that reads it more than once
+  *     A frame repartitioned on its join key and kept is used directly: the
+  *     InMemoryRelation keeps its hash partitioning and measured size, so
+  *     every join on that key reuses one exchange.
+  *   - [[fill]]: persist and materialise now, one `count()` per frame — for
+  *     a frame whose first reader is a job that reads it more than once
   *     (two tasks of one job can compute the same cached partition).
-  *   - [[keepPartitioned]]: a cache repartitioned on its join key and used
-  *     directly; the InMemoryRelation keeps its hash partitioning and
-  *     measured size, so every join on that key reuses one exchange.
   *   - [[Lineage.anchor]]: a short-lineage leaf over a kept or filled frame.
   *   - [[release]]: unpersist one frame before the scope ends.
-  *   - [[checkpoint]]: the eager local checkpoint an operator returns, so
-  *     its output reads nothing the scope releases.
   *
   * [[iterate]] is the generation loop: it fills every n-th generation and
   * continues from an anchor over it.
@@ -36,19 +34,15 @@ private[graft] final class Lineage private () {
     df
   }
 
-  /** Persists `dfs` (those not yet kept) and materialises them in one job;
-    * returns their row counts, in order.
+  /** Persists each of `dfs` (unless already kept) and fills it with a
+    * `count()`, in turn; returns their row counts, in order.
     */
-  def fill(dfs: DataFrame*): Seq[Long] = Lineage.materialise(dfs.map(keep))
-
-  def keepPartitioned(df: DataFrame, key: Column): DataFrame = keep(df.repartition(key))
+  def fill(dfs: DataFrame*): Seq[Long] = dfs.map(keep(_).count())
 
   def release(df: DataFrame): Unit = {
     held.filterInPlace(_ ne df)
     df.unpersist()
   }
-
-  def checkpoint(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
   /** `steps` applications of `step` (the current generation, the 1-based
     * step) from `init`. Every `every`-th generation before the last is
@@ -87,6 +81,13 @@ private[graft] object Lineage {
     finally lin.held.foreach(_.unpersist())
   }
 
+  /** An operator's scope: the frame `body` returns is eagerly local-
+    * checkpointed before the scope releases what it reads, so the output
+    * neither reads a released cache nor carries the body's lineage.
+    */
+  def checkpointed(body: Lineage => DataFrame): DataFrame =
+    apply(lin => body(lin).localCheckpoint(true))
+
   /** A leaf over `df`'s rows, read through its cache when it has one. Later
     * plans over the leaf neither re-analyse nor re-canonicalise `df`'s
     * lineage, which a loop that nests references to the previous
@@ -97,24 +98,11 @@ private[graft] object Lineage {
     */
   def anchor(df: DataFrame): DataFrame = df.sparkSession.createDataFrame(df.rdd, df.schema)
 
-  /** `df` persisted and materialised now, owned by the caller. */
-  def filled(df: DataFrame): DataFrame = {
-    materialise(Seq(df.persist()))
-    df
-  }
-
-  /** Runs one job over the cached rows of the persisted `dfs`, which fills
-    * their caches, and returns their row counts in order.
+  /** `df` persisted and materialised now by a `count()`, owned by the
+    * caller.
     */
-  private def materialise(dfs: Seq[DataFrame]): Seq[Long] = {
-    val rdds = dfs.map(_.select().queryExecution.toRdd)
-    val sc = dfs.head.sparkSession.sparkContext
-    val perPartition = sc.runJob(sc.union(rdds), (it: Iterator[InternalRow]) => {
-      var n = 0L
-      while (it.hasNext) { it.next(); n += 1 }
-      n
-    })
-    val bounds = rdds.scanLeft(0)(_ + _.getNumPartitions)
-    bounds.zip(bounds.tail).map { case (from, until) => perPartition.slice(from, until).sum }
+  def filled(df: DataFrame): DataFrame = {
+    df.persist().count()
+    df
   }
 }

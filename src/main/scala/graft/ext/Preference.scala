@@ -144,7 +144,7 @@ object Preference {
   def btStrengths(comparisons: DataFrame, winnerCol: String, loserCol: String,
                   iters: Int): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    Lineage { lin =>
+    Lineage.checkpointed { lin =>
       // collapse raw games to per-unordered-pair counts once: n_ij and the
       // wins of the lexicographically smaller side
       val gamesChain = comparisons
@@ -190,8 +190,8 @@ object Preference {
           .select(col("id"),
             expr("greatest(1L, (n_wins * 1000000000000L) div __d)").as("bt_micro"))
       }
-      lin.checkpoint(stats.join(itemSide(w), "id")
-        .select(col("id"), col("n_wins"), col("n_games"), col("bt_micro")))
+      stats.join(itemSide(w), "id")
+        .select(col("id"), col("n_wins"), col("n_games"), col("bt_micro"))
     }
   }
 

@@ -124,12 +124,12 @@ object VectorSearch {
       candK: Int, k: Int, lambdaPermille: Long
   ): DataFrame = {
     require(candK >= k, "need candK >= k")
-    Lineage { lin =>
+    Lineage.checkpointed { lin =>
       // filled: the pair self-join and the relevance roll-up both read the
       // bounded candidate-vector frame
       val cv = mmrCandidateVectors(queries, corpus, qIdCol, qVecCol, idCol, vecCol, candK)
       lin.fill(cv)
-      lin.checkpoint(mmrSelect(cv, k, lambdaPermille)) // queries × k rows
+      mmrSelect(cv, k, lambdaPermille) // queries × k rows
     }
   }
 
@@ -1722,7 +1722,7 @@ object VectorSearch {
       .filter(col("rnk") <= n)
     def tier(scored: DataFrame, r: Int): DataFrame =
       topN(scored, k).withColumn("round_tier", lit(r.toLong))
-    Lineage { lin =>
+    Lineage.checkpointed { lin =>
       // callers sweeping a parameter (the q225 beam sweep) pass the
       // symmetrized adjacency once via graphIsAdjacency — ONE distinct
       // shuffle shared by every walk instead of one per walk
@@ -1751,8 +1751,8 @@ object VectorSearch {
           score(scored.select(col("qid"), col("id")).unionByName(expand).distinct())
       }
       tiers += tier(last, rounds)
-      lin.checkpoint(tiers.result().reduce(_ unionByName _)
-        .select(col("round_tier"), col("qid"), col("id"), col("sim"), col("rnk")))
+      tiers.result().reduce(_ unionByName _)
+        .select(col("round_tier"), col("qid"), col("id"), col("sim"), col("rnk"))
     }
   }
 
@@ -1791,7 +1791,7 @@ object VectorSearch {
       .orderBy(col("sim").desc, col("id"))
     def ranked(scored: DataFrame): DataFrame = scored
       .withColumn("rnk", row_number().over(wq).cast("long"))
-    Lineage { lin =>
+    Lineage.checkpointed { lin =>
       val scored0 = score(q.select(col("qid")).crossJoin(entry)
         .select(explode(tierArr).as("beam_tier"), col("qid"), col("id")))
       lin.fill(scored0)
@@ -1805,8 +1805,8 @@ object VectorSearch {
           score(scored.select(col("beam_tier"), col("qid"), col("id"))
             .unionByName(expand).distinct())
       }
-      lin.checkpoint(ranked(last).filter(col("rnk") <= k)
-        .select(col("beam_tier"), col("qid"), col("id"), col("sim"), col("rnk")))
+      ranked(last).filter(col("rnk") <= k)
+        .select(col("beam_tier"), col("qid"), col("id"), col("sim"), col("rnk"))
     }
   }
 

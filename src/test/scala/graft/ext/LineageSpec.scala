@@ -64,20 +64,22 @@ class LineageSpec extends SparkFunSuite with Eventually {
     }
   }
 
-  test("fill runs exactly one job for several frames, returns their counts, leaves them cached") {
+  test("fill leaves every frame filled before it returns, with its count") {
     Lineage { lin =>
       val a = frame(100, 4)
       val b = frame(50, 2).select((col("x") * 2).as("y"))
-      var counts: Seq[Long] = Nil
-      assert(jobsOf { counts = lin.fill(a, b) } == 1)
+      val counts = lin.fill(a, b)
       assert(counts == Seq(100L, 50L))
       assert(filled(a) && filled(b))
+      // filling a kept frame again only counts it
+      assert(lin.fill(a) == Seq(100L))
+      assert(filled(a))
     }
   }
 
-  test("keepPartitioned: once filled, the hash partitioning of its key is visible to the planner") {
+  test("keep of a repartitioned frame: once filled, its key's hash partitioning is visible to the planner") {
     Lineage { lin =>
-      val df = lin.keepPartitioned(frame(30, 3), col("x"))
+      val df = lin.keep(frame(30, 3).repartition(col("x")))
       assert(cached(df))
       lin.fill(df) // the cached plan is adaptive: its partitioning is known once run
       // read through the cache: no exchange left, and its partitioning shows
@@ -111,12 +113,12 @@ class LineageSpec extends SparkFunSuite with Eventually {
     }
   }
 
-  test("checkpoint output outlives the scope that released its inputs") {
+  test("checkpointed: the output is checkpointed before the scope releases its inputs") {
     val before = persistentIds
     val input = frame(25, 2)
-    val out = Lineage { lin =>
+    val out = Lineage.checkpointed { lin =>
       lin.fill(input)
-      lin.checkpoint(input.select((col("x") * 3).as("z")))
+      input.select((col("x") * 3).as("z"))
     }
     assert(!cached(input))
     assert(out.queryExecution.sparkPlan.nodeName == "Scan ExistingRDD")
@@ -129,14 +131,16 @@ class LineageSpec extends SparkFunSuite with Eventually {
     val before = persistentIds
     Lineage { lin =>
       val step = (g: DataFrame, _: Int) => g.select((col("x") + 1).as("x"))
-      val fills = jobsOf {
-        val last = lin.iterate(frame(8, 2), steps = 7, every = 2, rollover = true)(step)
-        assert(last.collect().map(_.getLong(0)).sorted.toSeq == (7L until 15L).toSeq)
-      }
-      // generations 2, 4 and 6 were filled (one job each) before the collect
-      assert(fills == 4)
-      // with rollover only the newest filled generation is still cached
-      assert((persistentIds -- before).size == 1)
+      val last = lin.iterate(frame(8, 2), steps = 7, every = 2, rollover = true)(step)
+      // generations 2, 4 and 6 were filled before iterate returned; with
+      // rollover only the newest one is still cached, and the result reads
+      // it through an anchor
+      val fresh = persistentIds -- before
+      assert(fresh.size == 1)
+      val info = spark.sparkContext.getRDDStorageInfo.filter(i => fresh.contains(i.id))
+      assert(info.map(i => (i.numCachedPartitions, i.numPartitions)).toSeq == Seq((2, 2)))
+      assert(last.queryExecution.sparkPlan.collect { case p if p.nodeName == "Scan ExistingRDD" => p }.size == 1)
+      assert(last.collect().map(_.getLong(0)).sorted.toSeq == (7L until 15L).toSeq)
     }
     Lineage { lin =>
       val step = (g: DataFrame, _: Int) => g.select((col("x") + 1).as("x"))
