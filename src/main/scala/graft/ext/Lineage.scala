@@ -99,7 +99,8 @@ private[graft] object Lineage {
   def anchor(df: DataFrame): DataFrame = df.sparkSession.createDataFrame(df.rdd, df.schema)
 
   /** `df` persisted and materialised now by a `count()`, owned by the
-    * caller.
+    * caller. The `count()` runs the cache's adaptive plan; a local
+    * checkpoint would materialise the non-adaptive one.
     */
   def filled(df: DataFrame): DataFrame = {
     df.persist().count()
